@@ -528,97 +528,74 @@ object Dedup {
     * Catalyst instead of dropping to RDDs.
     */
   def components(pairs: DataFrame, maxIter: Int = 25,
-      broadcastMaxVertices: Long = 2L * 1000 * 1000): DataFrame = {
-    // localCheckpoint (not cache): each round's plan must start from a
-    // materialized result, or the lineage grows by one join per round and
-    // analysis cost explodes exponentially — the classic iterative-
-    // DataFrame trap.
+      broadcastMaxVertices: Long = GraphLoop.BroadcastMaxVertices): DataFrame = {
     // both orientations explode IN-ROW: a `unionAll` of two projections
-    // would put the pair-generation subtree (for d06/d15 the entire
-    // minhash LSH pipeline) in the plan twice and execute it twice —
-    // the TextRank/coOrderBoth lesson (guide §1.2 compute once). The
-    // emitted multiset is identical, so the distinct edge set is too.
+    // would execute the pair-generation subtree (for d06/d15 the entire
+    // minhash LSH pipeline) twice
     val edges = pairs
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .distinct()
-      // src-keyed layout, materialized once: every round's label join
-      // then satisfies its distribution from the checkpoint — only the
-      // (node-sized) label table exchanges per round, never the edges
-      // (the q30/bfsLevels co-partitioning discipline)
+      // src-keyed layout: only the label table exchanges per round
       .repartition(col("src"))
       .localCheckpoint()
+    // labels are monotone non-increasing per node, so the label sum is
+    // unchanged iff NO label changed. Decimal: a long sum could overflow
+    // on trillions of rows with large ids. Null on an empty table.
+    val labelSum = sum(col("cluster_id").cast("decimal(38,0)")).as("s")
     // seed with the FIRST neighbor-min pass fused into initialization:
-    // label₀(v) = min(v, min over neighbors u of u) — exactly what round
-    // one of the loop would produce from identity labels, for one groupBy
-    // instead of a join+groupBy round (stars converge immediately)
-    var labels = edges.groupBy(col("src"))
+    // label₀(v) = min(v, min over neighbors u of u) — round one from
+    // identity labels, for one groupBy. It covers both endpoints, so its
+    // row count is the gate's.
+    val (seed, m) = GraphLoop.checkpoint(edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
-      .select(col("src").as("id"), col("cluster_id"))
-      .localCheckpoint()
-    // the q30 regime gate (bounded 1-row collect over the materialized
-    // label table): below it the node-sized label table BROADCASTS into
-    // each round's edge join and pointer-jump joins — the edge
-    // checkpoint is neither re-sorted nor re-exchanged per round (a
-    // stat-less checkpoint otherwise sort-merge-joins; guide §3.1)
-    val useBroadcast = labels.count() <= broadcastMaxVertices
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df
-    // decimal sum: exact at any scale (a long sum could overflow on
-    // trillions of rows with large ids)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("cluster_id").cast("decimal(38,0)")).as("s"))
-        .head().getDecimal(0)
-    var prevSum = labelSum(labels)
+      .select(col("src").as("id"), col("cluster_id")),
+      count(lit(1)).as("n"), labelSum)
+    val gate = GraphLoop.Gate(m.getLong(0), broadcastMaxVertices)
+    var labels = seed
+    var prevSum = m.getDecimal(1)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
       // neighbor-min pass: label'(v) = min(label(v), min over (u,v) edges
       // of label(u))
       val viaNeighbors = edges
-        .join(maybeBcast(labels.withColumnRenamed("id", "src")), Seq("src"))
+        .join(gate.side(labels.withColumnRenamed("id", "src")), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("cluster_id")).as("nmin"))
       // materialized: the pointer-jump joins below reference this table
       // four times — checkpointing once beats re-deriving the edge join
-      val afterNeighbors = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
-            .as("cluster_id"))
-        .localCheckpoint()
-      // labels are monotone non-increasing per node, so the label sum is
-      // unchanged iff NO label changed — one cheap aggregate per round
-      // instead of a join-based diff
-      val nSum = labelSum(afterNeighbors)
-      if (nSum.compareTo(prevSum) == 0) {
+      val (afterNeighbors, am) = GraphLoop.checkpoint(
+        labels.join(viaNeighbors, Seq("id"), "left")
+          .select(col("id"),
+            least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
+              .as("cluster_id")),
+        labelSum)
+      if (java.util.Objects.equals(am.getDecimal(0), prevSum)) {
         // Neighbor-min fixpoint: per edge (u,v) labels dominate both ways
         // ⇒ constant per component ⇒ the component min, and the pointer
-        // jump below would be the identity. Near-dup graphs are stars/
-        // cliques where the seed pass already converged, so gating the
-        // jump on OBSERVED LABEL MOVEMENT makes the common verify round
-        // one join + one aggregate instead of four joins (the r5 bench
-        // regression suspect: unconditional 4-fold jumps per round).
+        // jump below would be the identity. Gating the jump on observed
+        // label movement makes the common verify round (near-dup graphs
+        // are stars/cliques) one join instead of four.
         converged = true
         labels = afterNeighbors
       } else {
-        // labels moved — chains may exist. Pointer jumping: follow the
-        // label chain 4 deep in one pass (label ← l(l(l(l(v)))), three
-        // chained joins). A label is always the id of a node IN the table
-        // (min over self+neighbors of node ids), so each hop resolves;
-        // left join + coalesce covers the chain root, whose label is
-        // itself. Labels stay monotone non-increasing under composition,
-        // so the sum test still detects the combined fixpoint.
-        val next = (1 to 3).foldLeft(afterNeighbors) { (l, i) =>
-          l.join(
-              maybeBcast(afterNeighbors.select(col("id").as(s"__p$i"),
-                col("cluster_id").as(s"__l$i"))),
-              col("cluster_id") === col(s"__p$i"), "left")
-            .select(col("id"),
-              coalesce(col(s"__l$i"), col("cluster_id")).as("cluster_id"))
-        }.localCheckpoint()
-        prevSum = labelSum(next)
+        // labels moved — pointer jumping follows the label chain 4 deep
+        // (label ← l(l(l(l(v)))), three chained joins; left join +
+        // coalesce covers the chain root). Labels stay monotone, so the
+        // sum test still detects the combined fixpoint.
+        val (next, nm) = GraphLoop.checkpoint(
+          (1 to 3).foldLeft(afterNeighbors) { (l, i) =>
+            l.join(
+                gate.side(afterNeighbors.select(col("id").as(s"__p$i"),
+                  col("cluster_id").as(s"__l$i"))),
+                col("cluster_id") === col(s"__p$i"), "left")
+              .select(col("id"),
+                coalesce(col(s"__l$i"), col("cluster_id")).as("cluster_id"))
+          }, labelSum)
+        prevSum = nm.getDecimal(0)
         labels = next
       }
       iter += 1

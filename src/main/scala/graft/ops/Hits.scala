@@ -3,41 +3,28 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Fixed-point-integer HITS (Kleinberg hubs & authorities) — the
-  * link-analysis complement to [[PageRank]]: PageRank asks "who receives
-  * mass from important senders"; HITS separates the two roles — a good
-  * HUB points at good authorities, a good AUTHORITY is pointed at by
-  * good hubs — the natural reading on BIPARTITE interaction graphs
-  * (customers→parts, queries→documents) where PageRank's single score
-  * conflates the sides.
+/** Fixed-point-integer HITS (Kleinberg hubs & authorities): a good HUB
+  * points at good authorities, a good AUTHORITY is pointed at by good
+  * hubs — the natural reading on BIPARTITE interaction graphs
+  * (customers→parts) where PageRank's single score conflates the sides.
   *
   * The same bit-exactness discipline as q30: floating-point HITS
-  * normalizes by an L2 norm (a sqrt — order-dependent, never
-  * hash-matchable), so here scores are scaled BIGINTs and each
-  * half-round normalizes by the MAX instead: `s' = (s · scale) div max`.
-  * Max-normalization is the standard power-iteration alternative (the
-  * principal eigenvector direction is unchanged; only the normalization
-  * constant differs), every step is integer arithmetic, and the DuckDB
-  * oracle unrolls the identical recurrence with a `max()` subquery per
-  * half-round (q82).
+  * normalizes by an L2 norm (a sqrt — never hash-matchable), so here
+  * scores are scaled BIGINTs and each half-round normalizes by the MAX
+  * instead, `s' = (s · scale) div max` (the principal eigenvector
+  * direction is unchanged); the DuckDB oracle unrolls the identical
+  * recurrence with a `max()` subquery per half-round (q82).
   *
-  * Iteration shape (the 100 TB story): the edge list is projected,
-  * deduped, and localCheckpointed ONCE; each half-round pays one
-  * key-grouped partially-aggregated shuffle (sum of partner scores) —
-  * the data-sized edge table is joined on its own key, the vertex-sized
-  * score table rides the join. The raw sums are checkpointed, the
-  * normalizing max is a bounded 1-row collect over that materialized
-  * table folded in as a literal, and the normalized scores are a lazy
-  * projection read straight off the checkpoint — one shuffle per
-  * half-round, nothing computed twice. Rounds are fixed, not
-  * convergence-tested — deterministic cost, oracle-unrollable.
+  * Iteration shape ([[GraphLoop]]'s round discipline): the edge list is
+  * deduped and checkpointed ONCE; each half-round pays one key-grouped
+  * partially-aggregated shuffle (sum of partner scores) whose raw sums
+  * are checkpointed; the normalized scores are a lazy projection read
+  * off that checkpoint. Rounds are fixed, so the oracle unrolls them.
   *
   * Overflow contract: a half-round sum is at most maxDegree·scale and
   * the normalization multiplies by scale before dividing, so
   * `maxDegree · scale²` must fit a long — with the default scale 10⁶
   * that admits degrees to ~9·10⁶; heavier graphs lower `scale`.
-  * (Checked per run from the materialized degree table — one agg over
-  * the checkpoint, no extra scan.)
   *
   * Output: (vertex, score, hub_side) — the authority score of every
   * auth-side vertex (`hub_side = false`) and the hub score of every
@@ -49,68 +36,47 @@ object Hits {
   def fixedPointHits(
       edges: DataFrame, iterations: Int,
       scale: Long = 1000000L,
-      broadcastMaxVertices: Long = 2L * 1000 * 1000): DataFrame = {
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations must be in [1, 50], got $iterations")
+      broadcastMaxVertices: Long = GraphLoop.BroadcastMaxVertices): DataFrame = {
+    GraphLoop.requireRounds("iterations", iterations)
     require(scale >= 100L, s"scale must be >= 100, got $scale")
     val e = edges
       .select(col("hub").cast("long").as("hub"),
         col("auth").cast("long").as("auth"))
       .distinct()
       .localCheckpoint()
-    // ONE bounded 1-row collect over the already-materialized checkpoint
-    // (the PageRank weighted-guard idiom): both sides' max degrees AND
-    // the vertex count (the broadcast-regime gate) fold into a single job
-    val stats = e.groupBy(col("hub")).agg(count(lit(1)).as("d"))
-      .select(col("d"))
-      .unionAll(e.groupBy(col("auth")).agg(count(lit(1)).as("d"))
-        .select(col("d")))
-      .agg(max(col("d")), count(lit(1))).collect()(0)
-    val (maxDeg, nV) = (stats.getLong(0), stats.getLong(1))
+    // one row per vertex of hub ∪ auth with its degree on each side: the
+    // gate's vertex count and the max degree ride its checkpoint job, and
+    // the auth side seeds the first half-round
+    val (deg, stats) = GraphLoop.checkpoint(
+      e.select(explode(array(
+          struct(col("hub").as("v"), lit(1L).as("h")),
+          struct(col("auth").as("v"), lit(0L).as("h")))).as("__o"))
+        .groupBy(col("__o.v").as("v"))
+        .agg(sum(col("__o.h")).as("hd"), sum(lit(1L) - col("__o.h")).as("ad")),
+      count(lit(1)).as("nV"), max(greatest(col("hd"), col("ad"))).as("maxDeg"))
+    val maxDeg = stats.getLong(1)
     require(maxDeg <= Long.MaxValue / scale / scale,
       s"maxDegree*scale^2 must fit a long: maxDegree=$maxDeg, scale=$scale")
-    // The q30 regime gate: a checkpointed edge table carries no stats, so
-    // without a hint Catalyst sort-merge-joins each half-round and
-    // RE-EXCHANGES the data-sized edge list every time (the exact failure
-    // PageRank.round documents; guide §3.1 pick the strategy
-    // deliberately). Below the gate the vertex-sized score table
-    // broadcasts and the edge table never moves; above it the edge list
-    // is pinned hash-partitioned on each half-round's key ONCE, so only
-    // the score side exchanges per half-round.
-    val useBroadcast = nV <= broadcastMaxVertices
-    val eByAuth =
-      if (useBroadcast) e else e.repartition(col("auth")).localCheckpoint()
-    val eByHub =
-      if (useBroadcast) e else e.repartition(col("hub")).localCheckpoint()
-    var a = e.select(col("auth").as("v")).distinct()
-      .withColumn("s", lit(scale)).localCheckpoint()
+    val gate = GraphLoop.Gate(stats.getLong(0), broadcastMaxVertices)
+    val eByAuth = gate.edgeSide(e, "auth")
+    val eByHub = gate.edgeSide(e, "hub")
+    // one half-round: partner scores summed per `key`; the normalizing
+    // max folds in as a literal (r13 measured a broadcast cross join of
+    // the max at 0.93×)
+    def half(byPartner: DataFrame, key: String, partner: String,
+        scores: DataFrame): DataFrame = {
+      val (raw, m) = GraphLoop.checkpoint(
+        byPartner.join(gate.side(scores), col(partner) === scores("v"))
+          .groupBy(col(key)).agg(sum(col("s")).as("__r")),
+        max(col("__r")).as("m"))
+      raw.select(col(key).as("v"),
+        expr(s"(__r * ${scale}L) div ${m.getLong(0)}L").as("s"))
+    }
+    var a = deg.filter(col("ad") > 0).select(col("v"), lit(scale).as("s"))
     var h: DataFrame = null
-    var d = 0
-    while (d < iterations) {
-      d += 1
-      // each half-round pays its join+agg ONCE: the raw sums are
-      // checkpointed, the normalizing max is a cheap scan of that
-      // materialized table folded in as a literal (a bounded 1-row
-      // collect — the PageRank stats idiom), and the normalized view is
-      // a lazy projection the next join reads straight off the
-      // checkpoint (no second shuffle, no recompute). (r13 measured the
-      // fold-the-max-into-a-broadcast-cross-join alternative at 0.93× —
-      // the extra broadcast stage inside each half-round's job cost more
-      // than the separate bounded collect.)
-      val hRaw = eByAuth
-        .join(if (useBroadcast) broadcast(a) else a, col("auth") === a("v"))
-        .groupBy(col("hub")).agg(sum(col("s")).as("__r"))
-        .localCheckpoint()
-      val hm = hRaw.agg(max(col("__r"))).collect()(0).getLong(0)
-      h = hRaw.select(col("hub").as("v"),
-        expr(s"(__r * ${scale}L) div ${hm}L").as("s"))
-      val aRaw = eByHub
-        .join(if (useBroadcast) broadcast(h) else h, col("hub") === h("v"))
-        .groupBy(col("auth")).agg(sum(col("s")).as("__r"))
-        .localCheckpoint()
-      val am = aRaw.agg(max(col("__r"))).collect()(0).getLong(0)
-      a = aRaw.select(col("auth").as("v"),
-        expr(s"(__r * ${scale}L) div ${am}L").as("s"))
+    for (_ <- 1 to iterations) {
+      h = half(eByAuth, "hub", "auth", a)
+      a = half(eByHub, "auth", "hub", h)
     }
     a.select(col("v").as("vertex"), col("s").as("score"),
         lit(false).as("hub_side"))

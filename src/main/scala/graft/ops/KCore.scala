@@ -3,12 +3,10 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** k-core decomposition by parallel peeling — the fifth member of the
-  * iterative-graph family (PageRank q30, components d06, triangles q35,
-  * BFS q51; the reference's `mr.exec` re-invocation loop per SURVEY
-  * §2.6). The k-core is the unique maximal subgraph in which every
-  * vertex has degree ≥ k — the standard "dense backbone" extraction for
-  * community seeding and graph cleaning.
+/** k-core decomposition by parallel peeling (q65). The k-core is the
+  * unique maximal subgraph in which every vertex has degree ≥ k — the
+  * standard "dense backbone" extraction for community seeding and graph
+  * cleaning.
   *
   * Algorithm: simultaneous peeling. Each round removes EVERY current
   * vertex whose surviving degree is < k, then decrements its neighbors.
@@ -17,17 +15,13 @@ import org.apache.spark.sql.functions._
   * oracle's full-recompute schedule all agree — that is what makes the
   * operator oracle-able despite being iterative.
   *
-  * Scale shape (the q30/q51 co-partitioning discipline): the edge list
-  * is hash-partitioned by src ONCE and checkpointed in that layout.
-  * Each round's work is keyed by the DOOMED set — the vertices removed
-  * this round — which joins the edge table on its partitioning key, so
-  * only the doomed side (small, shrinking) ever exchanges; the edge
-  * set, the 100 TB object, never re-shuffles after setup. Degrees are
-  * maintained DECREMENTALLY (deg −= removed-neighbor count) rather than
-  * recomputed, so per-round cost is O(edges incident to the doomed
-  * set), not O(E) — the standard peeling optimization. The degree table
-  * is |V|-sized and localCheckpointed per round, keeping every
-  * iteration's plan rooted at materialized partitions.
+  * Scale shape: the edge list is hash-partitioned by src ONCE and
+  * checkpointed in that layout. Each round's work is keyed by the DOOMED
+  * set — the vertices removed this round — which joins the edge table on
+  * its partitioning key, so the edges never re-shuffle. Degrees are
+  * maintained DECREMENTALLY (deg −= removed-neighbor count), so a round
+  * costs O(edges incident to the doomed set), not O(E). The degree table
+  * is localCheckpointed per round ([[GraphLoop]]'s round discipline).
   */
 object KCore {
 
@@ -37,16 +31,14 @@ object KCore {
     * vertex's degree WITHIN the core (≥ k by construction). Empty when
     * the graph has no k-core.
     *
-    * `maxRounds` bounds the driver loop (each round is O(1) Spark
-    * actions); peeling a graph with max core number c needs at most
-    * O(|V|) rounds in theory but converges in a handful in practice —
-    * the result is the true k-core only if a fixpoint is reached, so
-    * the cap is a guard, not a tuning knob.
+    * `maxRounds` bounds the driver loop: peeling needs O(|V|) rounds in
+    * theory but a handful in practice, and the result is the true k-core
+    * only at a fixpoint, so the cap is a guard, not a tuning knob.
     */
   def kCore(
       edges: DataFrame, k: Int, maxRounds: Int = 64,
       srcCol: String = "src", dstCol: String = "dst",
-      broadcastMaxVertices: Long = 2L * 1000 * 1000): DataFrame = {
+      broadcastMaxVertices: Long = GraphLoop.BroadcastMaxVertices): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val e = edges
@@ -54,40 +46,35 @@ object KCore {
         col(dstCol).cast("long").as("__dst"))
       .filter(col("__src") =!= col("__dst"))
       .distinct()
-      // src-keyed layout, materialized once: every round's doomed⋈edges
-      // join satisfies its distribution requirement from the checkpoint
       .repartition(col("__src"))
       .localCheckpoint()
-    var deg = e.groupBy(col("__src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // the q30 regime gate, read off the already-materialized degree
-    // table (bounded 1-row collect): below it the node-bounded doomed
-    // set BROADCASTS into the decrement join, so the edge table is
-    // neither re-sorted nor re-exchanged per round (a stat-less
-    // checkpoint otherwise sort-merge-joins and pays a full edge sort
-    // every round — guide §3.1); the vertex-sized bookkeeping joins
-    // broadcast their small sides the same way
-    val useBroadcast = deg.count() <= broadcastMaxVertices
+    // one row per vertex of src ∪ dst with its out-degree: the gate
+    // counts the `__dst`-keyed decrement table's keys too
+    val (all, n) = GraphLoop.checkpoint(
+      e.select(explode(array(
+          struct(col("__src").as("node"), lit(1L).as("o")),
+          struct(col("__dst").as("node"), lit(0L).as("o")))).as("__v"))
+        .groupBy(col("__v.node").as("node")).agg(sum(col("__v.o")).as("deg")),
+      count(lit(1)).as("nV"))
+    val gate = GraphLoop.Gate(n.getLong(0), broadcastMaxVertices)
+    var deg = all.filter(col("deg") > 0)
     var round = 0
     var done = false
     while (round < maxRounds && !done) {
-      val doomed = deg.filter(col("deg") < k)
-        .select(col("node")).localCheckpoint()
-      if (doomed.isEmpty) done = true
+      val (doomed, d) = GraphLoop.checkpoint(
+        deg.filter(col("deg") < k).select(col("node")), count(lit(1)).as("n"))
+      if (d.getLong(0) == 0L) done = true
       else {
         // each removed vertex decrements its still-alive neighbors; a
         // neighbor removed in the SAME round is dropped by the
         // anti-join anyway, so over-decrementing it is harmless
-        val dec = (if (useBroadcast) broadcast(doomed) else doomed)
+        val dec = gate.side(doomed)
           .join(e, col("node") === col("__src"))
           .groupBy(col("__dst").as("__n"))
           .agg(count(lit(1)).as("__dec"))
         deg = deg
-          .join(if (useBroadcast) broadcast(doomed) else doomed,
-            Seq("node"), "left_anti")
-          .join(if (useBroadcast) broadcast(dec) else dec,
-            col("node") === col("__n"), "left")
+          .join(gate.side(doomed), Seq("node"), "left_anti")
+          .join(gate.side(dec), col("node") === col("__n"), "left")
           .select(col("node"),
             (col("deg") - coalesce(col("__dec"), lit(0L))).as("deg"))
           .localCheckpoint()

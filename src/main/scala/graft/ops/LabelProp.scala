@@ -3,46 +3,41 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Synchronous label-propagation community detection (LPA) — the sixth
-  * member of the iterative-graph family (PageRank q30, components d06,
-  * triangles q35, BFS q51, k-core q65; the reference's `mr.exec`
-  * re-invocation loop per SURVEY §2.6), and the cheap first answer to
-  * "what communities does this graph have" when no taxonomy exists
-  * (q94's modularity scores a GIVEN partition; LPA DISCOVERS one).
+/** Synchronous label-propagation community detection (LPA, q96) — the
+  * cheap first answer to "what communities does this graph have" when no
+  * taxonomy exists (q94's modularity scores a GIVEN partition; LPA
+  * DISCOVERS one).
   *
   * Algorithm: labels start as vertex ids; each synchronous round every
   * vertex adopts the most frequent label among its neighbors, ties to
-  * the SMALLEST label. Raw LPA's tie-breaking is the classic source of
-  * irreproducibility — pinning ties to min-label plus a FIXED round
-  * count makes the whole run a deterministic function of the edge set,
-  * which is what lets a SQL oracle replay it round for round (the q30
-  * unrolled-recurrence discipline; float-free, so there is no
-  * summation-order question at all).
+  * the SMALLEST label. Min-label ties plus a FIXED round count make the
+  * run a deterministic function of the edge set, which is what lets a
+  * SQL oracle replay it round for round.
   *
-  * Scale shape (the q30/q51 co-partitioning discipline): the
-  * both-orientations adjacency list is hash-partitioned by neighbor
-  * ONCE and checkpointed; each round is one key-join of the |V|-sized
-  * label table against it plus ONE partially-aggregated
-  * (vertex, label) shuffle — frequency counting combines map-side, so
-  * the exchange carries at most one row per (vertex, distinct
-  * neighbor label), never the edge stream. The argmax folds inside the
-  * same aggregation via a (count, −label) struct-max (no window, no
-  * second shuffle), and the label table is localCheckpointed per round
-  * so every iteration's plan is rooted at materialized partitions.
+  * Scale shape: the both-orientations adjacency list is hash-partitioned
+  * by neighbor ONCE and checkpointed; each round is one key-join of the
+  * |V|-sized label table against it plus a partially-aggregated
+  * (vertex, label) shuffle that carries at most one row per (vertex,
+  * distinct neighbor label), never the edge stream. The argmax folds
+  * into a (count, −label) struct-max. The label table is
+  * localCheckpointed per round ([[GraphLoop]]'s round discipline), so
+  * every round's plan is rooted at materialized partitions and the
+  * returned frame's plan holds no exchange.
   */
 object LabelProp {
 
   /** Communities of an UNDIRECTED edge list (one row per edge, either
     * orientation; self-loops dropped, duplicates collapsed) after
-    * `rounds` synchronous LPA rounds. Output: (node, community) — the
-    * node's label after the final round. Isolated vertices (absent
-    * from the edge list) are by definition not present.
+    * `rounds` (1 to [[GraphLoop.MaxRounds]]) synchronous LPA rounds.
+    * Output: (node, community) — the node's label after the final round.
+    * Isolated vertices (absent from the edge list) are by definition not
+    * present.
     */
   def propagate(
       edges: DataFrame, rounds: Int,
       srcCol: String = "src", dstCol: String = "dst",
-      broadcastMaxVertices: Long = 2000000L): DataFrame = {
-    require(rounds >= 1, "LPA needs at least one round")
+      broadcastMaxVertices: Long = GraphLoop.BroadcastMaxVertices): DataFrame = {
+    GraphLoop.requireRounds("rounds", rounds)
     val e = edges
       .select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
@@ -58,32 +53,20 @@ object LabelProp {
       .select(col("__o.v").as("v"), col("__o.n").as("n"))
       .repartition(col("n"))
       .localCheckpoint()
-    var labels = adj.select(col("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    // the q30 regime gate, decided ONCE off the already-materialized
-    // checkpoint (bounded driver action): below the gate the |V|-sized
-    // label table broadcasts into each round and the edge table never
-    // re-exchanges; above it the rounds fall back to the co-partitioned
-    // shuffle join (the billions-of-vertices path).
-    val bcastLabels = labels.count() <= broadcastMaxVertices
-    // each round references the label table exactly ONCE, so the fixed
-    // rounds unroll LAZILY into one plan: a single action executes all
-    // rounds instead of paying an eager localCheckpoint job per round
-    // (the PageRank round-composition discipline, guide §1.2 — the plan
-    // grows linearly with the round count and every round still pays
-    // only its own partially-aggregated label shuffle)
-    for (_ <- 1 to rounds) {
-      val lbl = labels.select(col("v").as("n"), col("label"))
-      labels = adj
-        .join(if (bcastLabels) broadcast(lbl) else lbl, Seq("n"))
+    // `adj` holds both orientations, so the label table covers every
+    // endpoint and its row count is the gate's vertex count
+    val (init, n) = GraphLoop.checkpoint(
+      adj.select(col("v")).distinct().withColumn("label", col("v")),
+      count(lit(1)).as("nV"))
+    val gate = GraphLoop.Gate(n.getLong(0), broadcastMaxVertices)
+    (1 to rounds).foldLeft(init) { (labels, _) =>
+      adj.join(gate.side(labels.select(col("v").as("n"), col("label"))), Seq("n"))
         .groupBy(col("v"), col("label"))
         .agg(count(lit(1)).as("__c"))
         .groupBy(col("v"))
-        .agg(max(struct(col("__c").as("c"), (-col("label")).as("nl")))
-          .as("__m"))
+        .agg(max(struct(col("__c").as("c"), (-col("label")).as("nl"))).as("__m"))
         .select(col("v"), (-col("__m.nl")).as("label"))
-    }
-    labels.select(col("v").as("node"), col("label").as("community"))
+        .localCheckpoint()
+    }.select(col("v").as("node"), col("label").as("community"))
   }
 }

@@ -1,42 +1,33 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-point-integer PageRank — the third canonical MapReduce workload
   * (wordcount `q04`, inverted index `t14`, PageRank here), engineered so
   * the iteration is BIT-EXACT across engines.
   *
-  * Floating-point PageRank can never hash-match an external oracle: the
-  * per-vertex contribution sum is order-dependent in IEEE arithmetic and
-  * every shuffle reorders it. Here rank is a scaled BIGINT (`scale` =
-  * rank 1.0) and every step is integer arithmetic — contribution =
-  * `r div outdeg`, damping = `0.15·scale + (85·Σcontrib) div 100` — so
-  * addition is associative-commutative, the result is independent of
-  * partitioning and reduce order, and the DuckDB oracle replays the
-  * identical recurrence (q30). Truncation bias ≤ 1 ulp-of-scale per term
-  * per round on BOTH engines identically; at scale = 10¹² that is ~1e-12
-  * of rank mass, far below any ranking-relevant difference.
+  * A floating-point contribution sum is order-dependent and every shuffle
+  * reorders it, so here rank is a scaled BIGINT (`scale` = rank 1.0) and
+  * every step is integer arithmetic — contribution = `r div outdeg`,
+  * damping = `0.15·scale + (85·Σcontrib) div 100` — independent of
+  * partitioning and reduce order; the DuckDB oracle replays the identical
+  * recurrence (q30). Truncation bias is ≤ 1 ulp-of-scale per term per
+  * round on both engines identically (~1e-12 of rank mass at 10¹²).
   *
-  * Vertex universe: src ∪ dst. DANGLING vertices (no out-edges — real web
-  * graphs are full of them) redistribute their mass uniformly: with
-  * D = Σ ranks over dangling vertices and N = |vertices|, every vertex's
-  * update gains `D div N` alongside its edge contributions — the standard
-  * redistribution term, kept integer so it stays oracle-able (the lost
-  * remainder D mod N is truncated identically on both engines). Vertices
-  * with no IN-edges still receive the base + dangling share.
+  * Vertex universe: src ∪ dst. DANGLING vertices (no out-edges)
+  * redistribute their mass uniformly: with D = Σ ranks over dangling
+  * vertices and N = |vertices|, every vertex's update gains `D div N`
+  * (D mod N is truncated identically on both engines). Vertices with no
+  * IN-edges still receive the base + dangling share.
   *
-  * Iteration shape (the 100 TB story): edges ⋈ outdeg are materialized
-  * ONCE (localCheckpoint — the d06 round idiom: each round's plan starts
-  * from materialized state, not a growing lineage), then every round
-  * broadcasts the vertex-sized rank table into the edge scan and pays
-  * exactly one exchange: the partially-aggregated dst-keyed contribution
-  * shuffle. The edge table — the data-sized side — never moves. A graph
-  * where every vertex appears as both src and dst (symmetric corpora like
-  * q30's) runs exactly that plan; a general graph adds only a vertex-sized
-  * left join plus a 1-row dangling-mass broadcast per round. Rounds are
-  * fixed (`iterations`), not convergence-tested — deterministic cost, and
-  * the oracle can unroll the same count.
+  * Iteration shape ([[GraphLoop]]'s round discipline): edges ⋈ outdeg
+  * are materialized ONCE; every round joins the vertex-sized rank table
+  * into the edge scan and pays exactly one data-sized exchange, the
+  * partially-aggregated dst-keyed contribution shuffle. A graph where
+  * every vertex is both src and dst (q30's) runs exactly that plan; a
+  * general graph adds a vertex-sized left join plus a 1-row dangling-mass
+  * broadcast per round. Rounds are fixed, so the oracle unrolls them.
   *
   * Overflow contract: a single vertex can in the worst case receive the
   * whole rank mass (≈ N·scale), so `85 · N · scale` must fit a long —
@@ -52,193 +43,130 @@ object PageRank {
   def fixedPointPageRank(
       edges: DataFrame, iterations: Int,
       scale: Long = 1000000000000L,
-      broadcastMaxVertices: Long = 2L * 1000 * 1000): DataFrame = {
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations must be in [1, 50], got $iterations")
-    require(scale >= 100L && scale % 100L == 0L,
-      s"scale must be a positive multiple of 100, got $scale")
+      broadcastMaxVertices: Long = GraphLoop.BroadcastMaxVertices): DataFrame = {
     // WEIGHTED edges: a `w` column (positive integer weights) makes each
     // contribution `(r·w) div wsum(src)` — for w ≡ 1 and wsum = outdeg
     // that is bit-identical to the unweighted `r div outdeg`, so both
     // cases share one code path (and q30's oracle is untouched).
     // Parallel (src, dst) rows canonicalize by summing their weights.
     val weighted = edges.columns.contains("w")
-    // `e` feeds both withDeg join sides, but its terminal aggregation
-    // exchange is identical in both branches and ReuseExchange serves the
-    // second from the first — an explicit checkpoint here measured SLOWER
-    // (extra materialization job) than the reused exchange
-    val e = if (weighted) edges
+    val g = setup(
+      if (weighted) edges
         .select(col("src").cast("long").as("src"),
           col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
         .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      else edges
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-        .distinct()
-        .withColumn("w", lit(1L))
-    val withDeg = e
-      .join(e.groupBy("src").agg(sum(col("w")).as("wsum")), "src")
-      .localCheckpoint()
-    // One setup pass over the materialized edges classifies every vertex
-    // (appears-as-src, appears-as-dst). This single job replaces the old
-    // separate ranks-count action AND decides all three regimes: the
-    // broadcast gate (N), dangling handling, and the complete-graph fast
-    // path. The 1-row collect below scans the checkpoint, not the lineage.
-    val vflags = withDeg
-      .select(col("src").as("vertex"), lit(1).as("s"), lit(0).as("d"))
-      .unionAll(withDeg
-        .select(col("dst").as("vertex"), lit(0).as("s"), lit(1).as("d")))
-      .groupBy("vertex")
-      .agg(max(col("s")).as("s"), max(col("d")).as("d"))
-      .localCheckpoint()
-    val stats = vflags
-      .agg(count(lit(1)), sum(col("s")), sum(col("d"))).collect()(0)
-    val (nV, nSrc, nDst) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    require(nV <= Long.MaxValue / 100L / scale,
-      s"85*N*scale must fit a long: N=$nV needs scale <= ${Long.MaxValue / 100L / nV}")
+      else unitWeights(edges), iterations, scale, broadcastMaxVertices)
     if (weighted) {
       // the weighted contribution computes r·w BEFORE the floor-div; the
       // worst-case r is the whole rank mass ≈ N·scale, so N·scale·maxW
-      // must fit a long (same 1-job setup pass as the vertex stats)
-      val maxW = withDeg.agg(max(col("w"))).collect()(0).getLong(0)
-      require(maxW >= 1L, s"edge weights must be positive, got max $maxW")
-      require(maxW <= Long.MaxValue / nV / scale,
-        s"N*scale*maxW must fit a long: N=$nV, scale=$scale, maxW=$maxW" +
+      // must fit a long
+      require(g.maxW >= 1L, s"edge weights must be positive, got max ${g.maxW}")
+      require(g.maxW <= Long.MaxValue / g.nV / scale,
+        s"N*scale*maxW must fit a long: N=${g.nV}, scale=$scale, maxW=${g.maxW}" +
           s" — lower scale (e.g. 100000000L) for heavy weights")
     }
     // complete = every vertex has out- AND in-edges: no dangling mass, no
-    // contribution-less vertices — the per-round plan needs only the
-    // contribution join+shuffle (the historical q30 plan, unchanged)
-    val complete = nSrc == nV && nDst == nV
-    val dangling = vflags.filter(col("s") === 0).select(col("vertex"))
-    val vertices = vflags.select(col("vertex"))
-    val hasDangling = nSrc < nV
-    // Two regimes for the per-round rank⋈edge join. Below the gate the
-    // vertex table fits an executor: broadcast it, the edge table never
-    // moves, the round's only exchange is the contribution shuffle.
-    // Above the gate (billions of vertices — no broadcast budget holds a
-    // vertex table) pin the edge table hash-partitioned on `src` ONCE;
-    // localCheckpoint preserves that physical partitioning, so every
-    // round's sort-merge join re-exchanges only the vertex-sized rank
-    // side, never the edges.
-    val useBroadcast = nV <= broadcastMaxVertices
-    val edgeSide =
-      if (useBroadcast) withDeg
-      else withDeg.repartition(col("src")).localCheckpoint()
+    // contribution-less vertices — a round is the contribution shuffle only
+    val complete = g.nSrc == g.nV && g.nDst == g.nV
+    val dangling = Option.when(g.nSrc < g.nV)(
+      g.vflags.filter(col("s") === 0).select(col("vertex")))
+    val vertices = g.vflags.select(col("vertex"))
     val base = scale / 100L * 15L
-    // initial ranks project straight off the materialized vflags — no
-    // extra checkpoint job; each round's result is checkpointed below.
-    // (r13 measured the lazy alternative — unrolling all rounds into one
-    // action — at 0.6–0.8× on q30/q75/q115 despite the fewer driver
-    // actions; the per-round checkpoint stays.)
-    var ranks = vertices.withColumn("r", lit(scale))
-    for (_ <- 1 to iterations)
-      ranks = (if (complete) round(edgeSide, ranks, base, useBroadcast)
-        else roundGeneral(edgeSide, vertices, dangling, hasDangling,
-          nV, ranks, base, useBroadcast)).localCheckpoint()
-    ranks
+    (1 to iterations).foldLeft(vertices.withColumn("r", lit(scale))) { (ranks, _) =>
+      (if (complete) round(g.edgeSide, ranks, base, g.gate.broadcasts)
+        else roundGeneral(g.edgeSide, vertices, dangling, g.nV, ranks, lit(base),
+          g.gate)).localCheckpoint()
+    }
   }
 
-  /** PERSONALIZED PageRank: the teleport term concentrates on a source
-    * set S instead of spreading uniformly — rank becomes "importance
-    * relative to S", the graph-proximity score behind related-item
-    * retrieval and seed-set expansion. Integer-exact like
+  /** PERSONALIZED PageRank (q115): the teleport term concentrates on a
+    * source set S — rank becomes "importance relative to S", the
+    * proximity score behind related-item retrieval. Integer-exact like
     * [[fixedPointPageRank]]: the per-source base is
-    * `(15·scale·N) div (100·|S|)` (zero off S — total teleport mass
-    * matches the uniform variant's, so the same overflow bound holds),
-    * contributions are the identical `r div outdeg` floor-div chain,
-    * and a SQL oracle replays the recurrence round for round with the
-    * base derived from the same integer formula (q115).
+    * `(15·scale·N) div (100·|S|)` (zero off S — the total teleport mass,
+    * and so the overflow bound, match the uniform variant's), and the
+    * rounds are the uniform general path's with that base per vertex.
     *
-    * Contract: every vertex must have out-edges (symmetrize or
-    * self-loop first). PPR's dangling correction re-teleports lost mass
-    * to S — a second data-dependent term per round; the operator keeps
-    * the no-dangling contract explicit instead of silently
-    * approximating it.
-    *
-    * Iteration shape: identical to the uniform general path — edges
-    * materialized once, per round one contribution shuffle plus a
-    * vertex-sized left join; the base rides a per-vertex column
-    * computed once (vertices ⋈ S semi-join, checkpointed).
+    * Contract: every vertex must have out-edges (symmetrize or self-loop
+    * first) — PPR's dangling correction would re-teleport lost mass to S,
+    * a second data-dependent term the operator refuses to approximate.
     */
   def personalizedPageRank(
       edges: DataFrame, sources: DataFrame, iterations: Int,
       scale: Long = 1000000000000L,
-      broadcastMaxVertices: Long = 2L * 1000 * 1000): DataFrame = {
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations must be in [1, 50], got $iterations")
-    require(scale >= 100L && scale % 100L == 0L,
-      s"scale must be a positive multiple of 100, got $scale")
-    val e = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .distinct()
-    val withDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .localCheckpoint()
-    val vflags = withDeg
-      .select(col("src").as("vertex"), lit(1).as("s"))
-      .unionAll(withDeg.select(col("dst").as("vertex"), lit(0).as("s")))
-      .groupBy("vertex").agg(max(col("s")).as("s"))
-      .localCheckpoint()
-    val stats = vflags.agg(count(lit(1)), sum(col("s"))).collect()(0)
-    val (nV, nSrc) = (stats.getLong(0), stats.getLong(1))
-    require(nSrc == nV,
+      broadcastMaxVertices: Long = GraphLoop.BroadcastMaxVertices): DataFrame = {
+    val g = setup(unitWeights(edges), iterations, scale, broadcastMaxVertices)
+    require(g.nSrc == g.nV,
       s"personalizedPageRank requires every vertex to have out-edges " +
-        s"(${nV - nSrc} dangling) — symmetrize or add self-loops")
-    require(nV <= Long.MaxValue / 100L / scale,
-      s"85*N*scale must fit a long: N=$nV needs scale <= ${Long.MaxValue / 100L / nV}")
+        s"(${g.nV - g.nSrc} dangling) — symmetrize or add self-loops")
     val srcSet = sources
       .select(col("vertex").cast("long").as("vertex")).distinct()
-    val inGraph = vflags.select(col("vertex"))
-      .join(srcSet, Seq("vertex"), "left_semi")
-    val nS = inGraph.count()
+      .withColumn("__inS", lit(1L))
+    val (vertices, s) = GraphLoop.checkpoint(
+      g.vflags.select(col("vertex")).join(srcSet, Seq("vertex"), "left")
+        .select(col("vertex"), coalesce(col("__inS"), lit(0L)).as("__inS")),
+      count_if(col("__inS") === 1L).as("nS"))
+    val nS = s.getLong(0)
     require(nS >= 1L, "sources must intersect the graph's vertex set")
     // (15·scale·N) div (100·|S|); scale % 100 == 0 makes the /100 exact
     // first, so the single truncation is the div by |S| — the oracle
     // derives the same value as (15*scale*N) // (100*|S|)
-    val baseS = scale / 100L * 15L * nV / nS
-    val vertices = vflags.select(col("vertex"))
-      .join(inGraph.withColumn("__inS", lit(1L)), Seq("vertex"), "left")
-      .select(col("vertex"),
-        (coalesce(col("__inS"), lit(0L)) * baseS).as("__base"))
-      .localCheckpoint()
-    val useBroadcast = nV <= broadcastMaxVertices
-    val edgeSide =
-      if (useBroadcast) withDeg
-      else withDeg.repartition(col("src")).localCheckpoint()
-    var ranks = vertices.select(col("vertex"), lit(scale).as("r"))
-    for (_ <- 1 to iterations) {
-      val contrib = edgeSide
-        .join(if (useBroadcast) broadcast(ranks) else ranks,
-          col("src") === col("vertex"))
-        .select(col("dst"), expr("r div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("__s"))
-        .select(col("dst").as("vertex"), col("__s"))
-      ranks = vertices.join(contrib, Seq("vertex"), "left")
-        .select(col("vertex"),
-          expr("__base + (85 * coalesce(__s, CAST(0 AS BIGINT))) div 100")
-            .as("r"))
-        .localCheckpoint()
+    val baseS = scale / 100L * 15L * g.nV / nS
+    (1 to iterations).foldLeft(vertices.select(col("vertex"), lit(scale).as("r"))) {
+      (ranks, _) => roundGeneral(g.edgeSide, vertices, None, g.nV, ranks,
+        col("__inS") * baseS, g.gate).localCheckpoint()
     }
-    ranks
+  }
+
+  private def unitWeights(edges: DataFrame): DataFrame = edges
+    .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+    .distinct()
+    .withColumn("w", lit(1L))
+
+  private final case class Graph(
+      edgeSide: DataFrame, vflags: DataFrame,
+      nV: Long, nSrc: Long, nDst: Long, maxW: Long, gate: GraphLoop.Gate)
+
+  /** The setup both variants share: edges (src, dst, w) ⋈ wsum, and one
+    * row per vertex of src ∪ dst with its appears-as-src/dst flags, each
+    * checkpointed ONCE; the vertex stats and maxW ride those two jobs.
+    */
+  private def setup(e: DataFrame, iterations: Int, scale: Long,
+      broadcastMaxVertices: Long): Graph = {
+    GraphLoop.requireRounds("iterations", iterations)
+    require(scale >= 100L && scale % 100L == 0L,
+      s"scale must be a positive multiple of 100, got $scale")
+    // `e` feeds both join sides, but its terminal aggregation exchange is
+    // identical in both and ReuseExchange serves the second from the
+    // first — an explicit checkpoint here measured SLOWER
+    val (withDeg, w) = GraphLoop.checkpoint(
+      e.join(e.groupBy("src").agg(sum(col("w")).as("wsum")), "src"),
+      coalesce(max(col("w")), lit(0L)).as("maxW"))
+    val (vflags, v) = GraphLoop.checkpoint(
+      withDeg.select(col("src").as("vertex"), lit(1).as("s"), lit(0).as("d"))
+        .unionAll(withDeg
+          .select(col("dst").as("vertex"), lit(0).as("s"), lit(1).as("d")))
+        .groupBy("vertex")
+        .agg(max(col("s")).as("s"), max(col("d")).as("d")),
+      count(lit(1)).as("nV"), count_if(col("s") === 1).as("nSrc"),
+      count_if(col("d") === 1).as("nDst"))
+    val nV = v.getLong(0)
+    require(nV <= Long.MaxValue / 100L / scale,
+      s"85*N*scale must fit a long: N=$nV needs scale <= ${Long.MaxValue / 100L / nV}")
+    val gate = GraphLoop.Gate(nV, broadcastMaxVertices)
+    Graph(gate.edgeSide(withDeg, "src"), vflags, nV, v.getLong(1), v.getLong(2),
+      w.getLong(0), gate)
   }
 
   /** One rank iteration of the complete-graph fast path, un-checkpointed —
     * exposed so specs can assert the physical join strategy (the outer
-    * loop's checkpoint flattens the plan to a LogicalRDD scan, hiding the
-    * join from inspection).
-    *
-    * Checkpointed frames carry no stats, so without an explicit hint
-    * Catalyst planned a sort-merge join and re-exchanged every edge every
-    * round (measured 5× the total edge bytes at sf0.1) — hence the
-    * explicit broadcast below the gate, explicit co-partitioning above it.
+    * loop's checkpoint flattens the plan to a LogicalRDD scan).
     */
   private[graft] def round(
       withDeg: DataFrame, ranks: DataFrame, base: Long,
       useBroadcast: Boolean): DataFrame =
     withDeg
-      .join(if (useBroadcast) broadcast(ranks) else ranks,
+      .join(GraphLoop.Gate(useBroadcast).side(ranks),
         col("src") === col("vertex"))
       .select(col("dst"), expr("(r * w) div wsum").as("c"))
       .groupBy(col("dst"))
@@ -247,39 +175,32 @@ object PageRank {
 
   /** One rank iteration of the general path: contributions left-joined
     * onto the full vertex set (no-in-edge vertices keep their base), plus
-    * the dangling-mass share `D div N` when the graph has dangling
-    * vertices. D rides a 1-row aggregate broadcast-crossed into the
-    * vertex-sized update — the edge table still never moves, and the
-    * round still pays exactly one data-sized exchange (the contribution
-    * shuffle).
+    * the dangling-mass share `D div N` — a 1-row aggregate broadcast into
+    * the vertex-sized update — when `dangling` is given. `base` is a
+    * literal (uniform) or a column of `vertices` (personalized).
     */
   private[graft] def roundGeneral(
-      withDeg: DataFrame, vertices: DataFrame, dangling: DataFrame,
-      hasDangling: Boolean, nV: Long, ranks: DataFrame, base: Long,
-      useBroadcast: Boolean): DataFrame = {
+      withDeg: DataFrame, vertices: DataFrame, dangling: Option[DataFrame],
+      nV: Long, ranks: DataFrame, base: Column, gate: GraphLoop.Gate): DataFrame = {
     val contrib = withDeg
-      .join(if (useBroadcast) broadcast(ranks) else ranks,
-        col("src") === col("vertex"))
+      .join(gate.side(ranks), col("src") === col("vertex"))
       .select(col("dst"), expr("(r * w) div wsum").as("c"))
       .groupBy(col("dst"))
       .agg(sum(col("c")).as("__s"))
       .select(col("dst").as("vertex"), col("__s"))
     val updated = vertices.join(contrib, Seq("vertex"), "left")
-    if (!hasDangling)
-      updated.select(col("vertex"),
-        expr(s"$base + (85 * coalesce(__s, CAST(0 AS BIGINT))) div 100")
-          .as("r"))
-    else {
-      // Σ r over dangling vertices — dangling is vertex-bounded, so it
-      // follows the same broadcast gate as the rank table itself
-      val dmass = ranks
-        .join(if (useBroadcast) broadcast(dangling) else dangling,
-          Seq("vertex"), "left_semi")
-        .agg(coalesce(sum(col("r")), lit(0L)).as("__dm"))
-      updated.crossJoin(broadcast(dmass))
-        .select(col("vertex"),
-          expr(s"$base + (85 * (coalesce(__s, CAST(0 AS BIGINT))" +
-            s" + __dm div $nV)) div 100").as("r"))
+    dangling match {
+      case None => updated.select(col("vertex"),
+        (base + expr("(85 * coalesce(__s, CAST(0 AS BIGINT))) div 100")).as("r"))
+      case Some(d) =>
+        // Σ r over dangling vertices — dangling is vertex-bounded, so it
+        // follows the same broadcast gate as the rank table itself
+        val dmass = ranks.join(gate.side(d), Seq("vertex"), "left_semi")
+          .agg(coalesce(sum(col("r")), lit(0L)).as("__dm"))
+        updated.crossJoin(broadcast(dmass))
+          .select(col("vertex"), (base + expr(
+            s"(85 * (coalesce(__s, CAST(0 AS BIGINT)) + __dm div $nV)) div 100"))
+            .as("r"))
     }
   }
 }

@@ -3,11 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Multi-source BFS levels — unweighted shortest-path distance from a
-  * source set, depth-capped. With PageRank (q30), connected components
-  * (d06), and triangles (q35), the fourth canonical iterative-graph
-  * workload of the reference's engine family (iterate = the mr.exec
-  * re-invocation loop its tests drive by hand; SURVEY §2.6).
+/** Multi-source BFS levels (q51) — unweighted shortest-path distance
+  * from a source set, depth-capped — and weighted Bellman–Ford distances
+  * (q78).
   *
   * Algorithm: frontier expansion (the Pregel shape). Each round joins
   * the CURRENT FRONTIER (not the whole visited set) against the edge
@@ -18,15 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the edge list is hash-partitioned by source ONCE and
   * checkpointed in that layout, so every round's frontier⋈edges join
-  * exchanges only the FRONTIER (small, and shrinking as the wave
-  * saturates) — the edge set, the 100 TB object here, never re-shuffles
-  * after setup (the q30 co-partitioning discipline; ShortestPathsSpec
-  * pins the single-exchange plan). The per-round anti-join against
-  * visited is also node-keyed. `visited` and `frontier` are
-  * localCheckpointed every round — each iteration's plan starts from
-  * materialized partitions, not a lineage chain that re-runs all prior
-  * rounds. Depth is bounded (maxDepth rounds total), so the driver loop
-  * is O(maxDepth) actions regardless of graph size.
+  * exchanges only the FRONTIER — the edge set never re-shuffles after
+  * setup (ShortestPathsSpec pins the single-exchange plan). `visited`
+  * and `frontier` are localCheckpointed every round ([[GraphLoop]]'s
+  * round discipline); the driver loop is O(maxDepth) actions.
   */
 object ShortestPaths {
 
@@ -39,46 +32,35 @@ object ShortestPaths {
       edges: DataFrame, sources: DataFrame, maxDepth: Int,
       srcCol: String = "src", dstCol: String = "dst",
       nodeCol: String = "node",
-      broadcastMaxVertices: Long = 2L * 1000 * 1000): DataFrame = {
+      broadcastMaxVertices: Long = GraphLoop.BroadcastMaxVertices): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     val e = edges
       .select(col(srcCol).cast("long").as("__src"),
         col(dstCol).cast("long").as("__dst"))
       .filter(col("__src") =!= col("__dst"))
       .distinct()
-      // source-keyed layout, materialized once: every round's join then
-      // satisfies its distribution requirement from the checkpoint and
-      // only the frontier side exchanges
       .repartition(col("__src"))
       .localCheckpoint()
-    // The q30 regime gate (one bounded 1-row collect over the
-    // materialized checkpoint): below it the node-bounded frontier and
-    // visited sets BROADCAST into each round — the edge table is neither
-    // re-sorted nor re-exchanged (a stat-less checkpoint otherwise
-    // sort-merge-joins: its partitioning is preserved but every round
-    // pays a full edge SORT; guide §3.1). Above the gate the rounds keep
-    // the co-partitioned shuffle join.
-    val useBroadcast = e.select(col("__src")).distinct().count() <=
-      broadcastMaxVertices
-    var visited = sources
+    // the frontier and visited sets are bounded by src ∪ dst
+    val gate = GraphLoop.Gate.ofEdges(e, "__src", "__dst", broadcastMaxVertices)
+    val size = count(lit(1)).as("n")
+    var (visited, m) = GraphLoop.checkpoint(sources
       .select(col(nodeCol).cast("long").as("node"))
       .distinct()
-      .select(col("node"), lit(0).as("level"))
-      .localCheckpoint()
+      .select(col("node"), lit(0).as("level")), size)
     var frontier = visited
     var d = 0
-    while (d < maxDepth && !frontier.isEmpty) {
+    while (d < maxDepth && m.getLong(0) > 0L) {
       d += 1
-      val next = (if (useBroadcast) broadcast(frontier) else frontier)
+      val (next, nm) = GraphLoop.checkpoint(gate.side(frontier)
         .join(e, col("node") === col("__src"))
         .select(col("__dst").as("node"))
         .distinct()
-        .join(if (useBroadcast) broadcast(visited.select(col("node")))
-          else visited.select(col("node")), Seq("node"), "left_anti")
-        .select(col("node"), lit(d).as("level"))
-        .localCheckpoint()
+        .join(gate.side(visited.select(col("node"))), Seq("node"), "left_anti")
+        .select(col("node"), lit(d).as("level")), size)
       visited = visited.unionAll(next).localCheckpoint()
       frontier = next
+      m = nm
     }
     visited
   }
@@ -90,58 +72,40 @@ object ShortestPaths {
     * source→node path using at most `rounds` edges; sources are dist 0,
     * nodes unreachable within the hop cap are absent. All arithmetic is
     * long integer, so an unrolled SQL oracle replays every round
-    * bit-for-bit (the q30/q75 fixed-round discipline).
+    * bit-for-bit. Parallel (src, dst) edges collapse to their MINIMUM
+    * length — the only one a shortest path could use.
     *
-    * Parallel (src, dst) edges collapse to their MINIMUM length during
-    * setup — the only one a shortest path could use.
-    *
-    * Scale shape: the bfsLevels discipline — edges are hash-partitioned
-    * by src once and checkpointed; each round exchanges only the dist
-    * frontier (join on src, then a min-groupBy whose partial aggregation
-    * caps the shuffle at nodes·partitions). Unlike bfsLevels there is no
-    * shrinking frontier: a weighted relax can improve an already-settled
-    * node, so every round folds the full dist table — the textbook
-    * Bellman–Ford round, O(rounds) actions total.
+    * Scale shape: the bfsLevels layout, but no shrinking frontier — a
+    * weighted relax can improve an already-settled node, so every round
+    * folds the full dist table (the textbook Bellman–Ford round).
     */
   def bellmanFord(
       edges: DataFrame, sources: DataFrame, rounds: Int,
       srcCol: String = "src", dstCol: String = "dst",
       lenCol: String = "len", nodeCol: String = "node",
-      broadcastMaxVertices: Long = 2L * 1000 * 1000): DataFrame = {
-    require(rounds >= 1 && rounds <= 50,
-      s"rounds must be in [1, 50], got $rounds")
-    val e = edges
+      broadcastMaxVertices: Long = GraphLoop.BroadcastMaxVertices): DataFrame = {
+    GraphLoop.requireRounds("rounds", rounds)
+    // the positive-length guard rides the edge checkpoint's job
+    val (e, m) = GraphLoop.checkpoint(edges
       .select(col(srcCol).cast("long").as("__src"),
         col(dstCol).cast("long").as("__dst"),
         col(lenCol).cast("long").as("__len"))
       .filter(col("__src") =!= col("__dst"))
       .groupBy(col("__src"), col("__dst"))
       .agg(min(col("__len")).as("__len"))
-      .repartition(col("__src"))
-      .localCheckpoint()
-    // TWO bounded 1-row reads over the already-materialized checkpoint:
-    // the positive-length guard, and the vertex count for the q30
-    // broadcast-regime gate — below it the node-bounded dist table
-    // BROADCASTS into each round's relax join, so the edge table is
-    // neither re-sorted nor re-exchanged per round (guide §3.1; a
-    // stat-less checkpoint otherwise sort-merge-joins and pays a full
-    // edge sort every round). Above the gate the co-partitioned shuffle
-    // join stands.
-    val minRow = e.agg(min(col("__len"))).collect()(0)
-    val minLen = if (minRow.isNullAt(0)) 1L else minRow.getLong(0)
+      .repartition(col("__src")), min(col("__len")).as("minLen"))
+    val minLen = if (m.isNullAt(0)) 1L else m.getLong(0)
     require(minLen >= 1L, s"edge lengths must be positive, got $minLen")
-    val useBroadcast = e.select(col("__src")).distinct().count() <=
-      broadcastMaxVertices
-    var dist = sources
+    // the dist table is bounded by src ∪ dst
+    val gate = GraphLoop.Gate.ofEdges(e, "__src", "__dst", broadcastMaxVertices)
+    val init = sources
       .select(col(nodeCol).cast("long").as("node"))
       .distinct()
       .select(col("node"), lit(0L).as("dist"))
       .localCheckpoint()
-    var d = 0
-    while (d < rounds) {
-      d += 1
-      dist = dist
-        .unionAll((if (useBroadcast) broadcast(dist) else dist)
+    (1 to rounds).foldLeft(init) { (dist, _) =>
+      dist
+        .unionAll(gate.side(dist)
           .join(e, col("node") === col("__src"))
           .select(col("__dst").as("node"),
             (col("dist") + col("__len")).as("dist")))
@@ -149,6 +113,5 @@ object ShortestPaths {
         .agg(min(col("dist")).as("dist"))
         .localCheckpoint()
     }
-    dist
   }
 }

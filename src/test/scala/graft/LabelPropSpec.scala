@@ -46,4 +46,13 @@ class LabelPropSpec extends SparkSessionSpec {
     assert(run(star, 1) === Map(5L -> 6L, 6L -> 5L, 7L -> 5L, 8L -> 5L))
     assert(run(star, 2) === Map(5L -> 5L, 6L -> 6L, 7L -> 6L, 8L -> 6L))
   }
+
+  test("rounds are capped and run eagerly: the result's plan has no exchange") {
+    intercept[IllegalArgumentException] {
+      LabelProp.propagate(bridged.toDF("src", "dst"), rounds = 51)
+    }
+    val out = LabelProp.propagate(bridged.toDF("src", "dst"), rounds = 3)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+  }
 }
