@@ -89,20 +89,6 @@ object LakeFixtures {
     dst
   }
 
-  /** q133: [[graft.sources.Partitioned]] day tree — base write (even
-    * event_ids) + append (odd) + value-clustered compaction of the read
-    * week, 4-file floor so the band has files to skip at test SF.
-    */
-  def partClustered(s: SparkSession, dir: String): String =
-    fixture("part_clustered", dir) { out =>
-      val ev = slice(s, dir, "2024-01-05", "2024-01-16")
-      graft.sources.Partitioned.writeByDay(even(ev), out)
-      graft.sources.Partitioned.appendByDay(odd(ev), out)
-      graft.sources.Partitioned.compactDays(
-        s, out, "2024-01-08", "2024-01-14", targetFileMB = 128,
-        clusterBy = Seq("value"), minFilesPerDay = 4)
-    }
-
   /** Wall-clock instants captured between fixture commits, keyed like
     * [[built]] — what the TIMESTAMP time-travel gate (q144) resolves
     * against. Manifest publish mtimes are immutable, so a stamp taken
@@ -166,9 +152,11 @@ object LakeFixtures {
         zorder = true)
     }
 
-  /** q138: a raw [[graft.sources.Partitioned]] tree ADOPTED in place
-    * (importTree) and then clustered-compacted through the versioned
-    * path — the migration-chain fixture.
+  /** q133/q138: a raw [[graft.sources.Partitioned]] tree — base write
+    * (even event_ids) + append (odd) — ADOPTED in place (importTree) and
+    * then value-clustered-compacted over the read week with a 4-file
+    * floor, so the band has files to skip at test SF — the
+    * migration-chain fixture.
     */
   def importedLake(s: SparkSession, dir: String): String =
     fixture("lake_imported", dir) { out =>

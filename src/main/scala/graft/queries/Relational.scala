@@ -25,6 +25,20 @@ import graft.Engine.table
   */
 object Relational {
 
+  /** The week's `value ∈ [100, 150]` band of the imported, clustered
+    * lake fixture, read through the commit-log stats (q133, q138).
+    */
+  private def importedBandWeek(s: SparkSession, dir: String): DataFrame =
+    graft.sources.VersionedLake
+      .readBand(s, LakeFixtures.importedLake(s, dir), "value", 100.0, 150.0,
+        None, "2024-01-08", "2024-01-14")
+      .groupBy(col("dt"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
+        countDistinct(col("user_id")).as("n_users"),
+        min(col("event_id")).as("min_event_id"),
+        max(col("event_id")).as("max_event_id"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1 shape: scan-filter-aggregate with partial aggregation.
     // The reference analog is the grouped-fold MR job (mr.test.js:100-126).
@@ -856,14 +870,17 @@ object Relational {
           countDistinct(col("user_id")).as("n_users"))
     }),
 
-    // Lake COMPACTION gate (sources/Partitioned.compactDays): the
-    // events table lands as a base write plus an append (the
-    // incremental-ingest lifecycle that accumulates small files), the
-    // day range is compacted, and the week aggregate is answered from
-    // the COMPACTED tree. The oracle computes from the flat parquet, so
-    // the hash match proves the append + atomic per-day rewrite
-    // lossless end-to-end — same rows, full timestamp precision, exact
-    // sums. The write/append/compact cost is the honest maintenance
+    // Lake COMPACTION gate: the events table lands as a raw
+    // Partitioned base write plus an append (the incremental-ingest
+    // lifecycle that accumulates small files), is adopted into a commit
+    // log (VersionedLake.importTree), the week is compacted in one
+    // atomic commit (VersionedLake.compact), and the week aggregate is
+    // answered by Partitioned.readDays — which reads through the log,
+    // since the day dirs still hold the superseded files. The oracle
+    // computes from the flat parquet, so the hash match proves the
+    // append + import + compaction lossless end-to-end — same rows,
+    // full timestamp precision, exact sums, no superseded file read
+    // twice. The write/append/compact cost is the honest maintenance
     // cost and stays in the bench (the q114 discipline).
     "q127_compacted_scan" -> ((s, dir) => {
       val root = graft.TempDirs.scratch("graft_q127").toFile
@@ -881,7 +898,8 @@ object Relational {
         ev.filter(pmod(col("event_id"), lit(2)) === 0), out)
       graft.sources.Partitioned.appendByDay(
         ev.filter(pmod(col("event_id"), lit(2)) === 1), out)
-      graft.sources.Partitioned.compactDays(
+      graft.sources.VersionedLake.importTree(s, out)
+      graft.sources.VersionedLake.compact(
         s, out, "2024-01-08", "2024-01-14", targetFileMB = 128)
       graft.sources.Partitioned.readDays(s, out, "2024-01-08", "2024-01-14")
         .groupBy(col("dt"), col("event_type"))
@@ -890,41 +908,25 @@ object Relational {
           countDistinct(col("user_id")).as("n_users"))
     }),
 
-    // Clustered compaction + file-level data skipping
-    // (sources/Partitioned.scala bandPrune/readDaysBand — the lakehouse
-    // manifest idea): the q127 lifecycle runs again but the compaction
-    // RANGE-CLUSTERS each day on `value` and writes a per-file min/max
-    // manifest; the week's band query is then answered through
-    // readDaysBand, which prunes non-overlapping FILES from the manifest
-    // before any footer opens (unknown/appended files always read — the
-    // manifest can go stale without going wrong). The oracle computes
-    // the same band from the FLAT parquet, so the hash match proves the
-    // cluster rewrite + file pruning lossless end-to-end, not merely
+    // Clustered compaction + file-level data skipping: the q127
+    // lifecycle with the week RANGE-CLUSTERED on `value` (per-file
+    // min/max recorded in the commit log), and the week's band answered
+    // through VersionedLake.readBand, which prunes non-overlapping
+    // FILES from the snapshot's stats before any footer opens (entries
+    // without stats are always read). The oracle computes the same band
+    // from the FLAT parquet, so the hash match proves the cluster
+    // rewrite + file pruning lossless end-to-end, not merely
     // self-consistent. Scale: at 100 TB a narrow band over a clustered
-    // lake opens O(band) files instead of O(corpus) footers — the
-    // manifest is O(files) driver-side JSON; PartitionedSpec pins that
-    // files ARE skipped and that post-manifest appends are never lost.
-    "q133_clustered_scan" -> ((s, dir) => {
-      // the write+append+clustered-compact lifecycle is a shared
-      // per-process fixture (LakeFixtures — r11 next-round #1): the
+    // lake opens O(band) files instead of O(corpus) footers.
+    "q133_clustered_scan" -> ((s, dir) =>
+      // the write+append+import+clustered-compact lifecycle is the
+      // shared per-process fixture q138 also reads (LakeFixtures): the
       // oracle recomputes from FLAT parquet, so the fixture's build is
-      // still verified end-to-end by every read, and the bench stops
-      // paying ~45 lake builds per pass
-      val out = LakeFixtures.partClustered(s, dir)
-      graft.sources.Partitioned
-        .readDaysBand(s, out, "2024-01-08", "2024-01-14", "value",
-          100.0, 150.0)
-        .groupBy(col("dt"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"),
-          min(col("event_id")).as("min_event_id"),
-          max(col("event_id")).as("max_event_id"))
-    }),
+      // still verified end-to-end by every read
+      importedBandWeek(s, dir)),
 
     // Versioned lake with a manifest commit log
-    // (sources/VersionedLake.scala — the reader-atomicity upgrade over
-    // q127's rename-swap lake): two appends commit v1 (even event_ids)
+    // (sources/VersionedLake.scala): two appends commit v1 (even event_ids)
     // and v2 (odd), compaction publishes v3 atomically, and the query
     // answers the SAME aggregate twice — time-traveled to v1 and from
     // the compacted head — in one result (tagged rows, one build cost).
@@ -954,11 +956,11 @@ object Relational {
           "2024-01-08", "2024-01-14"), "live"))
     }),
 
-    // Data skipping from the COMMIT LOG (q133's band gate through
-    // VersionedLake): appends record coarse per-file min/max in their
-    // manifest entries, clustered compaction tightens them to disjoint
-    // ranges, and readBand prunes files straight off the snapshot — no
-    // sidecar, no directory listing. Same flat-parquet oracle as q133,
+    // Data skipping from the COMMIT LOG on a natively versioned lake
+    // (q133 reads an imported one): appends record coarse per-file
+    // min/max in their manifest entries, clustered compaction tightens
+    // them to disjoint ranges, and readBand prunes files straight off
+    // the snapshot — no directory listing. Same flat-parquet oracle as q133,
     // so equality proves manifest-stats pruning lossless end-to-end;
     // VersionedLakeSpec pins that files are actually skipped and that
     // stat-less entries always survive selection.
@@ -1042,20 +1044,10 @@ object Relational {
     // compaction, stats skipping. This is the bridge between the two
     // lake flavors — a user migrates a raw dt= tree to snapshots/
     // time-travel/CDC without moving a byte of data.
-    "q138_imported_lake" -> ((s, dir) => {
+    "q138_imported_lake" -> ((s, dir) =>
       // shared fixture: raw tree → importTree → clustered compact; the
       // query reads the migrated lake through the manifest band path
-      val out = LakeFixtures.importedLake(s, dir)
-      graft.sources.VersionedLake
-        .readBand(s, out, "value", 100.0, 150.0,
-          None, "2024-01-08", "2024-01-14")
-        .groupBy(col("dt"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"),
-          min(col("event_id")).as("min_event_id"),
-          max(col("event_id")).as("max_event_id"))
-    }),
+      importedBandWeek(s, dir)),
 
     // UPSERT into the versioned lake (the MERGE/CDC-apply analog,
     // last-write-wins by event_id): the 11-day slice lands as the base,
@@ -1755,10 +1747,10 @@ object Relational {
            AND strftime(ts, '%Y-%m-%d') <= '2024-01-14'
          GROUP BY 1, 2""",
     // Mirrors q133 from the FLAT side (the q127 oracle + the band
-    // predicate): Spark answers through the clustered tree's manifest-
-    // pruned file read — equality proves clustering + file skipping
-    // lossless (a dropped file fails n_events; a stale-manifest miss
-    // fails the event_id extremes).
+    // predicate): Spark answers through the clustered lake's
+    // commit-log-pruned file read — equality proves clustering + file
+    // skipping lossless (a dropped file fails n_events; a wrongly
+    // pruned file fails the event_id extremes).
     "q133_clustered_scan" ->
       """SELECT strftime(ts, '%Y-%m-%d') AS dt, event_type,
            count(*) AS n_events,

@@ -144,17 +144,18 @@ object StreamQueries {
       graft.streaming.Lateness.watermarkLateness(
         table(s, dir, "events"), horizonSeconds = 7200L)),
 
-    // Stream→lake ingest gate — the batch form of LakeSinkSpec's
-    // topology (micro-batches → day-partitioned tree → pruned read):
-    // an 11-day events slice lands through LakeSink.appendBatch as
-    // three batches, WITH BATCH 1 REPLAYED (the at-least-once crash
-    // signature foreachBatch delivers) — the batch-id manifest must
-    // keep its rows single-counted. The week aggregate is answered
-    // from the sink's tree; the oracle computes from the FLAT parquet,
-    // so the hash match IS the exactly-once proof end-to-end (a
-    // double-applied replay fails on n_events; a lossy stamped-file
-    // swap fails on the sums). Uncompacted neighbor days prove the
-    // pruned read's range discipline (the q127 framing).
+    // Stream→lake ingest gate through the LakeSink forwarder: an
+    // 11-day events slice lands through LakeSink.appendBatch as three
+    // batches, WITH BATCH 1 REPLAYED (the at-least-once crash signature
+    // foreachBatch delivers), and the week aggregate is answered by
+    // Partitioned.readDays, which routes to the sink tree's commit log.
+    // s20 runs the same batches through VersionedLake.appendBatch
+    // directly — one commit protocol under both — so s19 pins the
+    // forwarder plus the readDays routing. The oracle computes from the
+    // FLAT parquet, so the hash match IS the exactly-once proof
+    // end-to-end (a double-applied replay fails on n_events; a lossy
+    // commit fails on the sums). Uncompacted neighbor days prove the
+    // day-range discipline (the q127 framing).
     "s19_lake_sink_ingest" -> ((s, dir) => {
       val root = graft.TempDirs.scratch("graft_s19").toFile
       val out = root.getAbsolutePath + "/events"
@@ -164,7 +165,7 @@ object StreamQueries {
       def slice(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
       graft.streaming.LakeSink.appendBatch(slice(0), out, batchId = 0)
       graft.streaming.LakeSink.appendBatch(slice(1), out, batchId = 1)
-      // replay of a committed batch: the manifest marker must skip it
+      // replay of a committed batch: the high-water mark must skip it
       graft.streaming.LakeSink.appendBatch(slice(1), out, batchId = 1)
       graft.streaming.LakeSink.appendBatch(slice(2), out, batchId = 2)
       graft.sources.Partitioned.readDays(s, out, "2024-01-08", "2024-01-14")
@@ -178,7 +179,7 @@ object StreamQueries {
     // the same three batches with batch 1 replayed land via
     // VersionedLake.appendBatch — here exactly-once is the manifest's
     // last_batch_id high-water mark, committed atomically WITH the files
-    // it covers (no stamped-file sweep), and the week is answered from
+    // it covers, and the week is answered from
     // the snapshot the commits built. Same flat-parquet oracle: hash
     // equality proves the replayed batch committed exactly once and the
     // manifest lost no files across four commits.

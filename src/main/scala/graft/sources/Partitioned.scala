@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,6 +24,11 @@ import org.apache.spark.sql.functions._
   *    available, and prune with a dt predicate (PartitionedSpec gates
   *    `PartitionFilters` in the scan — a filter that lands in
   *    `PushedFilters` instead is reading every directory).
+  *
+  * This object only writes raw trees. Compaction, file skipping and
+  * exactly-once ingest are [[VersionedLake]] commits: adopt a raw tree
+  * with [[VersionedLake.importTree]], and from then on the commit log —
+  * not the directory listing — decides which files are live.
   */
 object Partitioned {
 
@@ -40,19 +45,32 @@ object Partitioned {
     * type inference reads `dt=...` dirs as DATE; the bounds coerce and
     * prune on that native column, and `dt` is cast back to the string
     * the writer derived so the column round-trips type-stable.
+    *
+    * A tree with a `_commits/` log is read as its latest
+    * [[VersionedLake]] snapshot instead: its day dirs also hold files
+    * the log superseded (until vacuum) or never committed (a crashed
+    * writer's orphans), so only the log knows the live set.
     */
   def readDays(
       spark: SparkSession, path: String,
-      fromDay: String, toDay: String): DataFrame =
-    spark.read.option("basePath", path).parquet(path)
-      .filter(col("dt") >= fromDay && col("dt") <= toDay)
-      .withColumn("dt", date_format(col("dt"), "yyyy-MM-dd"))
+      fromDay: String, toDay: String): DataFrame = {
+    val log = new Path(path, VersionedLake.CommitDir)
+    if (log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log))
+      VersionedLake.read(spark, path, None, fromDay, toDay)
+    else
+      spark.read.option("basePath", path).parquet(path)
+        .filter(col("dt") >= fromDay && col("dt") <= toDay)
+        .withColumn("dt", date_format(col("dt"), "yyyy-MM-dd"))
+  }
 
   /** Append a batch into an existing day tree (the incremental-ingest
     * path): same derived-dt + repartition discipline as [[writeByDay]],
     * appending files into the touched day directories. Each append adds
-    * up to one file per day per shuffle partition — which is exactly why
-    * a lake needs [[compactDays]] as periodic maintenance.
+    * up to one file per day per shuffle partition; once the tree is
+    * adopted ([[VersionedLake.importTree]]), [[VersionedLake.compact]]
+    * bounds the count, and later appends go through
+    * [[VersionedLake.append]] — files this method adds to an adopted
+    * tree are uncommitted, and [[readDays]] does not return them.
     */
   def appendByDay(df: DataFrame, path: String, tsCol: String = "ts"): Unit =
     df.withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd"))
@@ -60,323 +78,4 @@ object Partitioned {
       .write.mode("append")
       .partitionBy("dt")
       .parquet(path)
-
-  /** Small-file compaction over a day range — the weekly maintenance op
-    * of a real event lake: incremental appends accumulate files per day
-    * (one per append × shuffle partition), and scan cost degrades with
-    * file count long before data size grows. Each day in
-    * [fromDay, toDay] is rewritten to `ceil(bytes / targetFileMB)`
-    * files (min 1) and swapped in day by day:
-    *  - days outside the range are never touched;
-    *  - a day already at-or-under its target file count is skipped
-    *    (no write amplification on repeat runs);
-    *  - the swap is CRASH-SAFE but not reader-atomic: the rewrite lands
-    *    in a hidden `.compact_tmp` sibling and replaces the day dir
-    *    with two renames, so a crash at any point leaves either the old
-    *    day dir or the fully-written new one recoverable — but between
-    *    the two renames the day dir is briefly ABSENT, so a concurrent
-    *    readDays over the range can drop the day or fail listing it.
-    *    Compaction is a single-writer MAINTENANCE-WINDOW op: run it
-    *    when no reader overlaps the range (true reader atomicity needs
-    *    a manifest/commit log — Delta/Iceberg territory, out of scope);
-    *  - rows and timestamp precision are bit-identical (plain parquet
-    *    read → coalesce → write; no recompute touches the values).
-    * Listing and the swap go through `org.apache.hadoop.fs.FileSystem`
-    * resolved from the root's scheme, so the lake compacts equally on
-    * `file:` and `hdfs:` roots (S3 caveat: renames are copy+delete —
-    * slower and non-atomic; see the Store scaladoc).
-    * Days are INDEPENDENT jobs over disjoint directories, so they fan
-    * out on a small thread pool (`parallelism`, default 4 — Spark's
-    * scheduler interleaves concurrent job submissions): a month's
-    * maintenance costs ~max(day) instead of Σ(days), and each day's
-    * swap stays individually crash-safe.
-    *
-    * `clusterBy` turns the rewrite into CLUSTERED compaction: each day
-    * range-partitions + sorts on the key, so every output file owns a
-    * disjoint key range, and a `.stats.json` manifest (per-file rows +
-    * min/max for `clusterBy ++ statsCols`) lands in the day dir with the
-    * data — see the data-skipping block below ([[bandPrune]] /
-    * [[readDaysBand]]). A clustered run rewrites a compact-but-
-    * unclustered day once (the manifest is the idempotence witness).
-    */
-  def compactDays(
-      spark: SparkSession, path: String,
-      fromDay: String, toDay: String, targetFileMB: Int = 128,
-      parallelism: Int = 4,
-      clusterBy: Seq[String] = Nil,
-      statsCols: Seq[String] = Nil,
-      minFilesPerDay: Int = 1): Unit = {
-    val root = new Path(path)
-    val fs: FileSystem =
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dayDirs = (if (fs.exists(root)) fs.listStatus(root) else Array.empty)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
-      .filter { s =>
-        val day = s.getPath.getName.stripPrefix("dt=")
-        day >= fromDay && day <= toDay // ISO day strings order lexically
-      }
-      .sortBy(_.getPath.getName)
-    val targetBytes = targetFileMB.toLong * 1024 * 1024
-    // stats are keyed to the rewrite: clusterBy columns always get
-    // min/max recorded (they're the ones clustering makes prunable);
-    // statsCols widens the manifest to un-clustered columns (weaker
-    // ranges, still sound — pruning only skips on PROVEN disjointness)
-    val manifestCols = (clusterBy ++ statsCols).distinct
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, math.max(1, dayDirs.length))))
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    def compactOne(dayStatus: org.apache.hadoop.fs.FileStatus): Unit = {
-      val dayDir = dayStatus.getPath
-      // any non-hidden file is data: batch writers emit part-*, the
-      // streaming LakeSink emits batch-stamped bN-part-* names
-      val parts = fs.listStatus(dayDir).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      val bytes = parts.map(_.getLen).sum
-      // minFilesPerDay floors the REWRITE width: a clustered day keeps at
-      // least that many disjoint key ranges (≥ that much parallel read
-      // width, and a band has files to skip) even when the day is small
-      val want = math.max(minFilesPerDay.toLong,
-        math.max(1L, (bytes + targetBytes - 1) / targetBytes)).toInt
-      // skip (idempotence / no write amplification) only when the day is
-      // already at its file bound AND carries everything this run would
-      // produce: a clustered run must still rewrite a compact-but-
-      // unclustered day (its manifest is the witness clustering ran)
-      val alreadyDone = parts.length <= want &&
-        (manifestCols.isEmpty || fs.exists(new Path(dayDir, StatsName)))
-      if (!alreadyDone && parts.length > 0) {
-        val tmp = new Path(root, s".compact_tmp_${dayDir.getName}")
-        // day files carry no dt column (partitionBy strips it) — the
-        // rewrite is a plain parquet round-trip of the same schema
-        val day = spark.read.parquet(dayDir.toString)
-        val laid =
-          if (clusterBy.isEmpty) day.coalesce(want)
-          // range-partition + sort on the cluster key: each output file
-          // owns a disjoint key range, so per-file min/max become TIGHT
-          // and a band predicate skips every non-overlapping file — the
-          // Z-order idea reduced to the 1-key case Spark expresses
-          // natively (parquet row-group stats tighten identically)
-          else day.repartitionByRange(want, clusterBy.map(col): _*)
-            .sortWithinPartitions(clusterBy.map(col): _*)
-        laid.write.mode("overwrite").parquet(tmp.toString)
-        // drop Spark's _SUCCESS marker: day dirs hold only part files
-        fs.delete(new Path(tmp, "_SUCCESS"), false): Unit
-        if (manifestCols.nonEmpty)
-          writeDayStats(spark, fs, tmp, dayDir.getName.stripPrefix("dt="),
-            manifestCols)
-        val trash = new Path(root, s".compact_old_${dayDir.getName}")
-        if (!fs.rename(dayDir, trash))
-          sys.error(s"compactDays: cannot swap out ${dayDir.getName}")
-        if (!fs.rename(tmp, dayDir)) {
-          fs.rename(trash, dayDir) // roll back — old data stays live
-          sys.error(s"compactDays: cannot swap in ${dayDir.getName}")
-        }
-        fs.delete(trash, true): Unit
-      }
-    }
-    try {
-      dayDirs.foreach { d =>
-        pool.execute(() =>
-          try compactOne(d) catch { case t: Throwable => failures.add(t); () })
-      }
-      pool.shutdown()
-      pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS): Unit
-    } finally pool.shutdownNow()
-    if (!failures.isEmpty) throw failures.peek()
-  }
-
-  // ---------------------------------------------------------------------
-  // File-level data skipping — the lakehouse manifest idea (Delta/Iceberg
-  // file stats) reduced to what a day-partitioned parquet tree needs:
-  // clustered compaction writes a per-day `.stats.json` (one line per data
-  // file: rows + per-column min/max), and a band read prunes FILES from
-  // the manifest before a single footer opens. Soundness contract:
-  //  - a file is skipped ONLY when its recorded [min,max] provably cannot
-  //    intersect the predicate band (null rows fail a band predicate, and
-  //    min/max ignore nulls, so the check is conservative);
-  //  - files present in the directory but ABSENT from the manifest are
-  //    always read — so later appendByDay batches are never lost and the
-  //    manifest can go stale without going WRONG (it only loses pruning
-  //    power until the next compaction refreshes it);
-  //  - the manifest lives INSIDE the day directory and is written into
-  //    the compaction tmp dir BEFORE the swap, so stats and data move
-  //    atomically together (a day never carries another layout's stats);
-  //  - the residual predicate is still applied to every row read, so
-  //    pruning is invisible to results by construction.
-  // At 100 TB this is the difference between "open 10⁶ footers to answer
-  // a narrow band" and "read the few files whose range overlaps": the
-  // manifest is O(files) driver-side JSON, parsed without touching Spark.
-  // ---------------------------------------------------------------------
-
-  private[graft] val StatsName = ".stats.json"
-
-  /** Per-file column range recorded by the manifest (min/max as strings
-    * in the column's natural format; dtype picks the comparison).
-    */
-  private case class ColRange(dtype: String, min: String, max: String)
-
-  /** What a band read decided, exposed for tests/observability: which
-    * files survive, how many existed, how many the manifest skipped.
-    */
-  final case class PruneReport(
-      selected: Seq[String], total: Int, skipped: Int)
-
-  private def writeDayStats(
-      spark: SparkSession, fs: FileSystem, dayDir: Path, day: String,
-      cols: Seq[String]): Unit = {
-    val aggs = count(lit(1)).as("rows") +:
-      cols.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"min:$c"),
-        max(col(c)).cast("string").as(s"max:$c")))
-    val schema = spark.read.parquet(dayDir.toString).schema
-    val dtypes = cols.map(c => c -> schema(c).dataType.simpleString).toMap
-    // one row per output file: a metadata-column groupBy over the files
-    // just written — tiny (≤ files/day rows cross the driver)
-    val rows = spark.read.parquet(dayDir.toString)
-      .select(col("_metadata.file_path").as("f") +: cols.map(col): _*)
-      .groupBy(col("f")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val sb = new StringBuilder
-    rows.foreach { r =>
-      val node = om.createObjectNode()
-      node.put("file", r.getString(0).split('/').last)
-      node.put("dt", day)
-      node.put("rows", r.getLong(1))
-      val colsNode = node.putArray("cols")
-      cols.zipWithIndex.foreach { case (c, i) =>
-        val cn = colsNode.addObject()
-        cn.put("name", c)
-        cn.put("dtype", dtypes(c))
-        val mn = r.getString(2 + 2 * i)
-        val mx = r.getString(3 + 2 * i)
-        if (mn != null) cn.put("min", mn) else cn.putNull("min")
-        if (mx != null) cn.put("max", mx) else cn.putNull("max")
-      }
-      sb.append(om.writeValueAsString(node)).append('\n')
-    }
-    val out = fs.create(new Path(dayDir, StatsName), true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readDayStats(
-      fs: FileSystem, dayDir: Path): Map[String, Map[String, ColRange]] = {
-    val p = new Path(dayDir, StatsName)
-    if (!fs.exists(p)) return Map.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      val n = om.readTree(line)
-      val perCol = n.get("cols").elements()
-      val m = scala.collection.mutable.Map[String, ColRange]()
-      while (perCol.hasNext) {
-        val c = perCol.next()
-        if (!c.get("min").isNull && !c.get("max").isNull)
-          m(c.get("name").asText()) = ColRange(
-            c.get("dtype").asText(), c.get("min").asText(),
-            c.get("max").asText())
-      }
-      n.get("file").asText() -> m.toMap
-    }.toMap
-  }
-
-  /** Decide which files a `bandCol ∈ [lo, hi]` read must open, per the
-    * soundness contract above. Numeric dtypes compare as BigDecimal
-    * (covers int/bigint/float/double/decimal stats exactly); string
-    * columns compare lexically; any other dtype is never pruned.
-    */
-  def bandPrune(
-      spark: SparkSession, path: String, fromDay: String, toDay: String,
-      bandCol: String, lo: String, hi: String): PruneReport = {
-    def overlaps(r: ColRange): Boolean =
-      StatsCompare.overlaps(r.dtype, r.min, r.max, lo, hi)
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dayDirs = (if (fs.exists(root)) fs.listStatus(root) else Array.empty)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
-      .filter { s =>
-        val day = s.getPath.getName.stripPrefix("dt=")
-        day >= fromDay && day <= toDay
-      }
-      .sortBy(_.getPath.getName)
-    var total = 0
-    val selected = dayDirs.flatMap { d =>
-      val stats = readDayStats(fs, d.getPath)
-      val files = fs.listStatus(d.getPath).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      total += files.length
-      files.filter { f =>
-        stats.get(f.getPath.getName).flatMap(_.get(bandCol)) match {
-          case Some(r) => overlaps(r) // manifest range — prune on proof
-          case None    => true        // unknown file/column — must read
-        }
-      }.map(_.getPath.toString)
-    }.toSeq
-    PruneReport(selected, total, total - selected.length)
-  }
-
-  /** Day-ranged read with a band predicate on `bandCol`, file-pruned by
-    * the compaction manifest. Result is IDENTICAL to
-    * `readDays(...).filter(bandCol between lo and hi)` — the manifest
-    * only decides which files open; the predicate still runs per row
-    * (and pushes into the surviving parquet scans for row-group
-    * skipping on the same clustered layout).
-    */
-  def readDaysBand(
-      spark: SparkSession, path: String, fromDay: String, toDay: String,
-      bandCol: String, lo: Double, hi: Double): DataFrame = {
-    val report = bandPrune(spark, path, fromDay, toDay,
-      bandCol, lo.toString, hi.toString)
-    val base =
-      if (report.total > 0 && report.selected.isEmpty)
-        // every file is PROVABLY disjoint from the band: the result is
-        // empty by the same proof that drives skipping — Filter(false)
-        // collapses to an empty relation, no scan planned (the old
-        // fallback re-read the whole day range exactly when pruning was
-        // total — r10 ADVICE)
-        readDays(spark, path, fromDay, toDay).filter(lit(false))
-      else if (report.selected.isEmpty || report.selected.length == report.total)
-        // nothing prunable (no manifest yet, or no files at all) — the
-        // plain pruned-directory read is already correct
-        readDays(spark, path, fromDay, toDay)
-      else
-        // basePath keeps partition discovery alive on the explicit file
-        // list, so the dt column round-trips exactly as in readDays
-        spark.read.option("basePath", path)
-          .parquet(report.selected: _*)
-          .filter(col("dt") >= fromDay && col("dt") <= toDay)
-          .withColumn("dt", date_format(col("dt"), "yyyy-MM-dd"))
-    base.filter(col(bandCol) >= lo && col(bandCol) <= hi)
-  }
-}
-
-/** Shared min/max-vs-band comparison for file-skipping decisions (the
-  * [[Partitioned]] sidecar manifests and the [[VersionedLake]] commit-log
-  * stats speak the same string-encoded ranges). Conservative by
-  * construction: an unrecognized dtype never prunes.
-  */
-private[sources] object StatsCompare {
-  private val numeric =
-    Set("tinyint", "smallint", "int", "bigint", "float", "double")
-
-  /** Can any value in [min, max] (typed per `dtype`) fall in [lo, hi]?
-    * Float/double columns containing NaN (or ±Infinity) record bounds
-    * BigDecimal cannot parse — an unparseable bound answers TRUE (never
-    * prune), so one NaN row degrades skipping instead of breaking every
-    * later band read of an otherwise healthy lake (r10 ADVICE).
-    */
-  def overlaps(dtype: String, min: String, max: String,
-      lo: String, hi: String): Boolean =
-    if (numeric(dtype) || dtype.startsWith("decimal")) {
-      scala.util.Try(
-        BigDecimal(max) >= BigDecimal(lo) && BigDecimal(min) <= BigDecimal(hi)
-      ).getOrElse(true)
-    } else if (dtype == "string") max >= lo && min <= hi
-    else true // unknown comparison — never prune
 }

@@ -5,14 +5,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Day-partitioned lake with a DELTA-MANIFEST COMMIT LOG — the
-  * reader-atomicity upgrade [[Partitioned.compactDays]]'s scaladoc defers
-  * to "Delta/Iceberg territory": there, the two-rename swap leaves a
-  * visibility gap where a concurrent reader can drop a day. Here no
-  * reader ever lists directories at all — the live file set is
-  * reconstructed from the commit log under `_commits/`, data files are
-  * IMMUTABLE once committed (writers only add files; nothing is deleted
-  * until [[vacuum]]), and every write is one atomic manifest publish:
+/** Day-partitioned lake with a DELTA-MANIFEST COMMIT LOG — the one
+  * write protocol of the [[Partitioned]] day layout: ingest (including
+  * the streaming sink), compaction and file skipping all go through one
+  * atomic manifest commit, so no reader ever sees a day missing or
+  * half-rewritten. No reader lists directories at all — the live file
+  * set is reconstructed from the commit log under `_commits/`, data
+  * files are IMMUTABLE once committed (writers only add files; nothing
+  * is deleted until [[vacuum]]), and every write is one atomic manifest
+  * publish:
   *
   *  - `_commits/v0000000N.json` — one JSON-lines DELTA per version: a
   *    header line (schema, op, streaming high-water mark, add/remove
@@ -73,7 +74,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
   */
 object VersionedLake {
 
-  private val CommitDir = "_commits"
+  private[sources] val CommitDir = "_commits"
   private val VName = """v(\d{8})\.json""".r
   private val CkptName = """v(\d{8})\.ckpt\.json""".r
 
@@ -87,9 +88,9 @@ object VersionedLake {
     * (`dt=YYYY-MM-DD/<name>`), so manifests survive a lake relocation.
     * `stats` carries optional per-column (min, max) string pairs — the
     * data-skipping index living IN the commit log (the Delta/Iceberg
-    * arrangement, vs [[Partitioned]]'s per-day sidecar): entries without
-    * stats for a column are simply never pruned on it. `src` records the
-    * op that produced the file — [[compact]]'s idempotence witness
+    * arrangement): entries without stats for a column are simply never
+    * pruned on it. `src` records the op that produced the file —
+    * [[compact]]'s idempotence witness
     * distinguishes genuinely range-clustered files (src == "compact")
     * from append files that happen to sit at the file-count bound with
     * coincidental stats.
@@ -578,9 +579,8 @@ object VersionedLake {
     appendInternal(df, path, tsCol, statsCols, batchId = None)
 
   /** One micro-batch's EXACTLY-ONCE append (the streaming sink unit —
-    * see [[sink]]): foreachBatch is at-least-once, and here idempotence
-    * is one header check instead of [[graft.streaming.LakeSink]]'s
-    * stamped-file sweep — the manifest's `last_batch_id` high-water mark
+    * see [[sink]]): foreachBatch is at-least-once, and idempotence is
+    * one header check — the manifest's `last_batch_id` high-water mark
     * is committed ATOMICALLY WITH the files it covers, so
     *  - a replayed batch whose id is ≤ the mark returns without writing
     *    (its rows are provably in the snapshot — same commit);
@@ -635,9 +635,9 @@ object VersionedLake {
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             batchId: Long) =>
-          // No batch pin here, unlike KVSink/LakeSink: those sinks run
-          // TWO actions per batch (a probe plus the write) on the batch
-          // lineage, so they must checkpoint it to keep the actions
+          // No batch pin here, unlike KVSink: that sink runs TWO
+          // actions per batch (a probe plus the write) on the batch
+          // lineage, so it must checkpoint it to keep the actions
           // consistent. This sink's batch lineage executes in exactly
           // ONE action — the staged write inside appendBatch (the stats
           // job reads the WRITTEN FILES, not the lineage) — so a pin
@@ -712,13 +712,19 @@ object VersionedLake {
     // fail LOUDLY at the write boundary instead (field order is layout,
     // not identity). ADDITIVE evolution is the explicit [[evolveSchema]]
     // commit; anything else is a new lake + an explicit backfill.
-    latestVersion(spark, path).foreach { v =>
-      val committed = readHeader(fs, commitPath(root, v)).schema
-      val norm = (s: StructType) =>
-        s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-      require(norm(schema) == norm(committed),
-        s"VersionedLake: append schema ${schema.simpleString} does not " +
-          s"match the committed schema ${committed.simpleString}")
+    latestVersion(spark, path) match {
+      case Some(v) =>
+        val committed = readHeader(fs, commitPath(root, v)).schema
+        val norm = (s: StructType) =>
+          s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
+        require(norm(schema) == norm(committed),
+          s"VersionedLake: append schema ${schema.simpleString} does not " +
+            s"match the committed schema ${committed.simpleString}")
+      case None =>
+        // the log dir exists before any data file lands, so
+        // Partitioned.readDays reads a virgin lake through its (empty)
+        // log and never lists a crashed first append's orphans
+        fs.mkdirs(new Path(root, CommitDir)): Unit
     }
     val stage = new Path(root,
       s".vstage_${java.util.UUID.randomUUID.toString.take(8)}")
@@ -744,7 +750,7 @@ object VersionedLake {
       }.toSeq
     fs.delete(stage, true): Unit
     // per-file row counts + stats: one tiny metadata aggregation over
-    // just this batch's files (the LakeSink day-probe cost class).
+    // just this batch's files.
     // Computed AFTER the move — Spark's file index silently drops a
     // dot-hidden stage root — and keyed by dt=DAY/name: a task holding
     // two days writes the SAME basename under both, so bare names
@@ -861,22 +867,34 @@ object VersionedLake {
     }
   }
 
+  /** What a band read decided, exposed for tests/observability: which
+    * entries survive, how many were in the day range, how many the
+    * commit-log stats skipped.
+    */
+  final case class PruneReport(
+      selected: Seq[String], total: Int, skipped: Int)
+
   /** Which snapshot entries a `bandCol ∈ [lo, hi]` read must open
-    * (exposed for tests/observability): entries without stats for the
-    * column always survive — the [[Partitioned.bandPrune]] soundness
-    * contract, with the ranges read from the commit log instead of a
-    * sidecar. The column's dtype comes from the snapshot schema.
+    * (exposed for tests/observability). Soundness contract:
+    *  - an entry is skipped ONLY when its recorded [min, max] provably
+    *    cannot intersect the band (null rows fail a band predicate, and
+    *    min/max ignore nulls, so the check is conservative);
+    *  - entries without stats for the column always survive, so files
+    *    committed without stats are never lost;
+    *  - the residual predicate still runs on every row read, so
+    *    pruning is invisible to results by construction.
+    * The column's dtype comes from the snapshot schema.
     */
   def bandReport(spark: SparkSession, path: String, bandCol: String,
       lo: String, hi: String, version: Option[Long] = None,
       fromDay: String = "0000-01-01", toDay: String = "9999-12-31")
-      : Partitioned.PruneReport =
+      : PruneReport =
     bandReportOf(snapshot(spark, path, version), bandCol, lo, hi,
       fromDay, toDay)
 
   private def bandReportOf(snap: Snapshot, bandCol: String,
       lo: String, hi: String, fromDay: String, toDay: String)
-      : Partitioned.PruneReport =
+      : PruneReport =
     bandsReportOf(snap, Seq((bandCol, lo, hi)), fromDay, toDay)
 
   /** CONJUNCTIVE multi-band pruning: a file survives only when EVERY
@@ -888,7 +906,7 @@ object VersionedLake {
     */
   private def bandsReportOf(snap: Snapshot,
       bands: Seq[(String, String, String)],
-      fromDay: String, toDay: String): Partitioned.PruneReport = {
+      fromDay: String, toDay: String): PruneReport = {
     val typed = bands.map { case (c, lo, hi) =>
       (c, snap.schema(c).dataType.simpleString, lo, hi)
     }
@@ -901,7 +919,7 @@ object VersionedLake {
         }
       }
     }.map(_.path)
-    Partitioned.PruneReport(selected, inDays.length,
+    PruneReport(selected, inDays.length,
       inDays.length - selected.length)
   }
 
@@ -911,7 +929,7 @@ object VersionedLake {
   def bandsReport(spark: SparkSession, path: String,
       bands: Seq[(String, Double, Double)], version: Option[Long] = None,
       fromDay: String = "0000-01-01", toDay: String = "9999-12-31")
-      : Partitioned.PruneReport =
+      : PruneReport =
     bandsReportOf(snapshot(spark, path, version),
       bands.map { case (c, lo, hi) => (c, lo.toString, hi.toString) },
       fromDay, toDay)
@@ -971,7 +989,9 @@ object VersionedLake {
   /** Compact each day in [fromDay, toDay] of the LATEST snapshot down to
     * `ceil(bytes / targetFileMB)` files (floored at `minFilesPerDay`) and
     * publish the substitution atomically. Readers of older versions keep
-    * their files — nothing is deleted here ([[vacuum]] reclaims). Days
+    * their files — nothing is deleted here ([[vacuum]] reclaims), so the
+    * day dirs hold both generations until then and only the commit log
+    * tells them apart ([[Partitioned.readDays]] reads through it). Days
     * already at-or-under their bound are skipped when their entries were
     * PRODUCED by a clustered compaction (src == "compact" with stats for
     * every manifest column — append files at the bound with coincidental
@@ -981,8 +1001,7 @@ object VersionedLake {
     * `clusterBy` range-partitions + sorts each day on the key, so every
     * output file owns a disjoint key range and the manifest stats it
     * records (for `clusterBy ++ statsCols`) make [[readBand]] skip every
-    * non-overlapping file — [[Partitioned.compactDays]]'s clustering with
-    * the stats in the commit log instead of a sidecar.
+    * non-overlapping file.
     *
     * With `zorder = true` and ≥2 numeric `clusterBy` columns, each day
     * is laid out on a Z-ORDER (Morton) key instead of the lexical tuple:
@@ -1387,9 +1406,6 @@ object VersionedLake {
     * two lake flavors; cost is one metadata listing plus one per-file
     * stats job over the tree (the one-time census an adoption cannot
     * avoid — row counts are what make later rewrites verifiable).
-    * Streaming-sink trees import cleanly: `bN-` stamped files are plain
-    * data here, and the `_graft_lake_batches` markers are ignored like
-    * any `_` path.
     */
   def importTree(spark: SparkSession, path: String,
       statsCols: Seq[String] = Nil): Long = {
@@ -1770,4 +1786,28 @@ object VersionedLake {
         .foreach(s => fs.delete(s.getPath, false): Unit)
     report
   }
+}
+
+/** Min/max-vs-band comparison for file-skipping decisions on the
+  * string-encoded ranges the commit log records. Conservative by
+  * construction: an unrecognized dtype never prunes.
+  */
+private[sources] object StatsCompare {
+  private val numeric =
+    Set("tinyint", "smallint", "int", "bigint", "float", "double")
+
+  /** Can any value in [min, max] (typed per `dtype`) fall in [lo, hi]?
+    * Float/double columns containing NaN (or ±Infinity) record bounds
+    * BigDecimal cannot parse — an unparseable bound answers TRUE (never
+    * prune), so one NaN row degrades skipping instead of breaking every
+    * later band read of an otherwise healthy lake.
+    */
+  def overlaps(dtype: String, min: String, max: String,
+      lo: String, hi: String): Boolean =
+    if (numeric(dtype) || dtype.startsWith("decimal")) {
+      scala.util.Try(
+        BigDecimal(max) >= BigDecimal(lo) && BigDecimal(min) <= BigDecimal(hi)
+      ).getOrElse(true)
+    } else if (dtype == "string") max >= lo && min <= hi
+    else true // unknown comparison — never prune
 }

@@ -1,114 +1,22 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.DataFrame
 
-/** Streaming → day-partitioned lake bridge: the OTHER production sink
-  * beside [[KVSink]]. Append-mode micro-batches land in the
-  * `dt=YYYY-MM-DD/` tree [[graft.sources.Partitioned]] serves, so a live
-  * stream and the batch lake share one layout: day-ranged reads prune at
-  * the directory level, retention stays a per-day directory op, and
-  * [[Partitioned.compactDays]] is the periodic maintenance pass that
-  * bounds the file count the per-batch appends accumulate.
-  *
-  * EXACTLY-ONCE contract (the part a bare `appendByDay` per batch gets
-  * wrong): foreachBatch is at-least-once — after a crash the last
-  * uncommitted batch REPLAYS, and a blind append would double its rows.
-  * The sink makes the append idempotent with a batch-id manifest plus
-  * batch-stamped file names:
-  *
-  *  1. a replayed batch whose `_graft_lake_batches/batch-N` marker exists
-  *     is skipped outright (it fully committed before the crash);
-  *  2. otherwise the batch stages under a hidden `.lake_stage_N` dir,
-  *     then its files move into the day dirs under a `bN-` name prefix —
-  *     and the move first DELETES any `bN-` files a half-committed
-  *     earlier attempt left in the touched days (the replayed batch
-  *     carries identical rows by the checkpoint contract, so the day set
-  *     matches and the sweep is complete);
-  *  3. the marker is written LAST — the commit point. A crash anywhere
-  *     before it replays into step 2's sweep; after it, into step 1's
-  *     skip. Readers may see a replayed batch's rows twice only DURING
-  *     step 2's delete+move window — the same maintenance-window caveat
-  *     as [[Partitioned.compactDays]].
-  *
-  * All control-plane ops (marker probe/create, stage cleanup, the
-  * delete+move sweep) go through the root's Hadoop FileSystem — the
-  * Store/compactDays discipline, so the sink roots on `file:`/`hdfs:`
-  * alike (S3: rename is copy+delete; see the Store scaladoc).
-  *
-  * Scale shape: each batch shuffles once keyed on dt (the
-  * [[Partitioned.writeByDay]] small-files discipline — ≤ one file per
-  * day per shuffle partition per batch), and sink I/O is O(batch), never
-  * O(lake). The day-set probe collects ≤ days-per-batch strings.
+import graft.sources.VersionedLake
+
+/** Stream → day-partitioned lake: one micro-batch is one
+  * [[VersionedLake.appendBatch]] commit. The data files land in the
+  * `dt=YYYY-MM-DD/` tree, and `Partitioned.readDays` reads the tree
+  * through its commit log. A streaming query uses [[VersionedLake.sink]].
   */
 object LakeSink {
 
-  private val ManifestDir = "_graft_lake_batches"
-
-  /** Run `df` (an append-mode streaming DataFrame carrying `tsCol`) into
-    * the day-partitioned tree at `path`.
-    */
-  def toLake(df: DataFrame, path: String, checkpointDir: String,
-      tsCol: String = "ts"): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        appendBatch(batch.toDF(), path, batchId, tsCol)
-      }
-      .start()
-
-  /** One micro-batch's idempotent append (exposed for direct use by a
-    * custom foreachBatch that fans a stream into several sinks).
+  /** One micro-batch's exactly-once append. Batch ids must be monotone,
+    * the Structured Streaming contract for one checkpoint: the replay
+    * check is the commit log's high-water mark, so any id at or below
+    * the last committed one returns without writing.
     */
   def appendBatch(batch: DataFrame, path: String, batchId: Long,
-      tsCol: String = "ts"): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(path)
-    val fs: FileSystem =
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, s"$ManifestDir/batch-$batchId")
-    if (fs.exists(marker)) return // replay of a fully-committed batch
-    // Pin the batch (the KVSink discipline): the day-set probe and the
-    // stage write are two actions, and an unpinned stateful lineage
-    // would re-execute per action — state-store double-commits, torn
-    // day sets for a non-deterministic source.
-    val pinned = batch
-      .withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd"))
-      .localCheckpoint()
-    try {
-      val days = pinned.select("dt").distinct()
-        .collect().map(_.getString(0)) // ≤ days-per-batch — driver-safe
-      if (days.nonEmpty) {
-        val stage = new Path(root, s".lake_stage_$batchId")
-        fs.delete(stage, true): Unit // leftover of a crashed attempt
-        pinned.repartition(col("dt"))
-          .write.mode("overwrite").partitionBy("dt").parquet(stage.toString)
-        days.foreach { d =>
-          val dayDir = new Path(root, s"dt=$d")
-          fs.mkdirs(dayDir)
-          // sweep a half-committed earlier attempt's files for THIS batch
-          fs.listStatus(dayDir)
-            .filter(_.getPath.getName.startsWith(s"b$batchId-"))
-            .foreach(s => fs.delete(s.getPath, false))
-          val staged = new Path(stage, s"dt=$d")
-          fs.listStatus(staged)
-            .filter(_.getPath.getName.startsWith("part-"))
-            .foreach { f =>
-              val target = new Path(dayDir, s"b$batchId-${f.getPath.getName}")
-              if (!fs.rename(f.getPath, target))
-                throw new java.io.IOException(
-                  s"lake sink: rename ${f.getPath} -> $target failed")
-            }
-        }
-        fs.delete(stage, true): Unit
-      }
-      // marker LAST — the commit point (see the class contract)
-      fs.mkdirs(new Path(root, ManifestDir))
-      fs.create(marker, true).close()
-    } finally
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(pinned)
-  }
+      tsCol: String = "ts"): Unit =
+    VersionedLake.appendBatch(batch, path, batchId, tsCol): Unit
 }

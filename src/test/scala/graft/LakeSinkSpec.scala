@@ -2,16 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-
 import graft.sources.Partitioned
 import graft.streaming.LakeSink
 
-/** Stream → day-partitioned lake: micro-batches land in the dt= tree,
-  * replay is idempotent (batch-id manifest + batch-stamped names), a
-  * restart on the same checkpoint never double-appends, and
-  * compactDays bounds the per-batch file accumulation.
+/** The stream → lake forwarder: a replayed batch id is a no-op, a
+  * half-committed attempt is invisible and lands once on replay, and
+  * `Partitioned.readDays` reads the sink tree through its commit log.
   */
 class LakeSinkSpec extends SparkSessionSpec {
   import spark.implicits._
@@ -19,43 +15,10 @@ class LakeSinkSpec extends SparkSessionSpec {
   private def t(day: Int, h: Int = 0): Timestamp =
     Timestamp.valueOf(f"2024-01-${day}%02d $h%02d:00:00")
 
-  private def lakeRows(path: String): Set[Seq[Any]] =
+  private def lakeRows(path: String): Seq[Seq[Any]] =
     Partitioned.readDays(spark, path, "2024-01-01", "2024-01-31")
       .select("event_id", "ts", "value")
-      .collect().map(_.toSeq).toSet
-
-  test("3 micro-batches + restart → pruned read == batch form, no duplicates") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lakesink").toString
-    val lake = s"$root/events"
-    val mem = MemoryStream[(Long, Timestamp, Double)](spark)
-    def startQuery() = LakeSink.toLake(
-      mem.toDF().toDF("event_id", "ts", "value"),
-      lake, checkpointDir = s"$root/__ckpt")
-    val b1 = Seq((1L, t(1), 1.0), (2L, t(1, 6), 2.0), (3L, t(2), 3.0))
-    val b2 = Seq((4L, t(2, 12), 4.0), (5L, t(3), 5.0))
-    val q1 = startQuery()
-    try {
-      mem.addData(b1)
-      q1.processAllAvailable()
-      mem.addData(b2)
-      q1.processAllAvailable()
-      assert(lakeRows(lake) === (b1 ++ b2).map(r => Seq(r._1, r._2, r._3)).toSet)
-    } finally q1.stop()
-    // restart on the SAME checkpoint; feed only new data — the recovered
-    // query must not re-append b1/b2 (manifest skip) and must land b3
-    val b3 = Seq((6L, t(3, 8), 6.0), (7L, t(4), 7.0))
-    val q2 = startQuery()
-    try {
-      mem.addData(b3)
-      q2.processAllAvailable()
-      assert(lakeRows(lake) ===
-        (b1 ++ b2 ++ b3).map(r => Seq(r._1, r._2, r._3)).toSet)
-    } finally q2.stop()
-    // a day-ranged read prunes to its directories and sees exactly the
-    // days' rows (the Partitioned.readDays contract through the sink)
-    val day2 = Partitioned.readDays(spark, lake, "2024-01-02", "2024-01-02")
-    assert(day2.count() === 2) // events 3 and 4
-  }
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
 
   test("replayed batch ids are idempotent, including a half-committed attempt") {
     val root = java.nio.file.Files.createTempDirectory("graft-lakesink-rp").toString
@@ -64,39 +27,23 @@ class LakeSinkSpec extends SparkSessionSpec {
     LakeSink.appendBatch(df, lake, batchId = 7)
     val once = lakeRows(lake)
     assert(once.size === 2)
-    // full replay of a committed batch: the manifest marker skips it
+    // full replay of a committed batch: the high-water mark skips it
     LakeSink.appendBatch(df, lake, batchId = 7)
     assert(lakeRows(lake) === once)
-    // half-committed attempt: files moved into the day dirs but the
-    // marker never written (crash between step 2 and step 3) — the
-    // replay must sweep the stamped files and land the rows ONCE
-    val marker = new java.io.File(s"$lake/_graft_lake_batches/batch-7")
-    assert(marker.delete(), "test setup: marker must exist")
-    LakeSink.appendBatch(df, lake, batchId = 7)
-    assert(lakeRows(lake) === once)
-    assert(marker.exists(), "replay must recommit the marker")
-  }
-
-  test("compactDays bounds the per-batch file accumulation in the sink's tree") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lakesink-cp").toString
-    val lake = s"$root/events"
-    // five batches into the same day: five bN-stamped files accumulate
-    (0 until 5).foreach { i =>
-      LakeSink.appendBatch(
-        Seq((i.toLong, t(10), i.toDouble)).toDF("event_id", "ts", "value"),
-        lake, batchId = i.toLong)
-    }
-    def dayFiles(): Seq[String] =
-      new java.io.File(s"$lake/dt=2024-01-10").listFiles()
-        .map(_.getName).filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .toSeq
-    assert(dayFiles().size === 5)
-    assert(dayFiles().forall(_.matches("b\\d+-part-.*")),
-      "sink files must carry the batch stamp")
-    val before = lakeRows(lake)
-    Partitioned.compactDays(spark, lake, "2024-01-10", "2024-01-10",
-      targetFileMB = 128)
-    assert(dayFiles().size === 1, s"compaction left ${dayFiles().size} files")
-    assert(lakeRows(lake) === before, "compaction changed the rows")
+    // the next id lands; then un-publish its commit, leaving its data
+    // files in the day dirs — the state of a crash between the file
+    // move and the manifest publish
+    val next = Seq((3L, t(6, 6), 3.0)).toDF("event_id", "ts", "value")
+    LakeSink.appendBatch(next, lake, batchId = 8)
+    val twice = lakeRows(lake)
+    assert(twice.size === 3)
+    val commit = new java.io.File(s"$lake/_commits/v00000002.json")
+    assert(commit.delete(), "test setup: batch 8's commit must exist")
+    assert(lakeRows(lake) === once, "an uncommitted batch's files were read")
+    // the replay of the half-committed id lands its rows exactly once
+    LakeSink.appendBatch(next, lake, batchId = 8)
+    assert(lakeRows(lake) === twice)
+    LakeSink.appendBatch(next, lake, batchId = 8)
+    assert(lakeRows(lake) === twice)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.Engine.table
-import graft.sources.Partitioned
+import graft.sources.{Partitioned, VersionedLake}
 
 class PartitionedSpec extends SparkSessionSpec {
 
@@ -49,149 +49,70 @@ class PartitionedSpec extends SparkSessionSpec {
     assert(pruned.count() === expected)
   }
 
-  test("compactDays: appends accumulate files; compaction bounds them, " +
-      "rows/ts identical, out-of-range days untouched") {
-    // fresh tree (the shared `root` is read by other cases): base write
-    // plus 4 incremental appends of day-sliced batches
-    val d = Files.createTempDirectory("graft_compact").toString + "/events"
-    val ev = table(spark, sfDir, "events")
-    Partitioned.writeByDay(ev, d)
-    (1 to 4).foreach { i =>
-      Partitioned.appendByDay(
-        ev.filter(pmod(col("event_id"), lit(4)) === i % 4), d)
-    }
-    def files(day: java.io.File): Int =
-      day.listFiles().count(_.getName.startsWith("part-"))
-    val days = new java.io.File(d).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dt="))
-      .sortBy(_.getName)
-    assert(days.length >= 4, "need >=4 days")
-    assert(days.exists(files(_) > 2), "appends did not accumulate files")
-    val dayNames = days.map(_.getName.stripPrefix("dt="))
-    val (from, to) = (dayNames.head, dayNames(dayNames.length - 2))
-    val lastDay = days.last
-    val lastBefore = files(lastDay)
-    val before = spark.read.option("basePath", d).parquet(d)
-      .collect().map(_.toSeq).toSet
-    Partitioned.compactDays(spark, d, from, to, targetFileMB = 128)
-    // in-range days collapse to the byte-target bound (tiny test data →
-    // 1 file); the out-of-range last day keeps its exact file set
-    days.init.foreach { day =>
-      assert(files(day) === 1, s"${day.getName} holds ${files(day)} files")
-      assert(!day.listFiles().exists(_.getName == "_SUCCESS"))
-    }
-    assert(files(lastDay) === lastBefore, "out-of-range day was rewritten")
-    // rows and timestamp precision bit-identical through the rewrite
-    val after = spark.read.option("basePath", d).parquet(d)
-      .collect().map(_.toSeq).toSet
-    assert(after === before)
-    // idempotent: a second run finds every day at-or-under target and
-    // rewrites nothing (mtimes stable)
-    val stamps = days.init.map(day => day.listFiles().map(_.lastModified()).toSeq)
-    Partitioned.compactDays(spark, d, from, to, targetFileMB = 128)
-    assert(days.init.map(day => day.listFiles().map(_.lastModified()).toSeq)
-      .toSeq === stamps.toSeq)
-  }
-
   test("compaction runs against an explicit file:-scheme root (Hadoop FS)") {
-    // the listing + two-rename swap must go through the Hadoop FS API:
-    // a java.io.File control plane silently finds NO day dirs under a
-    // scheme'd root and compacts nothing — worse than an error
+    // import, compaction and the commit all go through the Hadoop FS
+    // API: a java.io.File control plane silently finds NO day dirs
+    // under a scheme'd root and compacts nothing — worse than an error
     val d = Files.createTempDirectory("graft_part_uri").toString + "/events"
     val uri = s"file:$d"
     val ev = table(spark, sfDir, "events")
     Partitioned.writeByDay(ev, uri)
     Partitioned.appendByDay(ev, uri) // double the rows → >1 file per day
-    def dayFiles(): Map[String, Int] = new java.io.File(d).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dt="))
-      .map(f => f.getName -> f.listFiles().count(_.getName.startsWith("part-")))
-      .toMap
-    val before = dayFiles()
+    VersionedLake.importTree(spark, uri)
+    def perDay(): Map[String, Int] = VersionedLake.snapshot(spark, uri).files
+      .groupBy(_.dt).map { case (day, fs) => day -> fs.size }
+    val before = perDay()
     assert(before.nonEmpty && before.values.exists(_ > 1),
       "append through the scheme'd root did not accumulate files")
-    val days = before.keys.map(_.stripPrefix("dt=")).toSeq.sorted
-    Partitioned.compactDays(spark, uri, days.head, days.last, targetFileMB = 128)
-    val after = dayFiles()
-    assert(after.keySet === before.keySet, "compaction dropped a day dir")
-    assert(after.values.forall(_ === 1),
+    val days = before.keys.toSeq.sorted
+    assert(days.length >= 3, "need >=3 days")
+    // the last day stays out of range: its entries must not change
+    val (from, to) = (days.head, days(days.length - 2))
+    def lastDay() = VersionedLake.snapshot(spark, uri).files
+      .filter(_.dt == days.last).map(_.path).toSet
+    val lastBefore = lastDay()
+    val v = VersionedLake.compact(spark, uri, from, to, targetFileMB = 128)
+    val after = perDay()
+    assert(after.keySet === before.keySet, "compaction dropped a day")
+    assert(days.init.forall(after(_) === 1),
       s"scheme'd-root compaction left multi-file days: $after")
+    assert(lastDay() === lastBefore, "an out-of-range day was rewritten")
     assert(Partitioned.readDays(spark, uri, days.head, days.last).count()
       === 2 * ev.count())
+    // idempotent: every in-range day is at its bound, so a re-run
+    // rewrites nothing and commits no version
+    assert(VersionedLake.compact(spark, uri, from, to, targetFileMB = 128)
+      === v)
   }
 
-  test("clustered compaction: manifest lands with the day, bandPrune " +
-      "skips files, band read == unpruned filter, re-run rewrites nothing") {
-    val d = Files.createTempDirectory("graft_cluster").toString + "/events"
-    val ev = table(spark, sfDir, "events")
-    Partitioned.writeByDay(ev, d)
-    val days = new java.io.File(d).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dt="))
-      .map(_.getName.stripPrefix("dt=")).sorted
-    assert(days.length >= 3)
-    Partitioned.compactDays(spark, d, days.head, days.last,
-      clusterBy = Seq("value"), minFilesPerDay = 4)
-    // every in-range day carries its manifest and >= 2 files (the floor
-    // is 4, but range partitions with few rows can come up empty)
-    new java.io.File(d).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dt=")).foreach {
-        day =>
-          assert(day.listFiles().exists(_.getName == ".stats.json"),
-            s"${day.getName} has no manifest")
-          assert(day.listFiles().count(_.getName.startsWith("part-")) >= 2,
-            s"${day.getName} was not widened")
-      }
-    // a narrow band must PROVE most files disjoint and skip them
-    val report = Partitioned.bandPrune(spark, d, days.head, days.last,
-      "value", "100.0", "150.0")
-    assert(report.skipped > 0,
-      s"manifest pruned nothing (total=${report.total})")
-    assert(report.selected.length < report.total)
-    // and the pruned read is IDENTICAL to the unpruned filter
-    val pruned = Partitioned
-      .readDaysBand(spark, d, days.head, days.last, "value", 100.0, 150.0)
-      .collect().map(_.toSeq).toSet
-    val full = Partitioned.readDays(spark, d, days.head, days.last)
-      .filter(col("value") >= 100.0 && col("value") <= 150.0)
-      .collect().map(_.toSeq).toSet
-    assert(pruned === full)
-    assert(pruned.nonEmpty, "band selected no rows — vacuous gate")
-    // idempotent: the clustered day is at-bound AND carries its manifest,
-    // so a second clustered run rewrites nothing
-    val dayDirs = new java.io.File(d).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dt=")).sortBy(_.getName)
-    val stamps = dayDirs.map(_.listFiles().map(_.lastModified()).toSeq).toSeq
-    Partitioned.compactDays(spark, d, days.head, days.last,
-      clusterBy = Seq("value"), minFilesPerDay = 4)
-    assert(dayDirs.map(_.listFiles().map(_.lastModified()).toSeq).toSeq
-      === stamps)
-  }
-
-  test("a stale manifest stays SOUND: files appended after clustering " +
-      "are always read, never pruned") {
-    val d = Files.createTempDirectory("graft_stale").toString + "/events"
+  test("readDays over a compacted commit-log tree counts every row once " +
+      "(superseded files stay in the day dirs until vacuum)") {
+    val d = Files.createTempDirectory("graft_part_log").toString + "/events"
     val ev = table(spark, sfDir, "events")
     Partitioned.writeByDay(ev.filter(pmod(col("event_id"), lit(2)) === 0), d)
-    val days = new java.io.File(d).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dt="))
-      .map(_.getName.stripPrefix("dt=")).sorted
-    Partitioned.compactDays(spark, d, days.head, days.last,
-      clusterBy = Seq("value"), minFilesPerDay = 4)
-    // append AFTER the manifest was written: the new files are unknown
-    // to it, so the soundness rule (unknown => read) must cover them
     Partitioned.appendByDay(ev.filter(pmod(col("event_id"), lit(2)) === 1), d)
-    val pruned = Partitioned
-      .readDaysBand(spark, d, days.head, days.last, "value", 100.0, 150.0)
-      .collect().map(_.toSeq).toSet
-    val expected = Partitioned.readDays(spark, d, days.head, days.last)
-      .filter(col("value") >= 100.0 && col("value") <= 150.0)
-      .collect().map(_.toSeq).toSet
-    assert(pruned === expected,
-      "stale manifest dropped appended rows — pruning is UNSOUND")
-    // the manifest still prunes among the files it knows (skipped > 0)
-    // while selecting every unknown appended file
-    val report = Partitioned.bandPrune(spark, d, days.head, days.last,
-      "value", "100.0", "150.0")
-    assert(report.skipped > 0, "stale manifest lost all pruning power")
+    VersionedLake.importTree(spark, d)
+    val days = VersionedLake.snapshot(spark, d).files.map(_.dt).distinct.sorted
+    val (from, to) = (days.head, days.last)
+    VersionedLake.compact(spark, d, from, to)
+    val n = Partitioned.readDays(spark, d, from, to).count()
+    assert(n === VersionedLake.read(spark, d, None, from, to).count())
+    assert(n === ev.count())
+  }
+
+  test("readDays over a commit-log tree does not return a staged but " +
+      "uncommitted append's orphan files") {
+    val d = Files.createTempDirectory("graft_part_orphan").toString + "/events"
+    val ev = table(spark, sfDir, "events")
+    Partitioned.writeByDay(ev, d)
+    VersionedLake.importTree(spark, d)
+    // the on-disk state of an append whose files moved into the day dirs
+    // but whose commit never published: data files no manifest names
+    Partitioned.appendByDay(ev, d)
+    val days = VersionedLake.snapshot(spark, d).files.map(_.dt).distinct.sorted
+    val n = Partitioned.readDays(spark, d, days.head, days.last).count()
+    assert(n === VersionedLake.read(spark, d, None, days.head, days.last).count())
+    assert(n === ev.count())
   }
 
   test("writer caps small files: one exchange keyed on dt, files per day bounded") {
@@ -220,14 +141,16 @@ class PartitionedSpec extends SparkSessionSpec {
       (4L, java.sql.Timestamp.valueOf("2024-01-02 06:00:00"), Double.NaN)
     ).toDF("event_id", "ts", "value")
     Partitioned.writeByDay(df, d)
-    Partitioned.compactDays(spark, d, "2024-01-01", "2024-01-02",
+    VersionedLake.importTree(spark, d)
+    VersionedLake.compact(spark, d, "2024-01-01", "2024-01-02",
       clusterBy = Seq("value"))
-    val report = Partitioned.bandPrune(spark, d, "2024-01-01", "2024-01-02",
-      "value", "5.0", "15.0")
+    assert(VersionedLake.snapshot(spark, d).files
+      .forall(_.stats.get("value").exists(_._2 == "NaN")),
+      "gate needs NaN-polluted commit-log stats")
+    val report = VersionedLake.bandReport(spark, d, "value", "5.0", "15.0")
     assert(report.selected.length === report.total,
       "a NaN-polluted range must never prune (bounds are unprovable)")
-    val got = Partitioned
-      .readDaysBand(spark, d, "2024-01-01", "2024-01-02", "value", 5.0, 15.0)
+    val got = VersionedLake.readBand(spark, d, "value", 5.0, 15.0)
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(got === Set(1L))
   }
@@ -237,21 +160,21 @@ class PartitionedSpec extends SparkSessionSpec {
     val d = Files.createTempDirectory("graft_emptyband").toString + "/events"
     val ev = table(spark, sfDir, "events")
     Partitioned.writeByDay(ev, d)
-    val days = new java.io.File(d).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dt="))
-      .map(_.getName.stripPrefix("dt=")).sorted
-    Partitioned.compactDays(spark, d, days.head, days.last,
-      clusterBy = Seq("value"), minFilesPerDay = 4)
+    VersionedLake.importTree(spark, d)
+    def clustered() = VersionedLake.compact(spark, d, "0000-01-01",
+      "9999-12-31", minFilesPerDay = 4, clusterBy = Seq("value"))
+    val v = clustered()
+    // idempotent: the layout witness marks every day clustered, so a
+    // second clustered run rewrites nothing
+    assert(clustered() === v)
     // a band beyond every recorded max: pruning proves zero overlap
-    val report = Partitioned.bandPrune(spark, d, days.head, days.last,
-      "value", "1.0e15", "2.0e15")
+    val report = VersionedLake.bandReport(spark, d, "value", "1.0e15", "2.0e15")
     assert(report.total > 0 && report.selected.isEmpty,
       "gate needs a provably-empty band")
-    val df = Partitioned.readDaysBand(spark, d, days.head, days.last,
-      "value", 1.0e15, 2.0e15)
+    val df = VersionedLake.readBand(spark, d, "value", 1.0e15, 2.0e15)
     assert(df.collect().isEmpty)
-    // pre-fix this fell back to the FULL day-range scan exactly when
-    // pruning proved no file could match
+    // a fallback that re-read the FULL day range exactly when pruning
+    // proved no file could match would plan a file scan here
     assert(!df.queryExecution.executedPlan.exists(
       _.isInstanceOf[FileSourceScanExec]),
       "provably-empty band still planned a file scan")
