@@ -113,7 +113,7 @@ object LakeFixtures {
       Thread.sleep(60)
       graft.sources.VersionedLake.append(odd(ev), out)
       graft.sources.VersionedLake.compact(
-        s, out, "2024-01-08", "2024-01-14", targetFileMB = 128)
+        s, out, "2024-01-08", "2024-01-14")
     }
 
   /** The wall-clock instant at which [[plainLake]]'s v1 was the head. */
@@ -134,7 +134,7 @@ object LakeFixtures {
       graft.sources.VersionedLake.append(odd(ev), out,
         statsCols = Seq("value"))
       graft.sources.VersionedLake.compact(
-        s, out, "2024-01-08", "2024-01-14", targetFileMB = 128,
+        s, out, "2024-01-08", "2024-01-14",
         minFilesPerDay = 4, clusterBy = Seq("value"))
     }
 
@@ -147,7 +147,7 @@ object LakeFixtures {
       graft.sources.VersionedLake.append(even(ev), out)
       graft.sources.VersionedLake.append(odd(ev), out)
       graft.sources.VersionedLake.compact(
-        s, out, "2024-01-08", "2024-01-14", targetFileMB = 128,
+        s, out, "2024-01-08", "2024-01-14",
         minFilesPerDay = 4, clusterBy = Seq("value", "user_id"),
         zorder = true)
     }
@@ -165,7 +165,7 @@ object LakeFixtures {
       graft.sources.Partitioned.appendByDay(odd(ev), out)
       graft.sources.VersionedLake.importTree(s, out)
       graft.sources.VersionedLake.compact(
-        s, out, "2024-01-08", "2024-01-14", targetFileMB = 128,
+        s, out, "2024-01-08", "2024-01-14",
         minFilesPerDay = 4, clusterBy = Seq("value"))
     }
 
@@ -216,7 +216,7 @@ object LakeFixtures {
       require(vBase == ChangesBaseVersion,
         s"changes fixture: base landed at v$vBase")
       graft.sources.VersionedLake.compact(
-        s, out, "2024-01-08", "2024-01-14", targetFileMB = 128,
+        s, out, "2024-01-08", "2024-01-14",
         minFilesPerDay = 4, clusterBy = Seq("value"))
       graft.sources.VersionedLake.deleteBand(s, out, "value", 300.0, 1.0e12,
         fromDay = "2024-01-08", toDay = "2024-01-14"): Unit

@@ -900,7 +900,7 @@ object Relational {
         ev.filter(pmod(col("event_id"), lit(2)) === 1), out)
       graft.sources.VersionedLake.importTree(s, out)
       graft.sources.VersionedLake.compact(
-        s, out, "2024-01-08", "2024-01-14", targetFileMB = 128)
+        s, out, "2024-01-08", "2024-01-14")
       graft.sources.Partitioned.readDays(s, out, "2024-01-08", "2024-01-14")
         .groupBy(col("dt"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),

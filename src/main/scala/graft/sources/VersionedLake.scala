@@ -57,10 +57,12 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    are immutable and vacuum-protected, a compaction publishing v+1
   *    mid-query changes nothing the running query references. Time
   *    travel is the same mechanism pointed at an older version;
-  *  - data files land via stage-then-move BEFORE the commit, so a crash
-  *    leaves orphan files that no manifest references — invisible to
-  *    every reader, swept by [[vacuum]] along with files only referenced
-  *    by expired versions.
+  *  - every data file (append, compaction, copy-on-write delete, upsert)
+  *    lands through ONE helper, [[landStaged]]: staged, moved into its
+  *    day dir and recorded BEFORE the commit, so a crash leaves orphan
+  *    files that no manifest references — invisible to every reader,
+  *    swept by [[vacuum]] along with files only referenced by expired
+  *    versions.
   *
   * Scale shape: appends shuffle once keyed on dt (the [[Partitioned]]
   * small-files discipline), commit payloads are O(delta), compaction
@@ -83,6 +85,16 @@ object VersionedLake {
     * (O(files)/10 per commit) against read-time replay breadth.
     */
   val CkptInterval = 10
+
+  /** [[compact]]'s target file size: a compacted day holds
+    * `ceil(bytes / TargetFileMB)` files (floored at `minFilesPerDay`).
+    */
+  private val TargetFileMB = 128
+
+  /** Days a rewrite ([[compact]], copy-on-write delete, [[upsert]]) runs
+    * at once on its driver-side pool — see [[rewriteDays]].
+    */
+  private val DaysInFlight = 4
 
   /** One live data file in a snapshot. `path` is root-relative
     * (`dt=YYYY-MM-DD/<name>`), so manifests survive a lake relocation.
@@ -440,6 +452,13 @@ object VersionedLake {
   // Commit
   // ---------------------------------------------------------------------
 
+  /** Same columns and types — field order is layout, not identity. */
+  private def sameSchema(a: StructType, b: StructType): Boolean = {
+    def cols(s: StructType) =
+      s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
+    cols(a) == cols(b)
+  }
+
   /** Optimistic-concurrency commit loop over a DELTA intent: re-read the
     * latest snapshot, validate the intent still applies, publish
     * `adds`/`removes` as the next version's manifest. Intent validation
@@ -477,10 +496,8 @@ object VersionedLake {
       batchId: Option[Long] = None, op: String = "append",
       allowSchemaChange: Boolean = false): Long = {
     val fs = fsOf(spark, root)
-    def norm(s: StructType) =
-      s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
     def schemaConflict(committed: StructType): Unit =
-      if (!allowSchemaChange && norm(committed) != norm(schema))
+      if (!allowSchemaChange && !sameSchema(committed, schema))
         sys.error(s"VersionedLake: commit conflict on $op — the " +
           s"table schema changed concurrently (committed " +
           s"${committed.simpleString}, op carries ${schema.simpleString})")
@@ -540,20 +557,23 @@ object VersionedLake {
   // Ingest
   // ---------------------------------------------------------------------
 
-  /** Per-file row counts (and optional per-column min/max strings) for an
-    * explicit file list, keyed by the last two path components
-    * (`dt=DAY/name` — basenames alone collide when one writer task holds
-    * two days). One tiny metadata job over just the listed files.
+  /** Manifest entries, tagged `src`, for `(day, name, bytes)` files that
+    * already sit in their live day dirs under `base`: per-file row counts
+    * (and optional per-column min/max strings) from one tiny metadata
+    * job over just the listed files, keyed by the last two path
+    * components (`dt=DAY/name` — basenames alone collide when one writer
+    * task holds two days).
     */
-  private def perFileStats(spark: SparkSession, paths: Seq[String],
-      statsCols: Seq[String])
-      : Map[String, (Long, Map[String, (String, String)])] =
-    if (paths.isEmpty) Map.empty
+  private def entriesOf(spark: SparkSession, base: String,
+      files: Seq[(String, String, Long)], statsCols: Seq[String],
+      src: String): Seq[FileEntry] =
+    if (files.isEmpty) Nil
     else {
       val aggs = count(lit(1)).as("rows") +: statsCols.flatMap(c => Seq(
         min(col(c)).cast("string").as(s"min:$c"),
         max(col(c)).cast("string").as(s"max:$c")))
-      spark.read.parquet(paths: _*)
+      val stats = spark.read
+        .parquet(files.map { case (day, name, _) => s"$base/dt=$day/$name" }: _*)
         .select(col("_metadata.file_path").as("f") +: statsCols.map(col): _*)
         .groupBy("f").agg(aggs.head, aggs.tail: _*).collect()
         .map { r =>
@@ -564,7 +584,56 @@ object VersionedLake {
           }.toMap
           key -> (r.getLong(1), ranges)
         }.toMap
+      files.map { case (day, name, len) =>
+        val (rows, ranges) = stats.getOrElse(s"dt=$day/$name",
+          (0L, Map.empty[String, (String, String)]))
+        FileEntry(s"dt=$day/$name", day, rows, len, ranges, src)
+      }
     }
+
+  /** THE staged-file path of every data write: `write` lays the op's
+    * frame out as `dt=<day>/part-*` files under a fresh `.vstage_<tag>_*`
+    * dir (the prefix [[vacuum]] sweeps); each part file is renamed into
+    * its live day dir (part names carry a per-job UUID, so moves never
+    * collide), the stage is deleted, and the moved files are recorded
+    * tagged `src`; with `expectRows` they must hold exactly that many
+    * rows. Nothing commits here: the files stay invisible orphans until a
+    * caller publishes them. Stats are read AFTER the move — Spark's file
+    * index silently drops a dot-hidden stage root.
+    */
+  private def landStaged(spark: SparkSession, root: Path, tag: String,
+      statsCols: Seq[String], src: String, expectRows: Option[Long] = None)(
+      write: String => Unit): Seq[FileEntry] = {
+    val fs = fsOf(spark, root)
+    val stage = new Path(root,
+      s".vstage_${tag}_${java.util.UUID.randomUUID.toString.take(8)}")
+    write(stage.toString)
+    val moved = fs.listStatus(stage)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
+      .flatMap { dayDir =>
+        val day = dayDir.getPath.getName.stripPrefix("dt=")
+        val live = new Path(root, s"dt=$day")
+        fs.mkdirs(live)
+        fs.listStatus(dayDir.getPath)
+          .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+          .map { f =>
+            val target = new Path(live, f.getPath.getName)
+            if (!fs.rename(f.getPath, target))
+              throw new java.io.IOException(
+                s"VersionedLake: rename ${f.getPath} -> $target failed")
+            (day, f.getPath.getName, f.getLen)
+          }
+      }.toSeq
+    fs.delete(stage, true): Unit
+    val entries =
+      entriesOf(spark, fs.makeQualified(root).toString, moved, statsCols, src)
+    expectRows.foreach { want =>
+      val got = entries.map(_.rows).sum
+      require(got == want,
+        s"VersionedLake: $tag rewrote $got rows, expected $want")
+    }
+    entries
+  }
 
   /** Stage `df` partitioned by the day of `tsCol`, move the files into
     * the day dirs, and publish them in one atomic commit. Returns the
@@ -613,9 +682,10 @@ object VersionedLake {
     * it, a minute-cadence stream appends ≤1 file/day/partition per batch
     * FOREVER — ~1,440 files/day and ~500k manifest versions/year unless
     * an operator schedules maintenance externally. `compactEvery = N`
-    * runs [[compact]] over the whole day range after every Nth batch
-    * (the layout witness skips at-bound days, so the sweep's rewrite
-    * work is O(days that actually accumulated files)); `vacuumEvery = M`
+    * runs [[compact]]'s default (unclustered) layout, recording
+    * `statsCols`, over the whole day range after every Nth batch (the
+    * layout witness skips at-bound days, so the sweep's rewrite work is
+    * O(days that actually accumulated files)); `vacuumEvery = M`
     * reclaims expired versions/files after every Mth batch, retaining
     * `vacuumRetain` versions with `vacuumHorizonHours` writer safety.
     * Maintenance commits conflict-check like any other, so a racing
@@ -626,7 +696,6 @@ object VersionedLake {
   def sink(df: DataFrame, path: String, checkpointDir: String,
       tsCol: String = "ts", statsCols: Seq[String] = Nil,
       compactEvery: Long = 0L, vacuumEvery: Long = 0L,
-      compactTargetMB: Int = 128, clusterBy: Seq[String] = Nil,
       vacuumRetain: Int = 10, vacuumHorizonHours: Double = 1.0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
@@ -648,7 +717,6 @@ object VersionedLake {
           appendBatch(batch.toDF(), path, batchId, tsCol, statsCols): Unit
           if (compactEvery > 0L && (batchId + 1) % compactEvery == 0L)
             compact(spark, path, "0000-01-01", "9999-12-31",
-              targetFileMB = compactTargetMB, clusterBy = clusterBy,
               statsCols = statsCols): Unit
           if (vacuumEvery > 0L && (batchId + 1) % vacuumEvery == 0L)
             vacuum(spark, path, retainVersions = vacuumRetain,
@@ -663,8 +731,8 @@ object VersionedLake {
     * version is double-read. First batch = the current snapshot; each
     * later batch = the next versions' appended files only. Lake→lake
     * stages compose exactly-once with [[sink]] on the write side.
-    */
-  /** With `cdc = true` the stream is the CHANGE FEED itself (rows carry
+    *
+    * With `cdc = true` the stream is the CHANGE FEED itself (rows carry
     * `_change_type` ∈ insert/delete; history rewrites are data, not
     * failures); `maxVersionsPerBatch > 0` bounds how many commit-log
     * versions one micro-batch may span (the Delta maxFilesPerTrigger
@@ -685,19 +753,15 @@ object VersionedLake {
       .load()
 
   private def appendInternal(df: DataFrame, path: String, tsCol: String,
-      statsCols: Seq[String], batchId: Option[Long]): Long = {
-    val spark = df.sparkSession
-    val root = new Path(path)
-    val entries = stageAndMove(df, path, tsCol, statsCols)
-    commitDelta(spark, root, df.drop("dt").schema, entries, Set.empty,
-      batchId, if (batchId.isDefined) "append-batch" else "append")
-  }
+      statsCols: Seq[String], batchId: Option[Long]): Long =
+    commitDelta(df.sparkSession, new Path(path), df.drop("dt").schema,
+      stageAndMove(df, path, tsCol, statsCols), Set.empty, batchId,
+      if (batchId.isDefined) "append-batch" else "append")
 
-  /** Stage `df` day-partitioned, move its files into the live day dirs,
-    * and return their manifest entries WITHOUT committing — the moved
-    * files are invisible orphans until a caller publishes them
-    * ([[appendInternal]] commits them alone; [[upsert]] folds them into
-    * one commit with its substitutions).
+  /** Land `df` day-partitioned through [[landStaged]] and return its
+    * manifest entries WITHOUT committing ([[appendInternal]] commits
+    * them alone; [[upsert]] folds them into one commit with its
+    * substitutions).
     */
   private def stageAndMove(df: DataFrame, path: String, tsCol: String,
       statsCols: Seq[String]): Seq[FileEntry] = {
@@ -715,9 +779,7 @@ object VersionedLake {
     latestVersion(spark, path) match {
       case Some(v) =>
         val committed = readHeader(fs, commitPath(root, v)).schema
-        val norm = (s: StructType) =>
-          s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-        require(norm(schema) == norm(committed),
+        require(sameSchema(schema, committed),
           s"VersionedLake: append schema ${schema.simpleString} does not " +
             s"match the committed schema ${committed.simpleString}")
       case None =>
@@ -726,45 +788,9 @@ object VersionedLake {
         // log and never lists a crashed first append's orphans
         fs.mkdirs(new Path(root, CommitDir)): Unit
     }
-    val stage = new Path(root,
-      s".vstage_${java.util.UUID.randomUUID.toString.take(8)}")
-    dated.repartition(col("dt"))
-      .write.mode("overwrite").partitionBy("dt").parquet(stage.toString)
-    val moved = fs.listStatus(stage)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
-      .flatMap { dayDir =>
-        val day = dayDir.getPath.getName.stripPrefix("dt=")
-        val live = new Path(root, s"dt=$day")
-        fs.mkdirs(live)
-        fs.listStatus(dayDir.getPath)
-          .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-          .map { f =>
-            // staged part names carry a per-job UUID, so moves never
-            // collide with files from other commits
-            val target = new Path(live, f.getPath.getName)
-            if (!fs.rename(f.getPath, target))
-              throw new java.io.IOException(
-                s"VersionedLake: rename ${f.getPath} -> $target failed")
-            (day, f.getPath.getName, f.getLen)
-          }
-      }.toSeq
-    fs.delete(stage, true): Unit
-    // per-file row counts + stats: one tiny metadata aggregation over
-    // just this batch's files.
-    // Computed AFTER the move — Spark's file index silently drops a
-    // dot-hidden stage root — and keyed by dt=DAY/name: a task holding
-    // two days writes the SAME basename under both, so bare names
-    // collide. The files are moved-but-uncommitted here: invisible to
-    // every reader; a crash before commit leaves vacuum-sweepable
-    // orphans.
-    val base = fs.makeQualified(root).toString
-    val stats = perFileStats(spark,
-      moved.map { case (day, name, _) => s"$base/dt=$day/$name" }, statsCols)
-    moved.map { case (day, name, len) =>
-      val (rows, ranges) =
-        stats.getOrElse(s"dt=$day/$name", (0L, Map.empty[String, (String, String)]))
-      FileEntry(s"dt=$day/$name", day, rows, len, ranges)
-    }
+    landStaged(spark, root, "append", statsCols, "append")(stage =>
+      dated.repartition(col("dt"))
+        .write.mode("overwrite").partitionBy("dt").parquet(stage))
   }
 
   // ---------------------------------------------------------------------
@@ -889,13 +915,8 @@ object VersionedLake {
       lo: String, hi: String, version: Option[Long] = None,
       fromDay: String = "0000-01-01", toDay: String = "9999-12-31")
       : PruneReport =
-    bandReportOf(snapshot(spark, path, version), bandCol, lo, hi,
+    bandsReportOf(snapshot(spark, path, version), Seq((bandCol, lo, hi)),
       fromDay, toDay)
-
-  private def bandReportOf(snap: Snapshot, bandCol: String,
-      lo: String, hi: String, fromDay: String, toDay: String)
-      : PruneReport =
-    bandsReportOf(snap, Seq((bandCol, lo, hi)), fromDay, toDay)
 
   /** CONJUNCTIVE multi-band pruning: a file survives only when EVERY
     * band's recorded range overlaps its bound (a missing range never
@@ -987,7 +1008,7 @@ object VersionedLake {
   // ---------------------------------------------------------------------
 
   /** Compact each day in [fromDay, toDay] of the LATEST snapshot down to
-    * `ceil(bytes / targetFileMB)` files (floored at `minFilesPerDay`) and
+    * `ceil(bytes / TargetFileMB)` files (floored at `minFilesPerDay`) and
     * publish the substitution atomically. Readers of older versions keep
     * their files — nothing is deleted here ([[vacuum]] reclaims), so the
     * day dirs hold both generations until then and only the commit log
@@ -1017,8 +1038,7 @@ object VersionedLake {
     * (they sort first, as in the lexical layout).
     */
   def compact(spark: SparkSession, path: String,
-      fromDay: String, toDay: String, targetFileMB: Int = 128,
-      parallelism: Int = 4, minFilesPerDay: Int = 1,
+      fromDay: String, toDay: String, minFilesPerDay: Int = 1,
       clusterBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       zorder: Boolean = false): Long = {
     if (zorder) {
@@ -1026,17 +1046,9 @@ object VersionedLake {
       require(clusterBy.size <= 4, "zorder supports at most 4 columns")
     }
     val root = new Path(path)
-    val fs = fsOf(spark, root)
     val snap = snapshot(spark, path, None)
-    val base = fs.makeQualified(root).toString
-    val targetBytes = targetFileMB.toLong * 1024 * 1024
-    val byDay = snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay)
-      .groupBy(_.dt).toSeq.sortBy(_._1)
-    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[FileEntry]()
-    val added = new java.util.concurrent.ConcurrentLinkedQueue[FileEntry]()
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, math.max(1, byDay.length))))
+    val base = fsOf(spark, root).makeQualified(root).toString
+    val targetBytes = TargetFileMB.toLong * 1024 * 1024
     val manifestCols = (clusterBy ++ statsCols).distinct
     // the idempotence witness encodes the LAYOUT, not just "a compaction
     // ran": re-compacting with zorder=true (or a reordered clusterBy)
@@ -1048,121 +1060,78 @@ object VersionedLake {
       else if (zorder && clusterBy.size >= 2)
         s"compact-z:${clusterBy.mkString(",")}"
       else s"compact:${clusterBy.mkString(",")}"
-    def compactOne(day: String, entries: Seq[FileEntry]): Unit = {
+    def want(entries: Seq[FileEntry]): Int = {
       val bytes = entries.map(_.bytes).sum
-      val want = math.max(minFilesPerDay.toLong,
+      math.max(minFilesPerDay.toLong,
         math.max(1L, (bytes + targetBytes - 1) / targetBytes)).toInt
-      // at-bound days are skipped only when a run with THIS layout
-      // produced them: src carries the cluster spec as the witness —
-      // append files carry stats too, and a lexical layout is not a
-      // Z-order layout even on identical columns. A day holding
-      // tombstoned files is never "done": compaction is where deletion
-      // vectors MATERIALIZE (rows drop out physically, dv refs drop)
-      val alreadyDone = entries.length <= want &&
+    }
+    // at-bound days are skipped only when a run with THIS layout
+    // produced them: src carries the cluster spec as the witness —
+    // append files carry stats too, and a lexical layout is not a
+    // Z-order layout even on identical columns. A day holding
+    // tombstoned files is never "done": compaction is where deletion
+    // vectors MATERIALIZE (rows drop out physically, dv refs drop).
+    // Entry metadata alone decides, so done days never reach the pool.
+    val todo = snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay)
+      .groupBy(_.dt).values.filterNot { entries =>
+        entries.length <= want(entries) &&
         entries.forall(_.dv.isEmpty) &&
         (manifestCols.isEmpty || entries.forall(e =>
           e.src == layoutSrc && manifestCols.forall(e.stats.contains)))
-      if (!alreadyDone) {
-        val stage = new Path(root,
-          s".vstage_compact_${day}_${java.util.UUID.randomUUID.toString.take(8)}")
-        // dv-applied scan: the rewrite absorbs any tombstones, so the
-        // new files are plain and the sidecars become vacuum garbage
-        val dayDf = scanEntries(spark, base, snap.schema, entries)
-          .drop("dt")
-        val laid =
-          if (clusterBy.isEmpty) dayDf.coalesce(want)
-          else if (zorder && clusterBy.size >= 2) {
-            // Z-order: one tiny min/max job per day bounds the bucket
-            // mapping, then the interleaved key drives the same
-            // range-partition machinery as the lexical path
-            clusterBy.foreach { c =>
-              require(snap.schema(c).dataType
-                .isInstanceOf[org.apache.spark.sql.types.NumericType],
-                s"zorder column $c must be numeric")
-            }
-            val aggExprs = clusterBy.flatMap(c => Seq(
-              min(col(c)).cast("double"), max(col(c)).cast("double")))
-            val b = dayDf.agg(aggExprs.head, aggExprs.tail: _*).head()
-            val buckets = clusterBy.zipWithIndex.map { case (c, i) =>
-              if (b.isNullAt(2 * i) || b.isNullAt(2 * i + 1) ||
-                  b.getDouble(2 * i + 1) <= b.getDouble(2 * i)) lit(0L)
-              else {
-                val (mn, mx) = (b.getDouble(2 * i), b.getDouble(2 * i + 1))
-                // NULL value → NULL ratio → greatest(NULL, 0) = 0
-                least(greatest(floor(
-                  (col(c).cast("double") - mn) / (mx - mn) * 65535.0),
-                  lit(0.0)), lit(65535.0)).cast("long")
-              }
-            }
-            val k = buckets.length
-            // bit b of bucket i lands at position b*k + i
-            val z = (0 until 16).flatMap(bit => buckets.zipWithIndex.map {
-              case (bc, i) => shiftleft(
-                shiftright(bc, bit).bitwiseAND(lit(1L)), bit * k + i)
-            }).reduce(_.bitwiseOR(_))
-            dayDf.withColumn("_graft_z", z)
-              .repartitionByRange(want, col("_graft_z"))
-              .sortWithinPartitions(col("_graft_z"))
-              .drop("_graft_z")
+      }.flatten.toSeq
+    if (todo.isEmpty) return snap.version
+    val fresh = rewriteDays(spark, root, "compact", layoutSrc, todo) { entries =>
+      val n = want(entries)
+      // dv-applied scan: the rewrite absorbs any tombstones, so the
+      // new files are plain and the sidecars become vacuum garbage
+      val dayDf = scanEntries(spark, base, snap.schema, entries).drop("dt")
+      val laid =
+        if (clusterBy.isEmpty) dayDf.coalesce(n)
+        else if (zorder && clusterBy.size >= 2) {
+          // Z-order: one tiny min/max job per day bounds the bucket
+          // mapping, then the interleaved key drives the same
+          // range-partition machinery as the lexical path
+          clusterBy.foreach { c =>
+            require(snap.schema(c).dataType
+              .isInstanceOf[org.apache.spark.sql.types.NumericType],
+              s"zorder column $c must be numeric")
           }
-          // disjoint key ranges per file — tight stats, maximal skipping
-          else dayDf.repartitionByRange(want, clusterBy.map(col): _*)
-            .sortWithinPartitions(clusterBy.map(col): _*)
-        laid.write.mode("overwrite").parquet(stage.toString)
-        val live = new Path(root, s"dt=$day")
-        val rows = entries.map(_.rows).sum
-        val moved = fs.listStatus(stage)
-          .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-          .map { f =>
-            val target = new Path(live, f.getPath.getName)
-            if (!fs.rename(f.getPath, target))
-              throw new java.io.IOException(
-                s"VersionedLake: rename ${f.getPath} -> $target failed")
-            (f.getPath.getName, f.getLen)
+          val aggExprs = clusterBy.flatMap(c => Seq(
+            min(col(c)).cast("double"), max(col(c)).cast("double")))
+          val b = dayDf.agg(aggExprs.head, aggExprs.tail: _*).head()
+          val buckets = clusterBy.zipWithIndex.map { case (c, i) =>
+            if (b.isNullAt(2 * i) || b.isNullAt(2 * i + 1) ||
+                b.getDouble(2 * i + 1) <= b.getDouble(2 * i)) lit(0L)
+            else {
+              val (mn, mx) = (b.getDouble(2 * i), b.getDouble(2 * i + 1))
+              // NULL value → NULL ratio → greatest(NULL, 0) = 0
+              least(greatest(floor(
+                (col(c).cast("double") - mn) / (mx - mn) * 65535.0),
+                lit(0.0)), lit(65535.0)).cast("long")
+            }
           }
-        fs.delete(stage, true): Unit
-        // per-file rows + stats for the rewritten files: one tiny
-        // metadata job over just this day's new files (the append-path
-        // cost class); the total doubles as a lossless-rewrite tripwire
-        val stats = perFileStats(spark,
-          moved.map(m => s"$base/dt=$day/${m._1}"), manifestCols)
-        require(stats.values.map(_._1).sum == rows,
-          s"VersionedLake: compaction of $day changed row count")
-        entries.foreach(replaced.add)
-        moved.foreach { case (name, len) =>
-          val (n, ranges) = stats.getOrElse(s"dt=$day/$name",
-            (0L, Map.empty[String, (String, String)]))
-          added.add(FileEntry(s"dt=$day/$name", day, n, len, ranges,
-            src = layoutSrc))
+          val k = buckets.length
+          // bit b of bucket i lands at position b*k + i
+          val z = (0 until 16).flatMap(bit => buckets.zipWithIndex.map {
+            case (bc, i) => shiftleft(
+              shiftright(bc, bit).bitwiseAND(lit(1L)), bit * k + i)
+          }).reduce(_.bitwiseOR(_))
+          dayDf.withColumn("_graft_z", z)
+            .repartitionByRange(n, col("_graft_z"))
+            .sortWithinPartitions(col("_graft_z"))
+            .drop("_graft_z")
         }
-      }
+        // disjoint key ranges per file — tight stats, maximal skipping
+        else dayDf.repartitionByRange(n, clusterBy.map(col): _*)
+          .sortWithinPartitions(clusterBy.map(col): _*)
+      (laid, manifestCols, entries.map(_.rows).sum)
     }
-    try {
-      byDay.foreach { case (day, entries) =>
-        pool.execute(() =>
-          try compactOne(day, entries)
-          catch { case t: Throwable => failures.add(t); () })
-      }
-      pool.shutdown()
-      pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS): Unit
-    } finally pool.shutdownNow()
-    if (!failures.isEmpty) throw failures.peek()
-    if (replaced.isEmpty) snap.version
-    else {
-      val dead = {
-        val it = replaced.iterator(); val b = Seq.newBuilder[FileEntry]
-        while (it.hasNext) b += it.next(); b.result().map(_.path).toSet
-      }
-      val fresh = {
-        val it = added.iterator(); val b = Seq.newBuilder[FileEntry]
-        while (it.hasNext) b += it.next(); b.result()
-      }
-      // the delta substitutes ONLY what this run rewrote: files a racing
-      // append committed meanwhile stay live (append/compact commute);
-      // a racing maintenance op over the same entries trips the commit
-      // loop's conflict detection instead of resurrecting rows
-      commitDelta(spark, root, snap.schema, fresh, dead, op = "compact")
-    }
+    // the delta substitutes ONLY what this run rewrote: files a racing
+    // append committed meanwhile stay live (append/compact commute);
+    // a racing maintenance op over the same entries trips the commit
+    // loop's conflict detection instead of resurrecting rows
+    commitDelta(spark, root, snap.schema, fresh, todo.map(_.path).toSet,
+      op = "compact")
   }
 
   /** DELETE (the retention/right-to-erasure op a 100 TB training lake
@@ -1178,32 +1147,21 @@ object VersionedLake {
     * still carry them (time travel is the audit trail), so a true purge
     * is `deleteWhere` + [[vacuum]] down to the post-delete version.
     *
-    * Cost shape: one match-count scan over the candidate files (grouped
-    * by `_metadata.file_path` — per-file match counts in a single job),
-    * then one rewrite job per touched DAY over only its touched files,
-    * `parallelism` days in flight at once on a driver-side pool (the
-    * [[compact]] discipline — per-day jobs are small, so overlapping
-    * them keeps the cluster busy when a wide predicate touches many
-    * days). Untouched files keep their entries (and their stats)
-    * verbatim — zero write amplification outside the blast radius.
-    * [[deleteBand]] shrinks the candidate set further using manifest
-    * stats BEFORE any footer opens — the read-path skipping contract
-    * applied to writes.
+    * Cost shape ([[rewriteMatching]]): one per-file match-count scan over
+    * the candidate files, then one rewrite job per touched DAY over only
+    * its touched files, days overlapping on [[rewriteDays]]' pool.
+    * Untouched files keep their entries (and their stats) verbatim —
+    * zero write amplification outside the blast radius. [[deleteBand]]
+    * shrinks the candidate set further using manifest stats BEFORE any
+    * footer opens — the read-path skipping contract applied to writes.
     */
   def deleteWhere(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column,
       fromDay: String = "0000-01-01", toDay: String = "9999-12-31",
-      parallelism: Int = 4, mode: String = "cow"): Long = {
+      mode: String = "cow"): Long = {
     val snap = snapshot(spark, path, None)
-    val candidates = snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay)
-    mode match {
-      case "cow" =>
-        deleteFromFiles(spark, path, snap, candidates, predicate, parallelism)
-      case "dv" =>
-        deleteVectors(spark, path, snap, candidates, predicate)
-      case other => sys.error(
-        s"VersionedLake.deleteWhere: unknown mode '$other' (cow | dv)")
-    }
+    deleteFrom(spark, path, snap,
+      snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay), predicate, mode)
   }
 
   /** [[deleteWhere]] for a band predicate, with the candidate files
@@ -1216,107 +1174,84 @@ object VersionedLake {
   def deleteBand(spark: SparkSession, path: String, bandCol: String,
       lo: Double, hi: Double,
       fromDay: String = "0000-01-01", toDay: String = "9999-12-31",
-      parallelism: Int = 4, mode: String = "cow"): Long = {
+      mode: String = "cow"): Long = {
     val snap = snapshot(spark, path, None)
-    val report = bandReportOf(snap, bandCol, lo.toString, hi.toString,
-      fromDay, toDay)
-    val picked = report.selected.toSet
-    val candidates = snap.files.filter(f => picked(f.path))
-    val predicate = col(bandCol) >= lo && col(bandCol) <= hi
+    val picked = bandsReportOf(snap, Seq((bandCol, lo.toString, hi.toString)),
+      fromDay, toDay).selected.toSet
+    deleteFrom(spark, path, snap, snap.files.filter(f => picked(f.path)),
+      col(bandCol) >= lo && col(bandCol) <= hi, mode)
+  }
+
+  /** The cow/dv dispatch of [[deleteWhere]] and [[deleteBand]]. */
+  private def deleteFrom(spark: SparkSession, path: String, snap: Snapshot,
+      candidates: Seq[FileEntry], predicate: org.apache.spark.sql.Column,
+      mode: String): Long = {
+    val isMatch = coalesce(predicate, lit(false)) // NULL is not a match
     mode match {
-      case "cow" =>
-        deleteFromFiles(spark, path, snap, candidates, predicate, parallelism)
-      case "dv" => deleteVectors(spark, path, snap, candidates, predicate)
+      case "cow" => rewriteMatching(spark, new Path(path), snap, candidates,
+        "delete", _.filter(isMatch), _.filter(!isMatch))
+      case "dv" => deleteVectors(spark, path, snap, candidates, isMatch)
       case other => sys.error(
-        s"VersionedLake.deleteBand: unknown mode '$other' (cow | dv)")
+        s"VersionedLake: unknown delete mode '$other' (cow | dv)")
     }
   }
 
-  /** Run `rewriteOne(day, entries)` for every touched day on a bounded
-    * driver-side pool (Spark sessions are thread-safe; each day is one
-    * small job, so overlapping them keeps the cluster busy), collect the
-    * produced entries, rethrow the first failure.
+  /** Rewrite every touched day through [[landStaged]] (tagged `src`) on a
+    * bounded driver-side pool of [[DaysInFlight]] threads (Spark sessions
+    * are thread-safe; each day is one small job, so overlapping them
+    * keeps the cluster busy). `rewriteOne(entries)` gives a day's
+    * laid-out frame, the stats columns its files record, and the rows
+    * they must hold. Returns the new entries; once every day has
+    * finished, rethrows the first day's failure.
     */
-  private def rewriteDays(touched: Seq[FileEntry], parallelism: Int)(
-      rewriteOne: (String, Seq[FileEntry]) => Seq[FileEntry])
+  private def rewriteDays(spark: SparkSession, root: Path, op: String,
+      src: String, touched: Seq[FileEntry])(
+      rewriteOne: Seq[FileEntry] => (DataFrame, Seq[String], Long))
       : Seq[FileEntry] = {
     val byDay = touched.groupBy(_.dt).toSeq.sortBy(_._1)
-    val added = new java.util.concurrent.ConcurrentLinkedQueue[FileEntry]()
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def landDay(day: String, entries: Seq[FileEntry]): Seq[FileEntry] = {
+      val (laid, statsCols, rows) = rewriteOne(entries)
+      landStaged(spark, root, s"${op}_$day", statsCols, src, Some(rows))(
+        stage => laid.write.mode("overwrite").parquet(s"$stage/dt=$day"))
+    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, byDay.length)))
-    try {
-      byDay.foreach { case (day, entries) =>
-        pool.execute(() =>
-          try rewriteOne(day, entries).foreach(added.add)
-          catch { case t: Throwable => failures.add(t); () })
-      }
-      pool.shutdown()
-      pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS): Unit
-    } finally pool.shutdownNow()
-    if (!failures.isEmpty) throw failures.peek()
-    val b = Seq.newBuilder[FileEntry]
-    val it = added.iterator()
-    while (it.hasNext) b += it.next()
-    b.result()
+      math.max(1, math.min(DaysInFlight, byDay.length)))
+    val done = try byDay.map { case (day, entries) =>
+        pool.submit[Seq[FileEntry]](() => landDay(day, entries))
+      }.map(f => scala.util.Try(f.get()))
+    finally pool.shutdownNow()
+    done.flatMap(_.fold(e => throw e.getCause, identity))
   }
 
-  private def deleteFromFiles(spark: SparkSession, path: String,
-      snap: Snapshot, candidates: Seq[FileEntry],
-      predicate: org.apache.spark.sql.Column, parallelism: Int): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val base = fs.makeQualified(root).toString
-    if (candidates.isEmpty) return snap.version
-    // one job: per-file match counts over just the candidates —
-    // dv-applied, so already-tombstoned rows never re-match
-    val isMatch = coalesce(predicate, lit(false)) // NULL is not a match
-    val matches = scanEntries(spark, base, snap.schema, candidates,
-        withMeta = true)
-      .filter(isMatch)
-      .groupBy(col("_graft_file").as("f")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val touched = candidates.filter(e => matches.contains(e.path))
-    if (touched.isEmpty) return snap.version
-    val fresh = rewriteDays(touched, parallelism) { (day, entries) =>
-      val statsCols = entries.flatMap(_.stats.keys).distinct
-      val stage = new Path(root,
-        s".vstage_delete_${day}_${java.util.UUID.randomUUID.toString.take(8)}")
-      // keep = NOT match; one rewrite job per touched day over only its
-      // touched files, preserving their file count (no re-layout here —
-      // compact() is the re-layout op). The dv-applied scan means a
-      // rewrite of a tombstoned file also MATERIALIZES its dv.
-      scanEntries(spark, base, snap.schema, entries)
-        .filter(!isMatch)
-        .drop("dt")
-        .coalesce(entries.length)
-        .write.mode("overwrite").parquet(stage.toString)
-      val live = new Path(root, s"dt=$day")
-      val moved = fs.listStatus(stage)
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .map { f =>
-          val target = new Path(live, f.getPath.getName)
-          if (!fs.rename(f.getPath, target))
-            throw new java.io.IOException(
-              s"VersionedLake: rename ${f.getPath} -> $target failed")
-          (f.getPath.getName, f.getLen)
-        }
-      fs.delete(stage, true): Unit
-      val stats = perFileStats(spark,
-        moved.map(m => s"$base/dt=$day/${m._1}"), statsCols)
-      val oldRows = entries.map(_.rows).sum
-      val hit = entries.map(e => matches(e.path)).sum
-      require(stats.values.map(_._1).sum == oldRows - hit,
-        s"VersionedLake: delete on $day rewrote ${stats.values.map(_._1).sum}" +
-          s" rows, expected ${oldRows - hit}")
-      moved.toSeq.map { case (name, len) =>
-        val (n, ranges) = stats.getOrElse(s"dt=$day/$name",
-          (0L, Map.empty[String, (String, String)]))
-        FileEntry(s"dt=$day/$name", day, n, len, ranges, src = "delete")
-      }
-    }
-    commitDelta(spark, root, snap.schema, fresh,
-      touched.map(_.path).toSet, op = "delete")
+  /** Copy-on-write removal, shared by the cow delete and [[upsert]]: one
+    * match scan counts per candidate file the rows `matched` selects
+    * (dv-applied); each touched day rewrites only its touched files
+    * through `keep` at their file count (re-layout is [[compact]]'s job;
+    * a tombstoned file's dv MATERIALIZES) and must land its old rows
+    * minus the matched ones. The rewrites and `extra`'s entries (landed
+    * after them) publish in ONE commit — none when both are empty.
+    */
+  private def rewriteMatching(spark: SparkSession, root: Path,
+      snap: Snapshot, candidates: Seq[FileEntry], op: String,
+      matched: DataFrame => DataFrame, keep: DataFrame => DataFrame,
+      extra: => Seq[FileEntry] = Nil): Long = {
+    val base = fsOf(spark, root).makeQualified(root).toString
+    val hits =
+      if (candidates.isEmpty) Map.empty[String, Long]
+      else matched(scanEntries(spark, base, snap.schema, candidates,
+          withMeta = true))
+        .groupBy(col("_graft_file")).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val touched = candidates.filter(e => hits.contains(e.path))
+    val adds = rewriteDays(spark, root, op, op, touched) { entries =>
+      (keep(scanEntries(spark, base, snap.schema, entries)).drop("dt")
+        .coalesce(entries.length),
+        entries.flatMap(_.stats.keys).distinct,
+        entries.map(e => e.rows - hits(e.path)).sum)
+    } ++ extra
+    if (touched.isEmpty && adds.isEmpty) snap.version
+    else commitDelta(spark, root, snap.schema, adds,
+      touched.map(_.path).toSet, op = op)
   }
 
   /** MERGE-ON-READ delete (deletion vectors — the Delta/Iceberg answer
@@ -1343,12 +1278,11 @@ object VersionedLake {
     */
   private def deleteVectors(spark: SparkSession, path: String,
       snap: Snapshot, candidates: Seq[FileEntry],
-      predicate: org.apache.spark.sql.Column): Long = {
+      isMatch: org.apache.spark.sql.Column): Long = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val base = fs.makeQualified(root).toString
     if (candidates.isEmpty) return snap.version
-    val isMatch = coalesce(predicate, lit(false)) // NULL is not a match
     // one job: (file, position) of every NEW tombstone — the scan is
     // dv-applied, so already-deleted rows never re-match. Pinned: the
     // frame drives both the per-file counts and the sidecar write.
@@ -1424,13 +1358,7 @@ object VersionedLake {
           .map(f => (day, f.getPath.getName, f.getLen))
       }.toSeq
     require(found.nonEmpty, s"VersionedLake: no dt= data under $path")
-    val stats = perFileStats(spark,
-      found.map { case (day, name, _) => s"$base/dt=$day/$name" }, statsCols)
-    val entries = found.map { case (day, name, len) =>
-      val (rows, ranges) = stats.getOrElse(s"dt=$day/$name",
-        (0L, Map.empty[String, (String, String)]))
-      FileEntry(s"dt=$day/$name", day, rows, len, ranges, src = "import")
-    }
+    val entries = entriesOf(spark, base, found, statsCols, "import")
     val schema = spark.read.option("basePath", base).parquet(base)
       .drop("dt").schema
     commitDelta(spark, root, schema, entries, Set.empty, op = "import",
@@ -1508,22 +1436,18 @@ object VersionedLake {
     *    frame degrades to a shuffle join instead of OOMing the driver.
     *
     * Then each touched day rewrites only its touched files with the
-    * stale rows anti-joined out, the whole `updates` frame lands via the
-    * append path (so it carries stats for `statsCols`), and BOTH publish
-    * in one commit. Older versions keep the pre-image — the CDC audit
-    * trail.
+    * stale rows anti-joined out ([[rewriteMatching]], as the cow delete),
+    * the whole `updates` frame lands via the append path (so it carries
+    * stats for `statsCols`), and BOTH publish in one commit. Older
+    * versions keep the pre-image — the CDC audit trail.
     *
-    * `updates` must be key-unique (the caller's CDC compaction step —
-    * enforce upstream with a window-dedup when feeds can double-emit).
+    * `updates` must be key-unique and NULL-free; both are checked and
+    * refused loudly (dedup upstream when feeds can double-emit).
     */
   def upsert(updates: DataFrame, path: String, key: String,
       tsCol: String = "ts", statsCols: Seq[String] = Nil,
-      fromDay: String = "0000-01-01", toDay: String = "9999-12-31",
-      parallelism: Int = 4): Long = {
+      fromDay: String = "0000-01-01", toDay: String = "9999-12-31"): Long = {
     val spark = updates.sparkSession
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val base = fs.makeQualified(root).toString
     val snap = snapshot(spark, path, None)
     // pin: the key frame drives a match scan and the rewrites; an
     // unpinned lineage would re-execute the caller's feed per action
@@ -1534,15 +1458,21 @@ object VersionedLake {
       // keys are REFUSED loudly: semi/anti joins never match NULL, so a
       // NULL-keyed update row could only ever append a duplicate beside
       // any existing NULL-keyed lake row — silent corruption (r11
-      // ADVICE). The same agg also distinguishes a genuinely empty
+      // ADVICE). A repeated key is refused the same way: both its rows
+      // would land. The same agg also distinguishes a genuinely empty
       // batch (count 0 — no-op) from an all-NULL-key one (error).
       val bounds = pinned.agg(min(col(key)).cast("string"),
         max(col(key)).cast("string"), count(lit(1)),
-        count(when(col(key).isNull, 1))).head()
+        count(when(col(key).isNull, 1)), countDistinct(col(key))).head()
       require(bounds.getLong(3) == 0L,
         s"VersionedLake.upsert: ${bounds.getLong(3)} update rows carry a " +
           s"NULL $key — upsert keys must be non-null (NULL never matches " +
           "a join, so such rows would silently duplicate instead of replace)")
+      require(bounds.getLong(4) == bounds.getLong(2),
+        s"VersionedLake.upsert: ${bounds.getLong(2) - bounds.getLong(4)} " +
+          s"update rows repeat a $key — upsert keys must be unique in a " +
+          "batch (every row of a repeated key would land, so one key " +
+          "would silently hold two rows)")
       if (bounds.getLong(2) == 0L) snap.version // empty batch — no-op
       else {
         val (kMin, kMax) = (bounds.getString(0), bounds.getString(1))
@@ -1557,58 +1487,15 @@ object VersionedLake {
             }
           }
         val keys = pinned.select(col(key)).distinct()
-        // one job: which candidate files hold a stale version of an
-        // updated key — dv-applied (a tombstoned row is not stale, it is
-        // gone); metadata columns resolve only on the scan itself, so
-        // scanEntries projects the file path BEFORE the join
-        val matches =
-          if (candidates.isEmpty) Set.empty[String]
-          else scanEntries(spark, base, snap.schema, candidates,
-              withMeta = true)
-            .select(col("_graft_file").as("f"), col(key))
-            .join(keys, Seq(key), "left_semi")
-            .groupBy(col("f")).count().collect()
-            .map(r => r.getString(0))
-            .toSet
-        val touched = snap.files.filter(e => matches(e.path))
-        // per-day anti-join rewrites, `parallelism` days in flight (the
-        // compact/delete pool discipline)
-        val fresh = rewriteDays(touched, parallelism) { (day, entries) =>
-          val dayStats = entries.flatMap(_.stats.keys).distinct
-          val stage = new Path(root,
-            s".vstage_upsert_${day}_${java.util.UUID.randomUUID.toString.take(8)}")
-          scanEntries(spark, base, snap.schema, entries)
-            .drop("dt")
-            .join(keys, Seq(key), "left_anti") // drop stale rows
-            .coalesce(entries.length)
-            .write.mode("overwrite").parquet(stage.toString)
-          val live = new Path(root, s"dt=$day")
-          val moved = fs.listStatus(stage)
-            .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-            .map { f =>
-              val target = new Path(live, f.getPath.getName)
-              if (!fs.rename(f.getPath, target))
-                throw new java.io.IOException(
-                  s"VersionedLake: rename ${f.getPath} -> $target failed")
-              (f.getPath.getName, f.getLen)
-            }
-          fs.delete(stage, true): Unit
-          val stats = perFileStats(spark,
-            moved.map(m => s"$base/dt=$day/${m._1}"), dayStats)
-          moved.toSeq.map { case (name, len) =>
-            val (n, ranges) = stats.getOrElse(s"dt=$day/$name",
-              (0L, Map.empty[String, (String, String)]))
-            FileEntry(s"dt=$day/$name", day, n, len, ranges,
-              src = "upsert")
-          }
-        }
-        // the update batch's files move in manifest-less (invisible), then
-        // ONE commit publishes substitutions + additions together: no
-        // reader — current or time-traveling — ever sees a snapshot with
-        // both row versions of an updated key
-        val newEntries = stageAndMove(pinned, path, tsCol, statsCols)
-        commitDelta(spark, root, snap.schema, fresh ++ newEntries,
-          touched.map(_.path).toSet, op = "upsert")
+        // match = a stale version of an updated key (metadata columns
+        // resolve only on the scan, so the path is projected BEFORE the
+        // join); ONE commit publishes the rewrites and the batch, so no
+        // snapshot ever holds both row versions of an updated key
+        rewriteMatching(spark, new Path(path), snap, candidates, "upsert",
+          _.select(col("_graft_file"), col(key))
+            .join(keys, Seq(key), "left_semi"),
+          _.join(keys, Seq(key), "left_anti"), // drop stale rows
+          stageAndMove(pinned, path, tsCol, statsCols))
       }
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(pinned)
   }

@@ -69,16 +69,16 @@ object FaultyFs {
     }
 }
 
-/** Crash-point tests of the lake's one write protocol. For each op that
-  * replaced a deleted protocol — `VersionedLake.appendBatch` (the
-  * `LakeSink` forwarder's target) and `VersionedLake.compact` — the op
-  * runs once per k = 1..n with the k-th filesystem mutation failing,
-  * where n is the op's mutation count in a clean run, each time on a
-  * fresh copy of the same base lake. After every crash:
+/** Crash-point tests of the lake's one write protocol. Each write op —
+  * `VersionedLake.appendBatch` (the `LakeSink` forwarder's target),
+  * `compact`, `upsert`, `deleteWhere` in both modes and `vacuum` — runs
+  * once per k = 1..n with the k-th filesystem mutation failing, where n
+  * is the op's mutation count in a clean run, each time on a fresh copy
+  * of the same base lake. After every crash:
   *  - `VersionedLake.read` and `Partitioned.readDays` return exactly the
   *    old row multiset or the new one, never a torn or doubled one;
-  *  - re-running the op (same batch id; same compact range) yields the
-  *    new row multiset exactly once.
+  *  - re-running the same call (same batch id, range, batch or
+  *    predicate) yields the new row multiset exactly once.
   * The lake lives under the `faulty:` scheme, so every commit takes the
   * rename publish path of `publishIfAbsent`; the `file:` hard-link
   * publish path is covered by VersionedLakeSpec's concurrent-writer
@@ -189,19 +189,82 @@ class LakeFaultSpec extends SparkSessionSpec {
       lake => assert(VersionedLake.lastBatchId(spark, lake) === 0L))
   }
 
-  test("compact: a crash at any create/rename/delete leaves readers on " +
-      "the old or the new layout's rows, and the re-run compacts once") {
+  /** A local lake of ids 0..11 landed by two appends, so both days hold
+    * two files.
+    */
+  private def twoAppends(): String = {
     val base = java.nio.file.Files.createTempDirectory("graft_fault_base")
       .toString + "/events"
     VersionedLake.append(batch(0 until 6), base)
     VersionedLake.append(batch(6 until 12), base)
     assert(VersionedLake.snapshot(spark, base).files.groupBy(_.dt)
       .values.forall(_.size > 1), "gate needs multi-file days")
+    base
+  }
+
+  test("compact: a crash at any create/rename/delete leaves readers on " +
+      "the old or the new layout's rows, and the re-run compacts once") {
+    val base = twoAppends()
     val after = rows(VersionedLake.read(spark, base))
     crashEveryStep(base,
       lake => VersionedLake.compact(spark, lake, Days._1, Days._2): Unit,
       after,
       lake => assert(VersionedLake.snapshot(spark, lake).files.groupBy(_.dt)
         .values.forall(_.size === 1), "the re-run left a day uncompacted"))
+  }
+
+  test("upsert: a crash at any create/rename/delete leaves readers on " +
+      "the old or the new rows, and the replay holds each key once") {
+    val base = twoAppends()
+    // ids 4..11 overwrite live keys on both days, 12..13 are new keys
+    val updates = batch(4 until 14).withColumn("value", col("value") + 100.0)
+    val after = rows(VersionedLake.read(spark, base)
+      .filter(col("event_id") < 4)
+      .unionByName(updates.withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))))
+    crashEveryStep(base,
+      lake => VersionedLake.upsert(updates, lake, key = "event_id"): Unit,
+      after,
+      lake => assert(VersionedLake.history(spark, lake).last.op === "upsert"))
+  }
+
+  test("deleteWhere (copy-on-write): a crash at any create/rename/delete " +
+      "leaves readers on the old or the new rows, and the replay deletes once") {
+    val base = twoAppends()
+    val doomed = col("value") > 9.0
+    val after = rows(VersionedLake.read(spark, base).filter(!doomed))
+    crashEveryStep(base,
+      lake => VersionedLake.deleteWhere(spark, lake, doomed): Unit,
+      after,
+      lake => assert(VersionedLake.history(spark, lake).last.op === "delete"))
+  }
+
+  test("deleteWhere (deletion vectors): a crash at any create/rename/delete " +
+      "leaves readers on the old or the new rows, and the replay deletes once") {
+    val base = twoAppends()
+    val doomed = col("value") > 9.0
+    val after = rows(VersionedLake.read(spark, base).filter(!doomed))
+    crashEveryStep(base,
+      lake => VersionedLake.deleteWhere(spark, lake, doomed, mode = "dv"): Unit,
+      after,
+      lake => assert(VersionedLake.snapshot(spark, lake).files
+        .exists(_.dv.isDefined), "the replay left no deletion vector"))
+  }
+
+  test("vacuum: a crash at any create/rename/delete leaves readers on the " +
+      "same rows, and the re-run reclaims every expired version and file") {
+    val base = twoAppends()
+    VersionedLake.compact(spark, base, Days._1, Days._2)
+    VersionedLake.deleteWhere(spark, base, col("value") > 9.0)
+    val after = rows(VersionedLake.read(spark, base))
+    crashEveryStep(base,
+      lake => VersionedLake.vacuum(spark, lake, retainVersions = 1,
+        olderThanHours = 0): Unit,
+      after,
+      lake => {
+        assert(VersionedLake.history(spark, lake).size === 1)
+        val left = VersionedLake.vacuum(spark, lake, retainVersions = 1,
+          olderThanHours = 0, dryRun = true)
+        assert(left.dataFiles.isEmpty && left.expiredVersions.isEmpty)
+      })
   }
 }

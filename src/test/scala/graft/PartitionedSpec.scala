@@ -71,7 +71,7 @@ class PartitionedSpec extends SparkSessionSpec {
     def lastDay() = VersionedLake.snapshot(spark, uri).files
       .filter(_.dt == days.last).map(_.path).toSet
     val lastBefore = lastDay()
-    val v = VersionedLake.compact(spark, uri, from, to, targetFileMB = 128)
+    val v = VersionedLake.compact(spark, uri, from, to)
     val after = perDay()
     assert(after.keySet === before.keySet, "compaction dropped a day")
     assert(days.init.forall(after(_) === 1),
@@ -81,8 +81,7 @@ class PartitionedSpec extends SparkSessionSpec {
       === 2 * ev.count())
     // idempotent: every in-range day is at its bound, so a re-run
     // rewrites nothing and commits no version
-    assert(VersionedLake.compact(spark, uri, from, to, targetFileMB = 128)
-      === v)
+    assert(VersionedLake.compact(spark, uri, from, to) === v)
   }
 
   test("readDays over a compacted commit-log tree counts every row once " +

@@ -321,6 +321,26 @@ class VersionedLakeSpec extends SparkSessionSpec {
       .filter(col("value") >= 1000.0).count() === 0)
   }
 
+  test("upsert refuses a batch that repeats a key: the head version and " +
+      "rows stay unchanged") {
+    import spark.implicits._
+    val d = freshRoot()
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    VersionedLake.append(
+      Seq((1L, ts, 1.0), (2L, ts, 2.0)).toDF("event_id", "ts", "value"), d)
+    val vBefore = VersionedLake.snapshot(spark, d).version
+    def rows() = VersionedLake.read(spark, d).collect().toSeq
+      .sortBy(_.getLong(0))
+    val rowsBefore = rows()
+    val e = intercept[IllegalArgumentException] {
+      VersionedLake.upsert(Seq((2L, ts, 20.0), (2L, ts, 21.0), (3L, ts, 3.0))
+        .toDF("event_id", "ts", "value"), d, key = "event_id")
+    }
+    assert(e.getMessage.contains("repeat"))
+    assert(VersionedLake.snapshot(spark, d).version === vBefore)
+    assert(rows() === rowsBefore)
+  }
+
   test("restore republishes an old version as the head and PRESERVES the " +
       "streaming high-water mark") {
     val d = freshRoot()
