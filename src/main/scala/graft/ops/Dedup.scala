@@ -9,13 +9,17 @@ import graft.functions.TextFunctions._
 /** Deduplication operators for training-data pipelines.
   *
   * All variants are pure Column/DataFrame compositions (whole-stage
-  * codegen, no UDFs) and follow the same scale shape:
+  * codegen, no UDFs). The pair operators share one set-similarity join,
+  * split into the two phases of V-SMART-Join (VLDB 2012):
   *
-  *   per-row signature (narrow, inside the scan stage)
-  *     → explode small constant-width band/bucket keys
-  *     → shuffle ONCE on bucket key
-  *     → pair generation inside buckets
-  *     → exact verification on the candidate pairs only.
+  *   candidate phase: per-row signature or rarity-ordered prefix
+  *     (narrow, inside the scan stage) → explode small constant-width
+  *     band/bucket keys → shuffle ONCE on the key → pair generation
+  *     inside buckets (`bucketPairs`; rarity sets from `raritySets`,
+  *     prefixes cut by `prefixLen`);
+  *   similarity phase: exact verification on the deduped candidate pairs
+  *     only (`overlap` fetches both hashed sets and merge-walks |A∩B|),
+  *     each operator applying its own cut.
   *
   * At 100 TB the only heavy exchange is the bucket-key shuffle, whose
   * width we control (bands × docs), and candidate verification touches a
@@ -26,26 +30,81 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
-  /** Partition count for quadratic pair-expansion joins: AQE coalesces by
-    * pre-join input size, which wildly underestimates an explosive join's
-    * output, so these stages need an explicit (AQE-exempt) width.
-    */
-  private def expansionParallelism(df: DataFrame): Int =
-    math.max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
-
-  /** |A∩B| of sorted distinct long arrays — session-independent direct
-    * construction of the native merge-walk expression.
-    */
-  private def intersectCard(a: Column, b: Column): Column =
-    graft.expr.nat(graft.expr.GraftExpressions.IntersectCardSorted(
-      graft.expr.toExpr(a), graft.expr.toExpr(b)))
-
   /** min(A∩B) of sorted distinct long arrays (early-exit merge walk) —
     * the PPJoin emit-once key for prefix-filtered pair joins.
     */
   private def minCommonSorted(a: Column, b: Column): Column =
     graft.expr.nat(graft.expr.GraftExpressions.MinCommonSorted(
       graft.expr.toExpr(a), graft.expr.toExpr(b)))
+
+  // ------------------------------------------------ set-similarity join
+
+  /** Prefix length |s| − ⌈t·|s|⌉ + 1 of a set of size `sz` at the cut
+    * t = num/den: a pair at or above the cut shares an element within
+    * it (the prefix-filter bound, proved at [[ngramJaccardPairs]]). The
+    * one place a cut becomes a prefix, so the one place it is checked.
+    */
+  private def prefixLen(sz: Column, num: Int, den: Int): Column = {
+    require(0 < num && num <= den, s"similarity cut must lie in (0, 1], got $num/$den")
+    val n = sz.cast("long")
+    (n - ((n * num + (den - 1)) / den).cast("long") + 1).cast("int")
+  }
+
+  /** Rarity-ordered sets for the prefix-filtered joins: `elems` (one
+    * distinct-element array per row) explodes to the element stream
+    * (id, w), returned with docs (id, hs, prefix). `hs` is the set as
+    * SORTED xxhash64 longs, the merge-walk form [[overlap]] verifies on;
+    * `prefix` is the first `prefixLen` elements in global rarity order
+    * (document frequency asc, element asc). Both come from one aggregate,
+    * so a caller reading both shares its exchange.
+    */
+  private def raritySets(
+      df: DataFrame, idCol: String, elems: Column,
+      num: Int, den: Int): (DataFrame, DataFrame) = {
+    val plen = prefixLen(size(col("byRarity")), num, den)
+    // spread tokenization/aggregation off the (possibly single-partition)
+    // scan before the explode fans out
+    val tok = df.repartition(expansionParallelism(df))
+      .select(col(idCol).as("id"), explode(elems).as("w"))
+    val dfreq = tok.groupBy("w").agg(count(lit(1)).as("dfreq"))
+    val docs = tok.join(dfreq, "w")
+      .groupBy("id")
+      .agg(sort_array(collect_list(struct(col("dfreq"), col("w")))).as("byRarity"))
+      .select(col("id"),
+        sort_array(transform(col("byRarity"), s => xxhash64(s("w")))).as("hs"),
+        slice(transform(col("byRarity"), s => s("w")), lit(1), plen).as("prefix"))
+    (tok, docs)
+  }
+
+  /** The candidate phase's one exchange: `a` and `b` repartition on
+    * `keys` and equi-join as aliases `a` and `b`; `b = None` self-joins
+    * `a`, keeping each unordered pair once (`a.id < b.id`). The width is
+    * explicit because the in-bucket pair expansion happens AFTER this
+    * exchange, invisible to AQE, which would otherwise coalesce the tiny
+    * pre-join inputs into one task that does all the quadratic work.
+    */
+  private def bucketPairs(
+      a: DataFrame, b: Option[DataFrame], keys: Seq[String]): DataFrame = {
+    def part(d: DataFrame) =
+      d.repartition(expansionParallelism(d), keys.map(col): _*)
+    val l = part(a)
+    val on = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    l.as("a").join(b.fold(l)(part).as("b"),
+      if (b.isEmpty) on && col("a.id") < col("b.id") else on)
+  }
+
+  /** The similarity phase's fetch: each deduped candidate (id_a, id_b)
+    * gets both sides' sorted hashed sets (`hs` of `a` and `b`, keyed by
+    * `id`), their sizes `sz_a`/`sz_b` (long) and `inter` = |A∩B| from one
+    * merge walk. Each caller applies its own cut.
+    */
+  private def overlap(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame =
+    cand
+      .join(a.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
+      .join(b.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
+      .withColumn("sz_a", size(col("hs_a")).cast("long"))
+      .withColumn("sz_b", size(col("hs_b")).cast("long"))
+      .withColumn("inter", intersectCard(col("hs_a"), col("hs_b")))
 
   // ---------------------------------------------------------------- exact
 
@@ -308,47 +367,8 @@ object Dedup {
   def minhashPairs(
       df: DataFrame, textCol: String, idCol: String,
       k: Int = 3, bands: Int = 16, rowsPerBand: Int = 2,
-      threshold: Double = 0.8): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val p = expansionParallelism(df)
-    // spread signature computation: small single-file inputs otherwise run
-    // the whole shingling/minhash map side on 1-2 scan partitions.
-    // (r13 measured a localCheckpoint here at 0.5× — persisting the wide
-    // shingle arrays costs more than the codegen'd recompute, and the
-    // repartition exchange is already reused across the consumers.)
-    val sh = df.repartition(p).select(
-      col(idCol).as("id"), hashedShingles(col(textCol), k).as("shingles"))
-    // band keys carry (id, bucket) ONLY: the wide shingle arrays never
-    // ride the bucket shuffle or the quadratic in-bucket pair stream.
-    // Explicit repartition by bucket: the in-bucket pair expansion happens
-    // AFTER this exchange, so its output size is invisible to AQE — an
-    // explicit partition count stops AQE coalescing the tiny pre-join
-    // inputs into one task that then does all the quadratic work.
-    val banded = sh.select(col("id"),
-      explode(lshBandKeys(minhashFromShingles(col("shingles"), numHashes),
-        bands, rowsPerBand)).as("bucket"))
-      .repartition(p, col("bucket"))
-    // pairs within a bucket, deduped across bands while still (long, long)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    // fetch shingle sets only for the surviving unique candidate pairs
-    cand
-      .join(sh.select(col("id").as("id_a"), col("shingles").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("shingles").as("sh_b")), Seq("id_b"))
-      .withColumn("inter", intersectCard(col("sh_a"), col("sh_b")))
-      .withColumn("uni",
-        size(col("sh_a")) + size(col("sh_b")) - col("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / col("uni").cast("double"))
-      .filter(col("jaccard") >= threshold)
-      // raw IEEE division, not round(…, 6): division of exact integers is
-      // correctly rounded in every engine, so the double is bit-identical
-      // to the DuckDB oracle's — rounding would reintroduce engine-specific
-      // decimal behavior
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+      threshold: Double = 0.8): DataFrame =
+    lshPairs(df, None, textCol, idCol, k, bands, rowsPerBand, threshold)
 
   /** CROSS-corpus minhash near-dup pairs: LSH candidates strictly between
     * `left` and `right` (never within either side) — the fuzzy
@@ -367,32 +387,44 @@ object Dedup {
   def crossMinhashPairs(
       left: DataFrame, right: DataFrame, textCol: String, idCol: String,
       k: Int = 3, bands: Int = 16, rowsPerBand: Int = 2,
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8): DataFrame =
+    lshPairs(left, Some(right), textCol, idCol, k, bands, rowsPerBand, threshold)
+
+  /** The one body of [[minhashPairs]] (`right = None`: pairs within
+    * `left`) and [[crossMinhashPairs]] (pairs strictly between `left` and
+    * `right`). Band keys carry (id, bucket) ONLY: the wide shingle arrays
+    * never ride the bucket shuffle or the quadratic in-bucket pair
+    * stream; they are fetched for the deduped candidates alone.
+    */
+  private def lshPairs(
+      left: DataFrame, right: Option[DataFrame], textCol: String,
+      idCol: String, k: Int, bands: Int, rowsPerBand: Int,
+      threshold: Double): DataFrame = {
     val numHashes = bands * rowsPerBand
-    val p = expansionParallelism(right)
-    def sh(df: DataFrame) = df.repartition(p).select(
-      col(idCol).as("id"), hashedShingles(col(textCol), k).as("shingles"))
+    // spread signature computation: small single-file inputs otherwise run
+    // the whole shingling/minhash map side on 1-2 scan partitions.
+    // (r13 measured a localCheckpoint here at 0.5× — persisting the wide
+    // shingle arrays costs more than the codegen'd recompute, and the
+    // repartition exchange is already reused across the consumers.)
+    def sets(df: DataFrame) = df.repartition(expansionParallelism(df)).select(
+      col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs"))
     def banded(s: DataFrame) = s.select(col("id"),
-      explode(lshBandKeys(minhashFromShingles(col("shingles"), numHashes),
+      explode(lshBandKeys(minhashFromShingles(col("hs"), numHashes),
         bands, rowsPerBand)).as("bucket"))
-      .repartition(p, col("bucket"))
-    val shL = sh(left)
-    val shR = sh(right)
-    val cand = banded(shL).as("a").join(banded(shR).as("b"),
-        col("a.bucket") === col("b.bucket"))
+    val l = sets(left)
+    val r = right.map(sets)
+    // pairs within a bucket, deduped across bands while still (long, long)
+    val cand = bucketPairs(banded(l), r.map(banded), Seq("bucket"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    cand
-      .join(shL.select(col("id").as("id_a"), col("shingles").as("sh_a")),
-        Seq("id_a"))
-      .join(shR.select(col("id").as("id_b"), col("shingles").as("sh_b")),
-        Seq("id_b"))
-      .withColumn("inter", intersectCard(col("sh_a"), col("sh_b")))
-      .withColumn("uni",
-        size(col("sh_a")) + size(col("sh_b")) - col("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / col("uni").cast("double"))
+    overlap(cand, l, r.getOrElse(l))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
+      // raw IEEE division, not round(…, 6): division of exact integers is
+      // correctly rounded in every engine, so the double is bit-identical
+      // to the DuckDB oracle's — rounding would reintroduce engine-specific
+      // decimal behavior
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
@@ -486,21 +518,17 @@ object Dedup {
   private def simhashPairsBy(
       df: DataFrame, sig: Column, idCol: String,
       maxDist: Int): DataFrame = {
-    val sh = df.repartition(expansionParallelism(df))
+    val chunked = df.repartition(expansionParallelism(df))
       .select(col(idCol).as("id"), sig.as("sh"))
-    // explicit partition count: see minhashPairs — keeps the quadratic
-    // in-bucket expansion spread across the cluster when inputs are small
-    val chunked = sh.select(col("id"), col("sh"),
-      explode(transform(sequence(lit(0), lit(3)), c =>
-        concat_ws(":", c.cast("string"),
-          call_function("shiftright", col("sh"), c * 16).bitwiseAND(lit(0xffffL)).cast("string"))))
-        .as("chunk"))
-      .repartition(expansionParallelism(df), col("chunk"))
+      .select(col("id"), col("sh"),
+        explode(transform(sequence(lit(0), lit(3)), c =>
+          concat_ws(":", c.cast("string"),
+            call_function("shiftright", col("sh"), c * 16).bitwiseAND(lit(0xffffL)).cast("string"))))
+          .as("chunk"))
     // distance filter BEFORE the pair-dedup shuffle: popcount is codegen'd
     // and prunes the quadratic in-bucket stream down to the true near-dups,
     // so only matching pairs pay the exchange.
-    chunked.as("a").join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.id") < col("b.id"))
+    bucketPairs(chunked, None, Seq("chunk"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("dist"))
       .filter(col("dist") <= maxDist)
@@ -639,41 +667,21 @@ object Dedup {
   def ngramJaccardPairs(
       df: DataFrame, textCol: String, idCol: String,
       num: Int, den: Int): DataFrame = {
-    // spread tokenization/aggregation off the (possibly single-partition)
-    // scan before the explode fans out
-    val tok = df.repartition(expansionParallelism(df))
-      .select(col(idCol).as("id"),
-        explode(array_distinct(tokens(lower(col(textCol))))).as("w"))
-    val dfreq = tok.groupBy("w").agg(count(lit(1)).as("dfreq"))
-    // per-doc token list in global rarity order + the prefix to index
-    val docs = tok.join(dfreq, "w")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("dfreq"), col("w")))).as("byRarity"),
-        count(lit(1)).as("sz"))
-      // token set as SORTED hashed longs: verification is then the
-      // allocation-free merge-walk `intersect_card_sorted` over 8-byte
-      // values (xxhash64 collisions are negligible at any corpus size)
-      .withColumn("hs",
-        sort_array(transform(col("byRarity"), s => xxhash64(s("w")))))
-      .withColumn("preflen",
-        (col("sz") - ((col("sz") * num + (den - 1)) / den).cast("long") + 1)
-          .cast("int"))
-      .select(col("id"), col("hs"), col("sz"),
-        slice(transform(col("byRarity"), s => s("w")), lit(1), col("preflen"))
-          .as("prefix"))
-      // sorted prefix HASHES ride both join sides so each qualifying
-      // pair can be emitted at exactly ONE meeting (the min common
-      // prefix hash) — without this a pair passes the exchange once per
-      // shared prefix token (measured 6.6× inflation at the 0.7 cut)
-      .withColumn("ph", sort_array(transform(col("prefix"), w => xxhash64(w))))
+    val (_, docs) = raritySets(df, idCol,
+      array_distinct(tokens(lower(col(textCol)))), num, den)
     // The prefix index rows carry the doc's full hashed set: the heavy
     // candidate stream is then produced AND verified inside one codegen'd
     // join stage — no candidate-pair shuffle, no fetch-joins. Only pairs
     // that pass the threshold reach the final dedup exchange. (For corpora
     // with huge per-doc sets, flip to bare-id candidates + fetch-joins; for
     // typical document token sets this payload-on-index shape is cheaper.)
-    val pref = docs.select(col("id"), col("hs"), col("sz"), col("ph"),
-      explode(col("prefix")).as("w"))
+    // The index keys on each prefix token's hash `h`; the sorted prefix
+    // hashes `ph` ride both sides so each pair is emitted at ONE meeting
+    // (the min common prefix hash), not once per shared prefix token
+    // (measured 6.6× inflation at the 0.7 cut).
+    val pref = docs
+      .withColumn("ph", sort_array(transform(col("prefix"), w => xxhash64(w))))
+      .select(col("id"), col("hs"), col("ph"), explode(col("ph")).as("h"))
     // Join strategy is SIZE-GATED: the prefix index grows linearly with
     // the corpus, so an unconditional broadcast would blow the driver at
     // scale. The estimate comes from the optimizer's input-size stats (no
@@ -683,7 +691,7 @@ object Dedup {
     // broadcast path only runs when clearly safe. Under the session
     // broadcast threshold we broadcast the build side and round-robin the
     // probe side (pair expansion balanced regardless of token skew).
-    // Above it, both sides shuffle on (w, salt): the build side
+    // Above it, both sides shuffle on (h, salt): the build side
     // replicates `salt` ways, the probe side picks a deterministic salt
     // per doc, so each (a, b) pair still meets exactly once and a hot
     // token's quadratic work spreads over `salt` tasks.
@@ -697,7 +705,7 @@ object Dedup {
       if (threshold > 0 && bytesEst <= threshold)
         pref.repartition(expansionParallelism(df)).as("a")
           .join(broadcast(pref).as("b"),
-            col("a.w") === col("b.w") && col("a.id") < col("b.id"))
+            col("a.h") === col("b.h") && col("a.id") < col("b.id"))
       else {
         // salt trade-off: the build side replicates `salt`× through the
         // shuffle, but each in-bucket expansion is quadratic, so per-task
@@ -711,25 +719,16 @@ object Dedup {
         val b = pref.withColumn("__salt",
           explode(sequence(lit(0L), lit(salt - 1L))))
         a.as("a").join(b.as("b"),
-          col("a.w") === col("b.w") && col("a.__salt") === col("b.__salt") &&
+          col("a.h") === col("b.h") && col("a.__salt") === col("b.__salt") &&
             col("a.id") < col("b.id"))
       }
     joined
       // PPJoin emit-once: keep only the meeting at the pair's minimum
-      // shared prefix hash, so the dedup exchange sees each pair once.
-      // xxhash64 collisions cut both ways here: two distinct shared
-      // tokens colliding double-emits (dropDuplicates absorbs it), but
-      // two DIFFERENT tokens — one per side, neither shared — colliding
-      // at a value below every truly-shared hash makes minCommonSorted
-      // return a hash no meeting carries, silently DROPPING the pair.
-      // That failure is ~2^-64 per candidate pair (~1e-7 odds across
-      // 1e12 pairs) and is accepted; a collision-free variant would
-      // carry sorted prefix TOKEN arrays and merge-walk them, roughly
-      // doubling the index payload for no measurable benefit.
-      .filter(xxhash64(col("a.w")) === minCommonSorted(col("a.ph"), col("b.ph")))
+      // shared prefix hash, so the dedup exchange sees each pair once
+      .filter(col("a.h") === minCommonSorted(col("a.ph"), col("b.ph")))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         intersectCard(col("a.hs"), col("b.hs")).as("inter"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+        size(col("a.hs")).as("sz_a"), size(col("b.hs")).as("sz_b"))
       .withColumn("uni", col("sz_a") + col("sz_b") - col("inter"))
       // jaccard >= num/den  ⇔  inter*den >= uni*num   (integer-exact)
       .filter(col("inter") * den >= col("uni") * lit(num))
@@ -769,45 +768,27 @@ object Dedup {
   def containmentPairs(
       df: DataFrame, textCol: String, idCol: String,
       num: Int, den: Int, gramK: Int = 4): DataFrame = {
+    require(gramK >= 1, s"gramK must be >= 1, got $gramK")
     val toks = tokens(lower(col(textCol)))
     val gramList =
-      if (gramK <= 1) array_distinct(toks)
+      if (gramK == 1) array_distinct(toks)
       else when(size(toks) >= gramK,
         array_distinct(transform(
           sequence(lit(1), size(toks) - (gramK - 1)),
           i => array_join(slice(toks, i, lit(gramK)), " "))))
         .otherwise(array().cast("array<string>"))
-    val tok = df.repartition(expansionParallelism(df))
-      .select(col(idCol).as("id"), explode(gramList).as("w"))
-    val dfreq = tok.groupBy("w").agg(count(lit(1)).as("dfreq"))
-    val docs = tok.join(dfreq, "w")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("dfreq"), col("w")))).as("byRarity"),
-        count(lit(1)).as("sz"))
-      .withColumn("hs",
-        sort_array(transform(col("byRarity"), s => xxhash64(s("w")))))
-      .withColumn("preflen",
-        (col("sz") - ((col("sz") * num + (den - 1)) / den).cast("long") + 1)
-          .cast("int"))
-    val pref = docs.select(col("id").as("id_a"),
-      explode(slice(transform(col("byRarity"), s => s("w")), lit(1),
-        col("preflen"))).as("w"))
-    val cand = pref
+    val (tok, docs) = raritySets(df, idCol, gramList, num, den)
+    // prefix(A) ⋈ grams(B) keys on the gram string: keyed on its hash,
+    // the planner runs one more job here
+    val cand = docs.select(col("id").as("id_a"), explode(col("prefix")).as("w"))
       .join(tok.select(col("id").as("id_b"), col("w")), Seq("w"))
       .filter(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
-    val sets = docs.select(col("id"), col("hs"), col("sz"))
-    cand
-      .join(sets.select(col("id").as("id_a"), col("hs").as("hs_a"),
-        col("sz").as("sz_a")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("hs").as("hs_b"),
-        col("sz").as("sz_b")), Seq("id_b"))
-      .withColumn("inter", intersectCard(col("hs_a"), col("hs_b")))
+    overlap(cand, docs, docs)
       // containment >= num/den  ⇔  inter*den >= sz_a*num (integer-exact)
       .filter(col("inter") * den >= col("sz_a") * lit(num))
-      .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"),
-        col("sz_b"))
+      .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"), col("sz_b"))
   }
 
   // ------------------------------------------------------- edit distance
@@ -845,9 +826,7 @@ object Dedup {
         transform(sequence(lit(1), length(col("k"))), i =>
           concat(col("k").substr(lit(1), i - 1),
             col("k").substr(i + 1, length(col("k")) - i))))).as("v"))
-      .repartition(expansionParallelism(df), col("v"))
-    v.as("a").join(v.as("b"),
-        col("a.v") === col("b.v") && col("a.id") < col("b.id"))
+    bucketPairs(v, None, Seq("v"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.k").as("k_a"), col("b.k").as("k_b"))
       .dropDuplicates("id_a", "id_b")
@@ -888,54 +867,45 @@ object Dedup {
     require(configs.nonEmpty && configs.forall { case (b, r) =>
       b >= 1 && r >= 1 && b * r <= numHashes },
       s"each bands*rowsPerBand must fit numHashes=$numHashes: $configs")
-    val p = expansionParallelism(df)
+    val plen = prefixLen(size(col("hs")), num, den)
     // trigram shingles over lowercased whitespace tokens, hashed to
     // (h0, h1) ONCE at the scan — the checkpoint carries only slim
     // (id, sorted-distinct h0 set, 16 minhashes) rows, never strings
     val tk = filter(split(lower(col(textCol)), WhitespaceRegex),
       t => t =!= lit(""))
-    val sig = df.repartition(p)
+    val sig = df.repartition(expansionParallelism(df))
       .select(col(idCol).cast("long").as("id"), tk.as("tk"))
       .filter(size(col("tk")) >= 3)
       .select(col("id"), transform(
         sequence(lit(1), size(col("tk")) - 2),
         i => concat_ws(" ", slice(col("tk"), i, lit(3)))).as("shingles"))
       // duplicate shingles are harmless here: array_min ignores them and
-      // hset dedups the h0 projection (DuckDB can't distinct a struct
+      // hs dedups the h0 projection (DuckDB can't distinct a struct
       // list, so neither side does)
-      .withColumn("hs", transform(col("shingles"), s => struct(
+      .withColumn("h01", transform(col("shingles"), s => struct(
         conv(substring(md5(s), 1, 15), 16, 10).cast("long").as("h0"),
         (conv(substring(md5(s), 17, 15), 16, 10).cast("long")
           % 1000000007L).as("h1"))))
       .select(col("id"),
-        array_sort(array_distinct(transform(col("hs"),
-          h => h.getField("h0")))).as("hset"),
+        array_sort(array_distinct(transform(col("h01"),
+          h => h.getField("h0")))).as("hs"),
         transform(sequence(lit(0), lit(numHashes - 1)), j =>
-          array_min(transform(col("hs"), h =>
+          array_min(transform(col("h01"), h =>
             h.getField("h0") + j.cast("long") * h.getField("h1")))).as("mh"))
       .localCheckpoint()
     // ground truth: exact Jaccard ≥ num/den over the hashed shingle sets
     // — the d05 shape: co-shingle pair stream deduped to (a, b), then a
     // merge-walk |A∩B| over the two sorted sets. PREFIX FILTERING
-    // (Bayardo, on the hash-sorted global order): a pair at J ≥ num/den
-    // must share an element within each side's first
-    // |A| − ⌈t·|A|⌉ + 1 sorted hashes, so only prefixes are indexed —
-    // the co-occurrence stream drops ~(1−t)² without losing a pair
-    val ex = sig
-      .withColumn("__plen", expr(
-        s"size(hset) - ((size(hset) * $num + ${den - 1}) div $den) + 1"))
-      .select(col("id"),
-        explode(slice(col("hset"), lit(1), col("__plen"))).as("h"))
-      .repartition(p, col("h"))
-    val truth = ex.as("a")
-      .join(ex.as("b"), col("a.h") === col("b.h") && col("a.id") < col("b.id"))
+    // (Bayardo, on the hash-sorted global order): only each side's
+    // `prefixLen` sorted hashes are indexed — the co-occurrence stream
+    // drops ~(1−t)² without losing a pair
+    val ex = sig.select(col("id"),
+      explode(slice(col("hs"), lit(1), plen)).as("h"))
+    val cand = bucketPairs(ex, None, Seq("h"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-      .join(sig.select(col("id").as("id_a"), col("hset").as("ha")), "id_a")
-      .join(sig.select(col("id").as("id_b"), col("hset").as("hb")), "id_b")
-      .withColumn("inter", intersectCard(col("ha"), col("hb")))
-      .withColumn("uni", size(col("ha")) + size(col("hb")) - col("inter"))
-      .filter(col("inter") * den >= col("uni") * num)
+    val truth = overlap(cand, sig, sig)
+      .filter(col("inter") * den >= (col("sz_a") + col("sz_b") - col("inter")) * num)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint()
     val nTrue = truth.count()
@@ -953,10 +923,7 @@ object Dedup {
     val keyed = sig.select(col("id"),
         explode(concat(keyArrays: _*)).as("ck"))
       .select(col("id"), col("ck.cfg").as("cfg"), col("ck.k").as("k"))
-      .repartition(p, col("cfg"), col("k"))
-    val counts = keyed.as("a")
-      .join(keyed.as("b"), col("a.cfg") === col("b.cfg") &&
-        col("a.k") === col("b.k") && col("a.id") < col("b.id"))
+    val counts = bucketPairs(keyed, None, Seq("cfg", "k"))
       .select(col("a.cfg").as("cfg"),
         col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("cfg", "id_a", "id_b")

@@ -51,8 +51,7 @@ object LinkPrediction {
       minCommon: Int = 12): DataFrame = {
     require(maxFanout >= 2, s"maxFanout must be >= 2, got $maxFanout")
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
-    val p = math.max(
-      edges.sparkSession.sparkContext.defaultParallelism * 2, 16)
+    val p = expansionParallelism(edges)
     // MATERIALIZED once (guide §1.2 compute once): the edge set is
     // consumed from five plan branches (both orientations for the degree
     // table and the adjacency build, plus the final anti-join) — without

@@ -569,8 +569,7 @@ object Similarity {
     // wildly underestimates Σ|block|² output (same guard as Dedup's
     // pair-expansion joins); the tile key spreads a salted block's tiles
     // across these partitions
-    val width = math.max(
-      rows.sparkSession.sparkContext.defaultParallelism * 2, 16)
+    val width = expansionParallelism(rows)
     val tileKey = Seq(col(blockCol), col("__ti"), col("__tj"))
     left.repartition(width, tileKey: _*)
       .join(right.repartition(width, tileKey: _*),

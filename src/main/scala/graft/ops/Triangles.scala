@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed triangle counting — with PageRank (q30) and connected
@@ -29,10 +29,6 @@ import org.apache.spark.sql.functions._
   * pair-join idiom.
   */
 object Triangles {
-
-  private def intersectCard(a: Column, b: Column): Column =
-    graft.expr.nat(graft.expr.GraftExpressions.IntersectCardSorted(
-      graft.expr.toExpr(a), graft.expr.toExpr(b)))
 
   /** The shared traversal preamble both counters consume: normalized
     * undirected edges, per-vertex degrees, edges DIRECTED from the
@@ -67,9 +63,7 @@ object Triangles {
     // sorted out-adjacency (distinct by edge-dedup construction)
     val adj = directed.groupBy("u")
       .agg(sort_array(collect_list(col("v"))).as("nbrs"))
-    val p = math.max(
-      edges.sparkSession.sparkContext.defaultParallelism * 2, 16)
-    DirectedGraph(deg, directed, adj, p)
+    DirectedGraph(deg, directed, adj, expansionParallelism(edges))
   }
 
   /** Count triangles in an undirected graph given as an edge list (any

@@ -1,8 +1,22 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 package object ops {
+
+  /** Partition count for quadratic pair-expansion joins: AQE coalesces by
+    * pre-join input size, which wildly underestimates an explosive join's
+    * output, so these stages need an explicit (AQE-exempt) width.
+    */
+  private[graft] def expansionParallelism(df: DataFrame): Int =
+    math.max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
+
+  /** |A∩B| of sorted distinct long arrays — session-independent direct
+    * construction of the native merge-walk expression.
+    */
+  private[graft] def intersectCard(a: Column, b: Column): Column =
+    graft.expr.nat(graft.expr.GraftExpressions.IntersectCardSorted(
+      graft.expr.toExpr(a), graft.expr.toExpr(b)))
 
   /** Spread a compute-heavy narrow pass across the cluster when the scan
     * produced far fewer partitions than cores (small single-row-group

@@ -414,4 +414,90 @@ class DedupSpec extends SparkSessionSpec {
       .as[(Long, Long, Int)].collect().toSet
     assert(got === brute)
   }
+
+  test("similarity cuts outside (0, 1] and gram sizes below 1 are rejected") {
+    val bad: Seq[(String, () => Any)] = Seq(
+      "ngram num = 0" -> (() =>
+        Dedup.ngramJaccardPairs(docs, "text", "doc_id", num = 0, den = 10).collect()),
+      "containment num = 0" -> (() =>
+        Dedup.containmentPairs(docs, "text", "doc_id", num = 0, den = 10).collect()),
+      "ngram den = 0" -> (() =>
+        Dedup.ngramJaccardPairs(docs, "text", "doc_id", num = 1, den = 0).collect()),
+      "containment den = 0" -> (() =>
+        Dedup.containmentPairs(docs, "text", "doc_id", num = 1, den = 0).collect()),
+      "tuning num > den" -> (() =>
+        Dedup.lshTuningReport(docs, "text", "doc_id", num = 3, den = 2).collect()),
+      "containment gramK = 0" -> (() => Dedup.containmentPairs(
+        docs, "text", "doc_id", num = 1, den = 2, gramK = 0).collect()))
+    for ((name, run) <- bad)
+      withClue(s"$name: ") { intercept[IllegalArgumentException](run()) }
+  }
+
+  test("prefix-filtered pair operators == brute force over all pairs") {
+    // every doc carries "common" (the frequent token prefix filtering
+    // must sort to the suffix); near-dups change one word of a base doc,
+    // truncated mirrors keep a base doc's head
+    val r = new scala.util.Random(17)
+    val vocab = (0 until 60).map(i => s"t$i")
+    val bases = (0 until 30).map(_ =>
+      "common" +: Seq.fill(4 + r.nextInt(16))(vocab(r.nextInt(60))))
+    val near = (0 until 25).map { _ =>
+      val b = bases(r.nextInt(30))
+      b.updated(1 + r.nextInt(b.size - 1), vocab(r.nextInt(60)))
+    }
+    val mirrors = (0 until 25).map { _ =>
+      val b = bases(r.nextInt(30))
+      b.take(2 + r.nextInt(b.size - 1))
+    }
+    val toks: Map[Long, Seq[String]] = (bases ++ near ++ mirrors)
+      .zipWithIndex.map { case (t, i) => i.toLong -> t }.toMap
+    val df = toks.toSeq.map { case (i, t) => (i, t.mkString(" ")) }
+      .toDF("doc_id", "text")
+
+    // token-set Jaccard, integer-exact at the cut
+    val sets = toks.map { case (i, t) => i -> t.toSet }
+    def jaccardBrute(num: Int, den: Int) = (for {
+      (a, sa) <- sets.toSeq; (b, sb) <- sets.toSeq if a < b
+      inter = (sa & sb).size.toLong
+      uni = (sa | sb).size.toLong
+      if inter * den >= uni * num
+    } yield (a, b, inter, uni)).toSet
+    def ngram(num: Int, den: Int) =
+      Dedup.ngramJaccardPairs(df, "text", "doc_id", num, den)
+        .as[(Long, Long, Long, Long)].collect().toSet
+    val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for ((num, den) <- Seq((1, 2), (4, 5)); threshold <- Seq(before, "-1")) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      try {
+        val want = jaccardBrute(num, den)
+        assert(want.nonEmpty)
+        assert(ngram(num, den) === want, s"cut $num/$den, broadcast $threshold")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+    }
+
+    // directed 4-gram containment; docs under 4 tokens have no grams
+    val grams = toks.collect { case (i, t) if t.size >= 4 =>
+      i -> t.sliding(4).map(_.mkString(" ")).toSet }
+    val containBrute = (for {
+      (a, sa) <- grams.toSeq; (b, sb) <- grams.toSeq if a != b
+      inter = (sa & sb).size.toLong
+      if inter * 4 >= sa.size.toLong * 3
+    } yield (a, b, inter, sa.size.toLong, sb.size.toLong)).toSet
+    assert(containBrute.nonEmpty)
+    assert(Dedup.containmentPairs(df, "text", "doc_id", num = 3, den = 4)
+      .select("id_a", "id_b", "inter", "sz_a", "sz_b")
+      .as[(Long, Long, Long, Long, Long)].collect().toSet === containBrute)
+
+    // the tuning report's truth: trigram-shingle Jaccard >= 1/2
+    val tri = toks.collect { case (i, t) if t.size >= 3 =>
+      i -> t.sliding(3).map(_.mkString(" ")).toSet }
+    val nTrue = (for {
+      (a, sa) <- tri.toSeq; (b, sb) <- tri.toSeq if a < b
+      if 2 * (sa & sb).size >= (sa | sb).size
+    } yield 1).size.toLong
+    assert(nTrue > 0)
+    val rep = Dedup.lshTuningReport(df, "text", "doc_id")
+      .select("n_true").as[Long].collect()
+    assert(rep.nonEmpty && rep.forall(_ === nTrue))
+  }
 }
