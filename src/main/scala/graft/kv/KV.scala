@@ -1,8 +1,14 @@
 package graft.kv
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructField,
+  StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.VersionedLake
 
 /** KV storage layer — Spark realization of the reference's `mem`/`store`
   * services.
@@ -19,31 +25,34 @@ import org.apache.spark.sql.functions._
   *    (all/store.js:217-285) — in Spark, placement is the shuffle's job, so
   *    reconf degenerates to an explicit repartition-by-key rewrite.
   *
-  * Spark-first mapping: `store` = a parquet directory per gid, laid out in
-  * `bucket=<pmod(xxhash64(key), n)>` partition dirs — the Spark analog of
-  * the reference's hash placement (util/id.js:107-148): a point `get`
-  * constant-folds its bucket and partition-prunes to ONE bucket's files,
-  * and `put`/`del` rewrite only the buckets the batch touches, not the
-  * gid. `mem` = cached DataFrames. Values ride as JSON strings — the
-  * reference's values are schemaless JS blobs (SURVEY §1.2), so an opaque
-  * string column IS the faithful data model; schema-on-read (`from_json`)
-  * recovers structure when the caller knows it.
+  * Spark-first mapping: `store` = one [[VersionedLake]] table per gid,
+  * partitioned by `bucket = pmod(xxhash64(key), n)` — the Spark analog of
+  * the reference's hash placement (util/id.js:107-148). Writes are
+  * MERGE-ON-READ, so like the reference's one file per key a write costs
+  * its own keys, not the buckets they land in: `put` appends the batch's
+  * files to the buckets it touches and tombstones the rows it shadows in
+  * one deletion-vector sidecar, `del` tombstones one row, and a point
+  * `get` hashes its bucket on the driver and opens only that bucket's
+  * snapshot entries. `mem` = cached DataFrames. Values ride as JSON
+  * strings — the reference's values are schemaless JS blobs (SURVEY
+  * §1.2), so an opaque string column IS the faithful data model;
+  * schema-on-read (`from_json`) recovers structure when the caller knows
+  * it.
   *
   * NOT ported: HTTP-RPC transport, gossip, node spawn — Spark's control
   * plane owns those (SURVEY §2.4).
   *
-  * Filesystem: BOTH planes go through the Hadoop FS API — the data plane
-  * via Spark's parquet reader/writer (always did), the control plane
-  * (marker files, bucket listing, the per-bucket swap) via
-  * `org.apache.hadoop.fs.FileSystem` resolved from the root's scheme. So
-  * a store roots equally on `file:`, `hdfs:`, or any mounted Hadoop FS
-  * — at 100 TB the store lives where the cluster's storage lives, and a
-  * scheme'd root must not silently read as empty (the pre-r10 failure
-  * mode: `java.io.File("hdfs://...")` is never a directory). S3 caveat:
-  * object stores rename by copy+delete, so the per-bucket swap loses the
-  * atomicity this layout relies on — an object-store root needs a
-  * manifest/commit log (Delta/Iceberg territory, out of scope here);
-  * HDFS and local renames are atomic.
+  * Crash story: every write is one atomic commit of the gid's manifest
+  * log, so a crash at any point leaves readers on the old state or the
+  * new one, and re-running the call lands it once. Data files are staged
+  * and moved before the commit; a crash leaves them as orphans no
+  * manifest references, which the next [[reconf]] sweeps. The bucket
+  * count rides the committed schema (metadata of the `key` field), so
+  * the layout and its count change in the same commit. One writer per
+  * gid: [[reconf]] reclaims every file its rewrite superseded, including
+  * a concurrent writer's uncommitted ones. Both planes go through the
+  * Hadoop FS API, so a store roots on `file:`, `hdfs:` or any Hadoop FS
+  * whose rename refuses an existing destination.
   */
 class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
   import Store._
@@ -51,154 +60,70 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
   /** The store's root directory (exposed for layout-level tooling/tests). */
   def rootDir: String = root
 
-  // one FileSystem per store: every gid shares the root's scheme
-  private val fs: FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def path(gid: String) = s"$root/$gid"
 
-  private def isDir(p: Path): Boolean =
-    fs.exists(p) && fs.getFileStatus(p).isDirectory
-
-  /** The gid's `bucket=N` partition dirs (empty for a marker-only or
-    * missing gid).
+  /** The gid's latest snapshot — an empty one of `defaultBuckets` before
+    * its first commit, which then records that count.
     */
-  private def bucketDirs(gid: String): Seq[FileStatus] = {
-    val d = new Path(path(gid))
-    if (!isDir(d)) Nil
-    else fs.listStatus(d).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-  }
+  private def current(gid: String): VersionedLake.Snapshot =
+    VersionedLake.latest(spark, path(gid))
+      .getOrElse(VersionedLake.Snapshot(0L, schema(defaultBuckets), Nil))
 
-  /** True iff the gid holds readable bucketed data. A dir containing only
-    * the marker (e.g. after `del` empties the last bucket, or a crash
-    * between marker write and first data swap) reads as an EMPTY store,
-    * never as a schema-inference failure.
-    */
-  private def hasData(gid: String): Boolean = bucketDirs(gid).nonEmpty
+  private def buckets(snap: VersionedLake.Snapshot): Int =
+    snap.schema("key").metadata.getLong(BucketsKey).toInt
 
-  /** True iff the gid dir holds parquet data NOT laid out in bucket dirs —
-    * a layout this Store version cannot serve point-reads from.
-    */
-  private def isLegacyLayout(gid: String): Boolean = {
-    val d = new Path(path(gid))
-    isDir(d) && bucketDirs(gid).isEmpty &&
-      fs.listStatus(d).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-  }
+  /** The (key, value, bucket) rows of the gid's `entries` in `snap`. */
+  private def rows(gid: String, snap: VersionedLake.Snapshot,
+      entries: Seq[VersionedLake.FileEntry]): DataFrame =
+    if (entries.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType.fromDDL("key STRING, value STRING, bucket INT"))
+    else {
+      val dir = new Path(path(gid))
+      val base = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(dir).toString
+      VersionedLake.scanEntries(spark, base, snap.schema, entries)
+        .select(col("key"), col("value"), col("bucket").cast("int").as("bucket"))
+    }
 
-  private def requireBucketed(gid: String): Unit =
-    if (isLegacyLayout(gid))
-      throw new IllegalStateException(
-        s"store: ${path(gid)} has an unbucketed (legacy) layout; " +
-          s"run reconf(\"$gid\", n) to migrate it in place")
-
-  /** The gid's bucket count, persisted in a `_`-prefixed marker file
-    * (invisible to the parquet reader) so the layout survives re-opens
-    * and `reconf` can change it per gid. Bucketed data WITHOUT a marker
-    * (torn layout) fails loudly: guessing a count would silently
-    * constant-fold point-gets to the wrong bucket — a silent wrong read.
-    */
-  private def bucketCount(gid: String): Int = {
-    val m = new Path(path(gid), MarkerFile)
-    if (fs.exists(m))
-      readString(fs, m).trim.toInt
-    else if (hasData(gid))
-      throw new IllegalStateException(
-        s"store: ${path(gid)} has bucket dirs but no $MarkerFile marker " +
-          s"(torn layout?); run reconf(\"$gid\", n) to rebuild it")
-    else defaultBuckets
-  }
-
-  private def writeMarker(gid: String, n: Int): Unit =
-    writeMarkerInto(new Path(path(gid)), n)
-
-  private def writeMarkerInto(dir: Path, n: Int): Unit = {
-    fs.mkdirs(dir)
-    val out = fs.create(new Path(dir, MarkerFile), true)
-    try out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** The empty (key, value) frame — what reads of an empty gid return. */
-  private def emptyKV: DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String)].toDF("key", "value")
+  /** The entries of `key`'s bucket. */
+  private def bucketEntries(snap: VersionedLake.Snapshot, key: String) = {
+    val b = bucketOf(key, buckets(snap)).toString
+    snap.files.filter(_.dt == b)
   }
 
   private def bucketExpr(key: Column, n: Int): Column =
     pmod(xxhash64(key), lit(n.toLong)).cast("int")
 
-  /** Upsert a batch of rows into `gid` as (key, value-JSON) pairs.
-    * Rewrites ONLY the bucket partitions the batch's keys hash into;
-    * untouched buckets' files are never read or written.
+  /** Upsert a batch of rows into `gid` as (key, value-JSON) pairs, merge
+    * on read: the batch lands in the buckets its keys hash into, and the
+    * rows it shadows — matched in those buckets only — are tombstoned in
+    * the same commit.
     *
     * @param keyCol column to use as the key; None ⇒ content-addressed
     *               sha256(to_json(row)) like the reference's getID.
     */
   def put(df: DataFrame, gid: String, keyCol: Option[String] = None): Unit = {
-    requireBucketed(gid)
-    // an existing marker (even over a data-less dir) pins the gid's bucket
-    // count; a marker-only dir otherwise behaves as non-existing
-    val n = bucketCount(gid)
-    // Pin (localCheckpoint, eager) the keyed batch BEFORE it fans out:
-    // the merge below references it three times (touched-bucket probe,
-    // anti-join key side, union side), and self-join relation dedup
-    // defeats cache substitution — an unpinned batch re-executes its
-    // whole input lineage per reference. That is 3x the caller's
-    // compute for an expensive input (a dedup fingerprint frame, a
-    // streaming micro-batch), and for a NON-DETERMINISTIC input the
-    // three references could disagree on the key set — a torn write.
-    // The pin makes the batch's rows one materialized fact.
+    val snap = current(gid)
     val batch = toKV(df, keyCol)
       // last-write-wins within the batch, made deterministic by keeping the
       // lexicographically greatest value per key (the reference's "last" is
       // arrival order; any deterministic winner satisfies the stored-set
       // semantics the tests assert).
       .groupBy("key").agg(max("value").as("value"))
-      .withColumn("bucket", bucketExpr(col("key"), n))
-      .localCheckpoint()
-    try {
-      val merged =
-        if (hasData(gid)) {
-          val touched = batch.select("bucket").distinct()
-            .collect().map(_.getInt(0)).toSeq // ≤ n values — driver-safe
-          val old = spark.read.parquet(path(gid))
-            .filter(col("bucket").isin(touched: _*))
-          // new batch wins over existing keys
-          old.join(batch.select("key"), Seq("key"), "left_anti")
-            .unionByName(batch)
-        } else batch
-      // Marker BEFORE data: a crash after this line leaves a marker-only
-      // dir, which reads as an empty store with the right bucket count —
-      // never a torn layout. (For an existing gid n is unchanged, so the
-      // rewrite is idempotent.)
-      writeMarker(gid, n)
-      // Write via a temp dir then swap per-bucket, since `merged` reads the
-      // live dir. Every touched bucket is non-empty (it holds batch rows),
-      // so the tmp dir always carries a dir per touched bucket.
-      val tmp = path(gid) + "__tmp"
-      merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-      swapBuckets(tmp, path(gid))
-    } finally
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(batch)
+      .withColumn("bucket", bucketExpr(col("key"), buckets(snap)))
+    VersionedLake.mergeByKey(snap, batch, path(gid), "key", "bucket", Nil) {
+      (_, _, touched) => snap.files.filter(f => touched(f.dt))
+    }: Unit
   }
 
-  /** Point lookup: the bucket predicate constant-folds, so the scan
-    * partition-prunes to one bucket dir — O(files/n), not O(files).
+  /** Point lookup: the key's bucket is hashed on the driver, and the scan
+    * opens only that bucket's snapshot entries — O(files/n), not O(files).
     */
   def get(gid: String, key: String): DataFrame = {
-    requireBucketed(gid)
-    if (!hasData(gid)) emptyKV.filter(col("key") === key)
-    else {
-      val n = bucketCount(gid)
-      spark.read.parquet(path(gid))
-        .filter(col("bucket") === bucketExpr(lit(key), n) &&
-          col("key") === key)
-        .select(col("key"), col("value"))
-    }
+    val snap = current(gid)
+    rows(gid, snap, bucketEntries(snap, key))
+      .filter(col("key") === key).select(col("key"), col("value"))
   }
 
   /** `get(null)` — enumerate all keys of a gid (reference
@@ -207,11 +132,8 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
   def keys(gid: String): DataFrame = scan(gid).select("key")
 
   /** Full scan of a gid. */
-  def scan(gid: String): DataFrame = {
-    requireBucketed(gid)
-    if (!hasData(gid)) emptyKV
-    else spark.read.parquet(path(gid)).select(col("key"), col("value"))
-  }
+  def scan(gid: String): DataFrame =
+    scanBucketed(gid).select(col("key"), col("value"))
 
   /** Full scan RETAINING the layout's `bucket` partition column — lets
     * consumers align joins with the store's placement scheme and, via a
@@ -219,10 +141,8 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
     * key set touches (see [[graft.ops.Dedup.incrementalFresh]]).
     */
   def scanBucketed(gid: String): DataFrame = {
-    requireBucketed(gid)
-    if (!hasData(gid)) emptyKV.withColumn("bucket", lit(0).cast("int"))
-    else spark.read.parquet(path(gid))
-      .select(col("key"), col("value"), col("bucket").cast("int").as("bucket"))
+    val snap = current(gid)
+    rows(gid, snap, snap.files)
   }
 
   /** The gid's placement expression: the bucket a key lives in — the
@@ -231,92 +151,59 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
     * consumer route/prune by the store's own scheme.
     */
   def placement(gid: String, key: Column): Column =
-    bucketExpr(key, bucketCount(gid))
+    bucketExpr(key, buckets(current(gid)))
 
-  /** Delete one key: rewrites only the key's own bucket (at production
-    * scale this is a Delta/Iceberg delete — out of scope offline).
+  /** Delete one key: its row is tombstoned among its bucket's entries; no
+    * data file is rewritten. Deleting a missing key commits nothing.
     */
   def del(gid: String, key: String): Unit = {
-    requireBucketed(gid)
-    if (!hasData(gid)) return // nothing stored; deleting is a no-op
-    val n = bucketCount(gid)
-    // evaluate the key's bucket (one local row, no distributed job)
-    val b = spark.range(1)
-      .select(bucketExpr(lit(key), n)).head().getInt(0)
-    val rest = spark.read.parquet(path(gid))
-      .filter(col("bucket") === b && col("key") =!= key)
-      .select(col("key"), col("value"), col("bucket"))
-    val tmp = path(gid) + "__tmp"
-    rest.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    // bucket emptied entirely ⇒ tmp has no dir for it ⇒ remove live dir
-    // (a gid whose LAST bucket empties keeps its marker: reads of the
-    // marker-only dir short-circuit to the empty frame)
-    swapBuckets(tmp, path(gid), alsoClear = Seq(b))
+    val snap = current(gid)
+    VersionedLake.deleteFrom(spark, path(gid), snap, bucketEntries(snap, key),
+      col("key") === key, "dv"): Unit
   }
 
   /** Re-shard a gid into `numBuckets` hash partitions of the key — the
     * reference's `reconf` (all/store.js:217-285). A bucket-count change
-    * invalidates every key's placement, so this is the one full rewrite.
-    * Also the migration path for legacy (unbucketed) gid dirs: the source
-    * read takes whatever parquet layout is present.
+    * invalidates every key's placement, so this is the one full rewrite,
+    * committed as one version with the new count (on an empty gid, the
+    * count alone). It doubles as compaction: the files it superseded —
+    * with their tombstones and any crashed write's orphans — are then
+    * removed, so the gid keeps one generation on disk.
     */
   def reconf(gid: String, numBuckets: Int): Unit = {
-    val live = new Path(path(gid))
-    if (!hasData(gid) && !isLegacyLayout(gid)) {
-      // empty (or marker-only) gid: reconf just pins the new bucket count
-      writeMarkerInto(live, numBuckets)
-      return
-    }
-    // raw read, not scan(): must also ingest legacy layouts scan() rejects
-    val df = spark.read.parquet(path(gid)).select(col("key"), col("value"))
-      .withColumn("bucket", bucketExpr(col("key"), numBuckets))
-      .repartition(numBuckets, col("bucket"))
-    val tmp = path(gid) + "__tmp"
-    df.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    // the marker rides the rename: written into tmp BEFORE the swap, so no
-    // window exists where the new layout is live but the count is stale —
-    // a wrong count would silently constant-fold gets to the wrong bucket
-    writeMarkerInto(new Path(tmp), numBuckets)
-    if (fs.exists(live) && !fs.delete(live, true))
-      throw new java.io.IOException(s"store: could not clear ${path(gid)}")
-    if (!fs.rename(new Path(tmp), live))
-      throw new java.io.IOException(
-        s"store: rename $tmp -> ${path(gid)} failed; data preserved at $tmp")
-  }
-
-  /** Move each freshly-written `bucket=N` dir from tmp over its live
-    * counterpart (plus explicitly cleared buckets), failing loudly: a
-    * half-applied swap must not read as success. Buckets absent from tmp
-    * and not in `alsoClear` are left untouched — that is the partial-
-    * rewrite contract.
-    */
-  private def swapBuckets(
-      tmp: String, live: String, alsoClear: Seq[Int] = Nil): Unit = {
-    val liveDir = new Path(live)
-    fs.mkdirs(liveDir)
-    val tmpDir = new Path(tmp)
-    val written = fs.listStatus(tmpDir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    alsoClear.map(b => new Path(liveDir, s"bucket=$b"))
-      .filterNot(t => written.exists(_.getPath.getName == t.getName))
-      .foreach { t =>
-        if (fs.exists(t) && !fs.delete(t, true))
-          throw new java.io.IOException(s"store: could not clear $t")
-      }
-    written.foreach { bd =>
-      val target = new Path(liveDir, bd.getPath.getName)
-      if (fs.exists(target) && !fs.delete(target, true))
-        throw new java.io.IOException(s"store: could not clear $target")
-      if (!fs.rename(bd.getPath, target))
-        throw new java.io.IOException(
-          s"store: rename ${bd.getPath} -> $target failed; data preserved at $tmp")
-    }
-    fs.delete(tmpDir, true): Unit
+    val snap = current(gid)
+    val adds =
+      if (snap.files.isEmpty) Nil
+      else VersionedLake.stageAndMove(
+        rows(gid, snap, snap.files)
+          .withColumn("bucket", bucketExpr(col("key"), numBuckets)),
+        path(gid), "bucket", Nil, Some(snap.files.map(_.rows).sum))
+    VersionedLake.commitDelta(spark, new Path(path(gid)), schema(numBuckets),
+      adds, snap.files.map(_.path).toSet, op = "reconf",
+      allowSchemaChange = true)
+    VersionedLake.vacuum(spark, path(gid), retainVersions = 1,
+      olderThanHours = 0): Unit
   }
 }
 
 object Store {
-  private val MarkerFile = "_graft_buckets"
+  /** Metadata key of the bucket count on the committed `key` field. */
+  private val BucketsKey = "graft.kv.buckets"
+
+  /** A gid's table schema, carrying its bucket count. */
+  private def schema(n: Int): StructType = StructType(Seq(
+    StructField("key", StringType, nullable = true,
+      new MetadataBuilder().putLong(BucketsKey, n.toLong).build()),
+    StructField("value", StringType)))
+
+  /** The bucket of `key` among `n`, on the driver: XXH64 with Spark's
+    * seed 42 over the key's UTF-8 bytes — `pmod(xxhash64(key), n)`
+    * without a job.
+    */
+  private[graft] def bucketOf(key: String, n: Int): Int = {
+    val h = XXH64.hashUTF8String(UTF8String.fromString(key), 42L)
+    (((h % n) + n) % n).toInt
+  }
 
   /** Project an arbitrary DataFrame to the KV (key, value) shape.
     * value = canonical JSON of the full row; key = given column or
@@ -330,18 +217,6 @@ object Store {
       case None =>
         df.select(sha2(json, 256).as("key"), json.as("value"))
     }
-  }
-
-  /** Read a small control-plane file (the bucket marker) fully. */
-  private def readString(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
   }
 }
 

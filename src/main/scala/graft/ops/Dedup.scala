@@ -256,10 +256,9 @@ object Dedup {
     * rather than re-hashing bare fingerprints.
     *
     * The result is MATERIALIZED (localCheckpoint) before returning: a
-    * later [[absorbFingerprints]] rewrites (swaps) the very bucket files
-    * this read, so a lazy frame evaluated after the absorb would hit
-    * deleted part files (or, with ignoreMissingFiles, silently drop
-    * survivors).
+    * later [[absorbFingerprints]] commits a new version of the index, and
+    * a `reconf` removes the files this read, so a lazy frame evaluated
+    * after them would read a different index or hit deleted part files.
     */
   def incrementalFresh(
       store: graft.kv.Store, gid: String,
@@ -278,8 +277,8 @@ object Dedup {
   }
 
   /** Phase 2 of incremental exact dedup: absorb a [[incrementalFresh]]
-    * result into the index (one bucketed Store upsert touching only the
-    * batch's buckets). Call AFTER the survivors derived from `fresh` are
+    * result into the index (one merge-on-read Store upsert of the batch's
+    * fingerprints). Call AFTER the survivors derived from `fresh` are
     * durably persisted — see the retry contract on
     * [[incrementalSurvivors]].
     */

@@ -18,8 +18,8 @@ import graft.kv.Store
   *  - `<gid>__cells`: one row per corpus vector (id, cell, vec), keyed
   *    by id so [[Store.put]]'s upsert IS the add path and
   *    [[Store.del]] the delete path — maintenance between restarts
-  *    costs one touched-bucket rewrite per batch, never a full-index
-  *    rewrite.
+  *    writes the batch's rows and one tombstone sidecar, never a
+  *    full-index rewrite.
   *
   * Bit-exactness argument: floats survive the Store's JSON values via
   * shortest-decimal round-trip (Float.toString → parse is the identity
@@ -63,8 +63,7 @@ object IvfPersist {
   }
 
   /** Add arrivals to a persisted index: assign against the STORED
-    * centroids (never retrained — the v17 contract) and upsert; only
-    * the touched buckets rewrite.
+    * centroids (never retrained — the v17 contract) and upsert.
     */
   def add(
       store: Store, gid: String, arrivals: DataFrame,
@@ -79,7 +78,7 @@ object IvfPersist {
   }
 
   /** Delete one vector by id — the v26 contract via the Store's
-    * single-bucket rewrite.
+    * tombstone delete.
     */
   def delete(store: Store, gid: String, id: Long): Unit =
     store.del(cellGid(gid), id.toString)
@@ -120,7 +119,7 @@ object IvfPersist {
   // codebooks — and its cells gid carries (id, cell, codes, vec): codes
   // are the resident ADC state, vec the true-vector side only the
   // |Q|·refine re-rank fetch reads. Store upsert/del remain the add and
-  // delete paths (touched-bucket rewrites), and arrivals are encoded
+  // delete paths (merge-on-read), and arrivals are encoded
   // with the exact build kernel ([[Similarity.ivfPqEncode]]) against
   // the FROZEN centroids + codebooks, so a reloaded index searches
   // bit-identically to a fresh build (IvfPersistSpec pins it, across an
@@ -165,8 +164,7 @@ object IvfPersist {
   }
 
   /** Add arrivals to a persisted IVF-PQ index: assign + encode against
-    * the STORED (frozen) centroids and codebooks, then upsert — only
-    * the touched buckets rewrite.
+    * the STORED (frozen) centroids and codebooks, then upsert.
     */
   def addPq(
       store: Store, gid: String, arrivals: DataFrame,

@@ -298,10 +298,12 @@ object GraphQueries {
           col("__comm").as("__ca"))), Seq("lo"))
         .join(broadcast(brand.select(col("v").as("hi"),
           col("__comm").as("__cb"))), Seq("hi"))
-      val m = eb.agg(count(lit(1)).as("__m"))
-      val intra = eb.filter(col("__ca") === col("__cb"))
-        .groupBy(col("__ca").as("community"))
-        .agg(count(lit(1)).as("__intra"))
+      // one aggregate over eb: per lo-side community its edge count and
+      // intra edges; m is the sum of the (small) per-community counts
+      val intra = eb.groupBy(col("__ca").as("community"))
+        .agg(count(lit(1)).as("__ma"),
+          count(when(col("__ca") === col("__cb"), 1)).as("__intra"))
+      val m = intra.agg(sum(col("__ma")).as("__m"))
       val dsum = e.select(col("lo").as("v"))
         .unionAll(e.select(col("hi").as("v")))
         .groupBy("v").agg(count(lit(1)).as("__d"))

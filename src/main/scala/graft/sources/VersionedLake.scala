@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -59,10 +59,15 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    travel is the same mechanism pointed at an older version;
   *  - every data file (append, compaction, copy-on-write delete, upsert)
   *    lands through ONE helper, [[landStaged]]: staged, moved into its
-  *    day dir and recorded BEFORE the commit, so a crash leaves orphan
-  *    files that no manifest references — invisible to every reader,
-  *    swept by [[vacuum]] along with files only referenced by expired
-  *    versions.
+  *    partition dir and recorded BEFORE the commit, so a crash leaves
+  *    orphan files that no manifest references — invisible to every
+  *    reader, swept by [[vacuum]] along with files only referenced by
+  *    expired versions;
+  *  - key writes are MERGE-ON-READ: [[upsert]] (and a dv delete) records
+  *    the rows it shadows in one deletion-vector sidecar in the same
+  *    commit, rewriting no data file ([[deleteVectors]]); [[compact]]
+  *    folds the vectors away. A [[graft.kv.Store]] gid is the same table
+  *    partitioned by `bucket` instead of `dt`.
   *
   * Scale shape: appends shuffle once keyed on dt (the [[Partitioned]]
   * small-files discipline), commit payloads are O(delta), compaction
@@ -91,13 +96,17 @@ object VersionedLake {
     */
   private val TargetFileMB = 128
 
-  /** Days a rewrite ([[compact]], copy-on-write delete, [[upsert]]) runs
+  /** Days a rewrite ([[compact]], copy-on-write delete) runs
     * at once on its driver-side pool — see [[rewriteDays]].
     */
   private val DaysInFlight = 4
 
   /** One live data file in a snapshot. `path` is root-relative
-    * (`dt=YYYY-MM-DD/<name>`), so manifests survive a lake relocation.
+    * (`dt=YYYY-MM-DD/<name>`), so manifests survive a lake relocation, and
+    * `dt` is its partition value. The public lake partitions by day; a
+    * [[graft.kv.Store]] gid is a lake partitioned by `bucket`
+    * (`bucket=N/<name>`, `dt` = the bucket) — the partition column is the
+    * name before the `=` of the path's first component.
     * `stats` carries optional per-column (min, max) string pairs — the
     * data-skipping index living IN the commit log (the Delta/Iceberg
     * arrangement): entries without stats for a column are simply never
@@ -149,6 +158,14 @@ object VersionedLake {
     new Path(root, f"$CommitDir/v$v%08d.json")
   private def ckptPath(root: Path, v: Long) =
     new Path(root, f"$CommitDir/v$v%08d.ckpt.json")
+
+  /** A partition dir (`dt=DAY`, `bucket=N`): never a hidden stage
+    * (`.vstage_*`) or a log dir (`_commits`, `_dv`).
+    */
+  private def isPartDir(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isDirectory && n.contains('=') && !n.startsWith(".") && !n.startsWith("_")
+  }
 
   /** One listing of `_commits`: (delta versions, checkpoint versions). */
   private def listCommits(fs: FileSystem, root: Path): (Seq[Long], Seq[Long]) = {
@@ -380,6 +397,21 @@ object VersionedLake {
     val (versions, ckpts) = listCommits(fs, root)
     val v = version.orElse(versions.lastOption).getOrElse(
       sys.error(s"VersionedLake: no committed version under $path"))
+    snapshotOf(fs, root, versions, ckpts, v)
+  }
+
+  /** The latest snapshot, or None for a virgin root — one listing. */
+  private[graft] def latest(spark: SparkSession, path: String)
+      : Option[Snapshot] = {
+    val root = new Path(path)
+    val fs = fsOf(spark, root)
+    val (versions, ckpts) = listCommits(fs, root)
+    versions.lastOption.map(snapshotOf(fs, root, versions, ckpts, _))
+  }
+
+  private def snapshotOf(fs: FileSystem, root: Path, versions: Seq[Long],
+      ckpts: Seq[Long], v: Long): Snapshot = {
+    val path = root.toString
     if (!versions.contains(v))
       sys.error(s"VersionedLake: version $v does not exist under $path " +
         "(expired by vacuum?)")
@@ -557,23 +589,24 @@ object VersionedLake {
   // Ingest
   // ---------------------------------------------------------------------
 
-  /** Manifest entries, tagged `src`, for `(day, name, bytes)` files that
-    * already sit in their live day dirs under `base`: per-file row counts
-    * (and optional per-column min/max strings) from one tiny metadata
-    * job over just the listed files, keyed by the last two path
-    * components (`dt=DAY/name` — basenames alone collide when one writer
-    * task holds two days).
+  /** Manifest entries, tagged `src`, for `(partition dir, name, bytes)`
+    * files that already sit in their live partition dirs under `base`:
+    * per-file row counts (and optional per-column min/max strings) from
+    * one tiny metadata job over just the listed files, keyed by the last
+    * two path components (`dt=DAY/name` — basenames alone collide when
+    * one writer task holds two days). `schema` is the files' data schema,
+    * so no job infers it.
     */
   private def entriesOf(spark: SparkSession, base: String,
-      files: Seq[(String, String, Long)], statsCols: Seq[String],
-      src: String): Seq[FileEntry] =
+      files: Seq[(String, String, Long)], schema: StructType,
+      statsCols: Seq[String], src: String): Seq[FileEntry] =
     if (files.isEmpty) Nil
     else {
       val aggs = count(lit(1)).as("rows") +: statsCols.flatMap(c => Seq(
         min(col(c)).cast("string").as(s"min:$c"),
         max(col(c)).cast("string").as(s"max:$c")))
-      val stats = spark.read
-        .parquet(files.map { case (day, name, _) => s"$base/dt=$day/$name" }: _*)
+      val stats = spark.read.schema(schema)
+        .parquet(files.map { case (dir, name, _) => s"$base/$dir/$name" }: _*)
         .select(col("_metadata.file_path").as("f") +: statsCols.map(col): _*)
         .groupBy("f").agg(aggs.head, aggs.tail: _*).collect()
         .map { r =>
@@ -584,49 +617,50 @@ object VersionedLake {
           }.toMap
           key -> (r.getLong(1), ranges)
         }.toMap
-      files.map { case (day, name, len) =>
-        val (rows, ranges) = stats.getOrElse(s"dt=$day/$name",
+      files.map { case (dir, name, len) =>
+        val (rows, ranges) = stats.getOrElse(s"$dir/$name",
           (0L, Map.empty[String, (String, String)]))
-        FileEntry(s"dt=$day/$name", day, rows, len, ranges, src)
+        FileEntry(s"$dir/$name", dir.substring(dir.indexOf('=') + 1), rows,
+          len, ranges, src)
       }
     }
 
   /** THE staged-file path of every data write: `write` lays the op's
-    * frame out as `dt=<day>/part-*` files under a fresh `.vstage_<tag>_*`
-    * dir (the prefix [[vacuum]] sweeps); each part file is renamed into
-    * its live day dir (part names carry a per-job UUID, so moves never
-    * collide), the stage is deleted, and the moved files are recorded
-    * tagged `src`; with `expectRows` they must hold exactly that many
-    * rows. Nothing commits here: the files stay invisible orphans until a
-    * caller publishes them. Stats are read AFTER the move — Spark's file
-    * index silently drops a dot-hidden stage root.
+    * frame out as `dt=<day>/part-*` (or `bucket=N/part-*`) files under a
+    * fresh `.vstage_<tag>_*` dir (the prefix [[vacuum]] sweeps); each part
+    * file is renamed into its live partition dir (part names carry a
+    * per-job UUID, so moves never collide), the stage is deleted, and the
+    * moved files are recorded tagged `src`; with `expectRows` they must
+    * hold exactly that many rows. Nothing commits here: the files stay
+    * invisible orphans until a caller publishes them. Stats are read
+    * AFTER the move — Spark's file index silently drops a dot-hidden
+    * stage root. `schema` is the data schema `write` lays out.
     */
   private def landStaged(spark: SparkSession, root: Path, tag: String,
-      statsCols: Seq[String], src: String, expectRows: Option[Long] = None)(
-      write: String => Unit): Seq[FileEntry] = {
+      schema: StructType, statsCols: Seq[String], src: String,
+      expectRows: Option[Long] = None)(write: String => Unit): Seq[FileEntry] = {
     val fs = fsOf(spark, root)
     val stage = new Path(root,
       s".vstage_${tag}_${java.util.UUID.randomUUID.toString.take(8)}")
     write(stage.toString)
-    val moved = fs.listStatus(stage)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
-      .flatMap { dayDir =>
-        val day = dayDir.getPath.getName.stripPrefix("dt=")
-        val live = new Path(root, s"dt=$day")
-        fs.mkdirs(live)
-        fs.listStatus(dayDir.getPath)
-          .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-          .map { f =>
-            val target = new Path(live, f.getPath.getName)
-            if (!fs.rename(f.getPath, target))
-              throw new java.io.IOException(
-                s"VersionedLake: rename ${f.getPath} -> $target failed")
-            (day, f.getPath.getName, f.getLen)
-          }
-      }.toSeq
+    val moved = fs.listStatus(stage).filter(isPartDir).flatMap { partDir =>
+      val dir = partDir.getPath.getName
+      val live = new Path(root, dir)
+      fs.mkdirs(live)
+      fs.listStatus(partDir.getPath)
+        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+        .map { f =>
+          val target = new Path(live, f.getPath.getName)
+          if (!fs.rename(f.getPath, target))
+            throw new java.io.IOException(
+              s"VersionedLake: rename ${f.getPath} -> $target failed")
+          (dir, f.getPath.getName, f.getLen)
+        }
+    }.toSeq
     fs.delete(stage, true): Unit
     val entries =
-      entriesOf(spark, fs.makeQualified(root).toString, moved, statsCols, src)
+      entriesOf(spark, fs.makeQualified(root).toString, moved, schema,
+        statsCols, src)
     expectRows.foreach { want =>
       val got = entries.map(_.rows).sum
       require(got == want,
@@ -755,21 +789,25 @@ object VersionedLake {
   private def appendInternal(df: DataFrame, path: String, tsCol: String,
       statsCols: Seq[String], batchId: Option[Long]): Long =
     commitDelta(df.sparkSession, new Path(path), df.drop("dt").schema,
-      stageAndMove(df, path, tsCol, statsCols), Set.empty, batchId,
-      if (batchId.isDefined) "append-batch" else "append")
+      stageAndMove(dated(df, tsCol), path, "dt", statsCols), Set.empty,
+      batchId, if (batchId.isDefined) "append-batch" else "append")
 
-  /** Land `df` day-partitioned through [[landStaged]] and return its
-    * manifest entries WITHOUT committing ([[appendInternal]] commits
-    * them alone; [[upsert]] folds them into one commit with its
-    * substitutions).
+  /** `df` with its day partition column, from `tsCol`. */
+  private def dated(df: DataFrame, tsCol: String): DataFrame =
+    df.withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd"))
+
+  /** Land `df` partitioned by its column `part` through [[landStaged]]
+    * and return its manifest entries WITHOUT committing
+    * ([[appendInternal]] commits them alone; [[mergeByKey]] folds them
+    * into one commit with the rows they shadow).
     */
-  private def stageAndMove(df: DataFrame, path: String, tsCol: String,
-      statsCols: Seq[String]): Seq[FileEntry] = {
+  private[graft] def stageAndMove(df: DataFrame, path: String, part: String,
+      statsCols: Seq[String], expectRows: Option[Long] = None)
+      : Seq[FileEntry] = {
     val spark = df.sparkSession
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    val dated = df.withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd"))
-    val schema = dated.drop("dt").schema
+    val schema = df.drop(part).schema
     // schema drift guard: committed files are immutable and read as an
     // explicit list, so a divergent append would poison the table with
     // mixed file schemas that surface as silent column loss on read —
@@ -788,9 +826,10 @@ object VersionedLake {
         // log and never lists a crashed first append's orphans
         fs.mkdirs(new Path(root, CommitDir)): Unit
     }
-    landStaged(spark, root, "append", statsCols, "append")(stage =>
-      dated.repartition(col("dt"))
-        .write.mode("overwrite").partitionBy("dt").parquet(stage))
+    landStaged(spark, root, "append", schema, statsCols, "append",
+        expectRows)(stage =>
+      df.repartition(col(part))
+        .write.mode("overwrite").partitionBy(part).parquet(stage))
   }
 
   // ---------------------------------------------------------------------
@@ -812,43 +851,78 @@ object VersionedLake {
   private def relPathCol(c: org.apache.spark.sql.Column) =
     concat_ws("/", slice(split(c, "/"), -2, 2))
 
-  /** Tombstone rows `(path, pos)` for the given dv'd entries: each
-    * distinct sidecar is read once, filtered to the paths whose CURRENT
-    * entry still references it (a later compaction may have materialized
-    * a sibling's tombstones out of a shared sidecar — its rows must not
-    * resurrect as someone else's deletes).
+  /** Write a deletion-vector sidecar under `_dv/` — one JSON line per
+    * file: its path and tombstoned row positions — and return its
+    * root-relative path. It is written in place: until a commit
+    * references it, it is an orphan that [[vacuum]] sweeps.
     */
-  private def dvFrame(spark: SparkSession, base: String,
-      dvd: Seq[FileEntry]): DataFrame =
-    dvd.groupBy(_.dv.get).toSeq.sortBy(_._1).map { case (dvp, es) =>
-      spark.read.parquet(s"$base/$dvp")
-        .filter(col("path").isin(es.map(_.path): _*))
-    }.reduce(_.union(_))
+  private def writeDv(fs: FileSystem, root: Path,
+      dv: Seq[(String, Seq[Long])]): String = {
+    val rel = s"_dv/dv-${java.util.UUID.randomUUID.toString.take(12)}.json"
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val text = dv.sortBy(_._1).map { case (p, ps) =>
+      val n = om.createObjectNode()
+      n.put("path", p)
+      val a = n.putArray("pos")
+      ps.sorted.foreach(a.add(_))
+      om.writeValueAsString(n) + "\n"
+    }.mkString
+    val out = fs.create(new Path(root, rel), false)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    rel
+  }
 
-  /** THE snapshot scan: read `entries` as (schema columns + dt), with
-    * every entry's deletion vector anti-applied. Entries without a dv
-    * plan exactly the pre-dv scan (no metadata columns, no join — the
-    * hot path is untouched when no tombstones exist); dv'd entries scan
-    * with `_metadata` (file path, row index) and anti-join their
-    * tombstone positions — the merge-on-read contract. The tombstone
-    * side is small by construction (a dv delete that would tombstone
-    * most of a file should have been copy-on-write), so AQE sizes it
-    * into a broadcast unhinted.
+  /** The tombstoned positions of the given dv'd entries, by path, read on
+    * the driver: each distinct sidecar once, keeping only the paths whose
+    * CURRENT entry still references it (a later compaction may have
+    * materialized a sibling's tombstones out of a shared sidecar — its
+    * positions must not resurrect as someone else's deletes).
+    */
+  private def tombstones(fs: FileSystem, base: String,
+      dvd: Seq[FileEntry]): Map[String, Seq[Long]] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    dvd.groupBy(_.dv.get).toSeq.flatMap { case (dvp, es) =>
+      val mine = es.map(_.path).toSet
+      val in = fs.open(new Path(base, dvp))
+      val text =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      text.linesIterator.filter(_.nonEmpty).map(om.readTree).collect {
+        case n if mine(n.get("path").asText()) =>
+          val a = n.get("pos")
+          n.get("path").asText() -> (0 until a.size).map(a.get(_).asLong())
+      }
+    }.toMap
+  }
+
+  /** THE snapshot scan: read `entries` as (schema columns + their
+    * partition column, as a string), with every entry's deletion vector
+    * anti-applied. Entries without a dv plan exactly the pre-dv scan (no
+    * metadata columns, no join — the hot path is untouched when no
+    * tombstones exist); dv'd entries scan with `_metadata` (file path,
+    * row index) and anti-join their tombstone positions — the
+    * merge-on-read contract. The tombstone side is small by construction
+    * (a dv delete that would tombstone most of a file should have been
+    * copy-on-write): the driver reads it from the sidecars and it joins
+    * as a local relation, so no job reads a sidecar.
     *
     * `withMeta` keeps `_graft_file` (root-relative path) and
     * `_graft_pos` (row index) in the output — the match scans' handle
     * for per-file accounting.
     */
-  private[sources] def scanEntries(spark: SparkSession, base: String,
+  private[graft] def scanEntries(spark: SparkSession, base: String,
       schema: StructType, entries: Seq[FileEntry],
       withMeta: Boolean = false): DataFrame = {
     require(entries.nonEmpty, "scanEntries: no entries")
+    val part = entries.head.path.takeWhile(_ != '=')
     val metaCols = if (withMeta) Seq("_graft_file", "_graft_pos") else Nil
-    val outCols = (schema.fieldNames.toSeq ++ Seq("dt") ++ metaCols).map(col)
+    val outCols = (schema.fieldNames.toSeq ++ Seq(part) ++ metaCols).map(col)
     def raw(fs: Seq[FileEntry], meta: Boolean) = {
-      val b = spark.read.schema(schema).option("basePath", base)
+      // the partition column typed in the read schema: its values parse as
+      // the strings the paths spell, never inferred as dates or ints
+      val b = spark.read.schema(schema.add(part, "string"))
+        .option("basePath", base)
         .parquet(fs.map(f => s"$base/${f.path}"): _*)
-        .withColumn("dt", date_format(col("dt"), "yyyy-MM-dd"))
       if (meta)
         b.withColumn("_graft_file", relPathCol(col("_metadata.file_path")))
           .withColumn("_graft_pos", col("_metadata.row_index"))
@@ -860,7 +934,9 @@ object VersionedLake {
       else Some(raw(plain, withMeta).select(outCols: _*)),
       if (dvd.isEmpty) None
       else Some {
-        val tomb = dvFrame(spark, base, dvd)
+        val tomb = spark.createDataFrame(
+          tombstones(fsOf(spark, new Path(base)), base, dvd).toSeq
+            .flatMap { case (p, ps) => ps.map(p -> _) }).toDF("path", "pos")
         raw(dvd, meta = true)
           .join(tomb, col("_graft_file") === tomb("path") &&
             col("_graft_pos") === tomb("pos"), "left_anti")
@@ -1141,11 +1217,12 @@ object VersionedLake {
     * the substitution as one atomic commit; `mode = "dv"` is
     * MERGE-ON-READ — tombstone the matching row positions in a sidecar
     * with ZERO data-file rewrites (see [[deleteVectors]]; the right
-    * choice when matches are scattered across many files). Rows where the predicate is NULL are KEPT (a
-    * null is not a match — the SQL DELETE convention). Semantics per
-    * snapshot: the new version has the rows filtered out; OLDER versions
-    * still carry them (time travel is the audit trail), so a true purge
-    * is `deleteWhere` + [[vacuum]] down to the post-delete version.
+    * choice when matches are scattered across many files). Rows where
+    * the predicate is NULL are KEPT (a null is not a match — the SQL
+    * DELETE convention). Semantics per snapshot: the new version has the
+    * rows filtered out; OLDER versions still carry them (time travel is
+    * the audit trail), so a true purge is `deleteWhere` + [[vacuum]] down
+    * to the post-delete version.
     *
     * Cost shape ([[rewriteMatching]]): one per-file match-count scan over
     * the candidate files, then one rewrite job per touched DAY over only
@@ -1182,15 +1259,18 @@ object VersionedLake {
       col(bandCol) >= lo && col(bandCol) <= hi, mode)
   }
 
-  /** The cow/dv dispatch of [[deleteWhere]] and [[deleteBand]]. */
-  private def deleteFrom(spark: SparkSession, path: String, snap: Snapshot,
-      candidates: Seq[FileEntry], predicate: org.apache.spark.sql.Column,
-      mode: String): Long = {
+  /** The cow/dv dispatch of [[deleteWhere]] and [[deleteBand]] (and of
+    * [[graft.kv.Store.del]], whose candidates are one bucket's entries).
+    */
+  private[graft] def deleteFrom(spark: SparkSession, path: String,
+      snap: Snapshot, candidates: Seq[FileEntry],
+      predicate: org.apache.spark.sql.Column, mode: String): Long = {
     val isMatch = coalesce(predicate, lit(false)) // NULL is not a match
     mode match {
       case "cow" => rewriteMatching(spark, new Path(path), snap, candidates,
-        "delete", _.filter(isMatch), _.filter(!isMatch))
-      case "dv" => deleteVectors(spark, path, snap, candidates, isMatch)
+        isMatch)
+      case "dv" => deleteVectors(spark, path, snap, candidates, "delete-dv",
+        _.filter(isMatch))
       case other => sys.error(
         s"VersionedLake: unknown delete mode '$other' (cow | dv)")
     }
@@ -1211,7 +1291,8 @@ object VersionedLake {
     val byDay = touched.groupBy(_.dt).toSeq.sortBy(_._1)
     def landDay(day: String, entries: Seq[FileEntry]): Seq[FileEntry] = {
       val (laid, statsCols, rows) = rewriteOne(entries)
-      landStaged(spark, root, s"${op}_$day", statsCols, src, Some(rows))(
+      landStaged(spark, root, s"${op}_$day", laid.schema, statsCols, src,
+          Some(rows))(
         stage => laid.write.mode("overwrite").parquet(s"$stage/dt=$day"))
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -1223,49 +1304,51 @@ object VersionedLake {
     done.flatMap(_.fold(e => throw e.getCause, identity))
   }
 
-  /** Copy-on-write removal, shared by the cow delete and [[upsert]]: one
-    * match scan counts per candidate file the rows `matched` selects
-    * (dv-applied); each touched day rewrites only its touched files
-    * through `keep` at their file count (re-layout is [[compact]]'s job;
-    * a tombstoned file's dv MATERIALIZES) and must land its old rows
-    * minus the matched ones. The rewrites and `extra`'s entries (landed
-    * after them) publish in ONE commit — none when both are empty.
+  /** The copy-on-write delete: one match scan counts per candidate file
+    * the rows `isMatch` selects (dv-applied); each touched day rewrites
+    * only its touched files without them, at their file count (re-layout
+    * is [[compact]]'s job; a tombstoned file's dv MATERIALIZES), and must
+    * land its old rows minus the matched ones. The rewrites publish in
+    * ONE commit — none when nothing matched.
     */
   private def rewriteMatching(spark: SparkSession, root: Path,
-      snap: Snapshot, candidates: Seq[FileEntry], op: String,
-      matched: DataFrame => DataFrame, keep: DataFrame => DataFrame,
-      extra: => Seq[FileEntry] = Nil): Long = {
+      snap: Snapshot, candidates: Seq[FileEntry],
+      isMatch: org.apache.spark.sql.Column): Long = {
     val base = fsOf(spark, root).makeQualified(root).toString
     val hits =
       if (candidates.isEmpty) Map.empty[String, Long]
-      else matched(scanEntries(spark, base, snap.schema, candidates,
-          withMeta = true))
-        .groupBy(col("_graft_file")).count().collect()
+      else scanEntries(spark, base, snap.schema, candidates, withMeta = true)
+        .filter(isMatch).groupBy(col("_graft_file")).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     val touched = candidates.filter(e => hits.contains(e.path))
-    val adds = rewriteDays(spark, root, op, op, touched) { entries =>
-      (keep(scanEntries(spark, base, snap.schema, entries)).drop("dt")
-        .coalesce(entries.length),
+    if (touched.isEmpty) return snap.version
+    val adds = rewriteDays(spark, root, "delete", "delete", touched) { entries =>
+      (scanEntries(spark, base, snap.schema, entries).filter(!isMatch)
+        .drop("dt").coalesce(entries.length),
         entries.flatMap(_.stats.keys).distinct,
         entries.map(e => e.rows - hits(e.path)).sum)
-    } ++ extra
-    if (touched.isEmpty && adds.isEmpty) snap.version
-    else commitDelta(spark, root, snap.schema, adds,
-      touched.map(_.path).toSet, op = op)
+    }
+    commitDelta(spark, root, snap.schema, adds, touched.map(_.path).toSet,
+      op = "delete")
   }
 
-  /** MERGE-ON-READ delete (deletion vectors — the Delta/Iceberg answer
-    * to "right-to-erasure over 100 TB with scattered keys"): instead of
-    * rewriting every file that holds a match (copy-on-write amplifies a
-    * one-row delete into a whole-file rewrite), the matching ROW
-    * POSITIONS are recorded in one tombstone sidecar under `_dv/` and
-    * each touched entry is re-published pointing at it — the commit is
-    * O(matches) sidecar bytes + O(touched entries) manifest text, ZERO
-    * data-file rewrites. Every read ([[read]]/[[readBands]]/[[changes]]/
-    * maintenance scans) anti-applies the positions; [[compact]]
-    * MATERIALIZES them (tombstoned days are never "already done"), which
-    * is also how the read-side join debt is paid down — the Delta
-    * convention of dv-then-compact.
+  /** MERGE-ON-READ removal (deletion vectors — the Delta/Iceberg answer
+    * to "right-to-erasure over 100 TB with scattered keys"), shared by the
+    * dv delete and the upsert ([[mergeByKey]]): instead of rewriting every
+    * file that holds a match (copy-on-write amplifies a one-row delete
+    * into a whole-file rewrite), the ROW POSITIONS `matched` selects from
+    * the dv-applied scan of `candidates` are recorded in one tombstone
+    * sidecar under `_dv/` and each touched entry is re-published pointing
+    * at it; the positions come to the driver, which counts them per
+    * file and writes the sidecar. `extra`'s entries (the upsert's landed
+    * batch) publish in the SAME commit, so no snapshot holds both row
+    * versions of an updated key; nothing commits when both are empty.
+    * The commit is O(matches) sidecar bytes + O(touched entries)
+    * manifest text, ZERO data-file rewrites. Every read ([[read]]/
+    * [[readBands]]/[[changes]]/maintenance scans) anti-applies the
+    * positions; [[compact]] MATERIALIZES them (tombstoned days are never
+    * "already done"), which is also how the read-side join debt is paid
+    * down — the Delta convention of dv-then-compact.
     *
     * Row identity is the parquet row index within the immutable file
     * (`_metadata.row_index` — stable because committed files are never
@@ -1277,58 +1360,41 @@ object VersionedLake {
     * pre-delete bounds until a compaction tightens them.
     */
   private def deleteVectors(spark: SparkSession, path: String,
-      snap: Snapshot, candidates: Seq[FileEntry],
-      isMatch: org.apache.spark.sql.Column): Long = {
+      snap: Snapshot, candidates: Seq[FileEntry], op: String,
+      matched: DataFrame => DataFrame,
+      extra: Seq[FileEntry] = Nil): Long = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val base = fs.makeQualified(root).toString
-    if (candidates.isEmpty) return snap.version
     // one job: (file, position) of every NEW tombstone — the scan is
-    // dv-applied, so already-deleted rows never re-match. Pinned: the
-    // frame drives both the per-file counts and the sidecar write.
-    val pos = scanEntries(spark, base, snap.schema, candidates,
-        withMeta = true)
-      .filter(isMatch)
-      .select(col("_graft_file").as("path"), col("_graft_pos").as("pos"))
-      .localCheckpoint()
-    try {
-      val perFile = pos.groupBy(col("path")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (perFile.isEmpty) return snap.version
-      val touched = candidates.filter(e => perFile.contains(e.path))
-      // prior tombstones of the touched files fold into the NEW sidecar
-      // (one dv reference per entry, ever); untouched dv'd files keep
-      // referencing their old sidecar — dvFrame filters per entry, so a
-      // shared sidecar serving both old and new references stays exact
-      val priorDvd = touched.filter(_.dv.isDefined)
-      val allPos =
-        if (priorDvd.isEmpty) pos else pos.union(dvFrame(spark, base, priorDvd))
-      val stage = new Path(root,
-        s".vstage_dv_${java.util.UUID.randomUUID.toString.take(8)}")
-      // tombstones are tiny relative to the data (a delete tombstoning
-      // most of a file should be copy-on-write); one sidecar file keeps
-      // the manifest O(touched entries)
-      allPos.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val dvDir = new Path(root, "_dv")
-      fs.mkdirs(dvDir)
-      val dvName = s"dv-${java.util.UUID.randomUUID.toString.take(12)}.parquet"
-      val part = fs.listStatus(stage)
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      require(part.length == 1,
-        s"VersionedLake: dv sidecar stage holds ${part.length} files")
-      if (!fs.rename(part.head.getPath, new Path(dvDir, dvName)))
-        throw new java.io.IOException(
-          s"VersionedLake: rename ${part.head.getPath} -> _dv/$dvName failed")
-      fs.delete(stage, true): Unit
-      val dvRel = s"_dv/$dvName"
-      val adds = touched.flatMap { e =>
-        val live = e.rows - perFile(e.path)
-        if (live <= 0L) None // fully tombstoned: drop the entry outright
-        else Some(e.copy(rows = live, dv = Some(dvRel), src = "delete-dv"))
+    // dv-applied, so already-deleted rows never re-match
+    val hits: Map[String, Seq[Long]] =
+      if (candidates.isEmpty) Map.empty
+      else matched(scanEntries(spark, base, snap.schema, candidates,
+          withMeta = true))
+        .select(col("_graft_file"), col("_graft_pos")).collect()
+        .groupBy(_.getString(0))
+        .map { case (p, rs) => p -> rs.map(_.getLong(1)).toSeq }
+    val touched = candidates.filter(e => hits.contains(e.path))
+    // fully tombstoned entries are dropped outright
+    val kept = touched.filter(e => e.rows > hits(e.path).size)
+    val dvAdds =
+      if (kept.isEmpty) Nil
+      else {
+        // prior tombstones of the kept files fold into the NEW sidecar
+        // (one dv reference per entry, ever); untouched dv'd files keep
+        // referencing their old sidecar — [[tombstones]] filters per
+        // entry, so a shared sidecar serving both stays exact
+        val prior = tombstones(fs, base, kept.filter(_.dv.isDefined))
+        val dv = writeDv(fs, root, kept.map(e =>
+          e.path -> (prior.getOrElse(e.path, Nil) ++ hits(e.path))))
+        kept.map(e =>
+          e.copy(rows = e.rows - hits(e.path).size, dv = Some(dv), src = op))
       }
-      commitDelta(spark, root, snap.schema, adds,
-        touched.map(_.path).toSet, op = "delete-dv")
-    } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(pos)
+    val adds = dvAdds ++ extra
+    if (touched.isEmpty && adds.isEmpty) snap.version
+    else commitDelta(spark, root, snap.schema, adds,
+      touched.map(_.path).toSet, op = op)
   }
 
   /** ADOPT an existing [[Partitioned]]-layout day tree into a commit log,
@@ -1351,16 +1417,15 @@ object VersionedLake {
     val found = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
       .flatMap { dayDir =>
-        val day = dayDir.getPath.getName.stripPrefix("dt=")
         fs.listStatus(dayDir.getPath)
           .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
             !s.getPath.getName.startsWith("."))
-          .map(f => (day, f.getPath.getName, f.getLen))
+          .map(f => (dayDir.getPath.getName, f.getPath.getName, f.getLen))
       }.toSeq
     require(found.nonEmpty, s"VersionedLake: no dt= data under $path")
-    val entries = entriesOf(spark, base, found, statsCols, "import")
     val schema = spark.read.option("basePath", base).parquet(base)
       .drop("dt").schema
+    val entries = entriesOf(spark, base, found, schema, statsCols, "import")
     commitDelta(spark, root, schema, entries, Set.empty, op = "import",
       allowSchemaChange = true)
   }
@@ -1419,8 +1484,11 @@ object VersionedLake {
   /** UPSERT (the MERGE-by-key analog, last-write-wins): every lake row
     * whose `key` appears in `updates` is replaced by the update row, and
     * update rows with unseen keys are appended — one atomic commit.
-    * Copy-on-write like [[deleteWhere]], with the match scan BOUNDED the
-    * same way the delete path bounds its rewrites:
+    * MERGE-ON-READ ([[mergeByKey]]): the batch lands via the append path
+    * (so it carries stats for `statsCols`) and the rows it shadows are
+    * tombstoned in one deletion-vector sidecar, in the same commit; no
+    * data file is rewritten. The match scan is BOUNDED the same way the
+    * delete path bounds its candidates:
     *
     *  - candidate files are pruned FIRST by the snapshot's key-column
     *    stats against the update batch's [min(key), max(key)] envelope —
@@ -1430,16 +1498,13 @@ object VersionedLake {
     *  - optional `fromDay`/`toDay` scope the match scan to the days the
     *    caller KNOWS hold the updated keys (the day-local CDC shape).
     *    Contract: a stale row of an updated key living OUTSIDE the range
-    *    is not rewritten — scope only when key placement is day-stable;
-    *  - the key-set joins are UNHINTED: statistics/AQE size the build
+    *    is not tombstoned — scope only when key placement is day-stable;
+    *  - the key-set join is UNHINTED: statistics/AQE size the build
     *    side, so a compact CDC batch broadcasts itself and a fat backfill
     *    frame degrades to a shuffle join instead of OOMing the driver.
     *
-    * Then each touched day rewrites only its touched files with the
-    * stale rows anti-joined out ([[rewriteMatching]], as the cow delete),
-    * the whole `updates` frame lands via the append path (so it carries
-    * stats for `statsCols`), and BOTH publish in one commit. Older
-    * versions keep the pre-image — the CDC audit trail.
+    * Older versions keep the pre-image — the CDC audit trail; [[compact]]
+    * materializes the tombstones.
     *
     * `updates` must be key-unique and NULL-free; both are checked and
     * refused loudly (dedup upstream when feeds can double-emit).
@@ -1447,57 +1512,77 @@ object VersionedLake {
   def upsert(updates: DataFrame, path: String, key: String,
       tsCol: String = "ts", statsCols: Seq[String] = Nil,
       fromDay: String = "0000-01-01", toDay: String = "9999-12-31"): Long = {
-    val spark = updates.sparkSession
-    val snap = snapshot(spark, path, None)
-    // pin: the key frame drives a match scan and the rewrites; an
-    // unpinned lineage would re-execute the caller's feed per action
-    val pinned = updates.localCheckpoint()
+    val snap = snapshot(updates.sparkSession, path, None)
+    val keyType = snap.schema(key).dataType.simpleString
+    mergeByKey(snap, dated(updates, tsCol), path, key, "dt", statsCols) {
+      (kMin, kMax, _) =>
+        snap.files.filter { f =>
+          f.dt >= fromDay && f.dt <= toDay && (f.stats.get(key) match {
+            case Some((mn, mx)) =>
+              StatsCompare.overlaps(keyType, mn, mx, kMin, kMax)
+            case None => true // no recorded key range — must scan
+          })
+        }
+    }
+  }
+
+  /** The merge-on-read upsert of [[upsert]] and [[graft.kv.Store.put]]:
+    * `rows` (carrying the partition column `part`) land through
+    * [[stageAndMove]], and the live rows of `snap` that share their `key`
+    * are tombstoned by [[deleteVectors]] in the same commit. `candidates`
+    * picks the entries to match from the batch's key envelope
+    * `(min, max)` (string-encoded, like the manifest's ranges) and the
+    * partition values its files landed in.
+    *
+    * The batch's bounds are observed on the job that pins it. NULL keys
+    * are REFUSED loudly: semi joins never match NULL, so a NULL-keyed row
+    * could only ever land beside an existing NULL-keyed row — silent
+    * corruption. A repeated key is refused the same way: both its rows
+    * would land. The same observation tells a genuinely empty batch (a
+    * no-op) from an all-NULL-key one (an error).
+    */
+  private[graft] def mergeByKey(snap: Snapshot, rows: DataFrame,
+      path: String, key: String, part: String, statsCols: Seq[String])(
+      candidates: (String, String, Set[String]) => Seq[FileEntry]): Long = {
+    // pin: the batch drives the match scan's key side and the landed
+    // files; an unpinned lineage would re-execute the caller's feed per
+    // action, and a non-deterministic one could disagree with itself.
+    // Each row carries its key's row count, so the pin's own job sees
+    // repeats (a batch already grouped by key adds no exchange).
+    val (counted, b) = graft.ops.GraphLoop.checkpoint(
+      rows.withColumn("__graft_n",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col(key)))),
+      min(col(key)).cast("string").as("lo"),
+      max(col(key)).cast("string").as("hi"),
+      count(lit(1)).as("n"), count(when(col(key).isNull, 1)).as("nulls"),
+      count(when(col("__graft_n") > 1, 1)).as("repeats"))
+    val pinned = counted.drop("__graft_n")
     try {
-      // the batch's key envelope: one tiny driver-side agg, stringified
-      // to compare against the manifest's string-encoded ranges. NULL
-      // keys are REFUSED loudly: semi/anti joins never match NULL, so a
-      // NULL-keyed update row could only ever append a duplicate beside
-      // any existing NULL-keyed lake row — silent corruption (r11
-      // ADVICE). A repeated key is refused the same way: both its rows
-      // would land. The same agg also distinguishes a genuinely empty
-      // batch (count 0 — no-op) from an all-NULL-key one (error).
-      val bounds = pinned.agg(min(col(key)).cast("string"),
-        max(col(key)).cast("string"), count(lit(1)),
-        count(when(col(key).isNull, 1)), countDistinct(col(key))).head()
-      require(bounds.getLong(3) == 0L,
-        s"VersionedLake.upsert: ${bounds.getLong(3)} update rows carry a " +
+      val n = b.getLong(2)
+      require(b.getLong(3) == 0L,
+        s"VersionedLake.upsert: ${b.getLong(3)} update rows carry a " +
           s"NULL $key — upsert keys must be non-null (NULL never matches " +
           "a join, so such rows would silently duplicate instead of replace)")
-      require(bounds.getLong(4) == bounds.getLong(2),
-        s"VersionedLake.upsert: ${bounds.getLong(2) - bounds.getLong(4)} " +
-          s"update rows repeat a $key — upsert keys must be unique in a " +
-          "batch (every row of a repeated key would land, so one key " +
-          "would silently hold two rows)")
-      if (bounds.getLong(2) == 0L) snap.version // empty batch — no-op
+      require(b.getLong(4) == 0L,
+        s"VersionedLake.upsert: ${b.getLong(4)} update rows repeat a " +
+          s"$key — upsert keys must be unique in a batch (every row of a " +
+          "repeated key would land, so one key would silently hold two rows)")
+      if (n == 0L) snap.version // empty batch — no-op
       else {
-        val (kMin, kMax) = (bounds.getString(0), bounds.getString(1))
-        val keyType = snap.schema(key).dataType.simpleString
-        val candidates = snap.files
-          .filter(f => f.dt >= fromDay && f.dt <= toDay)
-          .filter { f =>
-            f.stats.get(key) match {
-              case Some((mn, mx)) =>
-                StatsCompare.overlaps(keyType, mn, mx, kMin, kMax)
-              case None => true // no recorded key range — must scan
-            }
-          }
-        val keys = pinned.select(col(key)).distinct()
-        // match = a stale version of an updated key (metadata columns
-        // resolve only on the scan, so the path is projected BEFORE the
-        // join); ONE commit publishes the rewrites and the batch, so no
-        // snapshot ever holds both row versions of an updated key
-        rewriteMatching(spark, new Path(path), snap, candidates, "upsert",
-          _.select(col("_graft_file"), col(key))
+        val landed = stageAndMove(pinned, path, part, statsCols, Some(n))
+        // the key side is key-unique (checked above), so no distinct
+        val keys = pinned.select(col(key))
+        deleteVectors(pinned.sparkSession, path, snap,
+          candidates(b.getString(0), b.getString(1), landed.map(_.dt).toSet),
+          "upsert",
+          // metadata columns resolve only on the scan, so the position
+          // is projected BEFORE the join
+          _.select(col("_graft_file"), col("_graft_pos"), col(key))
             .join(keys, Seq(key), "left_semi"),
-          _.join(keys, Seq(key), "left_anti"), // drop stale rows
-          stageAndMove(pinned, path, tsCol, statsCols))
+          landed)
       }
-    } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(pinned)
+    } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(counted)
   }
 
   /** CHANGE FEED (the CDC read, Delta's `table_changes` analog): the
@@ -1622,17 +1707,15 @@ object VersionedLake {
       System.currentTimeMillis() - (olderThanHours * 3600 * 1000).toLong
     // data files no retained manifest references — but never anything
     // young enough to be an in-flight writer's (the horizon)
-    val deadData = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
-      .flatMap { dayDir =>
-        val day = dayDir.getPath.getName
-        fs.listStatus(dayDir.getPath)
-          .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
-            !s.getPath.getName.startsWith("_"))
-          .filter(f => !live(s"$day/${f.getPath.getName}") &&
-            f.getModificationTime <= horizon)
-          .map(f => (s"$day/${f.getPath.getName}", f.getPath, f.getLen))
-      }.toSeq
+    val deadData = fs.listStatus(root).filter(isPartDir).flatMap { partDir =>
+      val dir = partDir.getPath.getName
+      fs.listStatus(partDir.getPath)
+        .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
+          !s.getPath.getName.startsWith("_"))
+        .filter(f => !live(s"$dir/${f.getPath.getName}") &&
+          f.getModificationTime <= horizon)
+        .map(f => (s"$dir/${f.getPath.getName}", f.getPath, f.getLen))
+    }.toSeq
     // dv sidecars referenced by NO retained version, age-gated the same
     // way (an in-flight dv delete's fresh sidecar must survive)
     val dvDir = new Path(root, "_dv")
@@ -1647,9 +1730,8 @@ object VersionedLake {
       deadData.map(_._3).sum)
     if (dryRun) return report
     deadData.foreach(f => fs.delete(f._2, false): Unit)
-    // drop days emptied by retention
-    fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
+    // drop partition dirs emptied by retention
+    fs.listStatus(root).filter(isPartDir)
       .filter(d => fs.listStatus(d.getPath).isEmpty)
       .foreach(d => fs.delete(d.getPath, false): Unit)
     deadDv.foreach(f => fs.delete(f._2, false): Unit)

@@ -19,8 +19,9 @@ import graft.kv.{Mem, Store}
   * data so far (KVSinkSpec proves stream==batch through both sinks).
   *
   * Scale shape: an update-mode micro-batch carries only the keys that
-  * changed, and `Store.put` rewrites only the buckets those keys hash
-  * into — sink I/O per batch is O(changed keys), not O(stored keys).
+  * changed, and `Store.put` writes only those keys' rows (plus one
+  * tombstone sidecar for the rows they shadow) — sink I/O per batch is
+  * O(changed keys), not O(stored keys).
   */
 object KVSink {
 
@@ -55,8 +56,8 @@ object KVSink {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         // Pin the micro-batch before multi-action processing: the KV put
-        // runs several actions (emptiness probe, touched-bucket collect,
-        // bucket write), and an unpinned foreachBatch frame RE-EXECUTES
+        // runs several actions (emptiness probe, the put's pin, landed
+        // files, match scan), and an unpinned foreachBatch frame RE-EXECUTES
         // its stateful lineage per action — a flatMapGroupsWithState
         // timeout replayed after its state.remove() emits from empty
         // state (observed: funnel rows rewritten as stage 0 by the

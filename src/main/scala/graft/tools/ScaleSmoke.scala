@@ -300,15 +300,15 @@ object ScaleSmoke {
         .queryExecution.toRdd.count()
     }
 
-    // Store cycle at scale: bulk put, then a point get that must prune to
-    // ONE bucket of the gid — the partial-rewrite/partial-read contract
-    // KVSpec gates at unit scale, timed here at volume.
+    // Store cycle at scale: bulk put, then a point get that must open
+    // ONE bucket of the gid — the partial-read contract KVSpec gates at
+    // unit scale, timed here at volume.
     val storeRoot = java.nio.file.Files
       .createTempDirectory("graft-scale-store").toString
     val store = new Store(spark, storeRoot, defaultBuckets = 32)
     time(s"store put docs x$factor") {
       store.put(docs, "docs", keyCol = Some("doc_id"))
-      spark.read.parquet(s"$storeRoot/docs").count()
+      store.scan("docs").count()
     }
     time(s"store point-get x$factor") {
       val got = store.get("docs", "42")

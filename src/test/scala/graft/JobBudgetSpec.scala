@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import graft.kv.Store
 import graft.ops.{Dedup, Hits, KCore, LabelProp, PageRank, ShortestPaths}
+import graft.sources.VersionedLake
 
 /** Spark jobs an operator runs, call and final collect together, on one
   * fixed small input.
@@ -17,6 +19,13 @@ import graft.ops.{Dedup, Hits, KCore, LabelProp, PageRank, ShortestPaths}
   * families and truncated mirrors. Their budgets are the counts of their
   * shuffle and checkpoint plans; an exchange that stops being reused (one
   * branch's aggregate or join key changing shape) breaks them.
+  *
+  * The key writes and the point read run against a small store gid and
+  * a small two-day lake, each built fresh for the call. Their budgets are
+  * the counts of the merge-on-read protocol (pin, bounds, match, sidecar,
+  * landed files and their stats); a probe that comes back as its own job
+  * (a bucket hashed by a query, a per-bucket emptiness check) breaks
+  * them.
   */
 class JobBudgetSpec extends SparkSessionSpec {
   import spark.implicits._
@@ -69,6 +78,56 @@ class JobBudgetSpec extends SparkSessionSpec {
     test(s"$name stays within its job budget") {
       run().collect() // warm: first-use analysis must not count
       val n = GraphLoopSpec.jobs(spark)(run().collect())
+      assert(n <= budget, s"$name ran $n jobs, budget $budget")
+    }
+
+  private def tmp(): String =
+    java.nio.file.Files.createTempDirectory("graft-budget").toString
+
+  private def kv(ids: Range, tag: String) =
+    ids.map(i => (i.toLong, s"$tag$i")).toDF("id", "v")
+
+  /** A gid of 8 buckets holding ids 0..39, landed by two puts. */
+  private def store(): Store = {
+    val s = new Store(spark, tmp(), defaultBuckets = 8)
+    s.put(kv(0 until 20, "v"), "g", Some("id"))
+    s.put(kv(20 until 40, "v"), "g", Some("id"))
+    s
+  }
+
+  private def events(ids: Range, plus: Double) = ids.map { i =>
+    (i.toLong, java.sql.Timestamp.valueOf(f"2024-03-0${1 + i % 2} ${i % 24}%02d:00:00"),
+      i * 1.5 + plus)
+  }.toDF("event_id", "ts", "value")
+
+  /** A two-day lake of ids 0..11, landed by two appends. */
+  private def lake(): String = {
+    val p = tmp() + "/events"
+    VersionedLake.append(events(0 until 6, 0.0), p)
+    VersionedLake.append(events(6 until 12, 0.0), p)
+    p
+  }
+
+  /** (name, budget, set-up returning the measured call). */
+  private val writes: Seq[(String, Int, () => () => Unit)] = Seq(
+    ("Store.put", 8, () => {
+      val s = store(); () => s.put(kv(35 until 45, "w"), "g", Some("id"))
+    }),
+    ("Store.get", 1, () => {
+      val s = store(); () => s.get("g", "7").collect(): Unit
+    }),
+    ("Store.del", 1, () => { val s = store(); () => s.del("g", "7") }),
+    ("VersionedLake.upsert", 8, () => {
+      val p = lake()
+      () => VersionedLake.upsert(events(8 until 14, 100.0), p, key = "event_id"): Unit
+    }))
+
+  for ((name, budget, setup) <- writes)
+    test(s"$name stays within its job budget") {
+      setup()() // warm: first-use analysis must not count
+      val run = setup()
+      val n = GraphLoopSpec.jobs(spark)(run())
+      info(s"$name ran $n jobs")
       assert(n <= budget, s"$name ran $n jobs, budget $budget")
     }
 }

@@ -141,7 +141,7 @@ class KVSpec extends SparkSessionSpec {
     val store = new Store(spark, freshRoot())
     store.put(Seq((1L, "only")).toDF("id", "v"), "e", Some("id"))
     store.del("e", "1")
-    // the gid dir now holds only the marker; reads must short-circuit to
+    // the gid's snapshot now holds no entry; reads must short-circuit to
     // the empty frame, not throw 'Unable to infer schema'
     assert(store.scan("e").count() === 0)
     assert(store.get("e", "1").count() === 0)
@@ -156,7 +156,7 @@ class KVSpec extends SparkSessionSpec {
     val store = new Store(spark, freshRoot())
     assert(store.scan("nope").count() === 0)
     assert(store.get("nope", "k").count() === 0)
-    store.reconf("pinned", 4) // reconf of an empty gid just pins the count
+    store.reconf("pinned", 4) // reconf of an empty gid just commits the count
     assert(store.scan("pinned").count() === 0)
     store.put(Seq((1L, "v")).toDF("id", "v"), "pinned", Some("id"))
     val buckets = new java.io.File(s"${store.rootDir}/pinned").listFiles()
@@ -166,42 +166,11 @@ class KVSpec extends SparkSessionSpec {
     assert(buckets.forall(b => b.stripPrefix("bucket=").toInt < 4))
   }
 
-  test("legacy unbucketed layout: loud error, reconf migrates in place") {
-    val store = new Store(spark, freshRoot())
-    // simulate a dir written by the previous non-bucketed Store version
-    val legacy = s"${store.rootDir}/old"
-    Seq(("1", "alpha"), ("2", "beta")).toDF("key", "value")
-      .write.parquet(legacy)
-    val e1 = intercept[IllegalStateException](store.get("old", "1").count())
-    assert(e1.getMessage.contains("reconf"))
-    val e2 = intercept[IllegalStateException](
-      store.put(Seq((3L, "c")).toDF("id", "v"), "old", Some("id")))
-    assert(e2.getMessage.contains("reconf"))
-    store.reconf("old", 4)
-    assert(store.scan("old").count() === 2)
-    assert(store.get("old", "1").select("value").as[String].head() === "alpha")
-    store.put(Seq(("3", "gamma")).toDF("key", "v"), "old", Some("key"))
-    assert(store.scan("old").count() === 3)
-  }
-
-  test("bucket data without a marker fails loudly, never a silent wrong read") {
-    val store = new Store(spark, freshRoot())
-    store.put(Seq((1L, "v")).toDF("id", "v"), "torn", Some("id"))
-    // simulate the torn layout: data present, marker gone
-    assert(new java.io.File(s"${store.rootDir}/torn/_graft_buckets").delete())
-    val e = intercept[IllegalStateException](store.get("torn", "1").count())
-    assert(e.getMessage.contains("marker"))
-    // reconf rebuilds the marker (riding the rename) and data survives
-    store.reconf("torn", 8)
-    assert(store.get("torn", "1").count() === 1)
-    assert(new java.io.File(s"${store.rootDir}/torn/_graft_buckets").exists())
-  }
-
   test("store roots on an explicit file:-scheme URI (Hadoop FS control plane)") {
-    // The proof the control plane (marker, bucket listing, per-bucket
-    // swap) goes through org.apache.hadoop.fs.FileSystem: with a
-    // java.io.File control plane a scheme'd root silently read as an
-    // EMPTY store (isDirectory("file:/...") is false). Every layout op
+    // The proof the control plane (commit log, staged-file moves,
+    // tombstone sidecars) goes through org.apache.hadoop.fs.FileSystem:
+    // with a java.io.File control plane a scheme'd root silently read as
+    // an EMPTY store (isDirectory("file:/...") is false). Every layout op
     // must behave identically to a plain-path root.
     val store = new Store(spark, s"file:${freshRoot()}")
     val df = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v")
@@ -212,12 +181,28 @@ class KVSpec extends SparkSessionSpec {
     store.put(Seq((7L, "updated"), (999L, "fresh")).toDF("id", "v"), "g", Some("id"))
     assert(store.scan("g").count() === 51)
     assert(store.get("g", "7").select("value").as[String].head().contains("updated"))
-    // del + reconf exercise the swap and full-rewrite rename paths
+    // del + reconf exercise the tombstone and full-rewrite paths
     store.del("g", "999")
     assert(store.scan("g").count() === 50)
     store.reconf("g", 4)
     assert(store.scan("g").count() === 50)
     assert(store.get("g", "7").select("value").as[String].head().contains("updated"))
+  }
+
+  test("driver-side bucket hash == pmod(xxhash64(key), n) over 3,000 keys") {
+    // get and del hash the key's bucket on the driver; put and placement
+    // hash with Spark's xxhash64 — they must agree on every key
+    val keys = "" +: (1 until 3000).map {
+      case i if i % 3 == 0 => s"k$i"
+      case i if i % 3 == 1 => graft.kv.Placement.getID(i.toString)
+      case i => s"ключ-$i-ü-\u00e9\ud83d\ude00"
+    }
+    for (n <- Seq(1, 7, 32)) {
+      val want = keys.toDF("key")
+        .select(pmod(xxhash64(col("key")), lit(n.toLong)).cast("int"))
+        .as[Int].collect().toSeq
+      assert(keys.map(Store.bucketOf(_, n)) === want, s"n = $n")
+    }
   }
 
   test("mem put/get/del with cache") {
