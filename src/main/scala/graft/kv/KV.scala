@@ -63,11 +63,28 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
   private def path(gid: String) = s"$root/$gid"
 
   /** The gid's latest snapshot — an empty one of `defaultBuckets` before
-    * its first commit, which then records that count.
+    * its first commit, which then records that count. A gid dir holding
+    * data but no commit log (a store of the older unversioned layout) is
+    * refused loudly: read as empty, a `put` would land beside data no read
+    * sees and a [[reconf]] would sweep it. A crashed first put is not
+    * refused — the log dir is made before any file lands.
     */
   private def current(gid: String): VersionedLake.Snapshot =
-    VersionedLake.latest(spark, path(gid))
-      .getOrElse(VersionedLake.Snapshot(0L, schema(defaultBuckets), Nil))
+    VersionedLake.latest(spark, path(gid)).getOrElse {
+      val dir = new Path(path(gid))
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(dir) &&
+          !fs.exists(new Path(dir, VersionedLake.CommitDir))) {
+        val data = fs.listStatus(dir).map(_.getPath.getName)
+          .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+        if (data.nonEmpty)
+          throw new IllegalStateException(s"kv.Store: $dir holds data " +
+            s"(${data.sorted.head}) but no commit log — a store of the " +
+            "unversioned layout; it is neither read nor overwritten. Move " +
+            "it aside and put its rows again")
+      }
+      VersionedLake.Snapshot(0L, schema(defaultBuckets), Nil)
+    }
 
   private def buckets(snap: VersionedLake.Snapshot): Int =
     snap.schema("key").metadata.getLong(BucketsKey).toInt
@@ -158,8 +175,8 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
     */
   def del(gid: String, key: String): Unit = {
     val snap = current(gid)
-    VersionedLake.deleteFrom(spark, path(gid), snap, bucketEntries(snap, key),
-      col("key") === key, "dv"): Unit
+    VersionedLake.deleteVectors(spark, path(gid), snap,
+      bucketEntries(snap, key), "delete-dv", _.filter(col("key") === key)): Unit
   }
 
   /** Re-shard a gid into `numBuckets` hash partitions of the key — the
@@ -179,7 +196,7 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
           .withColumn("bucket", bucketExpr(col("key"), numBuckets)),
         path(gid), "bucket", Nil, Some(snap.files.map(_.rows).sum))
     VersionedLake.commitDelta(spark, new Path(path(gid)), schema(numBuckets),
-      adds, snap.files.map(_.path).toSet, op = "reconf",
+      adds, snap.files, op = "reconf",
       allowSchemaChange = true)
     VersionedLake.vacuum(spark, path(gid), retainVersions = 1,
       olderThanHours = 0): Unit

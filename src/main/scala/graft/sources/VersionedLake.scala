@@ -43,11 +43,12 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    external lock/conditional-put — the documented Delta-on-S3 caveat,
   *    out of scope here;
   *  - CONFLICT DETECTION: a maintenance commit (compact/delete/upsert/
-  *    restore) declares the exact entries it substitutes; if a re-merge
-  *    after losing a race finds any of them gone from the new base, a
-  *    racing maintenance op won those files and replaying blindly would
-  *    resurrect its removed rows — the loser ABORTS loudly instead and
-  *    must rerun against the new head. Appends (removes = ∅) commute
+  *    restore) declares the exact entries it substitutes, each a (path,
+  *    deletion vector) pair; if a re-merge after losing a race finds any
+  *    of them gone from the new base — removed, or re-published under
+  *    another deletion vector — a racing op won those files and replaying
+  *    blindly would resurrect its removed rows — the loser ABORTS loudly
+  *    instead and must rerun against the new head. Appends (removes = ∅) commute
   *    with everything and never abort. A commit that would silently
   *    change the table schema aborts the same way — only the explicit
   *    schema ops ([[evolveSchema]], [[restore]], [[importTree]]) may
@@ -81,7 +82,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
   */
 object VersionedLake {
 
-  private[sources] val CommitDir = "_commits"
+  private[graft] val CommitDir = "_commits"
   private val VName = """v(\d{8})\.json""".r
   private val CkptName = """v(\d{8})\.ckpt\.json""".r
 
@@ -106,7 +107,10 @@ object VersionedLake {
     * `dt` is its partition value. The public lake partitions by day; a
     * [[graft.kv.Store]] gid is a lake partitioned by `bucket`
     * (`bucket=N/<name>`, `dt` = the bucket) — the partition column is the
-    * name before the `=` of the path's first component.
+    * name before the `=` of the path's first component. Only the shared
+    * paths take the column from the path (landing, [[scanEntries]], the
+    * merge-on-read writes, [[vacuum]]); [[read]]'s day range, [[compact]]
+    * and the copy-on-write delete are day-only.
     * `stats` carries optional per-column (min, max) string pairs — the
     * data-skipping index living IN the commit log (the Delta/Iceberg
     * arrangement): entries without stats for a column are simply never
@@ -119,8 +123,9 @@ object VersionedLake {
     * `dv` is an optional DELETION VECTOR: the root-relative path of a
     * tombstone sidecar (parquet of `(path, pos)` rows) listing the
     * file's deleted row positions — merge-on-read deletes
-    * ([[deleteWhere]] `mode = "dv"`) tombstone instead of rewriting, and
-    * every read anti-applies the positions. When set, `rows` counts the
+    * ([[deleteWhere]] `mode = "dv"`, [[upsert]], the store's put and del)
+    * tombstone instead of rewriting, and every read anti-applies the
+    * positions. When set, `rows` counts the
     * LIVE rows (physical minus tombstoned) so history totals and rewrite
     * tripwires stay truthful; `stats` keep their pre-delete bounds —
     * a conservative over-approximation that stays SOUND for pruning.
@@ -497,13 +502,15 @@ object VersionedLake {
     * on every attempt (including the first — the base may have advanced
     * since the caller read its snapshot):
     *
-    *  - every removed path must still be live in the base. A missing one
-    *    means a racing maintenance commit substituted entries this op
-    *    derived its rewrites from — replaying blindly would resurrect
-    *    the winner's removed rows (the r10 scaladoc hazard, now an
-    *    enforced invariant). The loser gets a loud error and must rerun
-    *    against the new head. Appends (removes = ∅) trivially pass and
-    *    commute with every other op;
+    *  - every removed entry must still be live in the base with the
+    *    deletion vector this op read. A missing one means a racing
+    *    commit substituted entries this op derived its rewrites from —
+    *    replaying blindly would resurrect the winner's removed rows. A
+    *    path still live under ANOTHER deletion vector is the same
+    *    hazard: a racing merge-on-read write re-published it with
+    *    tombstones this op's substitute never saw. The loser gets a loud
+    *    error and must rerun against the new head. Appends (removes = ∅)
+    *    trivially pass and commute with every other op;
     *  - the committed schema must match the intent's schema unless the
     *    op explicitly changes it (`allowSchemaChange`) — a maintenance
     *    op racing an [[evolveSchema]] would otherwise re-publish the old
@@ -524,7 +531,7 @@ object VersionedLake {
     * base in full: conflict detection needs the live path set.
     */
   private[graft] def commitDelta(spark: SparkSession, root: Path,
-      schema: StructType, adds: Seq[FileEntry], removes: Set[String],
+      schema: StructType, adds: Seq[FileEntry], removes: Seq[FileEntry],
       batchId: Option[Long] = None, op: String = "append",
       allowSchemaChange: Boolean = false): Long = {
     val fs = fsOf(spark, root)
@@ -534,6 +541,7 @@ object VersionedLake {
           s"table schema changed concurrently (committed " +
           s"${committed.simpleString}, op carries ${schema.simpleString})")
     val addPaths = adds.map(_.path).toSet
+    val removePaths = removes.map(_.path).toSet
     var attempt = 0
     while (attempt < 50) {
       val base = listCommits(fs, root)._1.lastOption
@@ -558,21 +566,21 @@ object VersionedLake {
               (s.files, s.lastBatchId)
             case None => (Seq.empty[FileEntry], -1L)
           }
-          val basePaths = baseFiles.iterator.map(_.path).toSet
-          val gone = removes.filterNot(basePaths)
+          val baseKeys = baseFiles.iterator.map(f => (f.path, f.dv)).toSet
+          val gone = removes.filterNot(e => baseKeys((e.path, e.dv)))
           if (gone.nonEmpty)
             sys.error(s"VersionedLake: concurrent commit conflict on $op — " +
               s"${gone.size} entries this op substitutes were already " +
-              s"removed by another commit (e.g. ${gone.head}); rerun the " +
-              "op against the new head")
+              "removed or re-tombstoned by another commit (e.g. " +
+              s"${gone.head.path}); rerun the op against the new head")
           val merged = (baseFiles.filterNot(f =>
-            removes(f.path) || addPaths(f.path)) ++ adds)
+            removePaths(f.path) || addPaths(f.path)) ++ adds)
             .sortBy(f => (f.dt, f.path))
           val hwm = math.max(prevBatch, batchId.getOrElse(-1L))
           val totals =
             (merged.length, merged.map(_.rows).sum, merged.map(_.bytes).sum)
           val ok = publishIfAbsent(fs, root, commitPath(root, v),
-            manifestText(op, schema, hwm, removes.toSeq, adds, totals))
+            manifestText(op, schema, hwm, removePaths.toSeq, adds, totals))
           if (ok && (v == 1L || v % CkptInterval == 0L)) {
             val ckpt = manifestText(op, schema, hwm, Nil, merged, totals)
             publishIfAbsent(fs, root, ckptPath(root, v), ckpt): Unit
@@ -789,7 +797,7 @@ object VersionedLake {
   private def appendInternal(df: DataFrame, path: String, tsCol: String,
       statsCols: Seq[String], batchId: Option[Long]): Long =
     commitDelta(df.sparkSession, new Path(path), df.drop("dt").schema,
-      stageAndMove(dated(df, tsCol), path, "dt", statsCols), Set.empty,
+      stageAndMove(dated(df, tsCol), path, "dt", statsCols), Nil,
       batchId, if (batchId.isDefined) "append-batch" else "append")
 
   /** `df` with its day partition column, from `tsCol`. */
@@ -851,49 +859,47 @@ object VersionedLake {
   private def relPathCol(c: org.apache.spark.sql.Column) =
     concat_ws("/", slice(split(c, "/"), -2, 2))
 
-  /** Write a deletion-vector sidecar under `_dv/` — one JSON line per
-    * file: its path and tombstoned row positions — and return its
-    * root-relative path. It is written in place: until a commit
-    * references it, it is an orphan that [[vacuum]] sweeps.
+  /** The `(path, pos)` rows of a deletion-vector sidecar. */
+  private val DvSchema = StructType.fromDDL("path STRING, pos BIGINT")
+
+  /** Write `pos`'s `(path, pos)` rows as ONE deletion-vector sidecar
+    * under `_dv/` — staged under `.vstage_dv_*`, then renamed into place
+    * — and return its root-relative path. The positions never leave the
+    * executors. Until a commit references it, the sidecar is an orphan
+    * that [[vacuum]] sweeps.
     */
-  private def writeDv(fs: FileSystem, root: Path,
-      dv: Seq[(String, Seq[Long])]): String = {
-    val rel = s"_dv/dv-${java.util.UUID.randomUUID.toString.take(12)}.json"
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val text = dv.sortBy(_._1).map { case (p, ps) =>
-      val n = om.createObjectNode()
-      n.put("path", p)
-      val a = n.putArray("pos")
-      ps.sorted.foreach(a.add(_))
-      om.writeValueAsString(n) + "\n"
-    }.mkString
-    val out = fs.create(new Path(root, rel), false)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
+  private def writeDv(spark: SparkSession, root: Path, pos: DataFrame): String = {
+    val fs = fsOf(spark, root)
+    val stage = new Path(root,
+      s".vstage_dv_${java.util.UUID.randomUUID.toString.take(8)}")
+    // one sidecar file keeps the manifest O(touched entries)
+    pos.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val part = fs.listStatus(stage)
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+    require(part.length == 1,
+      s"VersionedLake: dv sidecar stage holds ${part.length} files")
+    fs.mkdirs(new Path(root, "_dv"))
+    val rel = s"_dv/dv-${java.util.UUID.randomUUID.toString.take(12)}.parquet"
+    if (!fs.rename(part.head.getPath, new Path(root, rel)))
+      throw new java.io.IOException(
+        s"VersionedLake: rename ${part.head.getPath} -> $rel failed")
+    fs.delete(stage, true): Unit
     rel
   }
 
-  /** The tombstoned positions of the given dv'd entries, by path, read on
-    * the driver: each distinct sidecar once, keeping only the paths whose
+  /** The tombstoned `(path, pos)` rows of the given dv'd entries, as a
+    * scan: each distinct sidecar once, keeping only the paths whose
     * CURRENT entry still references it (a later compaction may have
     * materialized a sibling's tombstones out of a shared sidecar — its
-    * positions must not resurrect as someone else's deletes).
+    * positions must not resurrect as someone else's deletes). The schema
+    * is given, so no job infers it.
     */
-  private def tombstones(fs: FileSystem, base: String,
-      dvd: Seq[FileEntry]): Map[String, Seq[Long]] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    dvd.groupBy(_.dv.get).toSeq.flatMap { case (dvp, es) =>
-      val mine = es.map(_.path).toSet
-      val in = fs.open(new Path(base, dvp))
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map(om.readTree).collect {
-        case n if mine(n.get("path").asText()) =>
-          val a = n.get("pos")
-          n.get("path").asText() -> (0 until a.size).map(a.get(_).asLong())
-      }
-    }.toMap
-  }
+  private def dvFrame(spark: SparkSession, base: String,
+      dvd: Seq[FileEntry]): DataFrame =
+    dvd.groupBy(_.dv.get).toSeq.sortBy(_._1).map { case (dvp, es) =>
+      spark.read.schema(DvSchema).parquet(s"$base/$dvp")
+        .filter(col("path").isin(es.map(_.path): _*))
+    }.reduce(_.union(_))
 
   /** THE snapshot scan: read `entries` as (schema columns + their
     * partition column, as a string), with every entry's deletion vector
@@ -901,10 +907,9 @@ object VersionedLake {
     * metadata columns, no join — the hot path is untouched when no
     * tombstones exist); dv'd entries scan with `_metadata` (file path,
     * row index) and anti-join their tombstone positions — the
-    * merge-on-read contract. The tombstone side is small by construction
-    * (a dv delete that would tombstone most of a file should have been
-    * copy-on-write): the driver reads it from the sidecars and it joins
-    * as a local relation, so no job reads a sidecar.
+    * merge-on-read contract. The tombstone side is a scan of the
+    * sidecars ([[dvFrame]]); statistics/AQE size it, so a few positions
+    * broadcast and a large set shuffles — nothing is collected.
     *
     * `withMeta` keeps `_graft_file` (root-relative path) and
     * `_graft_pos` (row index) in the output — the match scans' handle
@@ -934,9 +939,7 @@ object VersionedLake {
       else Some(raw(plain, withMeta).select(outCols: _*)),
       if (dvd.isEmpty) None
       else Some {
-        val tomb = spark.createDataFrame(
-          tombstones(fsOf(spark, new Path(base)), base, dvd).toSeq
-            .flatMap { case (p, ps) => ps.map(p -> _) }).toDF("path", "pos")
+        val tomb = dvFrame(spark, base, dvd)
         raw(dvd, meta = true)
           .join(tomb, col("_graft_file") === tomb("path") &&
             col("_graft_pos") === tomb("pos"), "left_anti")
@@ -1206,8 +1209,7 @@ object VersionedLake {
     // append committed meanwhile stay live (append/compact commute);
     // a racing maintenance op over the same entries trips the commit
     // loop's conflict detection instead of resurrecting rows
-    commitDelta(spark, root, snap.schema, fresh, todo.map(_.path).toSet,
-      op = "compact")
+    commitDelta(spark, root, snap.schema, fresh, todo, op = "compact")
   }
 
   /** DELETE (the retention/right-to-erasure op a 100 TB training lake
@@ -1259,10 +1261,8 @@ object VersionedLake {
       col(bandCol) >= lo && col(bandCol) <= hi, mode)
   }
 
-  /** The cow/dv dispatch of [[deleteWhere]] and [[deleteBand]] (and of
-    * [[graft.kv.Store.del]], whose candidates are one bucket's entries).
-    */
-  private[graft] def deleteFrom(spark: SparkSession, path: String,
+  /** The cow/dv dispatch of [[deleteWhere]] and [[deleteBand]]. */
+  private def deleteFrom(spark: SparkSession, path: String,
       snap: Snapshot, candidates: Seq[FileEntry],
       predicate: org.apache.spark.sql.Column, mode: String): Long = {
     val isMatch = coalesce(predicate, lit(false)) // NULL is not a match
@@ -1276,18 +1276,21 @@ object VersionedLake {
     }
   }
 
-  /** Rewrite every touched day through [[landStaged]] (tagged `src`) on a
+  /** Rewrite every touched DAY through [[landStaged]] (tagged `src`) on a
     * bounded driver-side pool of [[DaysInFlight]] threads (Spark sessions
     * are thread-safe; each day is one small job, so overlapping them
     * keeps the cluster busy). `rewriteOne(entries)` gives a day's
     * laid-out frame, the stats columns its files record, and the rows
     * they must hold. Returns the new entries; once every day has
-    * finished, rethrows the first day's failure.
+    * finished, rethrows the first day's failure. Day-only: the files land
+    * under `dt=`, so a `bucket`-partitioned entry is refused.
     */
   private def rewriteDays(spark: SparkSession, root: Path, op: String,
       src: String, touched: Seq[FileEntry])(
       rewriteOne: Seq[FileEntry] => (DataFrame, Seq[String], Long))
       : Seq[FileEntry] = {
+    require(touched.forall(_.path.startsWith("dt=")),
+      s"VersionedLake: $op rewrites day partitions only")
     val byDay = touched.groupBy(_.dt).toSeq.sortBy(_._1)
     def landDay(day: String, entries: Seq[FileEntry]): Seq[FileEntry] = {
       val (laid, statsCols, rows) = rewriteOne(entries)
@@ -1328,8 +1331,7 @@ object VersionedLake {
         entries.flatMap(_.stats.keys).distinct,
         entries.map(e => e.rows - hits(e.path)).sum)
     }
-    commitDelta(spark, root, snap.schema, adds, touched.map(_.path).toSet,
-      op = "delete")
+    commitDelta(spark, root, snap.schema, adds, touched, op = "delete")
   }
 
   /** MERGE-ON-READ removal (deletion vectors — the Delta/Iceberg answer
@@ -1339,8 +1341,10 @@ object VersionedLake {
     * into a whole-file rewrite), the ROW POSITIONS `matched` selects from
     * the dv-applied scan of `candidates` are recorded in one tombstone
     * sidecar under `_dv/` and each touched entry is re-published pointing
-    * at it; the positions come to the driver, which counts them per
-    * file and writes the sidecar. `extra`'s entries (the upsert's landed
+    * at it. The positions stay on the executors: one job pins them, one
+    * counts them per file — only those O(touched files) counts reach the
+    * driver — and one writes the sidecar ([[writeDv]]). `extra`'s
+    * entries (the upsert's landed
     * batch) publish in the SAME commit, so no snapshot holds both row
     * versions of an updated key; nothing commits when both are empty.
     * The commit is O(matches) sidecar bytes + O(touched entries)
@@ -1359,42 +1363,52 @@ object VersionedLake {
     * stays the LIVE count; `stats` keep their (conservative, sound)
     * pre-delete bounds until a compaction tightens them.
     */
-  private def deleteVectors(spark: SparkSession, path: String,
+  private[graft] def deleteVectors(spark: SparkSession, path: String,
       snap: Snapshot, candidates: Seq[FileEntry], op: String,
       matched: DataFrame => DataFrame,
       extra: Seq[FileEntry] = Nil): Long = {
     val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val base = fs.makeQualified(root).toString
-    // one job: (file, position) of every NEW tombstone — the scan is
-    // dv-applied, so already-deleted rows never re-match
-    val hits: Map[String, Seq[Long]] =
-      if (candidates.isEmpty) Map.empty
-      else matched(scanEntries(spark, base, snap.schema, candidates,
-          withMeta = true))
-        .select(col("_graft_file"), col("_graft_pos")).collect()
-        .groupBy(_.getString(0))
-        .map { case (p, rs) => p -> rs.map(_.getLong(1)).toSeq }
-    val touched = candidates.filter(e => hits.contains(e.path))
-    // fully tombstoned entries are dropped outright
-    val kept = touched.filter(e => e.rows > hits(e.path).size)
-    val dvAdds =
-      if (kept.isEmpty) Nil
+    val base = fsOf(spark, root).makeQualified(root).toString
+    val (touched, dvAdds) =
+      if (candidates.isEmpty) (Nil, Nil)
       else {
-        // prior tombstones of the kept files fold into the NEW sidecar
-        // (one dv reference per entry, ever); untouched dv'd files keep
-        // referencing their old sidecar — [[tombstones]] filters per
-        // entry, so a shared sidecar serving both stays exact
-        val prior = tombstones(fs, base, kept.filter(_.dv.isDefined))
-        val dv = writeDv(fs, root, kept.map(e =>
-          e.path -> (prior.getOrElse(e.path, Nil) ++ hits(e.path))))
-        kept.map(e =>
-          e.copy(rows = e.rows - hits(e.path).size, dv = Some(dv), src = op))
+        // (file, position) of every NEW tombstone — the scan is
+        // dv-applied, so already-deleted rows never re-match. Pinned on
+        // the executors: it feeds both the counts and the sidecar.
+        val pos = matched(scanEntries(spark, base, snap.schema, candidates,
+            withMeta = true))
+          .select(col("_graft_file").as("path"), col("_graft_pos").as("pos"))
+          .localCheckpoint()
+        try {
+          // per-file counts: each task counts its own rows and the driver
+          // merges the O(touched files × tasks) pairs — no exchange
+          val hits = pos.select(col("path")).rdd.mapPartitions { rows =>
+            val n = scala.collection.mutable.HashMap.empty[String, Long]
+            rows.foreach(r => n(r.getString(0)) = n.getOrElse(r.getString(0), 0L) + 1L)
+            n.iterator
+          }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+          val touched = candidates.filter(e => hits.contains(e.path))
+          // fully tombstoned entries are dropped outright
+          val kept = touched.filter(e => e.rows > hits(e.path))
+          if (kept.isEmpty) (touched, Nil)
+          else {
+            // prior tombstones of the kept files fold into the NEW sidecar
+            // (one dv reference per entry, ever); untouched dv'd files
+            // keep referencing their old sidecar — [[dvFrame]] filters per
+            // entry, so a shared sidecar serving both stays exact (a
+            // dropped entry's positions ride along unreferenced the same
+            // way)
+            val prior = kept.filter(_.dv.isDefined)
+            val dv = writeDv(spark, root,
+              if (prior.isEmpty) pos else pos.union(dvFrame(spark, base, prior)))
+            (touched, kept.map(e =>
+              e.copy(rows = e.rows - hits(e.path), dv = Some(dv), src = op)))
+          }
+        } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(pos)
       }
     val adds = dvAdds ++ extra
     if (touched.isEmpty && adds.isEmpty) snap.version
-    else commitDelta(spark, root, snap.schema, adds,
-      touched.map(_.path).toSet, op = op)
+    else commitDelta(spark, root, snap.schema, adds, touched, op = op)
   }
 
   /** ADOPT an existing [[Partitioned]]-layout day tree into a commit log,
@@ -1426,7 +1440,7 @@ object VersionedLake {
     val schema = spark.read.option("basePath", base).parquet(base)
       .drop("dt").schema
     val entries = entriesOf(spark, base, found, schema, statsCols, "import")
-    commitDelta(spark, root, schema, entries, Set.empty, op = "import",
+    commitDelta(spark, root, schema, entries, Nil, op = "import",
       allowSchemaChange = true)
   }
 
@@ -1449,8 +1463,7 @@ object VersionedLake {
     // tombstone reference, which is a remove+add of the same path
     val targetKeys = target.files.map(f => (f.path, f.dv)).toSet
     val headKeys = head.files.map(f => (f.path, f.dv)).toSet
-    val removes = head.files
-      .filterNot(f => targetKeys((f.path, f.dv))).map(_.path).toSet
+    val removes = head.files.filterNot(f => targetKeys((f.path, f.dv)))
     val adds = target.files.filterNot(f => headKeys((f.path, f.dv)))
     commitDelta(spark, root, target.schema, adds, removes,
       op = s"restore-v$version", allowSchemaChange = true)
@@ -1477,7 +1490,7 @@ object VersionedLake {
       s"evolveSchema: column(s) ${dup.mkString(", ")} already exist")
     val evolved = StructType(
       snap.schema.fields ++ addColumns.map(_.copy(nullable = true)))
-    commitDelta(spark, root, evolved, Nil, Set.empty,
+    commitDelta(spark, root, evolved, Nil, Nil,
       op = "evolve-schema", allowSchemaChange = true)
   }
 
@@ -1501,7 +1514,9 @@ object VersionedLake {
     *    is not tombstoned — scope only when key placement is day-stable;
     *  - the key-set join is UNHINTED: statistics/AQE size the build
     *    side, so a compact CDC batch broadcasts itself and a fat backfill
-    *    frame degrades to a shuffle join instead of OOMing the driver.
+    *    frame degrades to a shuffle join instead of OOMing the driver;
+    *    the positions it shadows stay on the executors too (only per-file
+    *    counts are collected — see [[deleteVectors]]).
     *
     * Older versions keep the pre-image — the CDC audit trail; [[compact]]
     * materializes the tombstones.

@@ -322,6 +322,13 @@ object ScaleSmoke {
       println(s"[scale]   point-get files scanned: ${scanned.mkString(",")} (gid holds 32 buckets)")
       n
     }
+    // a large merge-on-read batch: every key is shadowed, so the put
+    // tombstones one row per key — positions must stay on the executors
+    time(s"store re-put docs x$factor") {
+      store.put(docs.withColumn("text", upper(col("text"))), "docs",
+        keyCol = Some("doc_id"))
+      store.scan("docs").count()
+    }
 
     val emb = scaled(spark, dir, "embeddings", Seq("vec_id"), factor)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))

@@ -22,8 +22,9 @@ import graft.sources.VersionedLake
   *
   * The key writes and the point read run against a small store gid and
   * a small two-day lake, each built fresh for the call. Their budgets are
-  * the counts of the merge-on-read protocol (pin, bounds, match, sidecar,
-  * landed files and their stats); a probe that comes back as its own job
+  * the counts of the merge-on-read protocol (the batch pin and its bounds,
+  * the landed files and their stats, the match pin, its per-file counts
+  * and the sidecar write); a probe that comes back as its own job
   * (a bucket hashed by a query, a per-bucket emptiness check) breaks
   * them.
   */
@@ -110,14 +111,14 @@ class JobBudgetSpec extends SparkSessionSpec {
 
   /** (name, budget, set-up returning the measured call). */
   private val writes: Seq[(String, Int, () => () => Unit)] = Seq(
-    ("Store.put", 8, () => {
+    ("Store.put", 10, () => {
       val s = store(); () => s.put(kv(35 until 45, "w"), "g", Some("id"))
     }),
     ("Store.get", 1, () => {
       val s = store(); () => s.get("g", "7").collect(): Unit
     }),
-    ("Store.del", 1, () => { val s = store(); () => s.del("g", "7") }),
-    ("VersionedLake.upsert", 8, () => {
+    ("Store.del", 3, () => { val s = store(); () => s.del("g", "7") }),
+    ("VersionedLake.upsert", 10, () => {
       val p = lake()
       () => VersionedLake.upsert(events(8 until 14, 100.0), p, key = "event_id"): Unit
     }))

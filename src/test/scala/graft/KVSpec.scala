@@ -166,6 +166,38 @@ class KVSpec extends SparkSessionSpec {
     assert(buckets.forall(b => b.stripPrefix("bucket=").toInt < 4))
   }
 
+  test("a gid dir of the unversioned layout fails loudly and keeps its files") {
+    val store = new Store(spark, freshRoot())
+    // the two older layouts: part files at the gid root, and bucket dirs
+    // beside a bucket-count marker — data, but no commit log
+    Seq(("1", "alpha"), ("2", "beta")).toDF("key", "value")
+      .write.parquet(s"${store.rootDir}/flat")
+    Seq(("1", "alpha", 0), ("2", "beta", 3)).toDF("key", "value", "bucket")
+      .write.partitionBy("bucket").parquet(s"${store.rootDir}/bucketed")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"${store.rootDir}/bucketed/_graft_buckets"), "4")
+    def files(gid: String): Set[String] = {
+      val root = java.nio.file.Paths.get(s"${store.rootDir}/$gid")
+      val w = java.nio.file.Files.walk(root)
+      try w.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString).toArray.map(_.toString).toSet
+      finally w.close()
+    }
+    for (gid <- Seq("flat", "bucketed")) {
+      val before = files(gid)
+      val ops: Seq[(String, () => Unit)] = Seq(
+        "get" -> (() => store.get(gid, "1").count(): Unit),
+        "put" -> (() => store.put(Seq((3L, "c")).toDF("id", "v"), gid, Some("id"))),
+        "del" -> (() => store.del(gid, "1")),
+        "reconf" -> (() => store.reconf(gid, 4)))
+      for ((name, op) <- ops) {
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains("no commit log"), s"$gid $name: ${e.getMessage}")
+        assert(files(gid) === before, s"$gid $name touched the files")
+      }
+    }
+  }
+
   test("store roots on an explicit file:-scheme URI (Hadoop FS control plane)") {
     // The proof the control plane (commit log, staged-file moves,
     // tombstone sidecars) goes through org.apache.hadoop.fs.FileSystem:

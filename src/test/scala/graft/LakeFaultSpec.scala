@@ -247,8 +247,8 @@ class LakeFaultSpec extends SparkSessionSpec {
 
   test("deleteWhere (deletion vectors): a crash at any create/rename/delete " +
       "leaves readers on the old or the new rows, and the replay deletes once") {
-    // a dv delete is one sidecar and one commit: padded so that its commit
-    // also publishes a checkpoint, it has more crash points than the bound
+    // padded so that its commit also publishes a checkpoint: the crash
+    // points cover the checkpoint's publish too
     val base = padToCheckpoint(twoAppends())
     val doomed = col("value") > 9.0
     val after = rows(VersionedLake.read(spark, base).filter(!doomed))
@@ -370,6 +370,8 @@ class LakeFaultSpec extends SparkSessionSpec {
   test("Store.del: a crash at any create/rename/delete leaves readers with " +
       "or without the key, and the replay deletes it once") {
     val base = storeBase()
+    // padded like the lake's dv delete: the crash points cover the
+    // checkpoint's publish too
     padToCheckpoint(s"$base/$Gid")
     val after = kvRows(new Store(spark, base, 4).scan(Gid).filter(col("key") =!= "5"))
     crashEveryStep(base,

@@ -476,19 +476,59 @@ class VersionedLakeSpec extends SparkSessionSpec {
     // winner: a (simulated) maintenance commit removes `victim`
     VersionedLake.commitDelta(spark,
       new org.apache.hadoop.fs.Path(d), snap.schema,
-      adds = Nil, removes = Set(victim.path), op = "delete")
+      adds = Nil, removes = Seq(victim), op = "delete")
     // loser: a second maintenance op replayed against the new base must
     // see its read-set gone and abort LOUDLY (pre-fix it re-published
     // rewrites carrying the winner's removed rows)
     val e = intercept[RuntimeException] {
       VersionedLake.commitDelta(spark,
         new org.apache.hadoop.fs.Path(d), snap.schema,
-        adds = Nil, removes = Set(victim.path), op = "compact")
+        adds = Nil, removes = Seq(victim), op = "compact")
     }
     assert(e.getMessage.contains("conflict"), e.getMessage)
     // appends (removes = ∅) still commute freely after the near-miss
     VersionedLake.append(ev.limit(0), d) // schema-matching empty append
     assert(VersionedLake.read(spark, d).count() === ev.count() - victim.rows)
+  }
+
+  test("conflict DETECTION on deletion vectors: a merge-on-read write " +
+      "planned on a snapshot whose file was re-tombstoned since ABORTS " +
+      "instead of dropping the winner's tombstones") {
+    import spark.implicits._
+    val d = freshRoot()
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def rows(vs: (Long, Double)*) =
+      vs.map { case (k, v) => (k, ts, v) }.toDF("event_id", "ts", "value")
+    VersionedLake.append(rows((1L, 1.0), (2L, 2.0), (3L, 3.0), (4L, 4.0)), d)
+    val stale = VersionedLake.snapshot(spark, d)
+    assert(stale.files.length === 1)
+    // winner: an upsert re-publishes the one file with a deletion vector
+    VersionedLake.upsert(rows((1L, 10.0), (2L, 20.0)), d, key = "event_id")
+    val won = VersionedLake.read(spark, d).collect().map(r =>
+      r.getLong(0) -> r.getDouble(2)).toMap
+    assert(won === Map(1L -> 10.0, 2L -> 20.0, 3L -> 3.0, 4L -> 4.0))
+    // losers, planned on the stale snapshot: the file's path is still
+    // live, but under the winner's vector — replaying would publish a
+    // vector without the winner's tombstones and resurrect keys 1 and 2
+    val e1 = intercept[RuntimeException] {
+      VersionedLake.mergeByKey(stale,
+        rows((1L, 100.0), (3L, 300.0)).withColumn("dt", lit("2024-01-01")),
+        d, "event_id", "dt", Nil)((_, _, _) => stale.files)
+    }
+    assert(e1.getMessage.contains("conflict"), e1.getMessage)
+    val e2 = intercept[RuntimeException] {
+      VersionedLake.deleteVectors(spark, d, stale, stale.files, "delete-dv",
+        _.filter(col("event_id") === 4L))
+    }
+    assert(e2.getMessage.contains("conflict"), e2.getMessage)
+    // ... and compaction is the same hazard on the copy-on-write side
+    val e3 = intercept[RuntimeException] {
+      VersionedLake.commitDelta(spark, new org.apache.hadoop.fs.Path(d),
+        stale.schema, adds = Nil, removes = stale.files, op = "compact")
+    }
+    assert(e3.getMessage.contains("conflict"), e3.getMessage)
+    assert(VersionedLake.read(spark, d).collect().map(r =>
+      r.getLong(0) -> r.getDouble(2)).toMap === won)
   }
 
   test("vacuum self-contains the oldest retained version with a " +
@@ -981,6 +1021,41 @@ class VersionedLakeSpec extends SparkSessionSpec {
     assert(VersionedLake.read(spark, d).count() ===
       base + 4 * sliceN - removed,
       "the head must be exactly the winners' serial union")
+    snapshotFilesExist(d)
+
+    // RACE 5: two upserts whose keys share a file — each re-publishes
+    // that file under its own deletion vector, so either one aborts on
+    // conflict or they serialized; either way no key holds two rows and
+    // every key carries a winner's value
+    val shared = VersionedLake.snapshot(spark, d).files.find(_.dv.isEmpty).get
+    val picked = spark.read.parquet(s"$d/${shared.path}")
+      .orderBy("event_id").limit(3).collect()
+    val Seq(k1, k2, k3) = picked.toSeq.map(_.getAs[Long]("event_id"))
+    val orig = picked.map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
+    def bump(keys: Seq[Long], by: Double) = spark.createDataFrame(
+      java.util.Arrays.asList(picked.filter(r =>
+        keys.contains(r.getAs[Long]("event_id"))).toSeq: _*), picked.head.schema)
+      .withColumn("value", col("value") + by)
+    val before = VersionedLake.read(spark, d).count()
+    val r5 = raceOps(Seq(
+      () => VersionedLake.upsert(bump(Seq(k1, k2), 1.0), d, key = "event_id"),
+      () => VersionedLake.upsert(bump(Seq(k1, k3), 2.0), d, key = "event_id")))
+    assert(r5.exists(_.isRight), s"both upserts aborted: $r5")
+    r5.collect { case Left(t) =>
+      assert(t.getMessage.contains("conflict"),
+        s"loser must abort on CONFLICT, not: ${t.getMessage}")
+    }
+    val head = VersionedLake.read(spark, d)
+    assert(head.count() === before)
+    assert(head.select("event_id").distinct().count() === before,
+      "a racing upsert left a key with two rows")
+    val got = head.filter(col("event_id").isin(k1, k2, k3)).collect()
+      .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
+    val (aWon, bWon) = (r5.head.isRight, r5(1).isRight)
+    assert(got(k2) === orig(k2) + (if (aWon) 1.0 else 0.0))
+    assert(got(k3) === orig(k3) + (if (bWon) 2.0 else 0.0))
+    val k1Winners = Seq(aWon -> 1.0, bWon -> 2.0).collect { case (true, b) => orig(k1) + b }
+    assert(k1Winners.contains(got(k1)), s"key $k1 holds ${got(k1)}")
     snapshotFilesExist(d)
   }
 
