@@ -2,7 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Engine.table
 import graft.streaming.EventStream
@@ -397,39 +399,151 @@ class StreamingSpec extends SparkSessionSpec {
     assert(fromShards === merged)
   }
 
-  test("streaming transition fold == batch lag matrix under in-order splits (s11)") {
-    import graft.streaming.TransitionStream
-    val events = table(spark, sfDir, "events")
-    val batch = TransitionStream.transitionMatrix(events)
-      .collect().map(_.toSeq).toSet
+  /** One arrival `(user_id, ts_us, event_id, event_type, value)`: the
+    * row every ordered per-user fold (s11–s14) reads a projection of.
+    */
+  private type Arrival = (Long, Long, Long, String, Double)
 
-    val mem = MemoryStream[(Long, Long, Long, String)](spark)
-    val streamDf = mem.toDF()
-      .toDF("user_id", "ts_us", "event_id", "event_type")
-    // in-order arrival (the documented contract), split across batches
-    val rows = TransitionStream.transEvents(events).collect()
-      .sortBy(e => (e.ts_us, e.event_id))
-      .map(e => (e.user_id, e.ts_us, e.event_id, e.event_type))
-    val thirds = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val out = TransitionStream.userTransitions(
-      streamDf.as[TransitionStream.TransEvent])
-    val q = out.writeStream.outputMode("update")
-      .format("memory").queryName("s11_out").start()
-    thirds.foreach { part =>
-      mem.addData(part.toSeq)
+  /** An ordered per-user fold under test: its stream form over an
+    * arrival frame, the columns whose latest Update emission is a user's
+    * final state, the merge of those rows, and the batch form the merge
+    * must equal.
+    */
+  private case class OrderedFoldCase(name: String,
+      stream: DataFrame => DataFrame, stateKey: Seq[String],
+      merge: DataFrame => DataFrame, batch: DataFrame => DataFrame)
+
+  private val orderedFolds = {
+    import graft.streaming.{AttributionStream, BurstStream, GapStream,
+      TransitionStream}
+    def cols(a: DataFrame, names: String*) = a.select(names.map(col): _*)
+    Seq(
+      OrderedFoldCase("s11",
+        a => TransitionStream.userTransitions(
+          cols(a, "user_id", "ts_us", "event_id", "event_type")
+            .as[TransitionStream.TransEvent]).toDF(),
+        Seq("user_id", "from_type", "to_type"),
+        TransitionStream.matrixFromUsers, TransitionStream.transitionMatrix),
+      OrderedFoldCase("s12",
+        a => AttributionStream.userAttributions(
+          a.as[AttributionStream.AttrEvent]).toDF(),
+        Seq("user_id", "touch_type"),
+        AttributionStream.reportFromUsers,
+        AttributionStream.lastTouchAttribution),
+      OrderedFoldCase("s13",
+        a => GapStream.userGaps(cols(a, "user_id", "ts_us", "event_id")
+          .as[GapStream.GapEvent]).toDF(),
+        Seq("user_id", "gap_bucket"),
+        GapStream.histogramFromUsers, GapStream.gapHistogram),
+      OrderedFoldCase("s14",
+        a => BurstStream.userBursts(cols(a, "user_id", "ts_us", "event_id")
+          .as[BurstStream.BurstEvent]).toDF(),
+        Seq("user_id"),
+        _.select("user_id", "max_burst"),
+        BurstStream.burstBatch(_).select("user_id", "max_burst")))
+  }
+
+  private def orderedFold(name: String) = orderedFolds.find(_.name == name).get
+
+  private def arrivalsOf(events: DataFrame): Seq[Arrival] =
+    events.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("event_id"), col("event_type"), col("value"))
+      .as[Arrival].collect().toSeq
+
+  /** Arrivals as the batch forms read them (`ts` back from `ts_us`). */
+  private def arrivalFrame(rows: Seq[Arrival]): DataFrame =
+    rows.toDF("user_id", "ts_us", "event_id", "event_type", "value")
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+
+  /** Streams `batches` through `f`, one micro-batch each. Returns the
+    * merge of every user's final emission and the late events the
+    * fold's state counted (read back from the checkpoint).
+    */
+  private def runOrdered(f: OrderedFoldCase, batches: Seq[Seq[Arrival]],
+      queryName: String): (Set[Seq[Any]], Long) = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ordered").toString
+    val mem = MemoryStream[Arrival](spark)
+    val q = f.stream(mem.toDF()
+        .toDF("user_id", "ts_us", "event_id", "event_type", "value"))
+      .writeStream.outputMode("update").option("checkpointLocation", ckpt)
+      .format("memory").queryName(queryName).start()
+    try batches.foreach { b =>
+      mem.addData(b)
       q.processAllAvailable()
-    }
-    q.stop()
-    // last emission per (user, from, to) is the quiet-period state
-    val sink = spark.table("s11_out")
-      .withColumn("__seq", monotonically_increasing_id())
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"), col("from_type"), col("to_type"))
+    } finally q.stop()
+    // update mode re-emits a user each batch it is touched in: the LAST
+    // emission per state key is the quiet-period state
+    val w = Window.partitionBy(f.stateKey.map(col): _*)
       .orderBy(col("__seq").desc)
-    val finalUsers = sink.withColumn("__rn", row_number().over(w))
+    val finalUsers = spark.table(queryName)
+      .withColumn("__seq", monotonically_increasing_id())
+      .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__seq", "__rn")
-    val got = TransitionStream.matrixFromUsers(finalUsers)
-      .collect().map(_.toSeq).toSet
+    val late = spark.read.format("statestore").load(ckpt)
+      .agg(coalesce(sum(col("value.groupState.lateDropped")), lit(0L))).head().getLong(0)
+    (f.merge(finalUsers).collect().map(_.toSeq).toSet, late)
+  }
+
+  test("ordered folds: in-order splits, in-batch ties and late regressions == batch (s11-s14)") {
+    // seeded in-order arrival: 8 users on a half-second grid, so users
+    // repeat ts_us values and their gaps span the 60 s burst window;
+    // batches of 1..16 events, a third of them single events
+    val r = new scala.util.Random(11L)
+    val types = Vector("view", "click", "signup", "purchase")
+    val seeded = (1 to 60).map { i =>
+      (r.nextInt(8).toLong, r.nextInt(400) * 500000L, i.toLong,
+        types(r.nextInt(types.length)), r.nextInt(10000) / 100.0)
+    }.sortBy(a => (a._2, a._3))
+    val splits = Iterator.unfold(seeded) { rest =>
+      Option.when(rest.nonEmpty)(
+        rest.splitAt(if (r.nextInt(3) == 0) 1 else 1 + r.nextInt(16)))
+    }.toSeq
+    // one batch in reverse (ts, event_id) order with equal ts_us, where
+    // event_id alone orders the user's events; the next batch repeats
+    // the last folded ts_us with a higher event_id, which is not late
+    val ties = Seq[Arrival]((2L, 9000000L, 6L, "purchase", 1.25),
+      (2L, 2000000L, 5L, "view", 0.0), (2L, 2000000L, 4L, "signup", 0.0),
+      (1L, 5000000L, 3L, "purchase", 4.5), (1L, 5000000L, 2L, "click", 0.0),
+      (1L, 5000000L, 1L, "view", 0.0))
+    val tieNext = Seq[Arrival]((1L, 5000000L, 7L, "signup", 0.0),
+      (1L, 5000000L, 8L, "purchase", 3.0))
+    // older than the last folded event (t=3 s, id 3): refused and counted
+    val lateOnes = Seq[Arrival]((7L, 2000000L, 2L, "purchase", 9.5),
+      (7L, 3000000L, 0L, "view", 0.0))
+    val lateRun = Seq(
+      Seq[Arrival]((7L, 1000000L, 1L, "click", 0.0),
+        (7L, 3000000L, 3L, "view", 0.0)),
+      lateOnes,
+      Seq[Arrival]((7L, 4000000L, 4L, "purchase", 2.25)))
+    // an empty-string type is a type like any other: it is a transition
+    // endpoint and a touch (not "no touch yet", which credits 'direct')
+    val empty = Seq(
+      Seq[Arrival]((1L, 1000000L, 1L, "", 0.0), (2L, 1000000L, 2L, "view", 0.0),
+        (3L, 1000000L, 3L, "", 0.0)),
+      Seq[Arrival]((1L, 2000000L, 4L, "click", 0.0), (2L, 2000000L, 5L, "", 0.0),
+        (1L, 3000000L, 6L, "purchase", 5.0), (2L, 3000000L, 7L, "purchase", 6.0),
+        (3L, 2000000L, 8L, "purchase", 7.0)))
+    val cases = Seq(
+      ("seeded splits", splits, seeded, 0L),
+      ("reversed in-batch ties", Seq(ties, tieNext), ties ++ tieNext, 0L),
+      ("late regression", lateRun, lateRun.flatten.diff(lateOnes), 2L),
+      ("empty event type", empty, empty.flatten, 0L))
+    for (((name, batches, folded, late), i) <- cases.zipWithIndex;
+         f <- orderedFolds) withClue(s"${f.name} / $name: ") {
+      val (got, dropped) = runOrdered(f, batches, s"ordered_${f.name}_$i")
+      assert(got === f.batch(arrivalFrame(folded)).collect().map(_.toSeq).toSet)
+      assert(dropped === late)
+    }
+  }
+
+  test("streaming transition fold == batch lag matrix under in-order splits (s11)") {
+    val f = orderedFold("s11")
+    val events = table(spark, sfDir, "events")
+    val batch = f.batch(events).collect().map(_.toSeq).toSet
+    // in-order arrival (the documented contract), split across batches
+    val rows = arrivalsOf(events).sortBy(a => (a._2, a._3))
+    val thirds = rows.grouped(math.max(rows.length / 3, 1)).toSeq
+    val (got, _) = runOrdered(f, thirds, "s11_out")
     assert(got === batch)
   }
 
@@ -455,36 +569,13 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("streaming attribution fold == batch window form under in-order splits (s12)") {
-    import graft.streaming.AttributionStream
+    val f = orderedFold("s12")
     val events = table(spark, sfDir, "events")
-    val batch = AttributionStream.lastTouchAttribution(events)
-      .collect().map(_.toSeq).toSet
-
-    val mem = MemoryStream[(Long, Long, Long, String, Double)](spark)
-    val streamDf = mem.toDF()
-      .toDF("user_id", "ts_us", "event_id", "event_type", "value")
-    val rows = AttributionStream.attrEvents(events).collect()
-      .sortBy(e => (e.ts_us, e.event_id))
-      .map(e => (e.user_id, e.ts_us, e.event_id, e.event_type, e.value))
+    val batch = f.batch(events).collect().map(_.toSeq).toSet
+    // in-order arrival (the documented contract), split across batches
+    val rows = arrivalsOf(events).sortBy(a => (a._2, a._3))
     val thirds = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val out = AttributionStream.userAttributions(
-      streamDf.as[AttributionStream.AttrEvent])
-    val q = out.writeStream.outputMode("update")
-      .format("memory").queryName("s12_out").start()
-    thirds.foreach { part =>
-      mem.addData(part.toSeq)
-      q.processAllAvailable()
-    }
-    q.stop()
-    val sink = spark.table("s12_out")
-      .withColumn("__seq", monotonically_increasing_id())
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"), col("touch_type"))
-      .orderBy(col("__seq").desc)
-    val finalUsers = sink.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__seq", "__rn")
-    val got = AttributionStream.reportFromUsers(finalUsers)
-      .collect().map(_.toSeq).toSet
+    val (got, _) = runOrdered(f, thirds, "s12_out")
     assert(got === batch)
   }
 
@@ -514,67 +605,24 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("streaming gap fold == batch lag histogram under in-order splits (s13)") {
-    import graft.streaming.GapStream
+    val f = orderedFold("s13")
     val events = table(spark, sfDir, "events")
-    val batch = GapStream.gapHistogram(events)
-      .collect().map(_.toSeq).toSet
-
-    val mem = MemoryStream[(Long, Long, Long)](spark)
-    val streamDf = mem.toDF().toDF("user_id", "ts_us", "event_id")
-    val rows = GapStream.gapEvents(events).collect()
-      .sortBy(e => (e.ts_us, e.event_id))
-      .map(e => (e.user_id, e.ts_us, e.event_id))
+    val batch = f.batch(events).collect().map(_.toSeq).toSet
+    // in-order arrival (the documented contract), split across batches
+    val rows = arrivalsOf(events).sortBy(a => (a._2, a._3))
     val thirds = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val out = GapStream.userGaps(streamDf.as[GapStream.GapEvent])
-    val q = out.writeStream.outputMode("update")
-      .format("memory").queryName("s13_out").start()
-    thirds.foreach { part =>
-      mem.addData(part.toSeq)
-      q.processAllAvailable()
-    }
-    q.stop()
-    val sink = spark.table("s13_out")
-      .withColumn("__seq", monotonically_increasing_id())
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"), col("gap_bucket"))
-      .orderBy(col("__seq").desc)
-    val finalUsers = sink.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__seq", "__rn")
-    val got = GapStream.histogramFromUsers(finalUsers)
-      .collect().map(_.toSeq).toSet
+    val (got, _) = runOrdered(f, thirds, "s13_out")
     assert(got === batch)
   }
 
   test("streaming burst fold == batch RANGE-window max under in-order splits (s14)") {
-    import graft.streaming.BurstStream
+    val f = orderedFold("s14")
     val events = table(spark, sfDir, "events")
-    val batch = BurstStream.burstBatch(events)
-      .select("user_id", "max_burst")
-      .as[(Long, Long)].collect().toSet
-
-    val mem = MemoryStream[(Long, Long, Long)](spark)
-    val streamDf = mem.toDF().toDF("user_id", "ts_us", "event_id")
-    val rows = BurstStream.burstEvents(events).collect()
-      .sortBy(e => (e.ts_us, e.event_id))
-      .map(e => (e.user_id, e.ts_us, e.event_id))
+    val batch = f.batch(events).collect().map(_.toSeq).toSet
+    // in-order arrival (the documented contract), split across batches
+    val rows = arrivalsOf(events).sortBy(a => (a._2, a._3))
     val thirds = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val out = BurstStream.userBursts(streamDf.as[BurstStream.BurstEvent])
-    val q = out.writeStream.outputMode("update")
-      .format("memory").queryName("s14_out").start()
-    thirds.foreach { part =>
-      mem.addData(part.toSeq)
-      q.processAllAvailable()
-    }
-    q.stop()
-    // latest emission per user is the final state
-    val sink = spark.table("s14_out")
-      .withColumn("__seq", monotonically_increasing_id())
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("__seq").desc)
-    val got = sink.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select("user_id", "max_burst")
-      .as[(Long, Long)].collect().toSet
+    val (got, _) = runOrdered(f, thirds, "s14_out")
     assert(got === batch)
   }
 
