@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
 /** Last-touch revenue attribution maintained on the stream: each
@@ -21,35 +20,22 @@ import org.apache.spark.sql.types.DecimalType
   * integer sums equal the batch form's decimal sums bit-for-bit, and
   * only the final report divides into a double.
   *
-  * Ordering: within a micro-batch events sort by (ts, event_id); across
-  * batches the fold trusts arrival order but REFUSES regressions into
-  * `n_late_dropped` (the s11 contract). Under in-order arrival the
+  * Ordering: [[OrderedFold]]'s contract — a late purchase is refused
+  * instead of being credited backward, and under in-order arrival the
   * quiet-period state equals the batch window form
   * [[lastTouchAttribution]].
   */
 object AttributionStream {
 
   case class AttrEvent(user_id: Long, ts_us: Long, event_id: Long,
-      event_type: String, value: Double)
-
-  /** Flat state (the StatsStream encoder lesson): parallel key/count/
-    * micros seqs, not a Map.
-    */
-  case class AttrState(lastTs: Long, lastEid: Long, lastTouch: String,
-      keys: Seq[String], counts: Seq[Long], micros: Seq[Long],
-      lateDropped: Long)
+      event_type: String, value: Double) extends OrderedFold.Event
 
   case class UserAttribution(user_id: Long, touch_type: String,
       n: Long, value_micros: Long)
 
   /** Shared projection both forms consume. */
-  def attrEvents(df: DataFrame): Dataset[AttrEvent] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
-        col("event_id"), col("event_type"), col("value"))
-      .as[AttrEvent]
-  }
+  def attrEvents(df: DataFrame): Dataset[AttrEvent] =
+    OrderedFold.events[AttrEvent](df, "event_type", "value")
 
   /** The exact integer-micros image of Spark's double→DECIMAL(18,6)
     * cast (java BigDecimal HALF_UP at scale 6 — what Catalyst's Cast
@@ -66,43 +52,25 @@ object AttributionStream {
       .unscaledValue().longValueExact()
 
   /** Streaming fold: per-user attribution counters, re-emitted for
-    * touched users each micro-batch (Update mode).
+    * touched users each micro-batch (Update mode). The accumulator is the
+    * current touch (None until a non-purchase event folds) and the
+    * touch → (purchases, value micros) counters.
     */
-  def userAttributions(events: Dataset[AttrEvent]): Dataset[UserAttribution] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, UserAttribution](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        case (uid, it, state: GroupState[AttrState]) =>
-          var s = state.getOption.getOrElse(
-            AttrState(Long.MinValue, Long.MinValue, "", Seq.empty,
-              Seq.empty, Seq.empty, 0L))
-          val cnt = scala.collection.mutable.LinkedHashMap.from(
-            s.keys.zip(s.counts))
-          val mic = scala.collection.mutable.LinkedHashMap.from(
-            s.keys.zip(s.micros))
-          var (lt, le, touch, late) =
-            (s.lastTs, s.lastEid, s.lastTouch, s.lateDropped)
-          it.toVector.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            if (e.ts_us < lt || (e.ts_us == lt && e.event_id < le)) late += 1
-            else {
-              if (e.event_type == "purchase") {
-                val k = if (touch.isEmpty) "direct" else touch
-                cnt.update(k, cnt.getOrElse(k, 0L) + 1L)
-                mic.update(k, mic.getOrElse(k, 0L) + toMicros(e.value))
-              } else touch = e.event_type
-              lt = e.ts_us; le = e.event_id
-            }
-          }
-          s = AttrState(lt, le, touch, cnt.keys.toSeq, cnt.values.toSeq,
-            cnt.keys.toSeq.map(k => mic.getOrElse(k, 0L)), late)
-          state.update(s)
-          cnt.iterator.map { case (k, n) =>
-            UserAttribution(uid, k, n, mic.getOrElse(k, 0L))
-          }
+  def userAttributions(events: Dataset[AttrEvent]): Dataset[UserAttribution] =
+    OrderedFold.fold(events,
+        (Option.empty[String], Map.empty[String, (Long, Long)])) {
+      case ((touch, credit), _, e) =>
+        if (e.event_type != "purchase") (Some(e.event_type), credit)
+        else {
+          val k = touch.getOrElse("direct")
+          val (n, micros) = credit.getOrElse(k, (0L, 0L))
+          (touch, credit.updated(k, (n + 1L, micros + toMicros(e.value))))
+        }
+    } { case (uid, (_, credit)) =>
+      credit.iterator.map { case (k, (n, micros)) =>
+        UserAttribution(uid, k, n, micros)
       }
-  }
+    }
 
   /** Merge per-user rows to the corpus attribution report. Micros sum as
     * integers; the single double division happens at report time.
@@ -136,7 +104,4 @@ object AttributionStream {
       .select(col("touch_type"), col("n_purchases"),
         round(col("__v").cast("double"), 6).as("attributed_value"))
   }
-
-  /** The sink mode [[userAttributions]] needs. */
-  val outputMode: OutputMode = OutputMode.Update()
 }

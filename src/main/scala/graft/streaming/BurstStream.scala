@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Burst (rate-spike) detection maintained on the stream: per user, the
   * maximum number of events falling in any trailing `windowSeconds`
@@ -29,82 +28,41 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * increment at s saw a smaller partial — the running max over
   * increments is the max over complete per-second sums.
   *
-  * Ordering contract (s11/s13's, verbatim): WITHIN a micro-batch events
-  * sort by (ts, event_id); ACROSS batches the fold trusts arrival order
-  * but REFUSES regressions — a late event older than the last folded
-  * one increments `n_late_dropped` instead of mutating an
-  * already-closed second. Under in-order arrival (StreamingSpec's
-  * contract, any batch split) the quiet-period state equals the batch
-  * RANGE-window form [[burstBatch]].
+  * Ordering: [[OrderedFold]]'s contract — a late event is refused
+  * instead of mutating an already-closed second, and under in-order
+  * arrival the quiet-period state equals the batch RANGE-window form
+  * [[burstBatch]].
   */
 object BurstStream {
 
   case class BurstEvent(user_id: Long, ts_us: Long, event_id: Long)
-
-  /** Flat state: last folded event, trailing per-second counters, the
-    * running max (flat public case class — the StatsStream encoder
-    * lesson).
-    */
-  case class BurstState(lastTs: Long, lastEid: Long, seen: Boolean,
-      secs: Seq[Long], counts: Seq[Long], maxBurst: Long,
-      lateDropped: Long)
+      extends OrderedFold.Event
 
   case class UserBurst(user_id: Long, max_burst: Long)
 
   /** Shared projection both forms consume. */
-  def burstEvents(df: DataFrame): Dataset[BurstEvent] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
-        col("event_id"))
-      .as[BurstEvent]
-  }
+  def burstEvents(df: DataFrame): Dataset[BurstEvent] =
+    OrderedFold.events[BurstEvent](df)
 
   /** Streaming fold: per-user running max trailing-window count,
-    * re-emitted for touched users each micro-batch (Update mode).
+    * re-emitted for touched users each micro-batch (Update mode). The
+    * accumulator is the trailing per-second counters, their running
+    * total (kept incrementally, so an event costs one prune instead of
+    * a re-sum of up to W counters) and the running max.
     */
   def userBursts(events: Dataset[BurstEvent],
-      windowSeconds: Long = 60L): Dataset[UserBurst] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[BurstState, UserBurst](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        case (uid, it, state: GroupState[BurstState]) =>
-          var s = state.getOption.getOrElse(
-            BurstState(Long.MinValue, Long.MinValue, seen = false,
-              Seq.empty, Seq.empty, 0L, 0L))
-          val m = scala.collection.mutable.LinkedHashMap.from(
-            s.secs.zip(s.counts))
-          var (lt, le, seen, late, mb) =
-            (s.lastTs, s.lastEid, s.seen, s.lateDropped, s.maxBurst)
-          // running window total: rebuilt once per micro-batch (O(W)),
-          // then maintained incrementally — the fold stays O(1) per
-          // event instead of re-summing up to W counters each time
-          var wsum = m.valuesIterator.sum
-          it.toVector.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            if (seen && (e.ts_us < lt || (e.ts_us == lt && e.event_id < le)))
-              late += 1
-            else {
-              val sec = e.ts_us / 1000000L
-              // trailing prune keeps ≤ windowSeconds live counters
-              m.filterInPlace { (k, c) =>
-                val keep = k > sec - windowSeconds
-                if (!keep) wsum -= c
-                keep
-              }
-              m.update(sec, m.getOrElse(sec, 0L) + 1L)
-              wsum += 1L
-              if (wsum > mb) mb = wsum
-              lt = e.ts_us; le = e.event_id; seen = true
-            }
-          }
-          s = BurstState(lt, le, seen, m.keys.toSeq, m.values.toSeq,
-            mb, late)
-          state.update(s)
-          if (seen) Iterator.single(UserBurst(uid, mb)) else Iterator.empty
-      }
-  }
+      windowSeconds: Long = 60L): Dataset[UserBurst] =
+    OrderedFold.fold(events, (Map.empty[Long, Long], 0L, 0L)) {
+      case ((secs, total, maxBurst), _, e) =>
+        val sec = e.ts_us / 1000000L
+        // trailing prune keeps ≤ windowSeconds live counters
+        val (live, gone) = secs.partition(_._1 > sec - windowSeconds)
+        val wsum = total - gone.values.sum + 1L
+        (live.updated(sec, live.getOrElse(sec, 0L) + 1L), wsum,
+          math.max(maxBurst, wsum))
+    } { case (uid, (_, _, maxBurst)) =>
+      Iterator.single(UserBurst(uid, maxBurst))
+    }
 
   /** Batch form: per-(user, second) counts, a RANGE-framed trailing sum
     * over the per-second aggregate, max per user — what the streaming
@@ -126,7 +84,4 @@ object BurstStream {
       .select(col("user_id"), col("max_burst"),
         (col("max_burst") >= threshold).as("is_burst"))
   }
-
-  /** The sink mode [[userBursts]] needs. */
-  val outputMode: OutputMode = OutputMode.Update()
 }

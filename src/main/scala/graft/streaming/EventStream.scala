@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -28,6 +28,13 @@ object EventStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
+  /** DECIMAL-exact value sum, carried as DOUBLE so batch, streaming and
+    * the DuckDB oracle all canonicalize to the same output type.
+    */
+  private val sumValue: Column =
+    sum(col("value").cast(DecimalType(18, 6)))
+      .cast(DecimalType(38, 6)).cast("double").as("sum_value")
+
   /** Tumbling-window aggregate (batch form): events per hour × type.
     * `date_trunc` keeps the output one flat timestamp column — same
     * result as `window(ts, "1 hour").start`.
@@ -37,12 +44,7 @@ object EventStream {
       .groupBy(
         date_trunc("hour", col("ts")).as("hour"),
         col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        // DECIMAL-exact sum; DOUBLE carrier so batch, streaming, and the
-        // DuckDB oracle all canonicalize to the same output type
-        sum(col("value").cast(DecimalType(18, 6)))
-          .cast(DecimalType(38, 6)).cast("double").as("sum_value"))
+      .agg(count(lit(1)).as("n_events"), sumValue)
 
   /** Streaming form of [[hourlyAgg]]: watermarked tumbling window.
     * Append mode emits a window only once it is closed by the watermark.
@@ -51,12 +53,7 @@ object EventStream {
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        // DECIMAL-exact sum; DOUBLE carrier so batch, streaming, and the
-        // DuckDB oracle all canonicalize to the same output type
-        sum(col("value").cast(DecimalType(18, 6)))
-          .cast(DecimalType(38, 6)).cast("double").as("sum_value"))
+      .agg(count(lit(1)).as("n_events"), sumValue)
       .select(col("window.start").as("hour"), col("event_type"),
         col("n_events"), col("sum_value"))
 
@@ -71,10 +68,7 @@ object EventStream {
   def slidingAgg(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "6 hours", "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 6)))
-          .cast(DecimalType(38, 6)).cast("double").as("sum_value"))
+      .agg(count(lit(1)).as("n_events"), sumValue)
       .select(col("window.start").as("w_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
@@ -85,10 +79,7 @@ object EventStream {
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "6 hours", "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 6)))
-          .cast(DecimalType(38, 6)).cast("double").as("sum_value"))
+      .agg(count(lit(1)).as("n_events"), sumValue)
       .select(col("window.start").as("w_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
@@ -165,10 +156,7 @@ object EventStream {
       .groupBy(
         date_trunc("hour", col("ts")).as("hour"),
         col("c_mktsegment"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 6)))
-          .cast(DecimalType(38, 6)).cast("double").as("sum_value"))
+      .agg(count(lit(1)).as("n_events"), sumValue)
 
   /** Streaming form of [[segmentHourly]]: watermarked tumbling window
     * over the stream side; the dimension joins as a plain broadcast
@@ -180,10 +168,7 @@ object EventStream {
       .join(broadcast(customers.select(
         col("c_custkey").as("user_id"), col("c_mktsegment"))), Seq("user_id"))
       .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 6)))
-          .cast(DecimalType(38, 6)).cast("double").as("sum_value"))
+      .agg(count(lit(1)).as("n_events"), sumValue)
       .select(col("window.start").as("hour"), col("c_mktsegment"),
         col("n_events"), col("sum_value"))
 

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Inter-arrival gap histogram maintained on the stream: per user, the
   * seconds between consecutive events, folded into power-of-two buckets
@@ -24,34 +23,21 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * mode; [[histogramFromUsers]] merges the latest per-user rows to the
   * corpus histogram with a partially-aggregated bucket groupBy.
   *
-  * Ordering contract (s11's, verbatim): WITHIN a micro-batch events
-  * sort by (ts, event_id); ACROSS batches the fold trusts arrival order
-  * but REFUSES regressions — a late event older than the last folded
-  * one increments `n_late_dropped` instead of fabricating a negative or
-  * out-of-order gap. Under in-order arrival (StreamingSpec's contract,
-  * any batch split) the quiet-period state equals the batch lag-window
+  * Ordering: [[OrderedFold]]'s contract — a late event is refused
+  * instead of fabricating a negative or out-of-order gap, and under
+  * in-order arrival the quiet-period state equals the batch lag-window
   * form [[gapHistogram]].
   */
 object GapStream {
 
   case class GapEvent(user_id: Long, ts_us: Long, event_id: Long)
-
-  /** Flat state: last folded event + bucket counters (flat public case
-    * class — the StatsStream encoder lesson).
-    */
-  case class GapState(lastTs: Long, lastEid: Long, seen: Boolean,
-      buckets: Seq[Int], counts: Seq[Long], lateDropped: Long)
+      extends OrderedFold.Event
 
   case class UserGaps(user_id: Long, gap_bucket: Int, n: Long)
 
   /** Shared projection both forms consume. */
-  def gapEvents(df: DataFrame): Dataset[GapEvent] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
-        col("event_id"))
-      .as[GapEvent]
-  }
+  def gapEvents(df: DataFrame): Dataset[GapEvent] =
+    OrderedFold.events[GapEvent](df)
 
   private def bucketOf(gapSeconds: Long): Int =
     // gap 0 → bin '0' has length 1 → bucket 0 (same as gap 1); else
@@ -60,41 +46,25 @@ object GapStream {
     else 63 - java.lang.Long.numberOfLeadingZeros(gapSeconds)
 
   /** Streaming fold: per-user gap-bucket counts, re-emitted for touched
-    * users each micro-batch (Update mode).
+    * users each micro-batch (Update mode). The accumulator is the last
+    * folded event's second and the bucket counters.
     */
-  def userGaps(events: Dataset[GapEvent]): Dataset[UserGaps] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[GapState, UserGaps](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        case (uid, it, state: GroupState[GapState]) =>
-          var s = state.getOption.getOrElse(
-            GapState(Long.MinValue, Long.MinValue, seen = false,
-              Seq.empty, Seq.empty, 0L))
-          val m = scala.collection.mutable.LinkedHashMap.from(
-            s.buckets.zip(s.counts))
-          var (lt, le, seen, late) = (s.lastTs, s.lastEid, s.seen, s.lateDropped)
-          it.toVector.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            if (seen && (e.ts_us < lt || (e.ts_us == lt && e.event_id < le)))
-              late += 1
-            else {
-              if (seen) {
-                // gap in whole SECONDS computed as the difference of
-                // per-event second floors — exactly the batch form's
-                // unix_timestamp(ts) subtraction, so sub-second
-                // components can never skew stream vs batch by one
-                val b = bucketOf(e.ts_us / 1000000L - lt / 1000000L)
-                m.update(b, m.getOrElse(b, 0L) + 1L)
-              }
-              lt = e.ts_us; le = e.event_id; seen = true
-            }
-          }
-          s = GapState(lt, le, seen, m.keys.toSeq, m.values.toSeq, late)
-          state.update(s)
-          m.iterator.map { case (b, n) => UserGaps(uid, b, n) }
-      }
-  }
+  def userGaps(events: Dataset[GapEvent]): Dataset[UserGaps] =
+    OrderedFold.fold(events, (0L, Map.empty[Int, Long])) {
+      case ((lastSec, buckets), seen, e) =>
+        // gap in whole SECONDS computed as the difference of per-event
+        // second floors — exactly the batch form's unix_timestamp(ts)
+        // subtraction, so sub-second components can never skew stream
+        // vs batch by one
+        val sec = e.ts_us / 1000000L
+        if (!seen) (sec, buckets)
+        else {
+          val b = bucketOf(sec - lastSec)
+          (sec, buckets.updated(b, buckets.getOrElse(b, 0L) + 1L))
+        }
+    } { case (uid, (_, buckets)) =>
+      buckets.iterator.map { case (b, n) => UserGaps(uid, b, n) }
+    }
 
   /** Merge per-user rows to the corpus bucket histogram with per-bucket
     * share (round-6 of the exact integer division); post-aggregate
@@ -103,10 +73,7 @@ object GapStream {
   def histogramFromUsers(users: DataFrame): DataFrame = {
     val g = users.groupBy(col("gap_bucket"))
       .agg(sum(col("n")).as("n_pairs"))
-    g.withColumn("share",
-        round(col("n_pairs").cast("double") /
-          sum(col("n_pairs")).over(
-            Window.partitionBy(lit(1))).cast("double"), 6))
+    g.withColumn("share", OrderedFold.share(col("n_pairs"), lit(1)))
       .select(col("gap_bucket"), col("n_pairs"), col("share"))
   }
 
@@ -125,13 +92,7 @@ object GapStream {
       .select((length(bin(col("__gap"))) - 1).cast("int").as("gap_bucket"))
       .groupBy(col("gap_bucket"))
       .agg(count(lit(1)).as("n_pairs"))
-    g.withColumn("share",
-        round(col("n_pairs").cast("double") /
-          sum(col("n_pairs")).over(
-            Window.partitionBy(lit(1))).cast("double"), 6))
+    g.withColumn("share", OrderedFold.share(col("n_pairs"), lit(1)))
       .select(col("gap_bucket"), col("n_pairs"), col("share"))
   }
-
-  /** The sink mode [[userGaps]] needs. */
-  val outputMode: OutputMode = OutputMode.Update()
 }

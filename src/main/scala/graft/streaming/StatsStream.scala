@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming catalog stats — the q46 mergeable-ANALYZE shape maintained
   * ON the ingest stream: every (column, shard) keeps rows / nulls /
@@ -127,7 +127,4 @@ object StatsStream {
       columns: Seq[String], nBuckets: Int = 8,
       k: Int = 64): Dataset[ShardColStats] =
     perShardStats(statEvents(df, bucketKeyCol, columns, nBuckets), k)
-
-  /** The sink mode [[shardStatsStream]] needs. */
-  val outputMode: OutputMode = OutputMode.Update()
 }

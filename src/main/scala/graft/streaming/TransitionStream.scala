@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-transition (Markov) counts maintained on the stream: per user,
   * each event's type paired with the PREVIOUS event's type (by event
@@ -19,71 +18,37 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * merges shard stats — so the heavy object (the user-level fold) stays
   * distributed and the merge is a partially-aggregated key groupBy.
   *
-  * Ordering: WITHIN a micro-batch events sort by (ts, event_id); ACROSS
-  * batches the fold trusts arrival order but REFUSES regressions — a
-  * late event older than the last folded one is counted into the
-  * `n_late_dropped` bucket instead of fabricating a backward transition
-  * (the watermark trade made explicit in state). Under in-order arrival
-  * (StreamingSpec's contract, any batch SPLIT) the quiet-period state
-  * equals the batch lag-window form [[transitionMatrix]].
+  * Ordering: [[OrderedFold]]'s contract — a late event is refused
+  * instead of fabricating a backward transition, and under in-order
+  * arrival the quiet-period state equals the batch lag-window form
+  * [[transitionMatrix]].
   */
 object TransitionStream {
 
   case class TransEvent(user_id: Long, ts_us: Long, event_id: Long,
-      event_type: String)
-
-  /** Flat state: last folded event + packed "fromto" counter keys
-    * (flat public case class — the StatsStream encoder lesson).
-    */
-  case class TransState(lastTs: Long, lastEid: Long, lastType: String,
-      keys: Seq[String], counts: Seq[Long], lateDropped: Long)
+      event_type: String) extends OrderedFold.Event
 
   case class UserTransitions(user_id: Long, from_type: String,
       to_type: String, n: Long)
 
   /** Shared projection both forms consume. */
-  def transEvents(df: DataFrame): Dataset[TransEvent] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[TransEvent]
-  }
+  def transEvents(df: DataFrame): Dataset[TransEvent] =
+    OrderedFold.events[TransEvent](df, "event_type")
 
   /** Streaming fold: per-user transition counts, re-emitted for touched
-    * users each micro-batch (Update mode).
+    * users each micro-batch (Update mode). The accumulator is the last
+    * folded event's type and the (from, to) counters.
     */
-  def userTransitions(events: Dataset[TransEvent]): Dataset[UserTransitions] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, UserTransitions](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        case (uid, it, state: GroupState[TransState]) =>
-          var s = state.getOption.getOrElse(
-            TransState(Long.MinValue, Long.MinValue, "", Seq.empty,
-              Seq.empty, 0L))
-          val m = scala.collection.mutable.LinkedHashMap.from(
-            s.keys.zip(s.counts))
-          var (lt, le, lty, late) = (s.lastTs, s.lastEid, s.lastType, s.lateDropped)
-          it.toVector.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            if (e.ts_us < lt || (e.ts_us == lt && e.event_id < le)) late += 1
-            else {
-              if (lty.nonEmpty) {
-                val k = lty + "\u0001" + e.event_type
-                m.update(k, m.getOrElse(k, 0L) + 1L)
-              }
-              lt = e.ts_us; le = e.event_id; lty = e.event_type
-            }
-          }
-          s = TransState(lt, le, lty, m.keys.toSeq, m.values.toSeq, late)
-          state.update(s)
-          m.iterator.map { case (k, n) =>
-            val Array(f, t) = k.split('\u0001')
-            UserTransitions(uid, f, t, n)
-          }
-      }
-  }
+  def userTransitions(events: Dataset[TransEvent]): Dataset[UserTransitions] =
+    OrderedFold.fold(events, ("", Map.empty[(String, String), Long])) {
+      case ((last, counts), seen, e) =>
+        val k = (last, e.event_type)
+        (e.event_type,
+          if (seen) counts.updated(k, counts.getOrElse(k, 0L) + 1L)
+          else counts)
+    } { case (uid, (_, counts)) =>
+      counts.iterator.map { case ((f, t), n) => UserTransitions(uid, f, t, n) }
+    }
 
   /** Merge per-user rows to the corpus from→to matrix with per-source
     * probabilities (round-6 of the exact integer division). The window
@@ -93,10 +58,7 @@ object TransitionStream {
   def matrixFromUsers(users: DataFrame): DataFrame = {
     val g = users.groupBy(col("from_type"), col("to_type"))
       .agg(sum(col("n")).as("n"))
-    val wf = Window.partitionBy(col("from_type"))
-    g.withColumn("p",
-        round(col("n").cast("double") /
-          sum(col("n")).over(wf).cast("double"), 6))
+    g.withColumn("p", OrderedFold.share(col("n"), col("from_type")))
       .select(col("from_type"), col("to_type"), col("n"), col("p"))
   }
 
@@ -115,13 +77,7 @@ object TransitionStream {
         col("event_type").as("to_type"))
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
-    val wf = Window.partitionBy(col("from_type"))
-    pairs.withColumn("p",
-        round(col("n").cast("double") /
-          sum(col("n")).over(wf).cast("double"), 6))
+    pairs.withColumn("p", OrderedFold.share(col("n"), col("from_type")))
       .select(col("from_type"), col("to_type"), col("n"), col("p"))
   }
-
-  /** The sink mode [[userTransitions]] needs. */
-  val outputMode: OutputMode = OutputMode.Update()
 }

@@ -10,14 +10,15 @@ import org.apache.spark.sql.types.StructType
 
 import graft.Engine.table
 import graft.kv.Store
-import graft.streaming.{DedupStream, EventStream, KVSink}
+import graft.streaming.{AttributionStream, DedupStream, EventStream, KVSink}
 
 /** State-store provider parity: the engine defaults streaming state to
   * RocksDB (Engine.session — the off-heap 100×-ingest story), and this
   * spec pins that the provider is an EXECUTION detail, not a semantics
   * knob: the s06 dedup topology and the s15 hourly-uniques pipeline
   * produce identical results AND identical final state-store row counts
-  * under HDFSBackedStateStoreProvider and RocksDBStateStoreProvider,
+  * under HDFSBackedStateStoreProvider and RocksDBStateStoreProvider
+  * (as do the s09 funnel and the s12 ordered fold),
   * across a 3-batch run with a query restart in the middle.
   *
   * Note the provider is pinned INTO a checkpoint at first start (Spark
@@ -281,5 +282,78 @@ class StateStoreParitySpec extends SparkSessionSpec {
     val batch = EventStream.hourlyUniques(evs)
       .collect().map(_.toSeq).toSet
     assert(rowsR === batch)
+  }
+
+  /** 3-batch s12 attribution run — the ordered per-user fold's state
+    * shape ([[graft.streaming.OrderedFold]]'s cursor wrapping an
+    * Option-and-Map accumulator) — with a restart between batches 2 and
+    * 3; batch 3 also carries one late regression, so the restored
+    * cursor must refuse it and count it. Returns (stored per-user rows,
+    * the checkpoint's decoded state rows, their late-drop total).
+    */
+  private def runOrderedFold(provider: String)
+      : (Set[(Long, String, Long, Long)], Set[Seq[Any]], Long) = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+    try {
+      val root = Files.createTempDirectory("graft-ssparity-fold").toString
+      val store = new Store(spark, s"$root/store", defaultBuckets = 2)
+      val evs = AttributionStream.attrEvents(
+          table(spark, sfDir, "events").filter(col("user_id") < 50))
+        .collect().toSeq.sortBy(e => (e.ts_us, e.event_id))
+      val third = evs.length / 3
+      // the first event's user is already folded: re-sent as a purchase
+      // under a smaller event_id, it is older than that user's cursor
+      val late = evs.head.copy(event_id = -1L, event_type = "purchase",
+        value = 99.0)
+      val batches = Seq(evs.take(third), evs.slice(third, 2 * third),
+        evs.drop(2 * third) :+ late)
+      val mem = MemoryStream[AttributionStream.AttrEvent](spark)
+      def start(): StreamingQuery =
+        KVSink.toStore(AttributionStream.userAttributions(mem.toDS()).toDF()
+            .withColumn("k", concat_ws("|", col("user_id"), col("touch_type"))),
+          store, "attr", keyCol = "k", checkpointDir = s"$root/ckpt")
+      val q1 = start()
+      try {
+        mem.addData(batches(0)); q1.processAllAvailable()
+        mem.addData(batches(1)); q1.processAllAvailable()
+        q1.stop()
+        val q2 = start() // restart: the cursors and accumulators recover
+        try {
+          mem.addData(batches(2)); q2.processAllAvailable()
+          val stored = store.scan("attr")
+            .select(from_json(col("value"), StructType.fromDDL(
+              "user_id BIGINT, touch_type STRING, n BIGINT, " +
+                "value_micros BIGINT")).as("r"))
+            .select("r.*").as[(Long, String, Long, Long)].collect().toSet
+          val state = spark.read.format("statestore").load(s"$root/ckpt")
+            .select(col("key"), col("value"))
+          (stored, state.collect().map(_.toSeq).toSet,
+            state.agg(sum(col("value.groupState.lateDropped")))
+              .head().getLong(0))
+        } finally q2.stop()
+      } finally { if (q1.isActive) q1.stop() }
+    } finally
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
+
+  test("s12 ordered fold (cursor + accumulator state): HDFSBacked == RocksDB " +
+    "across 3 batches with restart") {
+    val (rowsH, stateH, lateH) = runOrderedFold(HDFS)
+    val (rowsR, stateR, lateR) = runOrderedFold(ROCKS)
+    // the decoded cursor-plus-accumulator state round-trips identically
+    // through both providers, restart included
+    assert(stateH === stateR)
+    assert(rowsH === rowsR)
+    assert(lateH === 1L && lateR === 1L)
+    val events = table(spark, sfDir, "events").filter(col("user_id") < 50)
+    assert(stateR.size.toLong ===
+      events.select("user_id").distinct().count())
+    // the stored per-user rows merge to the batch form over the real
+    // events: the late purchase was never credited
+    val got = AttributionStream.reportFromUsers(rowsR.toSeq
+        .toDF("user_id", "touch_type", "n", "value_micros"))
+      .collect().map(_.toSeq).toSet
+    assert(got === AttributionStream.lastTouchAttribution(events)
+      .collect().map(_.toSeq).toSet)
   }
 }
