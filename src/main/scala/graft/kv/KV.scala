@@ -130,7 +130,7 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
       .groupBy("key").agg(max("value").as("value"))
       .withColumn("bucket", bucketExpr(col("key"), buckets(snap)))
     VersionedLake.mergeByKey(snap, batch, path(gid), "key", "bucket", Nil) {
-      (_, _, touched) => snap.files.filter(f => touched(f.dt))
+      (_, _, touched) => f => touched(f.dt)
     }: Unit
   }
 

@@ -514,7 +514,14 @@ object VersionedLake {
     *  - the committed schema must match the intent's schema unless the
     *    op explicitly changes it (`allowSchemaChange`) — a maintenance
     *    op racing an [[evolveSchema]] would otherwise re-publish the old
-    *    schema or write rewrites missing the new column.
+    *    schema or write rewrites missing the new column;
+    *  - with `readScope = (version, reads)` (a merge-on-read key write),
+    *    no commit after `version` may have added a NEW file (not a
+    *    re-published path) that `reads` says the op's match scan would
+    *    have opened — Delta's concurrent-append check. Otherwise two
+    *    writes inserting the same new key both land on the append path
+    *    (neither substitutes an entry) and the key holds two rows. While
+    *    the head is still `version` the check costs nothing.
     *
     * After winning version v, a full-snapshot checkpoint sidecar is
     * written at v1 and every [[CkptInterval]]-th version (idempotent —
@@ -533,13 +540,29 @@ object VersionedLake {
   private[graft] def commitDelta(spark: SparkSession, root: Path,
       schema: StructType, adds: Seq[FileEntry], removes: Seq[FileEntry],
       batchId: Option[Long] = None, op: String = "append",
-      allowSchemaChange: Boolean = false): Long = {
+      allowSchemaChange: Boolean = false,
+      readScope: Option[(Long, FileEntry => Boolean)] = None): Long = {
     val fs = fsOf(spark, root)
     def schemaConflict(committed: StructType): Unit =
       if (!allowSchemaChange && !sameSchema(committed, schema))
         sys.error(s"VersionedLake: commit conflict on $op — the " +
           s"table schema changed concurrently (committed " +
           s"${committed.simpleString}, op carries ${schema.simpleString})")
+    // versions up to `clean` are known to add nothing the op reads
+    var clean = readScope.fold(Long.MaxValue)(_._1)
+    def appendConflict(base: Long): Unit = readScope.foreach { case (_, reads) =>
+      ((clean + 1L) to base).foreach { w =>
+        val m = readManifestFile(fs, commitPath(root, w))
+        val republished = m.removes.toSet
+        m.adds.find(a => !republished(a.path) && reads(a)).foreach { a =>
+          sys.error(s"VersionedLake: concurrent commit conflict on $op — " +
+            s"version $w added ${a.path} where this op matched keys " +
+            s"against version ${readScope.get._1}; rerun the op against " +
+            "the new head")
+        }
+      }
+      clean = math.max(clean, base)
+    }
     val addPaths = adds.map(_.path).toSet
     val removePaths = removes.map(_.path).toSet
     var attempt = 0
@@ -552,6 +575,7 @@ object VersionedLake {
         if (headerOnly) {
           val h = readHeader(fs, commitPath(root, base.get))
           schemaConflict(h.schema)
+          appendConflict(base.get)
           val hwm = math.max(h.lastBatchId, batchId.getOrElse(-1L))
           val totals = (h.nFiles + adds.length,
             h.rows + adds.map(_.rows).sum,
@@ -573,6 +597,7 @@ object VersionedLake {
               s"${gone.size} entries this op substitutes were already " +
               "removed or re-tombstoned by another commit (e.g. " +
               s"${gone.head.path}); rerun the op against the new head")
+          base.foreach(appendConflict)
           val merged = (baseFiles.filterNot(f =>
             removePaths(f.path) || addPaths(f.path)) ++ adds)
             .sortBy(f => (f.dt, f.path))
@@ -1347,6 +1372,9 @@ object VersionedLake {
     * entries (the upsert's landed
     * batch) publish in the SAME commit, so no snapshot holds both row
     * versions of an updated key; nothing commits when both are empty.
+    * `reads` (the upsert's match scope) makes that commit refuse a file
+    * a racing commit added inside the scope ([[commitDelta]]'s
+    * concurrent-append check).
     * The commit is O(matches) sidecar bytes + O(touched entries)
     * manifest text, ZERO data-file rewrites. Every read ([[read]]/
     * [[readBands]]/[[changes]]/maintenance scans) anti-applies the
@@ -1366,7 +1394,8 @@ object VersionedLake {
   private[graft] def deleteVectors(spark: SparkSession, path: String,
       snap: Snapshot, candidates: Seq[FileEntry], op: String,
       matched: DataFrame => DataFrame,
-      extra: Seq[FileEntry] = Nil): Long = {
+      extra: Seq[FileEntry] = Nil,
+      reads: Option[FileEntry => Boolean] = None): Long = {
     val root = new Path(path)
     val base = fsOf(spark, root).makeQualified(root).toString
     val (touched, dvAdds) =
@@ -1408,7 +1437,8 @@ object VersionedLake {
       }
     val adds = dvAdds ++ extra
     if (touched.isEmpty && adds.isEmpty) snap.version
-    else commitDelta(spark, root, snap.schema, adds, touched, op = op)
+    else commitDelta(spark, root, snap.schema, adds, touched, op = op,
+      readScope = reads.map(snap.version -> _))
   }
 
   /** ADOPT an existing [[Partitioned]]-layout day tree into a commit log,
@@ -1530,14 +1560,12 @@ object VersionedLake {
     val snap = snapshot(updates.sparkSession, path, None)
     val keyType = snap.schema(key).dataType.simpleString
     mergeByKey(snap, dated(updates, tsCol), path, key, "dt", statsCols) {
-      (kMin, kMax, _) =>
-        snap.files.filter { f =>
-          f.dt >= fromDay && f.dt <= toDay && (f.stats.get(key) match {
-            case Some((mn, mx)) =>
-              StatsCompare.overlaps(keyType, mn, mx, kMin, kMax)
-            case None => true // no recorded key range — must scan
-          })
-        }
+      (kMin, kMax, _) => f =>
+        f.dt >= fromDay && f.dt <= toDay && (f.stats.get(key) match {
+          case Some((mn, mx)) =>
+            StatsCompare.overlaps(keyType, mn, mx, kMin, kMax)
+          case None => true // no recorded key range — must scan
+        })
     }
   }
 
@@ -1545,9 +1573,11 @@ object VersionedLake {
     * `rows` (carrying the partition column `part`) land through
     * [[stageAndMove]], and the live rows of `snap` that share their `key`
     * are tombstoned by [[deleteVectors]] in the same commit. `candidates`
-    * picks the entries to match from the batch's key envelope
-    * `(min, max)` (string-encoded, like the manifest's ranges) and the
-    * partition values its files landed in.
+    * gives, from the batch's key envelope `(min, max)` (string-encoded,
+    * like the manifest's ranges) and the partition values its files
+    * landed in, the test of whether an entry may hold a batch key: the
+    * match scans the snapshot's entries that pass it, and the commit
+    * aborts if a racing commit added one that passes it.
     *
     * The batch's bounds are observed on the job that pins it. NULL keys
     * are REFUSED loudly: semi joins never match NULL, so a NULL-keyed row
@@ -1558,7 +1588,7 @@ object VersionedLake {
     */
   private[graft] def mergeByKey(snap: Snapshot, rows: DataFrame,
       path: String, key: String, part: String, statsCols: Seq[String])(
-      candidates: (String, String, Set[String]) => Seq[FileEntry]): Long = {
+      candidates: (String, String, Set[String]) => FileEntry => Boolean): Long = {
     // pin: the batch drives the match scan's key side and the landed
     // files; an unpinned lineage would re-execute the caller's feed per
     // action, and a non-deterministic one could disagree with itself.
@@ -1588,14 +1618,15 @@ object VersionedLake {
         val landed = stageAndMove(pinned, path, part, statsCols, Some(n))
         // the key side is key-unique (checked above), so no distinct
         val keys = pinned.select(col(key))
-        deleteVectors(pinned.sparkSession, path, snap,
-          candidates(b.getString(0), b.getString(1), landed.map(_.dt).toSet),
+        val reads =
+          candidates(b.getString(0), b.getString(1), landed.map(_.dt).toSet)
+        deleteVectors(pinned.sparkSession, path, snap, snap.files.filter(reads),
           "upsert",
           // metadata columns resolve only on the scan, so the position
           // is projected BEFORE the join
           _.select(col("_graft_file"), col("_graft_pos"), col(key))
             .join(keys, Seq(key), "left_semi"),
-          landed)
+          landed, Some(reads))
       }
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(counted)
   }

@@ -513,7 +513,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
     val e1 = intercept[RuntimeException] {
       VersionedLake.mergeByKey(stale,
         rows((1L, 100.0), (3L, 300.0)).withColumn("dt", lit("2024-01-01")),
-        d, "event_id", "dt", Nil)((_, _, _) => stale.files)
+        d, "event_id", "dt", Nil)((_, _, _) => _ => true)
     }
     assert(e1.getMessage.contains("conflict"), e1.getMessage)
     val e2 = intercept[RuntimeException] {
@@ -529,6 +529,31 @@ class VersionedLakeSpec extends SparkSessionSpec {
     assert(e3.getMessage.contains("conflict"), e3.getMessage)
     assert(VersionedLake.read(spark, d).collect().map(r =>
       r.getLong(0) -> r.getDouble(2)).toMap === won)
+  }
+
+  test("racing merge-on-read writes that insert the same NEW key: the " +
+      "second aborts instead of landing the key twice") {
+    import spark.implicits._
+    val d = freshRoot()
+    def rows(day: String, vs: (Long, Double)*) = vs.map { case (k, v) =>
+        (k, java.sql.Timestamp.valueOf(s"$day 00:00:00"), v, day)
+      }.toDF("event_id", "ts", "value", "dt")
+    VersionedLake.append(rows("2024-01-01", (1L, 1.0), (2L, 2.0)).drop("dt"), d)
+    val stale = VersionedLake.snapshot(spark, d)
+    // both writes plan on one snapshot that lacks key 9: neither
+    // substitutes an entry, so only the concurrent-append check can
+    // tell that the second one's match missed the first one's file
+    def merge(day: String, k: Long, v: Double) = VersionedLake.mergeByKey(
+        stale, rows(day, (k, v)), d, "event_id", "dt", Nil)(
+        (_, _, days) => f => days(f.dt))
+    merge("2024-01-01", 9L, 90.0)
+    val e = intercept[RuntimeException](merge("2024-01-01", 9L, 91.0))
+    assert(e.getMessage.contains("concurrent commit conflict"), e.getMessage)
+    assert(VersionedLake.read(spark, d).filter(col("event_id") === 9L)
+      .select("value").as[Double].collect().toSeq === Seq(90.0))
+    // a write outside the racing commit's partitions still commits
+    merge("2024-01-02", 5L, 5.0)
+    assert(VersionedLake.read(spark, d).count() === 4L)
   }
 
   test("vacuum self-contains the oldest retained version with a " +
