@@ -550,14 +550,14 @@ object VersionedLake {
           s"${committed.simpleString}, op carries ${schema.simpleString})")
     // versions up to `clean` are known to add nothing the op reads
     var clean = readScope.fold(Long.MaxValue)(_._1)
-    def appendConflict(base: Long): Unit = readScope.foreach { case (_, reads) =>
+    def appendConflict(base: Long): Unit = readScope.foreach { case (read, reads) =>
       ((clean + 1L) to base).foreach { w =>
         val m = readManifestFile(fs, commitPath(root, w))
         val republished = m.removes.toSet
         m.adds.find(a => !republished(a.path) && reads(a)).foreach { a =>
           sys.error(s"VersionedLake: concurrent commit conflict on $op — " +
             s"version $w added ${a.path} where this op matched keys " +
-            s"against version ${readScope.get._1}; rerun the op against " +
+            s"against version $read; rerun the op against " +
             "the new head")
         }
       }
