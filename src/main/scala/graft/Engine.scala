@@ -71,10 +71,11 @@ object Engine {
       // Every parquet file the engine writes (lake and store data files,
       // deletion-vector sidecars, sink, MR and operator outputs) is zstd:
       // unlike the default snappy it entropy-codes the payload bytes, so
-      // text values near 4.7 bits/char stop costing 8. On the kv_lake
-      // benchmark this cut the bytes written per user byte by about 23%
-      // and the bytes stored by about 28%. Readers take the codec from
-      // each file's footer, so snappy files written before still read.
+      // text values near 4.7 bits/char stop costing 8. On perfbench's
+      // kv_lake (4 vCPU, local[4], 10 paired runs) it cut the bytes
+      // written per user byte by 22.6% and the bytes stored by 28%.
+      // Readers take the codec from each file's footer, so files written
+      // under another codec still read.
       .config("spark.sql.parquet.compression.codec", "zstd")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -41,7 +41,7 @@ class ParquetCodecSpec extends SparkSessionSpec {
     VersionedLake.snapshot(spark, root).files
       .flatMap(f => f.path +: f.dv.toSeq).map(p => s"$root/$p").toSet
 
-  /** Every parquet file under `dir`, on disk (staging and logs aside). */
+  /** Every parquet file on disk under `dir`, live or not. */
   private def onDisk(dir: String): Seq[String] =
     Files.walk(java.nio.file.Paths.get(dir)).iterator.asScala
       .map(_.toString).filter(_.endsWith(".parquet")).toSeq

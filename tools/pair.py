@@ -14,9 +14,12 @@ For every end-to-end metric of BENCHMARK.json it prints each side's
 median and quartiles, the share of pairs B won, and a verdict:
   gain    B won at least 9 pairs in 10, and the medians differ, in B's
           favour, by more than A's interquartile range;
-  within  otherwise, B's median is worse than A's by no more than the
+  WORSE   otherwise, B's median is worse than A's by more than the
           metric's bound (a relative change);
-  WORSE   B's median is worse than A's by more than the bound.
+  unresolved  otherwise, A's runs spread (interquartile range over the
+          median) wider than the bound, and not every run of B reads
+          better than every run of A;
+  within  otherwise.
 Each run's result line is also printed, one JSON line per run. Exits 1
 when a run fails, is incorrect or fails ops, or a metric is WORSE.
 """
@@ -84,14 +87,21 @@ def quartiles(xs):
 def verdict(metric, a, b):
     """(wins, verdict, relative change of the medians) for one metric."""
     lower = metric["better"] == "lower"
-    wins = sum((y < x) if lower else (y > x) for x, y in zip(a, b))
+    better = (lambda x, y: y < x) if lower else (lambda x, y: y > x)
+    wins = sum(better(x, y) for x, y in zip(a, b))
     q1, ma, q3 = quartiles(a)
     mb = quartiles(b)[1]
-    rel = (mb - ma) / ma if ma else 0.0
-    worse = rel if lower else -rel
-    if wins >= GAIN_SHARE * len(a) and -worse * abs(ma) > q3 - q1:
-        return wins, "gain", rel
-    return wins, ("within" if worse <= metric["bound"] else "WORSE"), rel
+    gap = ma - mb if lower else mb - ma  # B's lead in the medians
+    if wins >= GAIN_SHARE * len(a) and gap > q3 - q1:
+        v = "gain"
+    elif -gap > metric["bound"] * abs(ma):
+        v = "WORSE"
+    elif q3 - q1 > metric["bound"] * abs(ma) and \
+            not all(better(x, y) for x in a for y in b):
+        v = "unresolved"
+    else:
+        v = "within"
+    return wins, v, (mb - ma) / ma if ma else 0.0
 
 
 def main():
