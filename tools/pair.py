@@ -2,26 +2,31 @@
 """Paired benchmark runs of two git revisions.
 
     python3 tools/pair.py REV_A REV_B --workload W --pairs N
-                          [--seed0 S] [--seconds 10] [--work DIR]
+                          [--seed0 S] [--work DIR]
 
 Exports the committed files of both revisions (`git archive`) into
 DIR/<sha>/, builds each once, then runs `perfbench/run.py --trace 0`
-in the two checkouts alternately: pair i runs seed S+i on both sides,
-and the side that goes first alternates (A first in even pairs). An
-existing DIR/<sha>/ is reused with its build.
+in the two checkouts alternately, each for BENCHMARK.json's
+run_seconds: pair i runs seed S+i on both sides, and the side that goes
+first alternates (A first in even pairs). An existing DIR/<sha>/ is
+reused with its build.
 
 For every end-to-end metric of BENCHMARK.json it prints each side's
-median and quartiles, the share of pairs B won, and a verdict:
-  gain    B won at least 9 pairs in 10, and the medians differ, in B's
-          favour, by more than A's interquartile range;
+median and quartiles, the share of the pairs run that B won (a pair
+with a failed run counts as lost), and a verdict:
+  gain    B won at least 9 in 10 of the pairs run, and the medians
+          differ, in B's favour, by more than A's interquartile range;
   WORSE   otherwise, B's median is worse than A's by more than the
           metric's bound (a relative change);
   unresolved  otherwise, A's runs spread (interquartile range over the
           median) wider than the bound, and not every run of B reads
           better than every run of A;
   within  otherwise.
-Each run's result line is also printed, one JSON line per run. Exits 1
-when a run fails, is incorrect or fails ops, or a metric is WORSE.
+Below them, with no verdict, the same figures for the parts of setup_s
+that each run's record line reports (session start, data generation,
+warm-up). Each run's result line and setup parts are also printed, one
+JSON line per run. Exits 1 when a run fails, is incorrect or fails ops,
+or a metric is WORSE.
 """
 
 import argparse
@@ -64,17 +69,22 @@ def build(d):
 
 
 def run(d, workload, seed, seconds):
-    """One benchmark run in checkout `d`: its result line, or None."""
+    """One benchmark run in checkout `d`: its result line and its setup
+    parts, or (None, None)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds),
                         "--trace", "0"],
                        cwd=d, capture_output=True, text=True,
                        stdin=subprocess.DEVNULL)
     lines = [l for l in p.stdout.splitlines() if l.startswith('{"correct"')]
-    if p.returncode != 0 or not lines:
+    records = [l for l in p.stdout.splitlines() if l.startswith('{"record"')]
+    if p.returncode != 0 or not lines or not records:
         sys.stderr.write(p.stderr[-2000:])
-        return None
-    return json.loads(lines[-1])
+        return None, None
+    setup = json.loads(records[-1])["record"]["setup"]
+    return json.loads(lines[-1]), {"session_s": setup["session_s"],
+                                   "generate_s": sum(setup["generate_s"]),
+                                   "warmup_s": setup["warmup_s"]}
 
 
 def quartiles(xs):
@@ -84,15 +94,16 @@ def quartiles(xs):
     return q1, med, q3
 
 
-def verdict(metric, a, b):
-    """(wins, verdict, relative change of the medians) for one metric."""
+def verdict(metric, a, b, pairs):
+    """(wins, verdict) for one metric, over the complete pairs `a`, `b` of
+    the `pairs` run."""
     lower = metric["better"] == "lower"
     better = (lambda x, y: y < x) if lower else (lambda x, y: y > x)
     wins = sum(better(x, y) for x, y in zip(a, b))
     q1, ma, q3 = quartiles(a)
     mb = quartiles(b)[1]
     gap = ma - mb if lower else mb - ma  # B's lead in the medians
-    if wins >= GAIN_SHARE * len(a) and gap > q3 - q1:
+    if wins >= GAIN_SHARE * pairs and gap > q3 - q1:
         v = "gain"
     elif -gap > metric["bound"] * abs(ma):
         v = "WORSE"
@@ -101,7 +112,7 @@ def verdict(metric, a, b):
         v = "unresolved"
     else:
         v = "within"
-    return wins, v, (mb - ma) / ma if ma else 0.0
+    return wins, v
 
 
 def main():
@@ -111,17 +122,17 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", required=True, type=int)
     ap.add_argument("--seed0", type=int, default=101)
-    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--work", default=os.path.join(ROOT, ".bench_build", "pair"))
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    metrics = bench["end_to_end"]
 
     os.makedirs(a.work, exist_ok=True)
     sides = [checkout(a.rev_a, a.work), checkout(a.rev_b, a.work)]
     for _, d in sides:
         build(d)
-    results = [], []
+    results, setups = ([], []), ([], [])
     bad = 0
     for i in range(a.pairs):
         seed = a.seed0 + i
@@ -129,15 +140,17 @@ def main():
         got = {}
         for s in order:
             sha, d = sides[s]
-            r = run(d, a.workload, seed, a.seconds)
+            r, setup = run(d, a.workload, seed, bench["run_seconds"])
             print(json.dumps({"pair": i, "side": "AB"[s], "rev": sha[:10],
-                              "seed": seed, "result": r}), flush=True)
+                              "seed": seed, "result": r, "setup": setup}),
+                  flush=True)
             if r is None or not r["correct"] or r["failed"]:
                 bad += 1
-            got[s] = r
-        if got[0] and got[1]:
-            results[0].append(got[0]["metrics"])
-            results[1].append(got[1]["metrics"])
+            got[s] = r, setup
+        if got[0][0] and got[1][0]:
+            for s in (0, 1):
+                results[s].append({m: v["value"] for m, v in got[s][0]["metrics"].items()})
+                setups[s].append(got[s][1])
 
     n = len(results[0])
     print(f"\n{a.workload}: A={sides[0][0][:10]} B={sides[1][0][:10]}, "
@@ -145,19 +158,29 @@ def main():
           f"{bad} failed or incorrect runs")
     if n == 0:
         sys.exit(1)
+
+    def row(name, xa, xb, wins, tail):
+        fa, fb = quartiles(xa), quartiles(xb)
+        rel = (fb[1] - fa[1]) / fa[1] if fa[1] else 0.0
+        print(f"{name:<18} "
+              f"{f'{fa[1]:.4g} [{fa[0]:.4g}, {fa[2]:.4g}]':>30} "
+              f"{f'{fb[1]:.4g} [{fb[0]:.4g}, {fb[2]:.4g}]':>30} "
+              f"{rel:>+8.3f} {f'{wins}/{a.pairs}':>7}  {tail}")
+
     print(f"{'metric':<18} {'A median [q1, q3]':>30} {'B median [q1, q3]':>30} "
           f"{'B/A-1':>8} {'B won':>7}  verdict")
     worse = False
     for m in metrics:
-        xa = [r[m["name"]]["value"] for r in results[0]]
-        xb = [r[m["name"]]["value"] for r in results[1]]
-        wins, v, rel = verdict(m, xa, xb)
+        xa = [r[m["name"]] for r in results[0]]
+        xb = [r[m["name"]] for r in results[1]]
+        wins, v = verdict(m, xa, xb, a.pairs)
         worse |= v == "WORSE"
-        fa, fb = quartiles(xa), quartiles(xb)
-        print(f"{m['name']:<18} "
-              f"{f'{fa[1]:.4g} [{fa[0]:.4g}, {fa[2]:.4g}]':>30} "
-              f"{f'{fb[1]:.4g} [{fb[0]:.4g}, {fb[2]:.4g}]':>30} "
-              f"{rel:>+8.3f} {f'{wins}/{n}':>7}  {v} (bound {m['bound']})")
+        row(m["name"], xa, xb, wins, f"{v} (bound {m['bound']})")
+    print("setup_s parts, no verdict:")
+    for part in ("session_s", "generate_s", "warmup_s"):
+        xa = [r[part] for r in setups[0]]
+        xb = [r[part] for r in setups[1]]
+        row(part, xa, xb, sum(y < x for x, y in zip(xa, xb)), "")
     sys.exit(1 if bad or worse else 0)
 
 
