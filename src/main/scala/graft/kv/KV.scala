@@ -176,7 +176,7 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
   def del(gid: String, key: String): Unit = {
     val snap = current(gid)
     VersionedLake.deleteVectors(spark, path(gid), snap,
-      bucketEntries(snap, key), "delete-dv", _.filter(col("key") === key)): Unit
+      bucketEntries(snap, key), "delete", _.filter(col("key") === key)): Unit
   }
 
   /** Re-shard a gid into `numBuckets` hash partitions of the key — the

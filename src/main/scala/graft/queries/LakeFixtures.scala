@@ -22,7 +22,7 @@ import graft.Engine.table
   *    recomputes the expected rows from FLAT parquet and a fixture whose
   *    appends/compaction/evolution lost or duplicated anything hashes
   *    wrong on every read;
-  *  - MUTATING gates (q136 delete, q137 upsert, q143 DV delete) hard-link
+  *  - MUTATING gates (q136/q143 delete, q137 upsert) hard-link
   *    clone the fixture into a fresh scratch root per invocation and run
   *    the real op against the clone — the op's honest cost stays in the
   *    bench on EVERY run (committed lake files are immutable, so a clone
@@ -202,9 +202,10 @@ object LakeFixtures {
     }
 
   /** q141: the change-feed lifecycle — two appends (vBase =
-    * [[ChangesBaseVersion]]), clustered compaction, then a band delete;
-    * the query reads `changes(vBase, head)` so the compaction's rows
-    * must cancel and the feed must be exactly the deleted band.
+    * [[ChangesBaseVersion]]), clustered compaction, then a band delete
+    * (merge-on-read: it re-publishes the matched files under a deletion
+    * vector); the query reads `changes(vBase, head)` so the compaction's
+    * rows must cancel and the feed must be exactly the deleted band.
     */
   def changesLake(s: SparkSession, dir: String): String =
     fixture("lake_changes", dir) { out =>

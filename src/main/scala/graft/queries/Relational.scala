@@ -39,6 +39,26 @@ object Relational {
         min(col("event_id")).as("min_event_id"),
         max(col("event_id")).as("max_event_id"))
 
+  /** q136/q143: a hard-link CLONE of the shared clustered fixture, then
+    * the REAL band delete against the clone — the op's honest cost stays
+    * in the bench on every run without rebuilding the lake (committed
+    * files are immutable, so the clone is O(files) link(2) calls and the
+    * shared fixture is never mutated) — then the post-delete week.
+    */
+  private def lakeDeleteWeek(s: SparkSession, dir: String): DataFrame = {
+    val out = LakeFixtures.cloneLake(LakeFixtures.clusteredLake(s, dir))
+    graft.sources.VersionedLake.deleteBand(s, out, "value", 300.0, 1.0e12,
+      fromDay = "2024-01-08", toDay = "2024-01-14")
+    graft.sources.VersionedLake
+      .read(s, out, None, "2024-01-08", "2024-01-14")
+      .groupBy(col("dt"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
+        countDistinct(col("user_id")).as("n_users"),
+        min(col("event_id")).as("min_event_id"),
+        max(col("event_id")).as("max_event_id"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1 shape: scan-filter-aggregate with partial aggregation.
     // The reference analog is the grouped-fold MR job (mr.test.js:100-126).
@@ -980,59 +1000,22 @@ object Relational {
           max(col("event_id")).as("max_event_id"))
     }),
 
-    // Copy-on-write DELETE on the versioned lake (the retention /
-    // right-to-erasure op): after the q135 lifecycle, every row with
-    // value ≥ 300 is deleted through deleteBand — manifest stats prove
-    // most clustered files disjoint from the band so they are never
-    // scanned, matched files rewrite without their matching rows, and
-    // the whole substitution is one atomic commit. The week aggregate
-    // reads the post-delete head; the oracle applies the complement
-    // predicate to the FLAT parquet (keeping NULLs — the SQL DELETE
-    // convention), so equality proves the COW rewrite removed exactly
-    // the matches and nothing else. VersionedLakeSpec pins the blast
-    // radius (untouched entries identical) and the time-travel audit
-    // trail (pre-delete snapshots keep the rows until vacuum).
-    "q136_lake_delete" -> ((s, dir) => {
-      // hard-link CLONE of the shared clustered fixture, then the REAL
-      // copy-on-write delete against the clone — the op's honest cost
-      // stays in the bench on every run without rebuilding the lake
-      // (committed files are immutable, so the clone is O(files) link(2)
-      // calls and the shared fixture is never mutated)
-      val out = LakeFixtures.cloneLake(LakeFixtures.clusteredLake(s, dir))
-      graft.sources.VersionedLake.deleteBand(s, out, "value", 300.0, 1.0e12,
-        fromDay = "2024-01-08", toDay = "2024-01-14")
-      graft.sources.VersionedLake
-        .read(s, out, None, "2024-01-08", "2024-01-14")
-        .groupBy(col("dt"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"),
-          min(col("event_id")).as("min_event_id"),
-          max(col("event_id")).as("max_event_id"))
-    }),
-
-    // MERGE-ON-READ delete gate (VersionedLake deletion vectors): the
-    // SAME lifecycle and oracle as q136, but the delete commits row
-    // TOMBSTONES instead of rewriting files — zero data-file rewrites
-    // (VersionedLakeSpec pins the byte-identical file set), and the
-    // read anti-applies the positions. The hash match against q136's
-    // flat-parquet oracle proves both delete modes serve EXACTLY the
-    // same table; the bench carries the honest dv-write + merge-read
-    // cost. Scale: a scattered-key erasure over 100 TB commits
-    // O(matches) sidecar bytes where copy-on-write rewrites the corpus.
-    "q143_lake_dv_delete" -> ((s, dir) => {
-      val out = LakeFixtures.cloneLake(LakeFixtures.clusteredLake(s, dir))
-      graft.sources.VersionedLake.deleteBand(s, out, "value", 300.0, 1.0e12,
-        fromDay = "2024-01-08", toDay = "2024-01-14", mode = "dv")
-      graft.sources.VersionedLake
-        .read(s, out, None, "2024-01-08", "2024-01-14")
-        .groupBy(col("dt"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"),
-          min(col("event_id")).as("min_event_id"),
-          max(col("event_id")).as("max_event_id"))
-    }),
+    // DELETE on the versioned lake (the retention / right-to-erasure
+    // op): after the q135 lifecycle, every row with value ≥ 300 is
+    // deleted through deleteBand — manifest stats prove most clustered
+    // files disjoint from the band so they are never scanned, and the
+    // matches are tombstoned in one deletion-vector sidecar with zero
+    // data-file rewrites, one atomic commit. The week aggregate reads the
+    // post-delete head, which anti-applies the tombstones; the oracle
+    // applies the complement predicate to the FLAT parquet (keeping
+    // NULLs — the SQL DELETE convention), so equality proves the delete
+    // removed exactly the matches and nothing else. VersionedLakeSpec
+    // pins the blast radius (untouched entries identical, the data tree
+    // byte-identical) and the time-travel audit trail (pre-delete
+    // snapshots keep the rows until vacuum). q143 runs the same body
+    // under its own registry name.
+    "q136_lake_delete" -> ((s, dir) => lakeDeleteWeek(s, dir)),
+    "q143_lake_dv_delete" -> ((s, dir) => lakeDeleteWeek(s, dir)),
 
     // ADOPTION gate (VersionedLake.importTree): an existing Partitioned
     // day tree — base write plus an append, the q127 lifecycle — is
@@ -1310,6 +1293,23 @@ object Relational {
           col("n_lines"))
     })
   )
+
+  /** q136/q143's oracle: the complement of the deleted band (NULL
+    * values kept — deletes never match NULL).
+    */
+  private val lakeDeleteOracle =
+    """SELECT strftime(ts, '%Y-%m-%d') AS dt, event_type,
+         count(*) AS n_events,
+         CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(38,6))
+           AS DOUBLE) AS sum_value,
+         count(DISTINCT user_id) AS n_users,
+         min(event_id) AS min_event_id,
+         max(event_id) AS max_event_id
+       FROM events
+       WHERE strftime(ts, '%Y-%m-%d') >= '2024-01-08'
+         AND strftime(ts, '%Y-%m-%d') <= '2024-01-14'
+         AND (value < 300.0 OR value IS NULL)
+       GROUP BY 1, 2"""
 
   val oracles: Map[String, String] = Map(
     "q01_pricing_summary" ->
@@ -1942,36 +1942,9 @@ object Relational {
            min(event_id) AS min_event_id
          FROM merged
          GROUP BY 1, 2""",
-    // Mirrors q143 from the FLAT side — q136's oracle verbatim: both
-    // delete modes must serve the identical complement of the band.
-    "q143_lake_dv_delete" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS dt, event_type,
-           count(*) AS n_events,
-           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(38,6))
-             AS DOUBLE) AS sum_value,
-           count(DISTINCT user_id) AS n_users,
-           min(event_id) AS min_event_id,
-           max(event_id) AS max_event_id
-         FROM events
-         WHERE strftime(ts, '%Y-%m-%d') >= '2024-01-08'
-           AND strftime(ts, '%Y-%m-%d') <= '2024-01-14'
-           AND (value < 300.0 OR value IS NULL)
-         GROUP BY 1, 2""",
-    // Mirrors q136 from the FLAT side: the complement of the deleted
-    // band (NULL values kept — deletes never match NULL).
-    "q136_lake_delete" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS dt, event_type,
-           count(*) AS n_events,
-           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(38,6))
-             AS DOUBLE) AS sum_value,
-           count(DISTINCT user_id) AS n_users,
-           min(event_id) AS min_event_id,
-           max(event_id) AS max_event_id
-         FROM events
-         WHERE strftime(ts, '%Y-%m-%d') >= '2024-01-08'
-           AND strftime(ts, '%Y-%m-%d') <= '2024-01-14'
-           AND (value < 300.0 OR value IS NULL)
-         GROUP BY 1, 2""",
+    // Mirrors q136/q143 from the FLAT side (one body, one oracle).
+    "q143_lake_dv_delete" -> lakeDeleteOracle,
+    "q136_lake_delete" -> lakeDeleteOracle,
     // Mirrors q110 from the PARQUET side: Spark answers from the CSV
     // round-trip, DuckDB from the original parquet — equality proves
     // the delimited boundary lossless, not just self-consistent.

@@ -246,7 +246,7 @@ object StreamQueries {
 
     // CDC TAIL (VersionedLake.source cdc = true — Delta's readChangeFeed
     // as a live stream): lake A ingests the slice, a CDC stream starts
-    // (initial batch = the snapshot tagged insert), then a copy-on-write
+    // (initial batch = the snapshot tagged insert), then a merge-on-read
     // band delete lands UPSTREAM and must arrive as `delete` rows — a
     // history rewrite is DATA to a CDC consumer, where the plain source
     // correctly refuses it. The feed relays into lake B (the downstream
@@ -257,7 +257,7 @@ object StreamQueries {
     // relay end-to-end.
     "s22_lake_cdc_tail" -> ((s, dir) => {
       // lake A = a CLONE of the shared clustered fixture (the per-run
-      // delete mutates it); the bench pays the CDC tail + the cow
+      // delete mutates it); the bench pays the CDC tail + the band
       // delete + the relay, not the lake build
       val a = LakeFixtures.cloneLake(LakeFixtures.clusteredLake(s, dir))
       val root = graft.TempDirs.scratch("graft_s22").toFile.getAbsolutePath
@@ -341,7 +341,7 @@ object StreamQueries {
          GROUP BY 1, 2""",
     // Mirrors s22 from the FLAT side: the insert side is the full week
     // (the CDC initial snapshot), the delete side is the banded week
-    // (the cow delete's feed) — both reconstructed from raw events.
+    // (the band delete's feed) — both reconstructed from raw events.
     "s22_lake_cdc_tail" ->
       """SELECT strftime(ts, '%Y-%m-%d') AS dt, event_type,
            'insert' AS "_change_type",

@@ -48,26 +48,28 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    of them gone from the new base — removed, or re-published under
   *    another deletion vector — a racing op won those files and replaying
   *    blindly would resurrect its removed rows — the loser ABORTS loudly
-  *    instead and must rerun against the new head. Appends (removes = ∅) commute
-  *    with everything and never abort. A commit that would silently
-  *    change the table schema aborts the same way — only the explicit
-  *    schema ops ([[evolveSchema]], [[restore]], [[importTree]]) may
-  *    carry a new schema;
+  *    instead and must rerun against the new head. Plain appends
+  *    (removes = ∅, no read scope) commute with everything and never
+  *    abort; a merge-on-read key write aborts even with removes = ∅ when
+  *    a racing commit added a file inside its read scope (its key match
+  *    never saw that file — see [[commitDelta]]). A commit that would
+  *    silently change the table schema aborts the same way — only the
+  *    explicit schema ops ([[evolveSchema]], [[restore]], [[importTree]])
+  *    may carry a new schema;
   *  - READERS are snapshot-isolated for free: a query plans against the
   *    file list its snapshot reconstructed, and since committed files
   *    are immutable and vacuum-protected, a compaction publishing v+1
   *    mid-query changes nothing the running query references. Time
   *    travel is the same mechanism pointed at an older version;
-  *  - every data file (append, compaction, copy-on-write delete, upsert)
-  *    lands through ONE helper, [[landStaged]]: staged, moved into its
-  *    partition dir and recorded BEFORE the commit, so a crash leaves
-  *    orphan files that no manifest references — invisible to every
-  *    reader, swept by [[vacuum]] along with files only referenced by
-  *    expired versions;
-  *  - key writes are MERGE-ON-READ: [[upsert]] (and a dv delete) records
-  *    the rows it shadows in one deletion-vector sidecar in the same
-  *    commit, rewriting no data file ([[deleteVectors]]); [[compact]]
-  *    folds the vectors away. A [[graft.kv.Store]] gid is the same table
+  *  - every data file (append, compaction, upsert) lands through ONE
+  *    helper, [[landStaged]]: staged, moved into its partition dir and
+  *    recorded BEFORE the commit, so a crash leaves orphan files that no
+  *    manifest references — invisible to every reader, swept by
+  *    [[vacuum]] along with files only referenced by expired versions;
+  *  - deletes and key writes are MERGE-ON-READ: [[deleteWhere]] and
+  *    [[upsert]] record the rows they remove in one deletion-vector
+  *    sidecar in the same commit, rewriting no data file
+  *    ([[deleteVectors]]); [[compact]] folds the vectors away. A [[graft.kv.Store]] gid is the same table
   *    partitioned by `bucket` instead of `dt`.
   *
   * Scale shape: appends shuffle once keyed on dt (the [[Partitioned]]
@@ -102,8 +104,8 @@ object VersionedLake {
     */
   private val TargetFileMB = 128
 
-  /** Days a rewrite ([[compact]], copy-on-write delete) runs
-    * at once on its driver-side pool — see [[rewriteDays]].
+  /** Days [[compact]] rewrites at once on its driver-side pool — see
+    * [[rewriteDays]].
     */
   private val DaysInFlight = 4
 
@@ -114,8 +116,8 @@ object VersionedLake {
     * (`bucket=N/<name>`, `dt` = the bucket) — the partition column is the
     * name before the `=` of the path's first component. Only the shared
     * paths take the column from the path (landing, [[scanEntries]], the
-    * merge-on-read writes, [[vacuum]]); [[read]]'s day range, [[compact]]
-    * and the copy-on-write delete are day-only.
+    * merge-on-read writes, [[vacuum]]); [[read]]'s day range and
+    * [[compact]] are day-only.
     * `stats` carries optional per-column (min, max) string pairs — the
     * data-skipping index living IN the commit log (the Delta/Iceberg
     * arrangement): entries without stats for a column are simply never
@@ -128,8 +130,8 @@ object VersionedLake {
     * `dv` is an optional DELETION VECTOR: the root-relative path of a
     * tombstone sidecar (parquet of `(path, pos)` rows) listing the
     * file's deleted row positions — merge-on-read deletes
-    * ([[deleteWhere]] `mode = "dv"`, [[upsert]], the store's put and del)
-    * tombstone instead of rewriting, and every read anti-applies the
+    * ([[deleteWhere]], [[upsert]], the store's put and del) tombstone
+    * instead of rewriting, and every read anti-applies the
     * positions. When set, `rows` counts the
     * LIVE rows (physical minus tombstoned) so history totals and rewrite
     * tripwires stay truthful; `stats` keep their pre-delete bounds —
@@ -1189,51 +1191,49 @@ object VersionedLake {
           e.src == layoutSrc && manifestCols.forall(e.stats.contains)))
       }.flatten.toSeq
     if (todo.isEmpty) return snap.version
-    val fresh = rewriteDays(spark, root, "compact", layoutSrc, todo) { entries =>
+    val fresh = rewriteDays(spark, root, layoutSrc, manifestCols, todo) { entries =>
       val n = want(entries)
       // dv-applied scan: the rewrite absorbs any tombstones, so the
       // new files are plain and the sidecars become vacuum garbage
       val dayDf = scanEntries(spark, base, snap.schema, entries).drop("dt")
-      val laid =
-        if (clusterBy.isEmpty) dayDf.coalesce(n)
-        else if (zorder && clusterBy.size >= 2) {
-          // Z-order: one tiny min/max job per day bounds the bucket
-          // mapping, then the interleaved key drives the same
-          // range-partition machinery as the lexical path
-          clusterBy.foreach { c =>
-            require(snap.schema(c).dataType
-              .isInstanceOf[org.apache.spark.sql.types.NumericType],
-              s"zorder column $c must be numeric")
-          }
-          val aggExprs = clusterBy.flatMap(c => Seq(
-            min(col(c)).cast("double"), max(col(c)).cast("double")))
-          val b = dayDf.agg(aggExprs.head, aggExprs.tail: _*).head()
-          val buckets = clusterBy.zipWithIndex.map { case (c, i) =>
-            if (b.isNullAt(2 * i) || b.isNullAt(2 * i + 1) ||
-                b.getDouble(2 * i + 1) <= b.getDouble(2 * i)) lit(0L)
-            else {
-              val (mn, mx) = (b.getDouble(2 * i), b.getDouble(2 * i + 1))
-              // NULL value → NULL ratio → greatest(NULL, 0) = 0
-              least(greatest(floor(
-                (col(c).cast("double") - mn) / (mx - mn) * 65535.0),
-                lit(0.0)), lit(65535.0)).cast("long")
-            }
-          }
-          val k = buckets.length
-          // bit b of bucket i lands at position b*k + i
-          val z = (0 until 16).flatMap(bit => buckets.zipWithIndex.map {
-            case (bc, i) => shiftleft(
-              shiftright(bc, bit).bitwiseAND(lit(1L)), bit * k + i)
-          }).reduce(_.bitwiseOR(_))
-          dayDf.withColumn("_graft_z", z)
-            .repartitionByRange(n, col("_graft_z"))
-            .sortWithinPartitions(col("_graft_z"))
-            .drop("_graft_z")
+      if (clusterBy.isEmpty) dayDf.coalesce(n)
+      else if (zorder && clusterBy.size >= 2) {
+        // Z-order: one tiny min/max job per day bounds the bucket
+        // mapping, then the interleaved key drives the same
+        // range-partition machinery as the lexical path
+        clusterBy.foreach { c =>
+          require(snap.schema(c).dataType
+            .isInstanceOf[org.apache.spark.sql.types.NumericType],
+            s"zorder column $c must be numeric")
         }
-        // disjoint key ranges per file — tight stats, maximal skipping
-        else dayDf.repartitionByRange(n, clusterBy.map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*)
-      (laid, manifestCols, entries.map(_.rows).sum)
+        val aggExprs = clusterBy.flatMap(c => Seq(
+          min(col(c)).cast("double"), max(col(c)).cast("double")))
+        val b = dayDf.agg(aggExprs.head, aggExprs.tail: _*).head()
+        val buckets = clusterBy.zipWithIndex.map { case (c, i) =>
+          if (b.isNullAt(2 * i) || b.isNullAt(2 * i + 1) ||
+              b.getDouble(2 * i + 1) <= b.getDouble(2 * i)) lit(0L)
+          else {
+            val (mn, mx) = (b.getDouble(2 * i), b.getDouble(2 * i + 1))
+            // NULL value → NULL ratio → greatest(NULL, 0) = 0
+            least(greatest(floor(
+              (col(c).cast("double") - mn) / (mx - mn) * 65535.0),
+              lit(0.0)), lit(65535.0)).cast("long")
+          }
+        }
+        val k = buckets.length
+        // bit b of bucket i lands at position b*k + i
+        val z = (0 until 16).flatMap(bit => buckets.zipWithIndex.map {
+          case (bc, i) => shiftleft(
+            shiftright(bc, bit).bitwiseAND(lit(1L)), bit * k + i)
+        }).reduce(_.bitwiseOR(_))
+        dayDf.withColumn("_graft_z", z)
+          .repartitionByRange(n, col("_graft_z"))
+          .sortWithinPartitions(col("_graft_z"))
+          .drop("_graft_z")
+      }
+      // disjoint key ranges per file — tight stats, maximal skipping
+      else dayDf.repartitionByRange(n, clusterBy.map(col): _*)
+        .sortWithinPartitions(clusterBy.map(col): _*)
     }
     // the delta substitutes ONLY what this run rewrote: files a racing
     // append committed meanwhile stay live (append/compact commute);
@@ -1244,33 +1244,34 @@ object VersionedLake {
 
   /** DELETE (the retention/right-to-erasure op a 100 TB training lake
     * cannot live without): remove every row matching `predicate` from
-    * the LATEST snapshot. `mode = "cow"` (default) is COPY-ON-WRITE —
-    * rewrite ONLY the files that actually contain matches and publish
-    * the substitution as one atomic commit; `mode = "dv"` is
-    * MERGE-ON-READ — tombstone the matching row positions in a sidecar
-    * with ZERO data-file rewrites (see [[deleteVectors]]; the right
-    * choice when matches are scattered across many files). Rows where
-    * the predicate is NULL are KEPT (a null is not a match — the SQL
-    * DELETE convention). Semantics per snapshot: the new version has the
-    * rows filtered out; OLDER versions still carry them (time travel is
-    * the audit trail), so a true purge is `deleteWhere` + [[vacuum]] down
-    * to the post-delete version.
+    * the LATEST snapshot, MERGE-ON-READ — the matching row positions are
+    * tombstoned in one deletion-vector sidecar with ZERO data-file
+    * rewrites ([[deleteVectors]]), and every read anti-applies them.
+    * Rows where the predicate is NULL are KEPT (a null is not a match —
+    * the SQL DELETE convention). One commit; none when nothing matched.
     *
-    * Cost shape ([[rewriteMatching]]): one per-file match-count scan over
-    * the candidate files, then one rewrite job per touched DAY over only
-    * its touched files, days overlapping on [[rewriteDays]]' pool.
-    * Untouched files keep their entries (and their stats) verbatim —
-    * zero write amplification outside the blast radius. [[deleteBand]]
-    * shrinks the candidate set further using manifest stats BEFORE any
-    * footer opens — the read-path skipping contract applied to writes.
+    * Semantics per snapshot: the new version has the rows filtered out;
+    * OLDER versions still carry them (time travel is the audit trail),
+    * and the tombstoned rows stay in their data files until a compaction
+    * rewrites them. A PHYSICAL purge is therefore `deleteWhere`, then
+    * [[compact]] over the touched days (it materializes the vectors — a
+    * tombstoned day is never "already done"), then [[vacuum]] down to the
+    * post-compaction version.
+    *
+    * Cost shape: one pinned, dv-applied match scan over the candidate
+    * files feeds the per-file counts and the sidecar write. Untouched
+    * files keep their entries (and their stats) verbatim; touched ones
+    * re-publish pointing at the sidecar. [[deleteBand]] shrinks the
+    * candidate set further using manifest stats BEFORE any footer opens —
+    * the read-path skipping contract applied to writes.
     */
   def deleteWhere(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column,
-      fromDay: String = "0000-01-01", toDay: String = "9999-12-31",
-      mode: String = "cow"): Long = {
+      fromDay: String = "0000-01-01", toDay: String = "9999-12-31"): Long = {
     val snap = snapshot(spark, path, None)
-    deleteFrom(spark, path, snap,
-      snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay), predicate, mode)
+    deleteVectors(spark, path, snap,
+      snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay), "delete",
+      _.filter(coalesce(predicate, lit(false)))) // NULL is not a match
   }
 
   /** [[deleteWhere]] for a band predicate, with the candidate files
@@ -1282,50 +1283,34 @@ object VersionedLake {
     */
   def deleteBand(spark: SparkSession, path: String, bandCol: String,
       lo: Double, hi: Double,
-      fromDay: String = "0000-01-01", toDay: String = "9999-12-31",
-      mode: String = "cow"): Long = {
+      fromDay: String = "0000-01-01", toDay: String = "9999-12-31"): Long = {
     val snap = snapshot(spark, path, None)
     val picked = bandsReportOf(snap, Seq((bandCol, lo.toString, hi.toString)),
       fromDay, toDay).selected.toSet
-    deleteFrom(spark, path, snap, snap.files.filter(f => picked(f.path)),
-      col(bandCol) >= lo && col(bandCol) <= hi, mode)
+    val band = col(bandCol) >= lo && col(bandCol) <= hi
+    deleteVectors(spark, path, snap, snap.files.filter(f => picked(f.path)),
+      "delete", _.filter(coalesce(band, lit(false))))
   }
 
-  /** The cow/dv dispatch of [[deleteWhere]] and [[deleteBand]]. */
-  private def deleteFrom(spark: SparkSession, path: String,
-      snap: Snapshot, candidates: Seq[FileEntry],
-      predicate: org.apache.spark.sql.Column, mode: String): Long = {
-    val isMatch = coalesce(predicate, lit(false)) // NULL is not a match
-    mode match {
-      case "cow" => rewriteMatching(spark, new Path(path), snap, candidates,
-        isMatch)
-      case "dv" => deleteVectors(spark, path, snap, candidates, "delete-dv",
-        _.filter(isMatch))
-      case other => sys.error(
-        s"VersionedLake: unknown delete mode '$other' (cow | dv)")
-    }
-  }
-
-  /** Rewrite every touched DAY through [[landStaged]] (tagged `src`) on a
-    * bounded driver-side pool of [[DaysInFlight]] threads (Spark sessions
-    * are thread-safe; each day is one small job, so overlapping them
-    * keeps the cluster busy). `rewriteOne(entries)` gives a day's
-    * laid-out frame, the stats columns its files record, and the rows
-    * they must hold. Returns the new entries; once every day has
+  /** Rewrite every touched DAY through [[landStaged]] (tagged `src`,
+    * recording `statsCols`) on a bounded driver-side pool of
+    * [[DaysInFlight]] threads (Spark sessions are thread-safe; each day
+    * is one small job, so overlapping them keeps the cluster busy).
+    * `layDay(entries)` gives a day's laid-out frame, which must land the
+    * entries' live rows. Returns the new entries; once every day has
     * finished, rethrows the first day's failure. Day-only: the files land
     * under `dt=`, so a `bucket`-partitioned entry is refused.
     */
-  private def rewriteDays(spark: SparkSession, root: Path, op: String,
-      src: String, touched: Seq[FileEntry])(
-      rewriteOne: Seq[FileEntry] => (DataFrame, Seq[String], Long))
-      : Seq[FileEntry] = {
+  private def rewriteDays(spark: SparkSession, root: Path, src: String,
+      statsCols: Seq[String], touched: Seq[FileEntry])(
+      layDay: Seq[FileEntry] => DataFrame): Seq[FileEntry] = {
     require(touched.forall(_.path.startsWith("dt=")),
-      s"VersionedLake: $op rewrites day partitions only")
+      "VersionedLake: compact rewrites day partitions only")
     val byDay = touched.groupBy(_.dt).toSeq.sortBy(_._1)
     def landDay(day: String, entries: Seq[FileEntry]): Seq[FileEntry] = {
-      val (laid, statsCols, rows) = rewriteOne(entries)
-      landStaged(spark, root, s"${op}_$day", laid.schema, statsCols, src,
-          Some(rows))(
+      val laid = layDay(entries)
+      landStaged(spark, root, s"compact_$day", laid.schema, statsCols, src,
+          Some(entries.map(_.rows).sum))(
         stage => laid.write.mode("overwrite").parquet(s"$stage/dt=$day"))
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -1337,38 +1322,11 @@ object VersionedLake {
     done.flatMap(_.fold(e => throw e.getCause, identity))
   }
 
-  /** The copy-on-write delete: one match scan counts per candidate file
-    * the rows `isMatch` selects (dv-applied); each touched day rewrites
-    * only its touched files without them, at their file count (re-layout
-    * is [[compact]]'s job; a tombstoned file's dv MATERIALIZES), and must
-    * land its old rows minus the matched ones. The rewrites publish in
-    * ONE commit — none when nothing matched.
-    */
-  private def rewriteMatching(spark: SparkSession, root: Path,
-      snap: Snapshot, candidates: Seq[FileEntry],
-      isMatch: org.apache.spark.sql.Column): Long = {
-    val base = fsOf(spark, root).makeQualified(root).toString
-    val hits =
-      if (candidates.isEmpty) Map.empty[String, Long]
-      else scanEntries(spark, base, snap.schema, candidates, withMeta = true)
-        .filter(isMatch).groupBy(col("_graft_file")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val touched = candidates.filter(e => hits.contains(e.path))
-    if (touched.isEmpty) return snap.version
-    val adds = rewriteDays(spark, root, "delete", "delete", touched) { entries =>
-      (scanEntries(spark, base, snap.schema, entries).filter(!isMatch)
-        .drop("dt").coalesce(entries.length),
-        entries.flatMap(_.stats.keys).distinct,
-        entries.map(e => e.rows - hits(e.path)).sum)
-    }
-    commitDelta(spark, root, snap.schema, adds, touched, op = "delete")
-  }
-
   /** MERGE-ON-READ removal (deletion vectors — the Delta/Iceberg answer
-    * to "right-to-erasure over 100 TB with scattered keys"), shared by the
-    * dv delete and the upsert ([[mergeByKey]]): instead of rewriting every
-    * file that holds a match (copy-on-write amplifies a one-row delete
-    * into a whole-file rewrite), the ROW POSITIONS `matched` selects from
+    * to "right-to-erasure over 100 TB with scattered keys"), shared by
+    * [[deleteWhere]]/[[deleteBand]], the upsert ([[mergeByKey]]) and the
+    * store's del: instead of rewriting every file that holds a match (a
+    * one-row delete would rewrite a whole file), the ROW POSITIONS `matched` selects from
     * the dv-applied scan of `candidates` are recorded in one tombstone
     * sidecar under `_dv/` and each touched entry is re-published pointing
     * at it. The positions stay on the executors: one job pins them, one
@@ -1702,6 +1660,15 @@ object VersionedLake {
         older.exceptAll(newer).withColumn("_change_type", lit("delete")))
   }
 
+  /** What a [[vacuum]] would (or did) reclaim — `dryRun = true` returns
+    * this WITHOUT deleting anything or writing the self-containment
+    * checkpoint: the audit an operator runs before an irreversible
+    * retention sweep. `bytes` covers the data files only.
+    */
+  final case class VacuumReport(dataFiles: Seq[String],
+      dvFiles: Seq[String], expiredVersions: Seq[Long],
+      expiredCheckpoints: Seq[Long], bytes: Long)
+
   /** Reclaim storage: delete data files referenced by NO retained
     * version (the latest `retainVersions` manifests), drop the expired
     * manifests + checkpoints, and sweep orphaned stage dirs and commit
@@ -1720,15 +1687,6 @@ object VersionedLake {
     * is running. Readers pinned to an EXPIRING version still need the
     * maintenance-window contract — run vacuum outside their lifetime.
     */
-  /** What a [[vacuum]] would (or did) reclaim — `dryRun = true` returns
-    * this WITHOUT deleting anything or writing the self-containment
-    * checkpoint: the audit an operator runs before an irreversible
-    * retention sweep. `bytes` covers the data files only.
-    */
-  final case class VacuumReport(dataFiles: Seq[String],
-      dvFiles: Seq[String], expiredVersions: Seq[Long],
-      expiredCheckpoints: Seq[Long], bytes: Long)
-
   def vacuum(spark: SparkSession, path: String,
       retainVersions: Int = 1, olderThanHours: Double = 168.0,
       dryRun: Boolean = false): VacuumReport = {
@@ -1768,7 +1726,7 @@ object VersionedLake {
         .map(f => (s"$dir/${f.getPath.getName}", f.getPath, f.getLen))
     }.toSeq
     // dv sidecars referenced by NO retained version, age-gated the same
-    // way (an in-flight dv delete's fresh sidecar must survive)
+    // way (an in-flight delete's fresh sidecar must survive)
     val dvDir = new Path(root, "_dv")
     val deadDv =
       if (!fs.exists(dvDir)) Seq.empty

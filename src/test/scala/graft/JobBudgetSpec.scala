@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.kv.Store
 import graft.ops.{Dedup, Hits, KCore, LabelProp, PageRank, ShortestPaths}
@@ -20,13 +21,13 @@ import graft.sources.VersionedLake
   * shuffle and checkpoint plans; an exchange that stops being reused (one
   * branch's aggregate or join key changing shape) breaks them.
   *
-  * The key writes and the point read run against a small store gid and
-  * a small two-day lake, each built fresh for the call. Their budgets are
-  * the counts of the merge-on-read protocol (the batch pin and its bounds,
-  * the landed files and their stats, the match pin, its per-file counts
-  * and the sidecar write); a probe that comes back as its own job
-  * (a bucket hashed by a query, a per-bucket emptiness check) breaks
-  * them.
+  * The key writes, the lake delete and the point read run against a
+  * small store gid and a small two-day lake, each built fresh for the
+  * call. Their budgets are the counts of the merge-on-read protocol (the
+  * batch pin and its bounds, the landed files and their stats, the match
+  * pin, its per-file counts and the sidecar write); a probe that comes
+  * back as its own job (a bucket hashed by a query, a per-bucket
+  * emptiness check) breaks them.
   */
 class JobBudgetSpec extends SparkSessionSpec {
   import spark.implicits._
@@ -118,6 +119,9 @@ class JobBudgetSpec extends SparkSessionSpec {
       val s = store(); () => s.get("g", "7").collect(): Unit
     }),
     ("Store.del", 3, () => { val s = store(); () => s.del("g", "7") }),
+    ("VersionedLake.deleteWhere", 3, () => {
+      val p = lake(); () => VersionedLake.deleteWhere(spark, p, col("value") > 9.0): Unit
+    }),
     ("VersionedLake.upsert", 10, () => {
       val p = lake()
       () => VersionedLake.upsert(events(8 until 14, 100.0), p, key = "event_id"): Unit

@@ -73,7 +73,7 @@ object FaultyFs {
 
 /** Crash-point tests of the lake's one write protocol. Each write op —
   * `VersionedLake.appendBatch` (the `LakeSink` forwarder's target),
-  * `compact`, `upsert`, `deleteWhere` in both modes, `vacuum`, `restore`
+  * `compact`, `upsert`, `deleteWhere`, `vacuum`, `restore`
   * and `evolveSchema`, and `kv.Store`'s `put`, `del` and `reconf` — runs
   * once per k = 1..n with the k-th filesystem mutation failing, where n
   * is the op's mutation count in a clean run, each time on a fresh copy
@@ -234,17 +234,6 @@ class LakeFaultSpec extends SparkSessionSpec {
       lake => assert(VersionedLake.history(spark, lake).last.op === "upsert"))
   }
 
-  test("deleteWhere (copy-on-write): a crash at any create/rename/delete " +
-      "leaves readers on the old or the new rows, and the replay deletes once") {
-    val base = twoAppends()
-    val doomed = col("value") > 9.0
-    val after = rows(VersionedLake.read(spark, base).filter(!doomed))
-    crashEveryStep(base,
-      lake => VersionedLake.deleteWhere(spark, lake, doomed): Unit,
-      after,
-      lake => assert(VersionedLake.history(spark, lake).last.op === "delete"))
-  }
-
   test("deleteWhere (deletion vectors): a crash at any create/rename/delete " +
       "leaves readers on the old or the new rows, and the replay deletes once") {
     // padded so that its commit also publishes a checkpoint: the crash
@@ -253,7 +242,7 @@ class LakeFaultSpec extends SparkSessionSpec {
     val doomed = col("value") > 9.0
     val after = rows(VersionedLake.read(spark, base).filter(!doomed))
     crashEveryStep(base,
-      lake => VersionedLake.deleteWhere(spark, lake, doomed, mode = "dv"): Unit,
+      lake => VersionedLake.deleteWhere(spark, lake, doomed): Unit,
       after,
       lake => assert(VersionedLake.snapshot(spark, lake).files
         .exists(_.dv.isDefined), "the replay left no deletion vector"))
@@ -288,7 +277,7 @@ class LakeFaultSpec extends SparkSessionSpec {
     lake
   }
 
-  /** [[twoAppends]] and a copy-on-write delete (v3), padded to v9. */
+  /** [[twoAppends]] and a delete (v3), padded to v9. */
   private def nineVersions(): String = {
     val base = twoAppends()
     VersionedLake.deleteWhere(spark, base, col("value") > 9.0)

@@ -92,10 +92,10 @@ class ParquetCodecSpec extends SparkSessionSpec {
       VersionedLake.upsert(lakeRows(Seq(3, 35, 90), "2024-01-02", "u"), d,
         key = "event_id")
     }
-    step(d, "VersionedLake.deleteWhere dv") {
-      VersionedLake.deleteWhere(spark, d, col("event_id") === 5L, mode = "dv")
+    step(d, "VersionedLake.deleteWhere") {
+      VersionedLake.deleteWhere(spark, d, col("event_id") === 5L)
     }
-    step(d, "VersionedLake.deleteWhere cow") {
+    step(d, "VersionedLake.deleteWhere again") {
       VersionedLake.deleteWhere(spark, d, col("event_id") === 40L)
     }
     step(d, "VersionedLake.compact") {
@@ -137,7 +137,7 @@ class ParquetCodecSpec extends SparkSessionSpec {
     val ups = (10 to 300 by 29) ++ (341 to 345)
     VersionedLake.upsert(lakeRows(ups, "2024-01-02", "u"), d, key = "event_id")
     lake ++= ups.map(i => i.toLong -> (i * 0.5, s"u-$i"))
-    VersionedLake.deleteWhere(spark, d, col("event_id") % 50 === 0, mode = "dv")
+    VersionedLake.deleteWhere(spark, d, col("event_id") % 50 === 0)
     lake = lake.filter(_._1 % 50 != 0)
     VersionedLake.deleteWhere(spark, d, col("event_id") === 151L)
     lake -= 151L

@@ -517,11 +517,11 @@ class VersionedLakeSpec extends SparkSessionSpec {
     }
     assert(e1.getMessage.contains("conflict"), e1.getMessage)
     val e2 = intercept[RuntimeException] {
-      VersionedLake.deleteVectors(spark, d, stale, stale.files, "delete-dv",
+      VersionedLake.deleteVectors(spark, d, stale, stale.files, "delete",
         _.filter(col("event_id") === 4L))
     }
     assert(e2.getMessage.contains("conflict"), e2.getMessage)
-    // ... and compaction is the same hazard on the copy-on-write side
+    // ... and compaction is the same hazard on the rewrite side
     val e3 = intercept[RuntimeException] {
       VersionedLake.commitDelta(spark, new org.apache.hadoop.fs.Path(d),
         stale.schema, adds = Nil, removes = stale.files, op = "compact")
@@ -833,8 +833,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
       statsCols = Seq("value"))
     val before = VersionedLake.snapshot(spark, d)
     val disk0 = dataFilesOn(d)
-    val vDel = VersionedLake.deleteBand(spark, d, "value", 300.0, 1.0e12,
-      mode = "dv")
+    val vDel = VersionedLake.deleteBand(spark, d, "value", 300.0, 1.0e12)
     assert(vDel === vPre + 1)
     // the dt= tree is BYTE-IDENTICAL: merge-on-read never rewrites data
     assert(dataFilesOn(d) === disk0,
@@ -844,7 +843,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
       .subsetOf(before.files.map(_.path).toSet))
     val dvd = after.files.filter(_.dv.isDefined)
     assert(dvd.nonEmpty, "the band should tombstone something")
-    assert(dvd.forall(_.src == "delete-dv"))
+    assert(dvd.forall(_.src == "delete"))
     // reads anti-apply the tombstones exactly (NULLs kept — not a match)
     val expect = ev.filter(col("value") < 300.0 || col("value").isNull)
     assert(VersionedLake.read(spark, d).count() === expect.count())
@@ -856,13 +855,11 @@ class VersionedLakeSpec extends SparkSessionSpec {
       ev.filter(col("value") >= 100.0 && col("value") <= 150.0).count())
     // time travel: the pre-delete snapshot still serves every row
     assert(VersionedLake.read(spark, d, Some(vPre)).count() === ev.count())
-    // and the two delete modes serve the SAME table: a cow twin agrees
-    val d2 = freshRoot()
-    VersionedLake.append(ev, d2)
-    VersionedLake.deleteBand(spark, d2, "value", 300.0, 1.0e12)
+    // and the head serves EXACTLY the band's complement, row for row
     val cols = ev.columns.map(col).toSeq
-    assert(VersionedLake.read(spark, d).select(cols: _*).exceptAll(
-      VersionedLake.read(spark, d2).select(cols: _*)).count() === 0)
+    val head = VersionedLake.read(spark, d).select(cols: _*)
+    assert(head.exceptAll(expect.select(cols: _*)).count() === 0)
+    assert(expect.select(cols: _*).exceptAll(head).count() === 0)
   }
 
   test("deletion vectors MATERIALIZE on compaction (a tombstoned day is " +
@@ -870,7 +867,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
     val d = freshRoot()
     val ev = table(spark, sfDir, "events")
     VersionedLake.append(ev, d, statsCols = Seq("value"))
-    VersionedLake.deleteBand(spark, d, "value", 300.0, 1.0e12, mode = "dv")
+    VersionedLake.deleteBand(spark, d, "value", 300.0, 1.0e12)
     val live = VersionedLake.read(spark, d).count()
     assert(VersionedLake.snapshot(spark, d).files.exists(_.dv.isDefined))
     VersionedLake.compact(spark, d, "0000-01-01", "9999-12-31",
@@ -899,6 +896,40 @@ class VersionedLakeSpec extends SparkSessionSpec {
     assert(VersionedLake.read(spark, d).count() === live)
   }
 
+  test("erasure recipe: deleteWhere, compact over the touched days, then " +
+      "vacuum leaves no data file under the root holding a deleted row") {
+    import spark.implicits._
+    val d = freshRoot()
+    def rows(ids: Range) = ids.map { i =>
+      (i.toLong, java.sql.Timestamp.valueOf(f"2024-05-0${1 + i % 3} ${i % 24}%02d:00:00"),
+        i * 1.5)
+    }.toDF("event_id", "ts", "value")
+    VersionedLake.append(rows(0 until 30), d)
+    VersionedLake.append(rows(30 until 60), d)
+    // event ids in every dt= data file on disk, read with no commit log
+    def onDisk(): Set[Long] = {
+      val files = new java.io.File(d).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("dt="))
+        .flatMap(_.listFiles().filter(_.getName.startsWith("part-")))
+        .map(_.getPath).toSeq
+      spark.read.parquet(files: _*).select("event_id").as[Long].collect().toSet
+    }
+    // days 05-01 and 05-02 hold matches; 05-03 holds none
+    val doomed = Set(3L, 4L, 7L, 33L, 34L)
+    VersionedLake.deleteWhere(spark, d, col("event_id").isin(doomed.toSeq: _*))
+    assert(VersionedLake.read(spark, d).count() === 60L - doomed.size)
+    val touched = VersionedLake.snapshot(spark, d).files
+      .filter(_.dv.isDefined).map(_.dt).distinct.sorted
+    assert(touched === Seq("2024-05-01", "2024-05-02"))
+    // tombstoned, not erased: the rows are still in their data files
+    assert(doomed.subsetOf(onDisk()))
+    VersionedLake.compact(spark, d, touched.head, touched.last)
+    VersionedLake.vacuum(spark, d, retainVersions = 1, olderThanHours = 0.0)
+    assert(onDisk() === (0L until 60L).toSet -- doomed,
+      "a deleted row survived the purge, or a live row was lost")
+    assert(VersionedLake.read(spark, d).count() === 60L - doomed.size)
+  }
+
   test("the tombstone-free read path plans ZERO joins — the dv anti-join " +
       "enters only while tombstones exist and a compaction removes it " +
       "again") {
@@ -912,7 +943,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
     }
     assert(!readPlan().contains("Join"),
       "a lake without tombstones must plan a bare scan")
-    VersionedLake.deleteBand(spark, d, "value", 300.0, 1.0e12, mode = "dv")
+    VersionedLake.deleteBand(spark, d, "value", 300.0, 1.0e12)
     assert(readPlan().contains("Join"),
       "tombstoned files must anti-join their positions")
     VersionedLake.compact(spark, d, "0000-01-01", "9999-12-31")
@@ -926,10 +957,8 @@ class VersionedLakeSpec extends SparkSessionSpec {
     val d = freshRoot()
     val ev = table(spark, sfDir, "events")
     val vPre = VersionedLake.append(ev, d, statsCols = Seq("value"))
-    val v2 = VersionedLake.deleteBand(spark, d, "value", 400.0, 1.0e12,
-      mode = "dv")
-    val v3 = VersionedLake.deleteBand(spark, d, "value", 300.0, 400.0,
-      mode = "dv")
+    val v2 = VersionedLake.deleteBand(spark, d, "value", 400.0, 1.0e12)
+    val v3 = VersionedLake.deleteBand(spark, d, "value", 300.0, 400.0)
     assert(v3 === v2 + 1)
     // every entry references at most one sidecar, and both bands applied
     val snap = VersionedLake.snapshot(spark, d)
@@ -1024,7 +1053,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
     assert(VersionedLake.read(spark, d).count() === base + 4 * sliceN)
     snapshotFilesExist(d)
 
-    // RACE 4: two deletes of DISJOINT bands — each rewrites only files
+    // RACE 4: two deletes of DISJOINT bands — each tombstones only files
     // holding its matches; whether they collide on shared files (one
     // aborts) or not (both land) the head must equal the serial union
     // of the winners' predicates
@@ -1165,7 +1194,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
       def fed = spark.sql("select * from lakesrc_cdc")
       // initial batch: the snapshot tagged insert
       assert(fed.filter(col("_change_type") === "insert").count() === ev.count())
-      // a cow delete is DATA in cdc mode: its rows arrive tagged delete
+      // a delete is DATA in cdc mode: its rows arrive tagged delete
       VersionedLake.deleteBand(spark, a, "value", 300.0, 1.0e12)
       q.processAllAvailable()
       val banded = ev.filter(col("value") >= 300.0 && col("value") <= 1.0e12)
@@ -1235,7 +1264,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
     try {
       q.processAllAvailable()
       assert(spark.sql("select * from lakesrc_strict").count() === ev.count())
-      // a cow delete rewrites history → the stream must fail loudly
+      // a delete rewrites history → the stream must fail loudly
       VersionedLake.deleteBand(spark, a, "value", 300.0, 1.0e12)
       val err = intercept[Exception] { q.processAllAvailable() }
       assert(err.getMessage.contains("only tails appends"),
