@@ -69,8 +69,9 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *  - deletes and key writes are MERGE-ON-READ: [[deleteWhere]] and
   *    [[upsert]] record the rows they remove in one deletion-vector
   *    sidecar in the same commit, rewriting no data file
-  *    ([[deleteVectors]]); [[compact]] folds the vectors away. A [[graft.kv.Store]] gid is the same table
-  *    partitioned by `bucket` instead of `dt`.
+  *    ([[deleteVectors]]); [[compact]] folds the vectors away. A
+  *    [[graft.kv.Store]] gid is the same table partitioned by `bucket`
+  *    instead of `dt`.
   *
   * Scale shape: appends shuffle once keyed on dt (the [[Partitioned]]
   * small-files discipline), commit payloads are O(delta), compaction
@@ -1196,44 +1197,46 @@ object VersionedLake {
       // dv-applied scan: the rewrite absorbs any tombstones, so the
       // new files are plain and the sidecars become vacuum garbage
       val dayDf = scanEntries(spark, base, snap.schema, entries).drop("dt")
-      if (clusterBy.isEmpty) dayDf.coalesce(n)
-      else if (zorder && clusterBy.size >= 2) {
-        // Z-order: one tiny min/max job per day bounds the bucket
-        // mapping, then the interleaved key drives the same
-        // range-partition machinery as the lexical path
-        clusterBy.foreach { c =>
-          require(snap.schema(c).dataType
-            .isInstanceOf[org.apache.spark.sql.types.NumericType],
-            s"zorder column $c must be numeric")
-        }
-        val aggExprs = clusterBy.flatMap(c => Seq(
-          min(col(c)).cast("double"), max(col(c)).cast("double")))
-        val b = dayDf.agg(aggExprs.head, aggExprs.tail: _*).head()
-        val buckets = clusterBy.zipWithIndex.map { case (c, i) =>
-          if (b.isNullAt(2 * i) || b.isNullAt(2 * i + 1) ||
-              b.getDouble(2 * i + 1) <= b.getDouble(2 * i)) lit(0L)
-          else {
-            val (mn, mx) = (b.getDouble(2 * i), b.getDouble(2 * i + 1))
-            // NULL value → NULL ratio → greatest(NULL, 0) = 0
-            least(greatest(floor(
-              (col(c).cast("double") - mn) / (mx - mn) * 65535.0),
-              lit(0.0)), lit(65535.0)).cast("long")
+      val laid =
+        if (clusterBy.isEmpty) dayDf.coalesce(n)
+        else if (zorder && clusterBy.size >= 2) {
+          // Z-order: one tiny min/max job per day bounds the bucket
+          // mapping, then the interleaved key drives the same
+          // range-partition machinery as the lexical path
+          clusterBy.foreach { c =>
+            require(snap.schema(c).dataType
+              .isInstanceOf[org.apache.spark.sql.types.NumericType],
+              s"zorder column $c must be numeric")
           }
+          val aggExprs = clusterBy.flatMap(c => Seq(
+            min(col(c)).cast("double"), max(col(c)).cast("double")))
+          val b = dayDf.agg(aggExprs.head, aggExprs.tail: _*).head()
+          val buckets = clusterBy.zipWithIndex.map { case (c, i) =>
+            if (b.isNullAt(2 * i) || b.isNullAt(2 * i + 1) ||
+                b.getDouble(2 * i + 1) <= b.getDouble(2 * i)) lit(0L)
+            else {
+              val (mn, mx) = (b.getDouble(2 * i), b.getDouble(2 * i + 1))
+              // NULL value → NULL ratio → greatest(NULL, 0) = 0
+              least(greatest(floor(
+                (col(c).cast("double") - mn) / (mx - mn) * 65535.0),
+                lit(0.0)), lit(65535.0)).cast("long")
+            }
+          }
+          val k = buckets.length
+          // bit b of bucket i lands at position b*k + i
+          val z = (0 until 16).flatMap(bit => buckets.zipWithIndex.map {
+            case (bc, i) => shiftleft(
+              shiftright(bc, bit).bitwiseAND(lit(1L)), bit * k + i)
+          }).reduce(_.bitwiseOR(_))
+          dayDf.withColumn("_graft_z", z)
+            .repartitionByRange(n, col("_graft_z"))
+            .sortWithinPartitions(col("_graft_z"))
+            .drop("_graft_z")
         }
-        val k = buckets.length
-        // bit b of bucket i lands at position b*k + i
-        val z = (0 until 16).flatMap(bit => buckets.zipWithIndex.map {
-          case (bc, i) => shiftleft(
-            shiftright(bc, bit).bitwiseAND(lit(1L)), bit * k + i)
-        }).reduce(_.bitwiseOR(_))
-        dayDf.withColumn("_graft_z", z)
-          .repartitionByRange(n, col("_graft_z"))
-          .sortWithinPartitions(col("_graft_z"))
-          .drop("_graft_z")
-      }
-      // disjoint key ranges per file — tight stats, maximal skipping
-      else dayDf.repartitionByRange(n, clusterBy.map(col): _*)
-        .sortWithinPartitions(clusterBy.map(col): _*)
+        // disjoint key ranges per file — tight stats, maximal skipping
+        else dayDf.repartitionByRange(n, clusterBy.map(col): _*)
+          .sortWithinPartitions(clusterBy.map(col): _*)
+      laid
     }
     // the delta substitutes ONLY what this run rewrote: files a racing
     // append committed meanwhile stay live (append/compact commute);
