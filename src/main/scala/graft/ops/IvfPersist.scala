@@ -24,9 +24,10 @@ import graft.kv.Store
   * Bit-exactness argument: floats survive the Store's JSON values via
   * shortest-decimal round-trip (Float.toString → parse is the identity
   * on finite floats), the cell column is an int, and
-  * [[Similarity.ivfTopKAssigned]] is the exact tail of
-  * [[Similarity.ivfTopK]] — so loaded-search == fresh-search row for
-  * row (IvfPersistSpec pins it, including across an add and a delete).
+  * [[Similarity.ivfTopK]] is [[Similarity.ivfAssign]] followed by
+  * [[Similarity.ivfTopKAssigned]] over the same trained centroids — so
+  * loaded-search == fresh-search row for row (IvfPersistSpec pins it,
+  * including across an add and a delete).
   */
 object IvfPersist {
 
@@ -69,7 +70,7 @@ object IvfPersist {
       store: Store, gid: String, arrivals: DataFrame,
       idCol: String = "id", vecCol: String = "vec"): Unit = {
     val assigned = Similarity.ivfAssign(
-      arrivals, loadCentroids(store, gid), idCol, vecCol)
+      arrivals, loadCentroids(store, gid), vecCol)
     store.put(
       assigned.select(col(idCol).cast("long").as("id"),
         col("cell").cast("int").as("cell"),
@@ -103,8 +104,8 @@ object IvfPersist {
       .select(col("r.id"), col("r.cell"), col("r.vec"))
 
   /** Search a persisted index: reload + [[Similarity.ivfTopKAssigned]].
-    * Equals a fresh [[Similarity.ivfTopK]] over the same rows with the
-    * same centroids, bit-exactly.
+    * Equals a fresh [[Similarity.ivfTopK]] over the same rows given the
+    * stored centroids, bit-exactly.
     */
   def search(
       store: Store, gid: String, queries: DataFrame, k: Int,
@@ -199,7 +200,8 @@ object IvfPersist {
 
   /** Search a persisted IVF-PQ index through the exact
     * [[Similarity.ivfPqTopKEncoded]] tail — equals a fresh
-    * [[Similarity.ivfPqTopK]] with the same trained state, bit-exactly.
+    * [[Similarity.ivfPqTopK]] given the stored centroids and codebooks,
+    * bit-exactly.
     */
   def searchPq(
       store: Store, gid: String, queries: DataFrame, k: Int,

@@ -8,33 +8,81 @@ import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search and embedding near-dup detection.
   *
-  * Two paths, same contract:
-  *  - [[bruteForceTopK]] — exact baseline: broadcast the (small) query set
-  *    against the corpus, one narrow pass, per-query top-k via window.
-  *    At 100 TB the corpus side stays partitioned; only queries move.
-  *  - [[lshTopK]] — scale path: random-hyperplane LSH buckets corpus and
-  *    queries; candidates are generated only inside (multi-probed)
-  *    buckets, so the scored pair count drops from |Q|·|C| to
-  *    |Q|·bucket-size. Recall is tunable via planes/probes.
+  * The exact scorers ([[bruteForceTopK]], [[hardNegatives]],
+  * [[mmrSelect]]) broadcast the small query set against the distributed
+  * corpus and rank every pair; they are the recall oracles. Every
+  * approximate operator is one pipeline:
+  *  1. '''train once''' — k-means cells ([[ivfCentroids]]) and PQ
+  *     codebooks ([[pqCodebooks]]) are fitted driver-side on a bounded
+  *     sample by the CALLER and passed in, so every query over one corpus
+  *     shares one index (hyperplanes are seeded, not trained);
+  *  2. '''assign''' — each corpus row to its argmax-cosine cell
+  *     ([[ivfAssign]]), hyperplane bucket, PQ codes or sign bits, fused
+  *     into the scan;
+  *  3. '''probe''' — each query's cells ranked by cosine, sliced to
+  *     `nProbe`;
+  *  4. '''candidates''' — corpus rows met on a probed cell or bucket (or a
+  *     per-query code shortlist), the query's own row excluded;
+  *  5. '''exact rank''' — candidates re-scored on true vectors (cosine, or
+  *     L2 for PQ), per-query top-k by score with an id tie-break, scores
+  *     rounded to 6.
   *
-  * Embedding near-dups ([[cosineNearDupPairs]]) reuse the bucket join —
-  * the same blocked-pair shape as MinHash dedup (see [[Dedup]]) — with
-  * the [[saltedBlockPairs]] triangular-tile skew bound on each bucket.
+  * The pair operators ([[semanticDedup]], [[crossGroupPairs]],
+  * [[cosineNearDupPairs]]) replace steps 3–4 by all pairs within a cell
+  * or bucket, through the [[saltedBlockPairs]] triangular-tile skew bound.
   */
 object Similarity {
 
+  /** Per query, the best `n` rows of `scored` by (`order`, id asc),
+    * numbered `rank` from 1 — every ANN ranking window.
+    */
+  private def topPerQuery(
+      scored: DataFrame, n: Int, order: Column,
+      idCol: String, qidCol: String): DataFrame = {
+    val w = Window.partitionBy(col(qidCol)).orderBy(order, col(idCol).asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
+  }
+
   /** Shared ranking tail: per-query top-k by (sim desc, id asc), rounded
-    * sim — the single definition of the ANN output contract.
+    * sim — the single definition of the cosine ANN output contract.
     */
   private def rankTopK(
-      scored: DataFrame, k: Int, idCol: String, qidCol: String): DataFrame = {
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("sim").desc, col(idCol).asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      scored: DataFrame, k: Int, idCol: String, qidCol: String): DataFrame =
+    topPerQuery(scored, k, col("sim").desc, idCol, qidCol)
       .select(col(qidCol), col(idCol).as("neighbor_id"),
         col("rank"), round(col("sim"), 6).as("sim"))
+
+  /** Candidate scoring: `corpus` rows met by `probes` on `keys`, each
+    * query's own row excluded, a pair met twice counted once, scored by
+    * exact cosine and ranked.
+    */
+  private def rankCandidates(
+      corpus: DataFrame, probes: DataFrame, keys: Seq[String], k: Int,
+      idCol: String, vecCol: String,
+      qidCol: String, qvecCol: String): DataFrame =
+    rankTopK(corpus.join(probes, keys)
+      .filter(col(idCol) =!= col(qidCol))
+      .dropDuplicates(qidCol, idCol)
+      .withColumn("sim", cosine(col(vecCol), col(qvecCol))), k, idCol, qidCol)
+
+  /** Shortlist re-rank tail: the `shortlist` (qid, id, carried columns)
+    * is broadcast back against `vectors` for the true vectors, re-scored
+    * exactly as `score` = `exact`, ranked by (`order`, id asc) and cut
+    * to k. Output: (qid, neighbor_id, rank, carried columns, score
+    * rounded to 6). The shortlist is |Q|·n rows, so neither side of the
+    * fetch shuffles the corpus.
+    */
+  private def rerankShortlist(
+      shortlist: DataFrame, vectors: DataFrame, queries: DataFrame, k: Int,
+      score: String, exact: Column, order: Column,
+      idCol: String, qidCol: String, qvecCol: String): DataFrame = {
+    val scored = vectors.join(broadcast(shortlist), Seq(idCol))
+      .join(broadcast(queries.select(col(qidCol), col(qvecCol))), Seq(qidCol))
+      .withColumn(score, exact)
+    val carried = shortlist.columns.filterNot(Set(qidCol, idCol)).map(col).toSeq
+    topPerQuery(scored, k, order, idCol, qidCol)
+      .select(Seq(col(qidCol), col(idCol).as("neighbor_id"), col("rank")) ++
+        carried :+ round(col(score), 6).as(score): _*)
   }
 
   /** Exact top-k neighbors for each query row.
@@ -117,10 +165,7 @@ object Similarity {
     val scored = corpus.crossJoin(broadcast(queries))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("rel", cosine(col(vecCol), col(qvecCol)))
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("rel").desc, col(idCol).asc)
-    val cand = scored.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= shortlist)
+    val cand = topPerQuery(scored, shortlist, col("rel").desc, idCol, qidCol)
       .select(col(qidCol).cast("long").as("qid"), col(idCol).cast("long").as("id"),
         col("rel"), col(vecCol).as("v"))
     // the exact accumulation order of expr.GraftExpressions.CosineSim —
@@ -206,44 +251,39 @@ object Similarity {
     val qb = qBuckets
       .withColumn("bucket", explode(probeArr))
       .drop("qbucket0")
-    val scored = cb.join(qb, Seq("bucket"))
-      .filter(col(idCol) =!= col(qidCol))
-      .dropDuplicates(qidCol, idCol)
-      .withColumn("sim", cosine(col(vecCol), col(qvecCol)))
-    rankTopK(scored, k, idCol, qidCol)
+    rankCandidates(cb, qb, Seq("bucket"), k, idCol, vecCol, qidCol, qvecCol)
   }
 
-  /** IVF (inverted-file) ANN: the second scale path, complementary to
-    * [[lshTopK]]. A small deterministic k-means (Lloyd's, fixed seed,
-    * driver-side over a bounded sample — the standard IVF training shape)
-    * partitions the space into `nCentroids` cells; corpus rows are
-    * assigned to their best cell (one narrow pass, `nCentroids` fused
-    * native cosine evals per row against broadcast centroid literals);
-    * queries probe their `nProbe` best cells. Candidates are scored
-    * exactly within probed cells, top-k per query.
-    *
-    * At 100 TB: training touches only the sample, assignment is embedded
-    * in the scan stage, and the single shuffle is the cell-key join whose
-    * fan-in `nProbe/nCentroids` controls cost — the same recall/cost dial
-    * as FAISS IVF.
+  // ───────────── The cell layer: train once → assign → probe ─────────────
+
+  /** Training budget of both index fits: the sample is the vectors of
+    * the lowest-`TrainSample` ids (any fixed sampling rule works; the
+    * sample only seeds the fit), and each k-means runs `TrainIters`
+    * Lloyd rounds over it.
     */
-  /** Deterministic IVF centroids: k-means over the lowest-`sampleSize`
-    * ids (any fixed sampling rule works; the sample only seeds
-    * centroids). Public so SQL oracles can recompute cell assignment
-    * from the SAME values the query plans as literals — the v02
-    * plane-inlining trick. May return fewer than `nCentroids` rows on an
-    * underfull corpus; empty on an empty corpus.
+  private val TrainSample = 2048
+  private val TrainIters = 10
+
+  private def trainingSample(
+      corpus: DataFrame, idCol: String, vecCol: String): Array[Array[Float]] =
+    corpus.select(col(idCol), col(vecCol))
+      .orderBy(col(idCol)).limit(TrainSample)
+      .select(col(vecCol)).collect()
+      .map(_.getSeq[Float](0).toArray)
+
+  /** Deterministic IVF centroids: spherical k-means over the training
+    * sample, driver-side (the FAISS train-once shape). Callers train once
+    * and pass the result to every cell operator. Public so SQL oracles
+    * can recompute cell assignment from the SAME values the query plans
+    * as literals — the v02 plane-inlining trick. May return fewer than
+    * `nCentroids` rows on an underfull corpus; empty on an empty corpus.
     */
   def ivfCentroids(
       corpus: DataFrame, nCentroids: Int,
-      sampleSize: Int = 2048, iters: Int = 10,
       idCol: String = "id", vecCol: String = "vec"): Array[Array[Float]] = {
-    val sample = corpus.select(col(idCol), col(vecCol))
-      .orderBy(col(idCol)).limit(sampleSize)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).toArray)
+    val sample = trainingSample(corpus, idCol, vecCol)
     if (sample.isEmpty) Array.empty
-    else kmeans(sample, nCentroids, iters, sample.head.length)
+    else kmeans(sample, nCentroids, TrainIters, sample.head.length)
   }
 
   /** Above this cell count, centroid cosines switch from per-cell literal
@@ -268,15 +308,13 @@ object Similarity {
     df.crossJoin(broadcast(centDF))
   }
 
-  /** Shared dispatch of the literal-vs-broadcast centroid path: attaches
-    * a `__cos` column of per-centroid cosines (plus `__cents` on the
-    * broadcast path — callers drop both). ONE definition of the gate so
-    * the four cell-based operators cannot drift.
+  /** Attach `__cos`, the per-centroid cosines of `vecCol` (plus `__cents`
+    * on the broadcast path — callers drop both). ONE definition of the
+    * literal-vs-broadcast gate, chosen from the centroid count.
     */
   private def withCellCosines(
-      df: DataFrame, centroids: Array[Array[Float]],
-      vecCol: String, maxLiteralCells: Int): DataFrame = {
-    val useLiterals = centroids.length <= maxLiteralCells
+      df: DataFrame, centroids: Array[Array[Float]], vecCol: String): DataFrame = {
+    val useLiterals = centroids.length <= IvfLiteralCellGate
     val base = if (useLiterals) df else withCentroidsCol(df, centroids)
     val cosines =
       if (useLiterals)
@@ -291,25 +329,52 @@ object Similarity {
     base.withColumn("__cos", cosines)
   }
 
-  /** 1-based argmax cell over `__cos` (ties -> first, matching
-    * list_position(list_aggregate 'max') in the SQL oracles).
+  /** The one cell assignment: `df` with `__cos` and its 1-based argmax
+    * `cell` (ties → first, matching list_position(list_aggregate 'max')
+    * in the SQL oracles). With no cells no row has a cell, so no row is
+    * kept: every cell operator then returns zero rows in its own schema.
     */
-  private def argmaxCell: Column =
-    array_position(col("__cos"), array_max(col("__cos"))).cast("int")
+  private def withCell(
+      df: DataFrame, centroids: Array[Array[Float]], vecCol: String): DataFrame =
+    withCellCosines(if (centroids.isEmpty) df.limit(0) else df, centroids, vecCol)
+      .withColumn("cell",
+        array_position(col("__cos"), array_max(col("__cos"))).cast("int"))
 
-  /** The corpus half of IVF: per-row argmax cell (1-based via
-    * array_position; ties → first). Exposed so a PERSISTED index
-    * ([[IvfPersist]]) can skip re-assigning the whole corpus on restart —
-    * [[ivfTopKAssigned]] over these rows is bit-identical to [[ivfTopK]]
-    * because this is the exact assignment it computes inline.
+  /** The one probe ranking: per query, `__order` holds every cell's
+    * 1-based id by descending cosine (sorted (−cos, idx) structs, so ties
+    * → the lower id). Callers slice it.
+    */
+  private def withProbeOrder(
+      queries: DataFrame, centroids: Array[Array[Float]],
+      qvecCol: String): DataFrame =
+    withCellCosines(queries, centroids, qvecCol)
+      .withColumn("__order", transform(sort_array(zip_with(
+        col("__cos"), sequence(lit(1), lit(centroids.length)),
+        (c, i) => struct((-c).as("negc"), i.as("idx")))),
+        s => s("idx").cast("int")))
+      .drop("__cos", "__cents")
+
+  /** Queries exploded to one row per probed `cell`: their
+    * min(nProbe, nCells) best cells.
+    */
+  private def probeCells(
+      queries: DataFrame, centroids: Array[Array[Float]], qvecCol: String,
+      nProbe: Int): DataFrame =
+    withProbeOrder(queries, centroids, qvecCol)
+      .withColumn("cell", explode(slice(col("__order"), 1,
+        math.min(nProbe, centroids.length))))
+      .drop("__order")
+
+  /** The corpus half of IVF: the input rows plus their argmax `cell`.
+    * Exposed so a PERSISTED index ([[IvfPersist]]) can skip re-assigning
+    * the whole corpus on restart — [[ivfTopKAssigned]] over these rows is
+    * bit-identical to [[ivfTopK]] because this is the exact assignment
+    * it runs.
     */
   def ivfAssign(
       corpus: DataFrame, centroids: Array[Array[Float]],
-      idCol: String = "id", vecCol: String = "vec",
-      maxLiteralCells: Int = IvfLiteralCellGate): DataFrame =
-    withCellCosines(corpus, centroids, vecCol, maxLiteralCells)
-      .withColumn("cell", argmaxCell)
-      .drop("__cos", "__cents")
+      vecCol: String = "vec"): DataFrame =
+    withCell(corpus, centroids, vecCol).drop("__cos", "__cents")
 
   /** [[ivfTopK]] over a PRE-ASSIGNED corpus (rows carrying `cell`) —
     * the search path of a persisted/incrementally-maintained index,
@@ -320,49 +385,30 @@ object Similarity {
       assigned: DataFrame, centroids: Array[Array[Float]],
       queries: DataFrame, k: Int, nProbe: Int = 4,
       idCol: String = "id", vecCol: String = "vec",
-      qidCol: String = "qid", qvecCol: String = "qvec",
-      maxLiteralCells: Int = IvfLiteralCellGate): DataFrame = {
-    require(centroids.nonEmpty, "centroids must be non-empty")
-    val nCells = centroids.length
-    val probes = math.min(nProbe, nCells)
-    // queries: nProbe best cells — sort (−cos, idx) structs, take nProbe
-    val qb = withCellCosines(queries, centroids, qvecCol, maxLiteralCells)
-      .withColumn("__ranked", sort_array(zip_with(
-        col("__cos"), sequence(lit(1), lit(nCells)),
-        (c, i) => struct((-c).as("negc"), i.as("idx")))))
-      .withColumn("cell",
-        explode(slice(transform(col("__ranked"), s => s("idx").cast("int")),
-          1, probes)))
-      .drop("__cos", "__ranked", "__cents")
-    val scored = assigned.join(qb, Seq("cell"))
-      .filter(col(idCol) =!= col(qidCol))
-      .dropDuplicates(qidCol, idCol)
-      .withColumn("sim", cosine(col(vecCol), col(qvecCol)))
-    rankTopK(scored, k, idCol, qidCol)
-  }
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
+    rankCandidates(assigned, probeCells(queries, centroids, qvecCol, nProbe),
+      Seq("cell"), k, idCol, vecCol, qidCol, qvecCol)
 
+  /** IVF (inverted-file) ANN: the second scale path, complementary to
+    * [[lshTopK]]. The trained `centroids` ([[ivfCentroids]]) partition
+    * the space into cells; corpus rows are assigned to their best cell
+    * (one narrow pass, nCells fused native cosine evals per row against
+    * broadcast centroid literals); queries probe their `nProbe` best
+    * cells. Candidates are scored exactly within probed cells, top-k per
+    * query.
+    *
+    * At 100 TB: training touches only the sample, assignment is embedded
+    * in the scan stage, and the single shuffle is the cell-key join whose
+    * fan-in `nProbe/nCentroids` controls cost — the same recall/cost dial
+    * as FAISS IVF.
+    */
   def ivfTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 4,
-      sampleSize: Int = 2048, iters: Int = 10,
+      corpus: DataFrame, centroids: Array[Array[Float]],
+      queries: DataFrame, k: Int, nProbe: Int = 4,
       idCol: String = "id", vecCol: String = "vec",
-      qidCol: String = "qid", qvecCol: String = "qvec",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None): DataFrame = {
-    // an underfull corpus yields fewer centroids than requested: all cell
-    // arithmetic below must use the ACTUAL count, or queries would probe
-    // null-padded phantom cells and match nothing
-    val centroids = trained.getOrElse(
-      ivfCentroids(corpus, nCentroids, sampleSize, iters, idCol, vecCol))
-    if (centroids.isEmpty)
-      return corpus.sparkSession.emptyDataFrame
-        .select(lit(0L).as(qidCol), lit(0L).as("neighbor_id"),
-          lit(0).as("rank"), lit(0.0).as("sim")).limit(0)
-    ivfTopKAssigned(
-      ivfAssign(corpus, centroids, idCol, vecCol, maxLiteralCells),
-      centroids, queries, k, nProbe, idCol, vecCol, qidCol, qvecCol,
-      maxLiteralCells)
-  }
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
+    ivfTopKAssigned(ivfAssign(corpus, centroids, vecCol), centroids,
+      queries, k, nProbe, idCol, vecCol, qidCol, qvecCol)
 
   /** IVF probe-COST audit: for each candidate probe count, how many
     * corpus rows an [[ivfTopK]] query at that nProbe would scan, and the
@@ -379,31 +425,20 @@ object Similarity {
     * discipline, NLJ-allowlisted).
     */
   def ivfProbeCost(
-      corpus: DataFrame, queries: DataFrame, probes: Seq[Int],
-      nCentroids: Int = 16,
-      sampleSize: Int = 2048, iters: Int = 10,
+      corpus: DataFrame, centroids: Array[Array[Float]],
+      queries: DataFrame, probes: Seq[Int],
       idCol: String = "id", vecCol: String = "vec",
-      qidCol: String = "qid", qvecCol: String = "qvec",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None): DataFrame = {
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
     require(probes.nonEmpty && probes.forall(_ >= 1),
       s"probes must be >= 1, got $probes")
-    val centroids = trained.getOrElse(
-      ivfCentroids(corpus, nCentroids, sampleSize, iters, idCol, vecCol))
-    val nCells = centroids.length
-    val cb = withCellCosines(corpus, centroids, vecCol, maxLiteralCells)
-      .withColumn("cell", argmaxCell)
+    val cb = withCell(corpus, centroids, vecCol)
       .select(col(idCol).as("__cid"), col("cell"))
     val csz = cb.groupBy(col("cell")).agg(count(lit(1)).as("__csz"))
     val tot = csz.agg(sum(col("__csz")).as("__corpus"))
-    val probed = withCellCosines(queries, centroids, qvecCol, maxLiteralCells)
-      .withColumn("__order", transform(sort_array(zip_with(
-        col("__cos"), sequence(lit(1), lit(nCells)),
-        (c, i) => struct((-c).as("negc"), i.as("idx")))),
-        s => s("idx").cast("int")))
+    val probed = withProbeOrder(queries, centroids, qvecCol)
       .withColumn("n_probe", explode(array(probes.map(lit(_)): _*)))
       .withColumn("cell", explode(slice(col("__order"), lit(1),
-        least(col("n_probe"), lit(nCells)))))
+        least(col("n_probe"), lit(centroids.length)))))
       .select(col(qidCol), col("n_probe"), col("cell"))
     val sums = probed.join(broadcast(csz), Seq("cell"))
       .groupBy(col(qidCol), col("n_probe"))
@@ -432,40 +467,15 @@ object Similarity {
     * and adding a new category re-trains nothing.
     */
   def filteredIvfTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      catCol: String, qcatCol: String,
-      nCentroids: Int = 16, nProbe: Int = 4,
-      sampleSize: Int = 2048, iters: Int = 10,
+      corpus: DataFrame, centroids: Array[Array[Float]],
+      queries: DataFrame, k: Int,
+      catCol: String, qcatCol: String, nProbe: Int = 4,
       idCol: String = "id", vecCol: String = "vec",
-      qidCol: String = "qid", qvecCol: String = "qvec",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None): DataFrame = {
-    val centroids = trained.getOrElse(
-      ivfCentroids(corpus, nCentroids, sampleSize, iters, idCol, vecCol))
-    if (centroids.isEmpty)
-      return corpus.sparkSession.emptyDataFrame
-        .select(lit(0L).as(qidCol), lit(0L).as("neighbor_id"),
-          lit(0).as("rank"), lit(0.0).as("sim")).limit(0)
-    val nCells = centroids.length
-    val probes = math.min(nProbe, nCells)
-    val cb = withCellCosines(corpus, centroids, vecCol, maxLiteralCells)
-      .withColumn("cell", argmaxCell)
-      .drop("__cos", "__cents")
-    val qb = withCellCosines(queries, centroids, qvecCol, maxLiteralCells)
-      .withColumn("__ranked", sort_array(zip_with(
-        col("__cos"), sequence(lit(1), lit(nCells)),
-        (c, i) => struct((-c).as("negc"), i.as("idx")))))
-      .withColumn("cell",
-        explode(slice(transform(col("__ranked"), s => s("idx").cast("int")),
-          1, probes)))
-      .drop("__cos", "__ranked", "__cents")
-      .withColumnRenamed(qcatCol, catCol)
-    val scored = cb.join(qb, Seq("cell", catCol))
-      .filter(col(idCol) =!= col(qidCol))
-      .dropDuplicates(qidCol, idCol)
-      .withColumn("sim", cosine(col(vecCol), col(qvecCol)))
-    rankTopK(scored, k, idCol, qidCol)
-  }
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
+    rankCandidates(ivfAssign(corpus, centroids, vecCol),
+      probeCells(queries, centroids, qvecCol, nProbe)
+        .withColumnRenamed(qcatCol, catCol),
+      Seq("cell", catCol), k, idCol, vecCol, qidCol, qvecCol)
 
   /** Matryoshka ANN (MRL prefix truncation, Kusupati et al. 2022):
     * coarse ranking on the FIRST `coarseDim` dimensions — matryoshka-
@@ -488,22 +498,17 @@ object Similarity {
       coarseDim: Int = 16, shortlist: Int = 50,
       idCol: String = "id", vecCol: String = "vec",
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    val wCoarse = Window.partitionBy(col(qidCol))
-      .orderBy(col("__csim").desc, col(idCol).asc)
-    val short = corpus
+    val coarse = corpus
       .select(col(idCol), slice(col(vecCol), 1, coarseDim).as("__cv"))
       .crossJoin(broadcast(queries.select(col(qidCol),
         slice(col(qvecCol), 1, coarseDim).as("__cq"))))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("__csim", cosine(col("__cv"), col("__cq")))
-      .withColumn("__crank", row_number().over(wCoarse))
-      .filter(col("__crank") <= shortlist)
+    val short = topPerQuery(coarse, shortlist, col("__csim").desc, idCol, qidCol)
       .select(col(qidCol), col(idCol))
-    val rescored = corpus.select(col(idCol), col(vecCol))
-      .join(broadcast(short), Seq(idCol))
-      .join(broadcast(queries.select(col(qidCol), col(qvecCol))), Seq(qidCol))
-      .withColumn("sim", cosine(col(vecCol), col(qvecCol)))
-    rankTopK(rescored, k, idCol, qidCol)
+    rerankShortlist(short, corpus.select(col(idCol), col(vecCol)), queries, k,
+      "sim", cosine(col(vecCol), col(qvecCol)), col("sim").desc,
+      idCol, qidCol, qvecCol)
   }
 
   /** Salted triangular-tile all-pairs within equal-key blocks — the
@@ -582,6 +587,31 @@ object Similarity {
       .select(col("a_id"), col("a_vec"), col("b_id"), col("b_vec"))
   }
 
+  /** Exact verification of block pairs: every pair of distinct ids
+    * sharing a `blockCol` value at cosine ≥ threshold, as (id_a < id_b,
+    * sim rounded to 6). Cosine is orientation-symmetric bit-for-bit
+    * (per-element products commute inside the same accumulation order),
+    * so the salt-dependent pair orientation cannot perturb sim — the v05
+    * oracle's argument.
+    */
+  private def blockPairs(
+      rows: DataFrame, blockCol: String, threshold: Double,
+      maxBlockRows: Int): DataFrame =
+    saltedBlockPairs(rows, blockCol, maxBlockRows)
+      .withColumn("sim", cosine(col("a_vec"), col("b_vec")))
+      .filter(col("sim") >= threshold)
+      .select(least(col("a_id"), col("b_id")).as("id_a"),
+        greatest(col("a_id"), col("b_id")).as("id_b"),
+        round(col("sim"), 6).as("sim"))
+
+  /** [[blockPairs]] within the trained cells. */
+  private def cellPairs(
+      corpus: DataFrame, centroids: Array[Array[Float]], threshold: Double,
+      idCol: String, vecCol: String, maxCellRows: Int): DataFrame =
+    blockPairs(withCell(corpus, centroids, vecCol)
+        .select(col(idCol).as("id"), col(vecCol).as("vec"), col("cell")),
+      "cell", threshold, maxCellRows)
+
   /** SemDeDup-style semantic deduplication: k-means cells (the SAME
     * deterministic [[ivfCentroids]] training IVF uses) scope the pairwise
     * cosine test, so the comparison count is Σ|cell|² instead of |corpus|²
@@ -608,32 +638,15 @@ object Similarity {
     * asserts both the sub-split and the degenerate one-cell case).
     */
   def semanticDedup(
-      corpus: DataFrame, threshold: Double,
-      nCentroids: Int = 16, sampleSize: Int = 2048, iters: Int = 10,
+      corpus: DataFrame, centroids: Array[Array[Float]], threshold: Double,
       idCol: String = "id", vecCol: String = "vec",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None,
       maxCellRows: Int = 4096): DataFrame = {
     require(maxCellRows >= 1, s"maxCellRows must be >= 1, got $maxCellRows")
-    val centroids = trained.getOrElse(
-      ivfCentroids(corpus, nCentroids, sampleSize, iters, idCol, vecCol))
-    if (centroids.isEmpty)
-      return corpus.sparkSession.emptyDataFrame
-        .select(lit(0L).as("id"), lit(0L).as("dup_of"), lit(0.0).as("sim"))
-        .limit(0)
-    val assigned = withCellCosines(corpus, centroids, vecCol, maxLiteralCells)
-      .withColumn("cell", argmaxCell)
-      .select(col(idCol).as("id"), col(vecCol).as("vec"), col("cell"))
-    val pairs = saltedBlockPairs(assigned, "cell", maxCellRows)
-      .withColumn("sim", cosine(col("a_vec"), col("b_vec")))
-      .filter(col("sim") >= threshold)
-      .withColumn("__lo", least(col("a_id"), col("b_id")))
-      .withColumn("__hi", greatest(col("a_id"), col("b_id")))
-    val w = Window.partitionBy(col("__hi")).orderBy(col("__lo").asc)
-    pairs.withColumn("__rn", row_number().over(w))
+    val w = Window.partitionBy(col("id_b")).orderBy(col("id_a").asc)
+    cellPairs(corpus, centroids, threshold, idCol, vecCol, maxCellRows)
+      .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .select(col("__hi").as("id"), col("__lo").as("dup_of"),
-        round(col("sim"), 6).as("sim"))
+      .select(col("id_b").as("id"), col("id_a").as("dup_of"), col("sim"))
   }
 
   /** Cross-group near-pair mining within the deterministic k-means
@@ -648,46 +661,15 @@ object Similarity {
     * Output: (id_a, id_b, grp_a, grp_b, sim), id_a < id_b.
     */
   def crossGroupPairs(
-      corpus: DataFrame, groups: DataFrame, threshold: Double,
-      nCentroids: Int = 16, sampleSize: Int = 2048, iters: Int = 10,
+      corpus: DataFrame, centroids: Array[Array[Float]],
+      groups: DataFrame, threshold: Double,
       idCol: String = "id", vecCol: String = "vec", grpCol: String = "grp",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None,
-      maxCellRows: Int = 4096): DataFrame = {
-    val centroids = trained.getOrElse(
-      ivfCentroids(corpus, nCentroids, sampleSize, iters, idCol, vecCol))
-    if (centroids.isEmpty) {
-      // empty-corpus result built by the same projections as the
-      // non-empty path, so id/grp column TYPES track the caller's inputs
-      // (a hardcoded long/string schema would diverge for other key types)
-      return corpus.limit(0)
-        .select(col(idCol).as("id_a"), col(idCol).as("id_b"),
-          lit(0.0).as("sim"))
-        .join(groups.limit(0)
-          .select(col(idCol).as("id_a"), col(grpCol).as("grp_a")), Seq("id_a"))
-        .join(groups.limit(0)
-          .select(col(idCol).as("id_b"), col(grpCol).as("grp_b")), Seq("id_b"))
-        .select(col("id_a"), col("id_b"), col("grp_a"), col("grp_b"),
-          col("sim"))
-    }
-    val assigned = withCellCosines(corpus, centroids, vecCol, maxLiteralCells)
-      .withColumn("cell", argmaxCell)
-      .select(col(idCol).as("id"), col(vecCol).as("vec"), col("cell"))
-    // cosine is orientation-symmetric bit-for-bit (per-element products
-    // commute inside the same accumulation order), so the salt-dependent
-    // pair orientation cannot perturb sim — the v05 oracle's argument
-    val pairs = saltedBlockPairs(assigned, "cell", maxCellRows)
-      .withColumn("sim", cosine(col("a_vec"), col("b_vec")))
-      .filter(col("sim") >= threshold)
-      .select(least(col("a_id"), col("b_id")).as("id_a"),
-        greatest(col("a_id"), col("b_id")).as("id_b"),
-        round(col("sim"), 6).as("sim"))
-    pairs
+      maxCellRows: Int = 4096): DataFrame =
+    cellPairs(corpus, centroids, threshold, idCol, vecCol, maxCellRows)
       .join(groups.select(col(idCol).as("id_a"), col(grpCol).as("grp_a")), Seq("id_a"))
       .join(groups.select(col(idCol).as("id_b"), col(grpCol).as("grp_b")), Seq("id_b"))
       .filter(col("grp_a") =!= col("grp_b"))
       .select(col("id_a"), col("id_b"), col("grp_a"), col("grp_b"), col("sim"))
-  }
 
   /** [[semanticDedup]] with a cross-cell recall backstop: the union of
     * the within-cell pair set and the hyperplane-bucket blocked pair set
@@ -707,16 +689,13 @@ object Similarity {
     * cosine(id, dup_of).
     */
   def semanticDedupExhaustive(
-      corpus: DataFrame, threshold: Double,
-      nCentroids: Int = 16, sampleSize: Int = 2048, iters: Int = 10,
+      corpus: DataFrame, centroids: Array[Array[Float]], threshold: Double,
       nPlanes: Int = 8, dim: Int = 64,
       idCol: String = "id", vecCol: String = "vec",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None,
       maxCellRows: Int = 4096,
       maxBucketRows: Int = 4096): DataFrame = {
-    val inCell = semanticDedup(corpus, threshold, nCentroids, sampleSize,
-      iters, idCol, vecCol, maxLiteralCells, trained, maxCellRows)
+    val inCell = semanticDedup(corpus, centroids, threshold, idCol, vecCol,
+      maxCellRows)
     val blocked = cosineNearDupPairs(corpus, threshold, nPlanes, dim,
       idCol, vecCol, maxBucketRows)
       .select(col("id_b").as("id"), col("id_a").as("dup_of"), col("sim"))
@@ -735,19 +714,10 @@ object Similarity {
     * Output: (id, cell). One narrow pass; no shuffle.
     */
   def assignCells(
-      corpus: DataFrame,
-      nCentroids: Int = 16, sampleSize: Int = 2048, iters: Int = 10,
-      idCol: String = "id", vecCol: String = "vec",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None): DataFrame = {
-    val centroids = trained.getOrElse(
-      ivfCentroids(corpus, nCentroids, sampleSize, iters, idCol, vecCol))
-    if (centroids.isEmpty)
-      return corpus.sparkSession.emptyDataFrame
-        .select(lit(0L).as("id"), lit(0).as("cell")).limit(0)
-    withCellCosines(corpus, centroids, vecCol, maxLiteralCells)
-      .select(col(idCol).as("id"), argmaxCell.as("cell"))
-  }
+      corpus: DataFrame, centroids: Array[Array[Float]],
+      idCol: String = "id", vecCol: String = "vec"): DataFrame =
+    withCell(corpus, centroids, vecCol)
+      .select(col(idCol).as("id"), col("cell"))
 
   /** Per-cluster corpus profile over the SAME deterministic k-means cells
     * IVF and SemDeDup use: for each cell, member count, the id of its
@@ -764,19 +734,9 @@ object Similarity {
     * assignment pass + one groupBy shuffle of nCentroids groups.
     */
   def clusterProfile(
-      corpus: DataFrame,
-      nCentroids: Int = 16, sampleSize: Int = 2048, iters: Int = 10,
-      idCol: String = "id", vecCol: String = "vec",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None): DataFrame = {
-    val centroids = trained.getOrElse(
-      ivfCentroids(corpus, nCentroids, sampleSize, iters, idCol, vecCol))
-    if (centroids.isEmpty)
-      return corpus.sparkSession.emptyDataFrame
-        .select(lit(0).as("cell"), lit(0L).as("n_vecs"), lit(0L).as("min_id"),
-          lit(0.0).as("min_sim"), lit(0.0).as("max_sim")).limit(0)
-    withCellCosines(corpus, centroids, vecCol, maxLiteralCells)
-      .withColumn("cell", argmaxCell)
+      corpus: DataFrame, centroids: Array[Array[Float]],
+      idCol: String = "id", vecCol: String = "vec"): DataFrame =
+    withCell(corpus, centroids, vecCol)
       // cosine to the OWN centroid IS the argmax value — no re-compute
       .withColumn("__sim", array_max(col("__cos")))
       .groupBy(col("cell"))
@@ -785,7 +745,6 @@ object Similarity {
         min(col(idCol)).as("min_id"),
         round(min(col("__sim")), 6).as("min_sim"),
         round(max(col("__sim")), 6).as("max_sim"))
-  }
 
   /** Nearest-other-centroid cosine per (1-based) cell — pure driver
     * arithmetic over the ≤k trained centroids (normalized, so cosine =
@@ -816,21 +775,13 @@ object Similarity {
     * centroid geometry is k²-bounded driver work.
     */
   def clusterSeparation(
-      corpus: DataFrame,
-      nCentroids: Int = 16, sampleSize: Int = 2048, iters: Int = 10,
-      idCol: String = "id", vecCol: String = "vec",
-      maxLiteralCells: Int = IvfLiteralCellGate,
-      trained: Option[Array[Array[Float]]] = None): DataFrame = {
-    val centroids = trained.getOrElse(
-      ivfCentroids(corpus, nCentroids, sampleSize, iters, idCol, vecCol))
-    if (centroids.length < 2)
-      return corpus.sparkSession.emptyDataFrame
-        .select(lit(0).as("cell"), lit(0L).as("n_vecs"),
-          lit(0.0).as("mean_sim"), lit(0.0).as("nn_sim"),
-          lit(0.0).as("margin")).limit(0)
-    val nn = nearestOtherCentroid(centroids)
-    withCellCosines(corpus, centroids, vecCol, maxLiteralCells)
-      .withColumn("cell", argmaxCell)
+      corpus: DataFrame, centroids: Array[Array[Float]],
+      idCol: String = "id", vecCol: String = "vec"): DataFrame = {
+    // a lone centroid has no other to be separated from: it counts as no
+    // cells, so the result is empty
+    val cells = if (centroids.length < 2) Array.empty[Array[Float]] else centroids
+    val nn = nearestOtherCentroid(cells)
+    withCell(corpus, cells, vecCol)
       .withColumn("__sim", array_max(col("__cos")))
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -910,12 +861,7 @@ object Similarity {
     val b = corpus
       .withColumn("bucket", hyperplaneBucket(col(vecCol), planes))
       .select(col(idCol).as("id"), col(vecCol).as("vec"), col("bucket"))
-    saltedBlockPairs(b, "bucket", maxBucketRows)
-      .withColumn("sim", cosine(col("a_vec"), col("b_vec")))
-      .filter(col("sim") >= threshold)
-      .select(least(col("a_id"), col("b_id")).as("id_a"),
-        greatest(col("a_id"), col("b_id")).as("id_b"),
-        round(col("sim"), 6).as("sim"))
+    blockPairs(b, "bucket", threshold, maxBucketRows)
   }
 
   /** Per-label quantized centroid accumulator — the dataset-shift /
@@ -983,23 +929,20 @@ object Similarity {
   /** PQ codebooks: the vector space cut into `m` contiguous sub-spaces,
     * an independent k-codeword L2 k-means per sub-space, trained on the
     * same deterministic bounded sample [[ivfCentroids]] uses (the FAISS
-    * train-once shape — driver-side over ≤`sampleSize` rows, never a
-    * distributed iteration).
+    * train-once shape — driver-side over ≤`TrainSample` rows, never a
+    * distributed iteration). Callers train once and pass the result to
+    * [[pqTopK]] and [[ivfPqTopK]].
     */
   def pqCodebooks(
       corpus: DataFrame, m: Int, k: Int,
-      sampleSize: Int = 2048, iters: Int = 10,
       idCol: String = "id", vecCol: String = "vec"): Array[Array[Array[Float]]] = {
-    val sample = corpus.select(col(idCol), col(vecCol))
-      .orderBy(col(idCol)).limit(sampleSize)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).toArray)
+    val sample = trainingSample(corpus, idCol, vecCol)
     require(sample.nonEmpty, "pqCodebooks needs a non-empty corpus")
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim must split evenly into $m sub-spaces")
     val sub = dim / m
     Array.tabulate(m)(mi =>
-      kmeansL2(sample.map(_.slice(mi * sub, (mi + 1) * sub)), k, iters))
+      kmeansL2(sample.map(_.slice(mi * sub, (mi + 1) * sub)), k, TrainIters))
   }
 
   /** Σ(aᵢ−bᵢ)² in double, strict left-to-right — the squared form skips
@@ -1066,38 +1009,24 @@ object Similarity {
     * against the oracle; both ranking windows tie-break on id.
     */
   def pqTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 4, nCodes: Int = 16, refine: Int = 100,
-      trained: Option[Array[Array[Array[Float]]]] = None,
+      corpus: DataFrame, codebooks: Array[Array[Array[Float]]],
+      queries: DataFrame, k: Int, refine: Int = 100,
       idCol: String = "id", vecCol: String = "vec",
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    val cbs = trained.getOrElse(pqCodebooks(corpus, m, nCodes, idCol = idCol, vecCol = vecCol))
     // the encode pass is m·nCodes distance kernels per row — the widen
     // gate spreads it when the scan under-partitions (single-row-group
     // files); identity at real split counts
     val enc = widen(corpus.select(col(idCol), col(vecCol)))
-      .select(col(idCol), pqEncode(col(vecCol), cbs).as("codes"))
-    val adcW = Window.partitionBy(col(qidCol))
-      .orderBy(col("adc_dist").asc, col(idCol).asc)
-    val shortlist = enc.crossJoin(broadcast(queries.select(col(qidCol), col(qvecCol))))
+      .select(col(idCol), pqEncode(col(vecCol), codebooks).as("codes"))
+    val adc = enc.crossJoin(broadcast(queries.select(col(qidCol), col(qvecCol))))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("adc_dist",
-        l2Distance(col(qvecCol), pqDecode(col("codes"), cbs)))
-      .withColumn("adc_rank", row_number().over(adcW))
-      .filter(col("adc_rank") <= refine)
+        l2Distance(col(qvecCol), pqDecode(col("codes"), codebooks)))
+    val shortlist = topPerQuery(adc, refine, col("adc_dist").asc, idCol, qidCol)
       .select(col(qidCol), col(idCol))
-    // shortlist is |Q|·refine rows — broadcast it back against the
-    // corpus so the vector fetch is a broadcast join, not a shuffle
-    val refined = corpus.join(broadcast(shortlist), Seq(idCol))
-      .join(broadcast(queries), Seq(qidCol))
-      .withColumn("dist", l2Distance(col(qvecCol), col(vecCol)))
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("dist").asc, col(idCol).asc)
-    refined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col(idCol).as("neighbor_id"),
-        col("rank"), round(col("dist"), 6).as("dist"))
+    rerankShortlist(shortlist, corpus, queries, k,
+      "dist", l2Distance(col(qvecCol), col(vecCol)), col("dist").asc,
+      idCol, qidCol, qvecCol)
   }
 
   /** PQ codebook-utilization audit — the quantization-health readout
@@ -1161,19 +1090,12 @@ object Similarity {
     * equality check.
     */
   def ivfPqTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 6,
-      m: Int = 8, nCodes: Int = 16, refine: Int = 100,
-      trainedCells: Option[Array[Array[Float]]] = None,
-      trainedBooks: Option[Array[Array[Array[Float]]]] = None,
+      corpus: DataFrame,
+      cents: Array[Array[Float]], cbs: Array[Array[Array[Float]]],
+      queries: DataFrame, k: Int, nProbe: Int = 6, refine: Int = 100,
       idCol: String = "id", vecCol: String = "vec",
-      qidCol: String = "qid", qvecCol: String = "qvec",
-      maxLiteralCells: Int = IvfLiteralCellGate): DataFrame = {
-    val cents = trainedCells.getOrElse(
-      ivfCentroids(corpus, nCentroids, idCol = idCol, vecCol = vecCol))
-    val cbs = trainedBooks.getOrElse(
-      pqCodebooks(corpus, m, nCodes, idCol = idCol, vecCol = vecCol))
-    val encoded = ivfPqEncode(corpus, cents, cbs, idCol, vecCol, maxLiteralCells)
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
+    val encoded = ivfPqEncode(corpus, cents, cbs, idCol, vecCol)
     ivfPqTopKEncoded(
       encoded.select(col(idCol), col("cell"), col("codes")),
       // refine on FLOAT vectors, matching the persisted path's
@@ -1184,7 +1106,7 @@ object Similarity {
       // embeddings — are untouched: the cast is a no-op)
       corpus.select(col(idCol), col(vecCol).cast("array<float>").as(vecCol)),
       cents, cbs, queries, k, nProbe, refine,
-      idCol, vecCol, qidCol, qvecCol, maxLiteralCells)
+      idCol, vecCol, qidCol, qvecCol)
   }
 
   /** Build the resident IVF-PQ index state — (id, cell, codes, vec) —
@@ -1200,16 +1122,10 @@ object Similarity {
   def ivfPqEncode(
       corpus: DataFrame,
       cents: Array[Array[Float]], cbs: Array[Array[Array[Float]]],
-      idCol: String = "id", vecCol: String = "vec",
-      maxLiteralCells: Int = IvfLiteralCellGate): DataFrame = {
-    require(cents.nonEmpty, "ivfPqEncode needs trained centroids")
-    withCellCosines(
-        widen(corpus.select(col(idCol), col(vecCol))),
-        cents, vecCol, maxLiteralCells)
-      .withColumn("cell", argmaxCell)
+      idCol: String = "id", vecCol: String = "vec"): DataFrame =
+    withCell(widen(corpus.select(col(idCol), col(vecCol))), cents, vecCol)
       .select(col(idCol), col("cell"),
         pqEncode(col(vecCol), cbs).as("codes"), col(vecCol))
-  }
 
   /** IVF-PQ search over a PRE-BUILT index: `encoded` carries
     * (id, cell, codes) — fresh from [[ivfPqEncode]] or reloaded from a
@@ -1223,11 +1139,7 @@ object Similarity {
       queries: DataFrame, k: Int,
       nProbe: Int = 6, refine: Int = 100,
       idCol: String = "id", vecCol: String = "vec",
-      qidCol: String = "qid", qvecCol: String = "qvec",
-      maxLiteralCells: Int = IvfLiteralCellGate): DataFrame = {
-    require(cents.nonEmpty, "ivfPqTopKEncoded needs trained centroids")
-    val nCells = cents.length
-    val probes = math.min(nProbe, nCells)
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
     // queries probe their nProbe best cells (the ivfTopK probe shape),
     // and carry a precomputed ADC lookup table: ||q−recon||² is separable
     // per sub-space, so lut[mi][j] = ||q_mi − codebook[mi][j]||² turns
@@ -1248,15 +1160,7 @@ object Similarity {
       // tree-size discipline); per-entry arithmetic unchanged
       transform(typedLit(cb.map(_.toSeq).toSeq), c => l2sq(s, c))
     }.toIndexedSeq: _*)
-    val qb = withCellCosines(queries, cents, qvecCol, maxLiteralCells)
-      .withColumn("__lut", lut)
-      .withColumn("__ranked", sort_array(zip_with(
-        col("__cos"), sequence(lit(1), lit(nCells)),
-        (c, i) => struct((-c).as("negc"), i.as("idx")))))
-      .withColumn("cell",
-        explode(slice(transform(col("__ranked"), s => s("idx").cast("int")),
-          1, probes)))
-      .drop("__cos", "__ranked", "__cents")
+    val qb = probeCells(queries.withColumn("__lut", lut), cents, qvecCol, nProbe)
     // ADC within probed cells only; a corpus row lives in exactly one
     // cell, so each (query, corpus) pair meets at most once — no dedup.
     // Sum order is mi = 0..m−1 left-associated — the oracle replays the
@@ -1265,25 +1169,14 @@ object Similarity {
       .map(mi => element_at(element_at(col("__lut"), mi + 1),
         element_at(col("codes"), mi + 1) + 1))
       .reduce(_ + _)
-    val adcW = Window.partitionBy(col(qidCol))
-      .orderBy(col("adc_dist").asc, col(idCol).asc)
-    val shortlist = encoded.join(broadcast(qb), Seq("cell"))
+    val adc = encoded.join(broadcast(qb), Seq("cell"))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("adc_dist", sqrt(adcSq))
-      .withColumn("adc_rank", row_number().over(adcW))
-      .filter(col("adc_rank") <= refine)
+    val shortlist = topPerQuery(adc, refine, col("adc_dist").asc, idCol, qidCol)
       .select(col(qidCol), col(idCol))
-    // exact re-rank on true vectors — |Q|·refine rows, broadcast-joined
-    val refined = vectors.join(broadcast(shortlist), Seq(idCol))
-      .join(broadcast(queries.select(col(qidCol), col(qvecCol))), Seq(qidCol))
-      .withColumn("dist", l2Distance(col(qvecCol), col(vecCol)))
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("dist").asc, col(idCol).asc)
-    refined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col(idCol).as("neighbor_id"),
-        col("rank"), round(col("dist"), 6).as("dist"))
+    rerankShortlist(shortlist, vectors, queries, k,
+      "dist", l2Distance(col(qvecCol), col(vecCol)), col("dist").asc,
+      idCol, qidCol, qvecCol)
   }
 
   /** Incremental IVF index maintenance (the FAISS train-once/add-many
@@ -1297,21 +1190,17 @@ object Similarity {
     * cell count each side, and a |cells|-sized full-outer merge.
     *
     * Assignment is the shared deterministic argmax-cosine cell rule
-    * ([[withCellCosines]]/[[argmaxCell]]), so an arrival lands exactly
-    * where a full rebuild would put it — adds never skew results, only
-    * cell balance (which this report is for).
+    * ([[withCell]]), so an arrival lands exactly where a full rebuild
+    * would put it — adds never skew results, only cell balance (which
+    * this report is for).
     *
     * Output: (cell, n_before, n_added, n_after).
     */
   def ivfAddReport(
       existing: DataFrame, arrivals: DataFrame,
-      trained: Array[Array[Float]],
-      idCol: String = "id", vecCol: String = "vec",
-      maxLiteralCells: Int = IvfLiteralCellGate): DataFrame = {
-    require(trained.nonEmpty, "trained centroids must be non-empty")
+      centroids: Array[Array[Float]], vecCol: String = "vec"): DataFrame = {
     def cellCounts(df: DataFrame, name: String): DataFrame =
-      withCellCosines(df, trained, vecCol, maxLiteralCells)
-        .withColumn("cell", argmaxCell)
+      withCell(df, centroids, vecCol)
         .groupBy(col("cell")).agg(count(lit(1)).as(name))
     cellCounts(existing, "__nb")
       .join(cellCounts(arrivals, "__na"), Seq("cell"), "full_outer")
@@ -1353,24 +1242,13 @@ object Similarity {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val codes = corpus.select(col(idCol), signPack(col(vecCol), dim).as("__code"))
     val qcodes = queries.select(col(qidCol), signPack(col(qvecCol), dim).as("__qcode"))
-    val hw = Window.partitionBy(col(qidCol))
-      .orderBy(col("hamming").asc, col(idCol).asc)
-    val short = codes.crossJoin(broadcast(qcodes))
+    val ham = codes.crossJoin(broadcast(qcodes))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("hamming", hammingDist(col("__code"), col("__qcode")))
-      .withColumn("__hrank", row_number().over(hw))
-      .filter(col("__hrank") <= shortlist)
+    val short = topPerQuery(ham, shortlist, col("hamming").asc, idCol, qidCol)
       .select(col(qidCol), col(idCol), col("hamming"))
-    // exact rerank on true vectors — |Q|·shortlist rows, broadcast-joined
-    val rer = corpus.join(broadcast(short), Seq(idCol))
-      .join(broadcast(queries.select(col(qidCol), col(qvecCol))), Seq(qidCol))
-      .withColumn("sim", cosine(col(vecCol), col(qvecCol)))
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("sim").desc, col(idCol).asc)
-    rer
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col(idCol).as("neighbor_id"), col("rank"),
-        col("hamming"), round(col("sim"), 6).as("sim"))
+    rerankShortlist(short, corpus, queries, k,
+      "sim", cosine(col(vecCol), col(qvecCol)), col("sim").desc,
+      idCol, qidCol, qvecCol)
   }
 }

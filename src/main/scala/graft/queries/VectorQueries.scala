@@ -24,8 +24,8 @@ object VectorQueries {
     * function of (data dir contents, nCentroids), so queries AND their
     * dynamic oracles share one training run instead of re-sampling +
     * re-running k-means per construction. This is the FAISS usage
-    * pattern (train once, serve many); the operators accept the
-    * pre-trained index via their `trained` parameter.
+    * pattern (train once, serve many); every cell and PQ operator takes
+    * the trained index as a required argument.
     *
     * The memo key carries a content stamp of the dir's embeddings table,
     * so regenerating a data dir IN PLACE (same path, new data) trains
@@ -114,8 +114,7 @@ object VectorQueries {
       val q = table(s, dir, "embeddings")
         .filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.ivfTopK(e, q, k = 10, nCentroids = 16, nProbe = 6,
-        trained = Some(centroids(s, dir, 16)))
+      Similarity.ivfTopK(e, centroids(s, dir, 16), q, k = 10, nProbe = 6)
     }),
 
     // Filtered ANN: IVF top-k under a metadata equality predicate
@@ -134,9 +133,8 @@ object VectorQueries {
         .filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
           pmod(col("vec_id"), lit(4L)).as("qcat"))
-      Similarity.filteredIvfTopK(e, q, k = 10,
-        catCol = "cat", qcatCol = "qcat", nCentroids = 16, nProbe = 6,
-        trained = Some(centroids(s, dir, 16)))
+      Similarity.filteredIvfTopK(e, centroids(s, dir, 16), q, k = 10,
+        catCol = "cat", qcatCol = "qcat", nProbe = 6)
     }),
 
     // Matryoshka ANN: coarse rank on the first 16 of 64 dims (the MRL
@@ -199,8 +197,8 @@ object VectorQueries {
         .filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       Seq(1, 2, 4, 8).map { p =>
-        val hits = Similarity.ivfTopK(e, q, k = 10, nCentroids = 16,
-            nProbe = p, trained = Some(centroids(s, dir, 16)))
+        val hits = Similarity.ivfTopK(e, centroids(s, dir, 16), q, k = 10,
+            nProbe = p)
           .select(col("qid"), col("neighbor_id"))
           .join(bf, Seq("qid", "neighbor_id"), "left_semi")
           .groupBy(col("qid")).agg(count(lit(1)).as("__n"))
@@ -223,8 +221,8 @@ object VectorQueries {
       val q = table(s, dir, "embeddings")
         .filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.ivfProbeCost(e, q, probes = Seq(1, 2, 4, 8),
-        nCentroids = 16, trained = Some(centroids(s, dir, 16)))
+      Similarity.ivfProbeCost(e, centroids(s, dir, 16), q,
+        probes = Seq(1, 2, 4, 8))
     }),
 
     // IVF DELETE maintenance: search over the index with every 9th
@@ -239,8 +237,7 @@ object VectorQueries {
       val q = table(s, dir, "embeddings")
         .filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.ivfTopK(live, q, k = 10, nCentroids = 16, nProbe = 4,
-        trained = Some(centroids(s, dir, 16)))
+      Similarity.ivfTopK(live, centroids(s, dir, 16), q, k = 10, nProbe = 4)
     }),
 
     // Hard-negative mining: per query, the top-10 most-similar vectors
@@ -278,8 +275,7 @@ object VectorQueries {
       Similarity.semanticDedup(
         table(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        threshold = 0.35, nCentroids = 16,
-        trained = Some(centroids(s, dir, 16)))),
+        centroids(s, dir, 16), threshold = 0.35)),
 
     // v05 with the cross-cell recall backstop: within-cell pairs ∪
     // hyperplane-bucket blocked pairs, re-resolved under the same
@@ -290,8 +286,7 @@ object VectorQueries {
       Similarity.semanticDedupExhaustive(
         table(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        threshold = 0.35, nCentroids = 16,
-        trained = Some(centroids(s, dir, 16)))),
+        centroids(s, dir, 16), threshold = 0.35)),
 
     // Cluster profile over the same deterministic k-means cells: member
     // count / first member / centroid-cosine extrema per cell — the
@@ -302,7 +297,7 @@ object VectorQueries {
       Similarity.clusterProfile(
         table(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        nCentroids = 16, trained = Some(centroids(s, dir, 16)))),
+        centroids(s, dir, 16))),
 
     // Cluster-separation audit (Davies–Bouldin-style) over the same
     // cells: per cell, exact round-6 mean cosine to the own centroid
@@ -313,7 +308,7 @@ object VectorQueries {
       Similarity.clusterSeparation(
         table(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        nCentroids = 16, trained = Some(centroids(s, dir, 16)))),
+        centroids(s, dir, 16))),
 
     // Scalar-quantized ANN: corpus AND queries quantized to int8 codes
     // (4x memory/bandwidth vs float32 — the capacity lever at 100 TB),
@@ -345,8 +340,7 @@ object VectorQueries {
       val q = table(s, dir, "embeddings")
         .filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.pqTopK(e, q, k = 10, m = 8, nCodes = 16,
-        trained = Some(pqBooks(s, dir, 8, 16)))
+      Similarity.pqTopK(e, pqBooks(s, dir, 8, 16), q, k = 10)
     }),
 
     // IVF-PQ with exact re-rank — the FAISS production composition and
@@ -361,10 +355,8 @@ object VectorQueries {
       val q = table(s, dir, "embeddings")
         .filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.ivfPqTopK(e, q, k = 10, nCentroids = 16, nProbe = 6,
-        m = 8, nCodes = 16,
-        trainedCells = Some(centroids(s, dir, 16)),
-        trainedBooks = Some(pqBooks(s, dir, 8, 16)))
+      Similarity.ivfPqTopK(e, centroids(s, dir, 16), pqBooks(s, dir, 8, 16),
+        q, k = 10, nProbe = 6)
     }),
 
     // Per-label quantized centroid sums: the dataset-shift profile in
@@ -384,10 +376,10 @@ object VectorQueries {
       Similarity.crossGroupPairs(
         table(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec")),
+        centroids(s, dir, 16),
         table(s, dir, "documents")
           .select(col("doc_id").as("id"), col("lang").as("grp")),
-        threshold = 0.35, nCentroids = 16,
-        trained = Some(centroids(s, dir, 16)))),
+        threshold = 0.35)),
 
     // CROSS-MODAL composition: embedding-space clusters joined back to
     // the text table (vec_id ↔ doc_id) for a cluster-conditioned language
@@ -399,7 +391,7 @@ object VectorQueries {
       val cells = Similarity.assignCells(
         table(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        nCentroids = 16, trained = Some(centroids(s, dir, 16)))
+        centroids(s, dir, 16))
       val docs = table(s, dir, "documents")
         .select(col("doc_id").as("id"), col("lang"))
       cells.join(docs, Seq("id"))
@@ -462,7 +454,7 @@ object VectorQueries {
       Similarity.ivfAddReport(
         existing = e.filter(pmod(col("id"), lit(10)) =!= 0),
         arrivals = e.filter(pmod(col("id"), lit(10)) === 0),
-        trained = centroids(s, dir, 16))
+        centroids = centroids(s, dir, 16))
     }),
 
     // Embedding-norm QA audit: per-label histogram of L2-norm tenth

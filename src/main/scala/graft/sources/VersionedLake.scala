@@ -238,13 +238,27 @@ object VersionedLake {
     sb.toString
   }
 
+  /** Decode a manifest's header line (`line` is null past the end of
+    * the file); the entry lists are left empty.
+    */
+  private def decodeHeader(
+      om: com.fasterxml.jackson.databind.ObjectMapper,
+      line: String, where: String): Manifest = {
+    require(line != null && line.nonEmpty,
+      s"VersionedLake: empty manifest at $where")
+    val h = om.readTree(line)
+    Manifest(h.get("op").asText(),
+      org.apache.spark.sql.types.DataType
+        .fromJson(h.get("schema").asText()).asInstanceOf[StructType],
+      h.get("last_batch_id").asLong(), h.get("n_adds").asInt(),
+      h.get("n_removes").asInt(), h.get("n_files").asInt(),
+      h.get("rows").asLong(), h.get("bytes").asLong(), Nil, Nil)
+  }
+
   private def parseManifest(text: String, where: String): Manifest = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    require(lines.nonEmpty, s"VersionedLake: empty manifest at $where")
-    val header = om.readTree(lines.head)
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(header.get("schema").asText()).asInstanceOf[StructType]
+    val header = decodeHeader(om, lines.headOption.orNull, where)
     val removes = Seq.newBuilder[String]
     val adds = Seq.newBuilder[FileEntry]
     lines.tail.foreach { l =>
@@ -269,11 +283,7 @@ object VersionedLake {
           if (n.has("dv")) Some(n.get("dv").asText()) else None)
       }
     }
-    val m = Manifest(header.get("op").asText(), schema,
-      header.get("last_batch_id").asLong(),
-      header.get("n_adds").asInt(), header.get("n_removes").asInt(),
-      header.get("n_files").asInt(), header.get("rows").asLong(),
-      header.get("bytes").asLong(), removes.result(), adds.result())
+    val m = header.copy(removes = removes.result(), adds = adds.result())
     require(m.adds.length == m.nAdds && m.removes.length == m.nRemoves,
       s"VersionedLake: manifest $where is truncated — header declares " +
         s"${m.nAdds}+${m.nRemoves} entries, parsed " +
@@ -320,16 +330,8 @@ object VersionedLake {
       try new java.io.BufferedReader(
         new java.io.InputStreamReader(in, "UTF-8")).readLine()
       finally in.close()
-    require(line != null && line.nonEmpty,
-      s"VersionedLake: empty manifest at $p")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val h = om.readTree(line)
-    Manifest(h.get("op").asText(),
-      org.apache.spark.sql.types.DataType
-        .fromJson(h.get("schema").asText()).asInstanceOf[StructType],
-      h.get("last_batch_id").asLong(), h.get("n_adds").asInt(),
-      h.get("n_removes").asInt(), h.get("n_files").asInt(),
-      h.get("rows").asLong(), h.get("bytes").asLong(), Nil, Nil)
+    decodeHeader(new com.fasterxml.jackson.databind.ObjectMapper(), line,
+      p.toString)
   }
 
   /** Publish `text` at `dst` iff `dst` does not exist, ATOMICALLY — the

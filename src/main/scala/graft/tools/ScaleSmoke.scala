@@ -81,11 +81,11 @@ object ScaleSmoke {
         Similarity.cosineNearDupPairs(emb, threshold = 0.99)
           .queryExecution.toRdd.count(), false),
       ("semantic_dedup", () =>
-        Similarity.semanticDedup(emb, threshold = 0.35, nCentroids = 16 * factor)
-          .queryExecution.toRdd.count(), false),
+        Similarity.semanticDedup(emb, Similarity.ivfCentroids(emb, 16 * factor),
+          threshold = 0.35).queryExecution.toRdd.count(), false),
       ("semantic_dedup_one_cell", () =>
-        Similarity.semanticDedup(emb, threshold = 0.35, nCentroids = 1,
-          maxCellRows = 2048).queryExecution.toRdd.count(), true),
+        Similarity.semanticDedup(emb, Similarity.ivfCentroids(emb, 1),
+          threshold = 0.35, maxCellRows = 2048).queryExecution.toRdd.count(), true),
       // the r7 corpus-law shapes: bigram explode → groupBy (heaps) and
       // token explode → top-K cut (zipf) — both must stay linear
       ("heaps_curve", () =>
@@ -336,24 +336,24 @@ object ScaleSmoke {
       .filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     time(s"ivf ann corpus x$factor") {
-      Similarity.ivfTopK(emb, q, k = 10, nCentroids = 16, nProbe = 6)
-        .queryExecution.toRdd.count()
+      Similarity.ivfTopK(emb, Similarity.ivfCentroids(emb, 16), q, k = 10,
+        nProbe = 6).queryExecution.toRdd.count()
     }
     // semantic dedup: in-cell quadratic expansion must grow with corpus,
     // not blow up — cells multiply, pairs per cell stay bounded by the
     // cell-size distribution (more cells at larger corpora in production;
     // here the check is the explicit expansion width holding up)
     time(s"semantic dedup x$factor") {
-      Similarity.semanticDedup(emb, threshold = 0.35,
-        nCentroids = 16 * factor).queryExecution.toRdd.count()
+      Similarity.semanticDedup(emb, Similarity.ivfCentroids(emb, 16 * factor),
+        threshold = 0.35).queryExecution.toRdd.count()
     }
     // the degenerate mega-cell: every row in ONE cell, so comparison work
     // is quadratic BY CONTRACT — what this smokes is that the maxCellRows
     // tiles keep it spread across tasks instead of serializing (the
     // per-task bound itself is gated deterministically in ScaleGateSpec)
     time(s"semantic dedup 1-cell x$factor") {
-      Similarity.semanticDedup(emb, threshold = 0.35, nCentroids = 1,
-        maxCellRows = 2048).queryExecution.toRdd.count()
+      Similarity.semanticDedup(emb, Similarity.ivfCentroids(emb, 1),
+        threshold = 0.35, maxCellRows = 2048).queryExecution.toRdd.count()
     }
     // corpus stats: repetition is per-row narrow (should be ~linear);
     // dup-span coverage and contamination shuffle the gram stream once
@@ -382,14 +382,15 @@ object ScaleSmoke {
         .queryExecution.toRdd.count()
     }
     time(s"cluster profile x$factor") {
-      Similarity.clusterProfile(emb, nCentroids = 16)
+      Similarity.clusterProfile(emb, Similarity.ivfCentroids(emb, 16))
         .queryExecution.toRdd.count()
     }
     // IVF-PQ: the encode pass is per-row narrow, the ADC join fans in by
     // nProbe/nCells — both must track corpus size linearly
     time(s"ivfpq ann corpus x$factor") {
-      Similarity.ivfPqTopK(emb, q, k = 10, nCentroids = 16, nProbe = 6,
-        m = 8).queryExecution.toRdd.count()
+      Similarity.ivfPqTopK(emb, Similarity.ivfCentroids(emb, 16),
+        Similarity.pqCodebooks(emb, m = 8, k = 16), q, k = 10, nProbe = 6)
+        .queryExecution.toRdd.count()
     }
     // bigram NLL: explode + two count join-backs on the bigram keys —
     // vocabulary grows sublinearly, the token stream linearly
@@ -414,8 +415,8 @@ object ScaleSmoke {
     val docLangs = docs.select(col("doc_id").as("id"),
       (pmod(col("doc_id"), lit(7))).cast("string").as("grp"))
     time(s"bitext candidates x$factor") {
-      Similarity.crossGroupPairs(emb, docLangs, threshold = 0.35,
-        nCentroids = 16 * factor).queryExecution.toRdd.count()
+      Similarity.crossGroupPairs(emb, Similarity.ivfCentroids(emb, 16 * factor),
+        docLangs, threshold = 0.35).queryExecution.toRdd.count()
     }
     // distributed Lloyd's: per round one assignment pass + one (cell,dim)
     // partial-agg shuffle — wall time must track the corpus linearly
@@ -456,8 +457,8 @@ object ScaleSmoke {
     val catEmb = emb.withColumn("cat", pmod(col("id"), lit(4L)))
     val catQ = q.withColumn("qcat", pmod(col("qid"), lit(4L)))
     time(s"filtered ivf ann x$factor") {
-      Similarity.filteredIvfTopK(catEmb, catQ, k = 10,
-        catCol = "cat", qcatCol = "qcat", nCentroids = 16, nProbe = 6)
+      Similarity.filteredIvfTopK(catEmb, Similarity.ivfCentroids(catEmb, 16),
+        catQ, k = 10, catCol = "cat", qcatCol = "qcat", nProbe = 6)
         .queryExecution.toRdd.count()
     }
     // skyline: pre-agg to (qtr, price) + quarter-partitioned prefix-min

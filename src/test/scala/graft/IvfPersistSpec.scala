@@ -31,8 +31,7 @@ class IvfPersistSpec extends SparkSessionSpec {
     assert(reloaded.length === cents.length)
     assert(reloaded.zip(cents).forall { case (a, b) => a.sameElements(b) })
 
-    val fresh = Similarity.ivfTopK(corpus, queries, k = 10,
-      nProbe = 4, trained = Some(cents))
+    val fresh = Similarity.ivfTopK(corpus, cents, queries, k = 10, nProbe = 4)
     assert(rows(IvfPersist.search(store, "ann", queries, k = 10, nProbe = 4))
       === rows(fresh))
   }
@@ -47,8 +46,7 @@ class IvfPersistSpec extends SparkSessionSpec {
     IvfPersist.persist(store, "ann", cents, Similarity.ivfAssign(base, cents))
     // ADD: arrivals assign against the STORED centroids, upsert by id
     IvfPersist.add(store, "ann", arrivals)
-    val freshAll = Similarity.ivfTopK(corpus, queries, k = 10,
-      nProbe = 4, trained = Some(cents))
+    val freshAll = Similarity.ivfTopK(corpus, cents, queries, k = 10, nProbe = 4)
     assert(rows(IvfPersist.search(store, "ann", queries, k = 10, nProbe = 4))
       === rows(freshAll))
 
@@ -58,8 +56,7 @@ class IvfPersistSpec extends SparkSessionSpec {
       .select(col("neighbor_id")).head.getLong(0)
     IvfPersist.delete(store, "ann", victim)
     val freshMinus = Similarity.ivfTopK(
-      corpus.filter(col("id") =!= victim), queries, k = 10,
-      nProbe = 4, trained = Some(cents))
+      corpus.filter(col("id") =!= victim), cents, queries, k = 10, nProbe = 4)
     assert(rows(IvfPersist.search(store, "ann", queries, k = 10, nProbe = 4))
       === rows(freshMinus))
   }
@@ -83,8 +80,7 @@ class IvfPersistSpec extends SparkSessionSpec {
     })
 
     def fresh(c: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfPqTopK(c, queries, k = 10, nProbe = 6, refine = 60,
-        trainedCells = Some(cents), trainedBooks = Some(cbs))
+      Similarity.ivfPqTopK(c, cents, cbs, queries, k = 10, nProbe = 6, refine = 60)
     def loaded() =
       IvfPersist.searchPq(store, "pq", queries, k = 10, nProbe = 6, refine = 60)
 

@@ -1,10 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, pmod}
 
 import graft.kv.Store
-import graft.ops.{Dedup, Hits, KCore, LabelProp, PageRank, ShortestPaths}
+import graft.ops.{Dedup, Hits, KCore, LabelProp, PageRank, ShortestPaths, Similarity}
 import graft.sources.VersionedLake
 
 /** Spark jobs an operator runs, call and final collect together, on one
@@ -20,6 +20,12 @@ import graft.sources.VersionedLake
   * families and truncated mirrors. Their budgets are the counts of their
   * shuffle and checkpoint plans; an exchange that stops being reused (one
   * branch's aggregate or join key changing shape) breaks them.
+  *
+  * The ANN and embedding-dedup operators run on one small random vector
+  * corpus with cells and codebooks trained before the call, as every
+  * caller trains them. Their budgets are the counts of the probe join,
+  * the shortlist broadcasts and the salted-tile checkpoint; a training
+  * pass or a fetch that comes back as its own job breaks them.
   *
   * The key writes, the lake delete and the point read run against a
   * small store gid and a small two-day lake, each built fresh for the
@@ -50,6 +56,15 @@ class JobBudgetSpec extends SparkSessionSpec {
   }
   private def docs = corpus.toDF("doc_id", "text")
 
+  private val vecs: Seq[(Long, Array[Float])] = {
+    val r = new scala.util.Random(11)
+    (0L until 120L).map(i => i -> Array.fill(16)(r.nextGaussian().toFloat))
+  }
+  private def emb = vecs.toDF("id", "vec")
+  private def embQ = vecs.take(4).toDF("qid", "qvec")
+  private lazy val cells = Similarity.ivfCentroids(emb, nCentroids = 8)
+  private lazy val books = Similarity.pqCodebooks(emb, m = 4, k = 8)
+
   private val ops: Seq[(String, Int, () => DataFrame)] = Seq(
     ("fixedPointPageRank", 16, () => PageRank.fixedPointPageRank(e, 3)),
     ("personalizedPageRank", 24, () =>
@@ -74,12 +89,27 @@ class JobBudgetSpec extends SparkSessionSpec {
       docs.filter($"doc_id" % 3 === 0), docs.filter($"doc_id" % 3 =!= 0),
       "text", "doc_id", threshold = 0.5)),
     ("Dedup.lshTuningReport", 16, () =>
-      Dedup.lshTuningReport(docs, "text", "doc_id")))
+      Dedup.lshTuningReport(docs, "text", "doc_id")),
+    ("Similarity.ivfTopK", 4, () =>
+      Similarity.ivfTopK(emb, cells, embQ, k = 5, nProbe = 3)),
+    ("Similarity.filteredIvfTopK", 4, () => Similarity.filteredIvfTopK(
+      emb.withColumn("cat", pmod($"id", lit(2L))), cells,
+      embQ.withColumn("qcat", pmod($"qid", lit(2L))), k = 5,
+      catCol = "cat", qcatCol = "qcat", nProbe = 3)),
+    ("Similarity.ivfPqTopK", 6, () => Similarity.ivfPqTopK(emb, cells, books,
+      embQ, k = 5, nProbe = 3, refine = 20)),
+    ("Similarity.semanticDedup", 8, () =>
+      Similarity.semanticDedup(emb, cells, threshold = 0.3)),
+    ("Similarity.hammingTopK", 6, () =>
+      Similarity.hammingTopK(emb, embQ, k = 5, dim = 16, shortlist = 20)),
+    ("Similarity.matryoshkaTopK", 6, () =>
+      Similarity.matryoshkaTopK(emb, embQ, k = 5, coarseDim = 8, shortlist = 20)))
 
   for ((name, budget, run) <- ops)
     test(s"$name stays within its job budget") {
       run().collect() // warm: first-use analysis must not count
       val n = GraphLoopSpec.jobs(spark)(run().collect())
+      info(s"$name ran $n jobs")
       assert(n <= budget, s"$name ran $n jobs, budget $budget")
     }
 

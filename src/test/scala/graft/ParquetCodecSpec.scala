@@ -61,7 +61,7 @@ class ParquetCodecSpec extends SparkSessionSpec {
       .toDF("event_id", "ts", "value", "payload")
 
   test("every engine write path lands zstd column chunks: store put, del " +
-      "and reconf; lake appendBatch, upsert, cow and dv delete, compact; " +
+      "and reconf; lake appendBatch, upsert, two deletes, compact; " +
       "a plain df.write.parquet") {
     // each step must add files of its own, and each added file is zstd
     var seen = Set.empty[String]

@@ -46,7 +46,8 @@ class ScaleGateSpec extends SparkSessionSpec {
     // plans carry the (block, __ti, __tj) tile-key exchange
     val e = table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val p1 = Similarity.semanticDedup(e, threshold = 0.35, maxCellRows = 8)
+    val p1 = Similarity.semanticDedup(e, Similarity.ivfCentroids(e, 16),
+        threshold = 0.35, maxCellRows = 8)
       .queryExecution.executedPlan.toString
     assert(p1.contains("__ti") && p1.contains("__tj"),
       "semanticDedup lost the triangular-tile decomposition")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Engine.table
 import graft.functions.VectorFunctions
@@ -16,14 +17,14 @@ class SimilaritySpec extends SparkSessionSpec {
       (1L, Array(1.0f, 0.0f)), (2L, Array(1.0f, 0.0f)),
       (3L, Array(0.0f, 1.0f))
     ).toDF("id", "vec")
-    val out = Similarity.clusterSeparation(corpus, trained = Some(cents))
+    val out = Similarity.clusterSeparation(corpus, cents)
       .as[(Int, Long, Double, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
     assert(out(1) === ((2L, 1.0, 0.0, 1.0))) // cohesive, far from cell 2
     assert(out(2) === ((1L, 1.0, 0.0, 1.0)))
     // degenerate: one centroid has no "other" — empty result, contract
     assert(Similarity.clusterSeparation(corpus,
-      trained = Some(Array(Array(1.0f, 0.0f)))).count() === 0L)
+      Array(Array(1.0f, 0.0f))).count() === 0L)
   }
 
   test("cosine column function matches manual computation") {
@@ -45,6 +46,10 @@ class SimilaritySpec extends SparkSessionSpec {
       e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec")))
   }
+
+  /** Cells and codebooks are trained by the caller and passed in. */
+  def cells(corpus: DataFrame, n: Int) = Similarity.ivfCentroids(corpus, n)
+  def books(corpus: DataFrame, m: Int) = Similarity.pqCodebooks(corpus, m, k = 16)
 
   test("brute-force top-k: k rows per query, rank ordered by sim") {
     val (corpus, queries) = corpusAndQueries()
@@ -74,8 +79,8 @@ class SimilaritySpec extends SparkSessionSpec {
     val (corpus, queries) = corpusAndQueries()
     val exact = Similarity.bruteForceTopK(corpus, queries, k = 10)
       .select("qid", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.ivfTopK(corpus, queries, k = 10,
-      nCentroids = 16, nProbe = 6)
+    val approx = Similarity.ivfTopK(corpus, cells(corpus, 16), queries,
+      k = 10, nProbe = 6)
       .select("qid", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
     info(s"IVF recall@10 = $recall")
@@ -86,8 +91,8 @@ class SimilaritySpec extends SparkSessionSpec {
     val (corpus, queries) = corpusAndQueries()
     val exact = Similarity.bruteForceTopK(corpus, queries, k = 5)
       .select("qid", "neighbor_id").as[(Long, Long)].collect().toSet
-    val full = Similarity.ivfTopK(corpus, queries, k = 5,
-      nCentroids = 8, nProbe = 8)
+    val full = Similarity.ivfTopK(corpus, cells(corpus, 8), queries, k = 5,
+      nProbe = 8)
       .select("qid", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(full === exact)
   }
@@ -117,8 +122,8 @@ class SimilaritySpec extends SparkSessionSpec {
     val (corpus, queries) = corpusAndQueries()
     val cCorpus = corpus.withColumn("cat", pmod(col("id"), lit(4L)))
     val cQueries = queries.withColumn("qcat", pmod(col("qid"), lit(4L)))
-    val res = Similarity.filteredIvfTopK(cCorpus, cQueries, k = 5,
-      catCol = "cat", qcatCol = "qcat", nCentroids = 8, nProbe = 8)
+    val res = Similarity.filteredIvfTopK(cCorpus, cells(cCorpus, 8), cQueries,
+      k = 5, catCol = "cat", qcatCol = "qcat", nProbe = 8)
       .select("qid", "neighbor_id").as[(Long, Long)].collect()
     // predicate honored: neighbor category == query category, never self
     assert(res.nonEmpty)
@@ -137,16 +142,17 @@ class SimilaritySpec extends SparkSessionSpec {
     }
   }
 
-  test("IVF broadcast centroid path == literal path, plan O(1) in cells") {
+  test("IVF broadcast centroid path: 80 cells probed in full == brute force, plan O(1) in cells") {
     val (corpus, queries) = corpusAndQueries()
-    val lit = Similarity.ivfTopK(corpus, queries, k = 10,
-      nCentroids = 16, nProbe = 6)
-    // maxLiteralCells = 0 forces the production-cell-count path: the
-    // centroid matrix rides a 1-row broadcast cross-join walked by
-    // transform(), instead of 16×64 literal nodes in every task's plan
-    val hof = Similarity.ivfTopK(corpus, queries, k = 10,
-      nCentroids = 16, nProbe = 6, maxLiteralCells = 0)
-    assert(hof.collect().toSet === lit.collect().toSet)
+    // 80 cells on the 500-row corpus is above the 64-cell literal gate:
+    // the centroid matrix rides a 1-row broadcast cross-join walked by
+    // transform(), instead of 80×64 literal nodes in every task's plan
+    val many = cells(corpus, 80)
+    assert(many.length === 80 && many.length > Similarity.IvfLiteralCellGate)
+    val hof = Similarity.ivfTopK(corpus, many, queries, k = 10, nProbe = 80)
+    // probing every cell leaves every other row a candidate: exact
+    val exact = Similarity.bruteForceTopK(corpus, queries, k = 10)
+    assert(hof.collect().toSet === exact.collect().toSet)
     // plan-size gate: the broadcast plan carries ONE cosine_sim per
     // cosines() call site (inside the lambda), not one per cell — the
     // analyzed plan string must not scale with nCentroids
@@ -157,6 +163,42 @@ class SimilaritySpec extends SparkSessionSpec {
     val physical = hof.queryExecution.executedPlan.toString
     assert(physical.contains("BroadcastNestedLoopJoin"),
       "centroid table should ship via a 1-row broadcast join")
+  }
+
+  test("cell operators given no cells return zero rows in their own schema") {
+    // ivfCentroids of an empty corpus is empty; every cell operator then
+    // answers with no rows, typed like its answer over trained cells
+    val (corpus, queries) = corpusAndQueries()
+    val groups = table(spark, sfDir, "documents")
+      .select(col("doc_id").as("id"), col("lang").as("grp"))
+    val none = cells(corpus.limit(0), 16)
+    assert(none.isEmpty)
+    val some = cells(corpus, 16)
+    def cat(df: DataFrame, c: String, id: String) =
+      df.withColumn(c, pmod(col(id), lit(4L)))
+    val ops: Seq[(String, (DataFrame, Array[Array[Float]]) => DataFrame)] = Seq(
+      ("ivfTopK", (c, t) => Similarity.ivfTopK(c, t, queries, k = 5)),
+      ("ivfProbeCost", (c, t) =>
+        Similarity.ivfProbeCost(c, t, queries, probes = Seq(1, 4))),
+      ("filteredIvfTopK", (c, t) => Similarity.filteredIvfTopK(
+        cat(c, "cat", "id"), t, cat(queries, "qcat", "qid"), k = 5,
+        catCol = "cat", qcatCol = "qcat")),
+      ("semanticDedup", (c, t) => Similarity.semanticDedup(c, t, threshold = 0.3)),
+      ("semanticDedupExhaustive", (c, t) =>
+        Similarity.semanticDedupExhaustive(c, t, threshold = 0.3)),
+      ("crossGroupPairs", (c, t) =>
+        Similarity.crossGroupPairs(c, t, groups, threshold = 0.3)),
+      ("assignCells", (c, t) => Similarity.assignCells(c, t)),
+      ("clusterProfile", (c, t) => Similarity.clusterProfile(c, t)),
+      ("clusterSeparation", (c, t) => Similarity.clusterSeparation(c, t)))
+    def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    for ((name, op) <- ops) {
+      val full = op(corpus, some)
+      val empty = op(corpus.limit(0), none)
+      assert(full.count() > 0L, name)
+      assert(empty.count() === 0L, name)
+      assert(typed(empty) === typed(full), name)
+    }
   }
 
   test("ivfCentroids is deterministic across invocations") {
@@ -170,7 +212,7 @@ class SimilaritySpec extends SparkSessionSpec {
   test("clusterProfile partitions the corpus across cells, sims bounded") {
     val e = table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val prof = Similarity.clusterProfile(e, nCentroids = 16).collect()
+    val prof = Similarity.clusterProfile(e, cells(e, 16)).collect()
     assert(prof.map(_.getAs[Long]("n_vecs")).sum === e.count())
     assert(prof.length <= 16 && prof.nonEmpty)
     prof.foreach { r =>
@@ -178,16 +220,16 @@ class SimilaritySpec extends SparkSessionSpec {
       assert(lo <= hi && hi <= 1.000001 && lo >= -1.000001)
     }
     // cells and first members agree with the raw assignment pass
-    val cells = prof.map(_.getAs[Int]("cell")).toSet
-    assert(cells.subsetOf((1 to 16).toSet))
+    val cellIds = prof.map(_.getAs[Int]("cell")).toSet
+    assert(cellIds.subsetOf((1 to 16).toSet))
   }
 
   test("assignCells agrees with clusterProfile's per-cell population") {
     val e = table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val byCell = Similarity.assignCells(e, nCentroids = 16)
+    val byCell = Similarity.assignCells(e, cells(e, 16))
       .groupBy("cell").count().as[(Int, Long)].collect().toMap
-    val prof = Similarity.clusterProfile(e, nCentroids = 16).collect()
+    val prof = Similarity.clusterProfile(e, cells(e, 16)).collect()
       .map(r => r.getAs[Int]("cell") -> r.getAs[Long]("n_vecs")).toMap
     assert(byCell === prof)
   }
@@ -241,11 +283,11 @@ class SimilaritySpec extends SparkSessionSpec {
   test("ivfAddReport: add == rebuild (cell totals), counts partition the corpus") {
     val e = table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val trained = Similarity.ivfCentroids(e, nCentroids = 8)
+    val trained = cells(e, 8)
     val report = Similarity.ivfAddReport(
       existing = e.filter(col("id") % 10 =!= 0),
       arrivals = e.filter(col("id") % 10 === 0),
-      trained = trained)
+      centroids = trained)
       .as[(Int, Long, Long, Long)].collect()
     // n_after per cell must equal a full rebuild's assignment counts —
     // incremental add lands every arrival where the rebuild would
@@ -309,7 +351,8 @@ class SimilaritySpec extends SparkSessionSpec {
     val planted = e.unionAll(
       e.select((col("id") + 10000).as("id"), col("vec")))
     val n = e.count()
-    val dropped = Similarity.semanticDedup(planted, threshold = 0.99)
+    val dropped = Similarity.semanticDedup(planted, cells(planted, 16),
+        threshold = 0.99)
       .select("id", "dup_of").as[(Long, Long)].collect()
     assert(dropped.length === n)
     assert(dropped.forall { case (id, of) => id === of + 10000 })
@@ -322,7 +365,7 @@ class SimilaritySpec extends SparkSessionSpec {
     val other = Array.tabulate(64)(i => if (i % 2 == 0) 1.0f else -1.0f)
     val df = Seq((1L, v), (2L, v), (3L, v), (4L, other))
       .toDF("id", "vec")
-    val dropped = Similarity.semanticDedup(df, threshold = 0.99, nCentroids = 2)
+    val dropped = Similarity.semanticDedup(df, cells(df, 2), threshold = 0.99)
       .select("id", "dup_of").as[(Long, Long)].collect().sortBy(_._1)
     assert(dropped.toSeq === Seq((2L, 1L), (3L, 1L)))
   }
@@ -333,26 +376,27 @@ class SimilaritySpec extends SparkSessionSpec {
     // reproduce the unsalted result EXACTLY (same ids, same rounded sims)
     val e = table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val unsplit = Similarity.semanticDedup(e, threshold = 0.3,
+    val unsplit = Similarity.semanticDedup(e, cells(e, 16), threshold = 0.3,
         maxCellRows = Int.MaxValue)
       .as[(Long, Long, Double)].collect().toSet
-    val split = Similarity.semanticDedup(e, threshold = 0.3, maxCellRows = 8)
+    val split = Similarity.semanticDedup(e, cells(e, 16), threshold = 0.3,
+        maxCellRows = 8)
       .as[(Long, Long, Double)].collect().toSet
     assert(unsplit.nonEmpty)
     assert(split === unsplit)
   }
 
   test("semanticDedup cell cap: degenerate one-cell corpus still exact") {
-    // nCentroids=1 is the mega-cluster shape the cap exists for: every
+    // one cell is the mega-cluster shape the cap exists for: every
     // row in one cell, so the all-pairs test runs entirely through the
     // salted tiles — output must still match the unsalted plan
     val e = table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val unsplit = Similarity.semanticDedup(e, threshold = 0.3,
-        nCentroids = 1, maxCellRows = Int.MaxValue)
+    val unsplit = Similarity.semanticDedup(e, cells(e, 1), threshold = 0.3,
+        maxCellRows = Int.MaxValue)
       .as[(Long, Long, Double)].collect().toSet
-    val split = Similarity.semanticDedup(e, threshold = 0.3,
-        nCentroids = 1, maxCellRows = 50)
+    val split = Similarity.semanticDedup(e, cells(e, 1), threshold = 0.3,
+        maxCellRows = 50)
       .as[(Long, Long, Double)].collect().toSet
     assert(unsplit.nonEmpty)
     assert(split === unsplit)
@@ -411,15 +455,14 @@ class SimilaritySpec extends SparkSessionSpec {
       if (j == 0) 1.001f else if (j == 1) 1.0f else 0.0f)
     val far = Array.tabulate(dim)(j => if (j == 5) 1.0f else 0.0f)
     val df = Seq((1L, v), (2L, u), (3L, far)).toDF("id", "vec")
-    val cells = Similarity.assignCells(df, trained = Some(trained))
+    val byId = Similarity.assignCells(df, trained)
       .as[(Long, Int)].collect().toMap
-    assert(cells(1L) !== cells(2L), "twins must straddle the cell boundary")
-    val plain = Similarity.semanticDedup(df, threshold = 0.99,
-        trained = Some(trained))
+    assert(byId(1L) !== byId(2L), "twins must straddle the cell boundary")
+    val plain = Similarity.semanticDedup(df, trained, threshold = 0.99)
       .select("id", "dup_of").as[(Long, Long)].collect().toSet
     assert(!plain.contains((2L, 1L)), "cross-cell pair is invisible to v05")
-    val exhaustive = Similarity.semanticDedupExhaustive(df, threshold = 0.99,
-        trained = Some(trained))
+    val exhaustive = Similarity.semanticDedupExhaustive(df, trained,
+        threshold = 0.99)
       .select("id", "dup_of").as[(Long, Long)].collect().toSet
     assert(exhaustive.contains((2L, 1L)))
   }
@@ -427,9 +470,10 @@ class SimilaritySpec extends SparkSessionSpec {
   test("semanticDedupExhaustive drop set ⊇ semanticDedup drop set") {
     val e = table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val plain = Similarity.semanticDedup(e, threshold = 0.3)
+    val plain = Similarity.semanticDedup(e, cells(e, 16), threshold = 0.3)
       .select("id").as[Long].collect().toSet
-    val exhaustive = Similarity.semanticDedupExhaustive(e, threshold = 0.3)
+    val exhaustive = Similarity.semanticDedupExhaustive(e, cells(e, 16),
+        threshold = 0.3)
       .select("id").as[Long].collect().toSet
     assert(plain.nonEmpty)
     assert(plain.subsetOf(exhaustive))
@@ -460,7 +504,7 @@ class SimilaritySpec extends SparkSessionSpec {
     // cells only ever REMOVE candidate pairs vs the all-pairs test
     val e = table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val dropped = Similarity.semanticDedup(e, threshold = 0.3)
+    val dropped = Similarity.semanticDedup(e, cells(e, 16), threshold = 0.3)
       .select("id", "dup_of").as[(Long, Long)].collect().toSet
     val global = e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
       .withColumn("sim", VectorFunctions.cosine(col("a.vec"), col("b.vec")))
@@ -522,7 +566,7 @@ class SimilaritySpec extends SparkSessionSpec {
           .orderBy(col("dist").asc, col("id").asc)))
       .filter(col("rank") <= 10)
       .select("qid", "id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.pqTopK(corpus, queries, k = 10, m = 8)
+    val approx = Similarity.pqTopK(corpus, books(corpus, 8), queries, k = 10)
       .select("qid", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
     info(s"PQ recall@10 = $recall")
@@ -539,8 +583,8 @@ class SimilaritySpec extends SparkSessionSpec {
           .orderBy(col("dist").asc, col("id").asc)))
       .filter(col("rank") <= 10)
       .select("qid", "id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.ivfPqTopK(corpus, queries, k = 10,
-      nCentroids = 16, nProbe = 6, m = 8)
+    val approx = Similarity.ivfPqTopK(corpus, cells(corpus, 16),
+      books(corpus, 8), queries, k = 10, nProbe = 6)
       .select("qid", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
     info(s"IVF-PQ recall@10 = $recall")
@@ -560,7 +604,8 @@ class SimilaritySpec extends SparkSessionSpec {
     val groups = corpus.select(col("id"),
       when(col("id") === 50001L, lit("xx"))
         .otherwise(lit("en")).as("grp"))
-    val got = Similarity.crossGroupPairs(corpus, groups, threshold = 0.999)
+    val got = Similarity.crossGroupPairs(corpus, cells(corpus, 16), groups,
+        threshold = 0.999)
       .select("id_a", "id_b", "grp_a", "grp_b")
       .as[(Long, Long, String, String)].collect().toSet
     assert(got.contains((0L, 50001L, "en", "xx")))
@@ -573,10 +618,10 @@ class SimilaritySpec extends SparkSessionSpec {
 
   test("IVF-PQ probing every cell == pqTopK (the IVF layer only prunes)") {
     val (corpus, queries) = corpusAndQueries()
-    val full = Similarity.ivfPqTopK(corpus, queries, k = 10,
-      nCentroids = 8, nProbe = 8, m = 8)
+    val full = Similarity.ivfPqTopK(corpus, cells(corpus, 8), books(corpus, 8),
+        queries, k = 10, nProbe = 8)
       .select("qid", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val pq = Similarity.pqTopK(corpus, queries, k = 10, m = 8)
+    val pq = Similarity.pqTopK(corpus, books(corpus, 8), queries, k = 10)
       .select("qid", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(full === pq)
   }

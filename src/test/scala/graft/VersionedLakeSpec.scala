@@ -228,7 +228,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
       "a stat-less entry was pruned — UNSOUND")
   }
 
-  test("deleteBand: copy-on-write touches only proven-overlapping files, " +
+  test("deleteBand: merge-on-read keeps proven-disjoint files verbatim, " +
       "old snapshots keep the rows, schema drift is refused") {
     val d = freshRoot()
     val ev = table(spark, sfDir, "events")
