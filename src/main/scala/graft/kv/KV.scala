@@ -92,16 +92,8 @@ class Store(spark: SparkSession, root: String, defaultBuckets: Int = 32) {
   /** The (key, value, bucket) rows of the gid's `entries` in `snap`. */
   private def rows(gid: String, snap: VersionedLake.Snapshot,
       entries: Seq[VersionedLake.FileEntry]): DataFrame =
-    if (entries.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("key STRING, value STRING, bucket INT"))
-    else {
-      val dir = new Path(path(gid))
-      val base = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(dir).toString
-      VersionedLake.scanEntries(spark, base, snap.schema, entries)
-        .select(col("key"), col("value"), col("bucket").cast("int").as("bucket"))
-    }
+    VersionedLake.scanEntries(spark, path(gid), snap.schema, entries, "bucket")
+      .select(col("key"), col("value"), col("bucket").cast("int").as("bucket"))
 
   /** The entries of `key`'s bucket. */
   private def bucketEntries(snap: VersionedLake.Snapshot, key: String) = {

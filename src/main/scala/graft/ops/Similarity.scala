@@ -931,19 +931,27 @@ object Similarity {
     * same deterministic bounded sample [[ivfCentroids]] uses (the FAISS
     * train-once shape — driver-side over ≤`TrainSample` rows, never a
     * distributed iteration). Callers train once and pass the result to
-    * [[pqTopK]] and [[ivfPqTopK]].
+    * [[pqTopK]] and [[ivfPqTopK]]. Empty on an empty corpus, like
+    * [[ivfCentroids]]: with no codebooks no row has codes, so both PQ
+    * searches return zero rows in their own schema.
     */
   def pqCodebooks(
       corpus: DataFrame, m: Int, k: Int,
       idCol: String = "id", vecCol: String = "vec"): Array[Array[Array[Float]]] = {
     val sample = trainingSample(corpus, idCol, vecCol)
-    require(sample.nonEmpty, "pqCodebooks needs a non-empty corpus")
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim must split evenly into $m sub-spaces")
-    val sub = dim / m
-    Array.tabulate(m)(mi =>
-      kmeansL2(sample.map(_.slice(mi * sub, (mi + 1) * sub)), k, TrainIters))
+    if (sample.isEmpty) Array.empty
+    else {
+      val dim = sample.head.length
+      require(dim % m == 0, s"dim $dim must split evenly into $m sub-spaces")
+      val sub = dim / m
+      Array.tabulate(m)(mi =>
+        kmeansL2(sample.map(_.slice(mi * sub, (mi + 1) * sub)), k, TrainIters))
+    }
   }
+
+  /** Width of one PQ sub-space (0 with no codebooks). */
+  private def subWidth(codebooks: Array[Array[Array[Float]]]): Int =
+    codebooks.headOption.fold(0)(_(0).length)
 
   /** Σ(aᵢ−bᵢ)² in double, strict left-to-right — the squared form skips
     * the sqrt so the per-codeword argmin is one fewer rounding step (and
@@ -964,7 +972,7 @@ object Similarity {
     * THE memory/bandwidth lever for trillion-row ANN).
     */
   def pqEncode(vec: Column, codebooks: Array[Array[Array[Float]]]): Column = {
-    val sub = codebooks(0)(0).length
+    val sub = subWidth(codebooks)
     val codes = codebooks.zipWithIndex.map { case (cb, mi) =>
       val s = slice(vec, mi * sub + 1, sub)
       // one codebook literal + one lambda per sub-space (not nCodes
@@ -983,15 +991,17 @@ object Similarity {
     * the plan as literals — nothing is looked up at runtime but an
     * `element_at`.
     */
-  def pqDecode(codes: Column, codebooks: Array[Array[Array[Float]]]): Column = {
-    // one 3-level array literal shared by every sub-space lookup (the
-    // unrolled form carried m·nCodes·sub Literal nodes through analysis)
-    val books = typedLit(
-      codebooks.map(_.map(_.map(_.toDouble).toSeq).toSeq).toSeq)
-    concat(codebooks.indices.map { mi =>
-      element_at(element_at(books, mi + 1), element_at(codes, mi + 1) + 1)
-    }.toIndexedSeq: _*)
-  }
+  def pqDecode(codes: Column, codebooks: Array[Array[Array[Float]]]): Column =
+    if (codebooks.isEmpty) typedLit(Seq.empty[Double]) // concat() is a string
+    else {
+      // one 3-level array literal shared by every sub-space lookup (the
+      // unrolled form carried m·nCodes·sub Literal nodes through analysis)
+      val books = typedLit(
+        codebooks.map(_.map(_.map(_.toDouble).toSeq).toSeq).toSeq)
+      concat(codebooks.indices.map { mi =>
+        element_at(element_at(books, mi + 1), element_at(codes, mi + 1) + 1)
+      }.toIndexedSeq: _*)
+    }
 
   /** PQ ANN with exact re-rank (the FAISS IVFPQ+refine shape): the
     * corpus is encoded to codes (64× smaller than float32 — at 100 TB
@@ -1015,8 +1025,10 @@ object Similarity {
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
     // the encode pass is m·nCodes distance kernels per row — the widen
     // gate spreads it when the scan under-partitions (single-row-group
-    // files); identity at real split counts
-    val enc = widen(corpus.select(col(idCol), col(vecCol)))
+    // files); identity at real split counts. With no codebooks no row
+    // has codes, so no row is kept.
+    val rows = if (codebooks.isEmpty) corpus.limit(0) else corpus
+    val enc = widen(rows.select(col(idCol), col(vecCol)))
       .select(col(idCol), pqEncode(col(vecCol), codebooks).as("codes"))
     val adc = enc.crossJoin(broadcast(queries.select(col(qidCol), col(qvecCol))))
       .filter(col(idCol) =!= col(qidCol))
@@ -1153,7 +1165,7 @@ object Similarity {
     // 64-dim test embeddings (the per-row ENCODE pass dominates there);
     // the per-pair saving is dim/m-fold, so at production dims (768+)
     // ADC stops scaling with dim at all.
-    val sub = cbs(0)(0).length
+    val sub = subWidth(cbs)
     val lut = array(cbs.zipWithIndex.map { case (cb, mi) =>
       val s = slice(col(qvecCol), mi * sub + 1, sub)
       // one codebook literal + one lambda per sub-space (the pqEncode
@@ -1168,7 +1180,7 @@ object Similarity {
     val adcSq = cbs.indices
       .map(mi => element_at(element_at(col("__lut"), mi + 1),
         element_at(col("codes"), mi + 1) + 1))
-      .reduce(_ + _)
+      .reduceOption(_ + _).getOrElse(lit(0.0))
     val adc = encoded.join(broadcast(qb), Seq("cell"))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("adc_dist", sqrt(adcSq))

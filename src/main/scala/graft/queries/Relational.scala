@@ -30,8 +30,8 @@ object Relational {
     */
   private def importedBandWeek(s: SparkSession, dir: String): DataFrame =
     graft.sources.VersionedLake
-      .readBand(s, LakeFixtures.importedLake(s, dir), "value", 100.0, 150.0,
-        None, "2024-01-08", "2024-01-14")
+      .readBands(s, LakeFixtures.importedLake(s, dir),
+        Seq(("value", 100.0, 150.0)), None, "2024-01-08", "2024-01-14")
       .groupBy(col("dt"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
@@ -931,7 +931,7 @@ object Relational {
     // Clustered compaction + file-level data skipping: the q127
     // lifecycle with the week RANGE-CLUSTERED on `value` (per-file
     // min/max recorded in the commit log), and the week's band answered
-    // through VersionedLake.readBand, which prunes non-overlapping
+    // through VersionedLake.readBands, which prunes non-overlapping
     // FILES from the snapshot's stats before any footer opens (entries
     // without stats are always read). The oracle computes the same band
     // from the FLAT parquet, so the hash match proves the cluster
@@ -979,7 +979,7 @@ object Relational {
     // Data skipping from the COMMIT LOG on a natively versioned lake
     // (q133 reads an imported one): appends record coarse per-file
     // min/max in their manifest entries, clustered compaction tightens
-    // them to disjoint ranges, and readBand prunes files straight off
+    // them to disjoint ranges, and readBands prunes files straight off
     // the snapshot — no directory listing. Same flat-parquet oracle as q133,
     // so equality proves manifest-stats pruning lossless end-to-end;
     // VersionedLakeSpec pins that files are actually skipped and that
@@ -990,7 +990,7 @@ object Relational {
       // by the flat-parquet oracle on every invocation)
       val out = LakeFixtures.clusteredLake(s, dir)
       graft.sources.VersionedLake
-        .readBand(s, out, "value", 100.0, 150.0,
+        .readBands(s, out, Seq(("value", 100.0, 150.0)),
           None, "2024-01-08", "2024-01-14")
         .groupBy(col("dt"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -1113,7 +1113,7 @@ object Relational {
     // the query reads a band on USER_ID — the trailing column a lexical
     // (value, user_id) layout cannot skip on, because its per-file
     // user_id ranges span the domain. The manifest-stats pruning runs
-    // through the same readBand path as q135, and the oracle computes the
+    // through the same readBands path as q135, and the oracle computes the
     // band from FLAT parquet, so the hash match proves the interleaved
     // layout + two-column stats lossless end-to-end; VersionedLakeSpec
     // pins that BOTH columns actually skip files (skipped > 0 each).
@@ -1122,7 +1122,7 @@ object Relational {
       // column's band — the read a lexical layout cannot skip on
       val out = LakeFixtures.zorderLake(s, dir)
       graft.sources.VersionedLake
-        .readBand(s, out, "user_id", 5.0, 25.0,
+        .readBands(s, out, Seq(("user_id", 5.0, 25.0)),
           None, "2024-01-08", "2024-01-14")
         .groupBy(col("dt"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),

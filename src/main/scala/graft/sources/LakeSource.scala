@@ -25,11 +25,7 @@ import org.apache.spark.sql.types.StructType
   *    adds no files and the source schema is pinned at start (by-name
   *    parquet resolution keeps newer wide files readable);
   *  - a delete/upsert/restore version CHANGES history instead of
-  *    appending — the stream FAILS LOUDLY by default (the Delta
-  *    contract). `ignoreChanges = true` opts into skip-the-rewrites
-  *    semantics: an upsert's fresh images still stream (its entries are
-  *    `src == "append"`), rewritten files and tombstone re-publishes do
-  *    not — downstream must tolerate updated keys arriving again;
+  *    appending — the stream FAILS LOUDLY (the Delta contract);
   *  - a version vacuumed past retention fails the batch with a loud
   *    error naming the cure (fresh checkpoint) instead of silently
   *    serving a gap;
@@ -38,11 +34,7 @@ import org.apache.spark.sql.types.StructType
   *    batch is [[VersionedLake.changes]] between the offsets, so deletes
   *    arrive as `delete` rows and upserts as pre-image + new-image
   *    pairs; history rewrites are DATA here, never failures (Delta's
-  *    readChangeFeed);
-  *  - `maxVersionsPerBatch` caps how many commit-log versions one
-  *    micro-batch spans past the committed high-water mark — a cold
-  *    start against a 10⁴-version backlog drains in bounded batches
-  *    (Delta's maxFilesPerTrigger analog; best-effort across restarts).
+  *    readChangeFeed).
   *
   * The V1 `Source` API is deliberate: `getBatch` composes the batch as a
   * driver-side plan over exactly the versions' files (the same
@@ -50,13 +42,11 @@ import org.apache.spark.sql.types.StructType
   * `MicroBatchStream` would force into hand-rolled per-partition parquet
   * readers. Spark's own FileStreamSource ships on the same API.
   */
-class LakeSource(spark: SparkSession, path: String, ignoreChanges: Boolean,
-    cdc: Boolean = false, maxVersionsPerBatch: Long = 0L,
-    startingVersion: Long = 0L) extends Source {
+class LakeSource(spark: SparkSession, path: String, cdc: Boolean)
+    extends Source {
 
   private val root = new org.apache.hadoop.fs.Path(path)
   private val fs = VersionedLake.fsOf(spark, root)
-  private val base = fs.makeQualified(root).toString
   private val dataSchema: StructType =
     VersionedLake.snapshot(spark, path, None).schema
 
@@ -65,28 +55,11 @@ class LakeSource(spark: SparkSession, path: String, ignoreChanges: Boolean,
     if (cdc) s.add("_change_type", "string") else s
   }
 
-  // end version of the last batch this source PLANNED (getBatch runs
-  // before the engine polls getOffset again, so this is the correct
-  // rate-limit anchor — the engine's commit() callback lands too late
-  // and anchoring on it makes the engine believe it caught up early).
-  // Best-effort across restarts: the recovered batch replays uncapped,
-  // like Delta's maxFilesPerTrigger.
-  @volatile private var plannedV: Option[Long] = None
-
   override def getOffset: Option[Offset] =
-    VersionedLake.latestVersion(spark, path).map { latest =>
-      val capped = (maxVersionsPerBatch, plannedV) match {
-        // cap how far one micro-batch reaches past the last planned
-        // batch: a backlog of 10⁴ versions drains in bounded batches
-        // instead of one giant catch-up plan
-        case (n, Some(p)) if n > 0L => math.min(latest, p + n)
-        case _ => latest
-      }
-      LongOffset(capped)
-    }
+    VersionedLake.latestVersion(spark, path).map(LongOffset(_))
 
   /** Adds a version contributes to the stream (empty for pure rewrites;
-    * loud for history rewrites unless `ignoreChanges`).
+    * loud for history rewrites).
     */
   private def addsOf(v: Long): Seq[VersionedLake.FileEntry] = {
     val p = VersionedLake.commitPath(root, v)
@@ -101,42 +74,26 @@ class LakeSource(spark: SparkSession, path: String, ignoreChanges: Boolean,
     m.op match {
       case "append" | "append-batch" | "import" => m.adds
       case "compact" | "evolve-schema" => Nil // rewrite/metadata: no rows
-      case op if ignoreChanges =>
-        // upsert's NEW images land via the append path (src "append");
-        // its rewrites and delete/restore substitutions are skipped
-        m.adds.filter(_.src == "append")
       case op => sys.error(s"graft-lake source: version $v of $path is a " +
-        s"'$op' commit — the stream only tails appends. Set " +
-        "ignoreChanges=true to skip rewrites (updated keys may re-stream), " +
-        "or start a fresh checkpoint from the current snapshot.")
+        s"'$op' commit — the stream only tails appends. Read the change " +
+        "feed (cdc = true), or start a fresh checkpoint from the current " +
+        "snapshot.")
     }
   }
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     def ver(o: Offset): Long = o.json.trim.toLong
     val endV = ver(end)
-    plannedV = Some(endV)
-    // startingVersion (Delta parity): the first batch tails from that
-    // version onward INSTEAD of serving the initial snapshot — the
-    // "resume a pipeline without replaying the corpus" knob
-    val effStart: Option[Long] = start.map(ver).orElse(
-      if (startingVersion > 0L) Some(startingVersion - 1L) else None)
     val batch =
-      if (cdc) getCdcBatch(effStart, endV)
-      else {
-        val entries = effStart match {
-          // initial batch: the whole snapshot at endV (tombstones
-          // applied) — NOT the union of historical adds, which would
-          // double-count every compaction rewrite
-          case None => VersionedLake.snapshot(spark, path, Some(endV)).files
-          case Some(s) => ((s + 1L) to endV).flatMap(addsOf)
-        }
-        if (entries.isEmpty) null
-        else VersionedLake.scanEntries(spark, base, dataSchema, entries)
-      }
-    if (batch == null)
-      org.apache.spark.sql.GraftBridge.emptyStreamingFrame(spark, schema)
-    else org.apache.spark.sql.GraftBridge.asStreamingFrame(
+      if (cdc) getCdcBatch(start.map(ver), endV)
+      else VersionedLake.scanEntries(spark, path, dataSchema, start match {
+        // initial batch: the whole snapshot at endV (tombstones
+        // applied) — NOT the union of historical adds, which would
+        // double-count every compaction rewrite
+        case None => VersionedLake.snapshot(spark, path, Some(endV)).files
+        case Some(s) => ((ver(s) + 1L) to endV).flatMap(addsOf)
+      })
+    org.apache.spark.sql.GraftBridge.asStreamingFrame(
       batch.select(schema.fieldNames.map(
         org.apache.spark.sql.functions.col).toSeq: _*))
   }
@@ -148,19 +105,12 @@ class LakeSource(spark: SparkSession, path: String, ignoreChanges: Boolean,
     * History rewrites are DATA here, not a failure: CDC consumers exist
     * precisely to see them.
     */
-  private def getCdcBatch(startV: Option[Long], endV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
+  private def getCdcBatch(startV: Option[Long], endV: Long): DataFrame =
     startV match {
       case None =>
-        val files = VersionedLake.snapshot(spark, path, Some(endV)).files
-        if (files.isEmpty) null
-        else VersionedLake.scanEntries(spark, base, dataSchema, files)
-          .withColumn("_change_type", lit("insert"))
-      case Some(s) if s >= endV => null // startingVersion beyond the head
-      case Some(s) if s < 1L => sys.error("graft-lake source (cdc): " +
-        "startingVersion must be >= 2 in cdc mode (the predecessor " +
-        "version must exist to diff against); omit it to start from the " +
-        "initial snapshot")
+        VersionedLake.scanEntries(spark, path, dataSchema,
+          VersionedLake.snapshot(spark, path, Some(endV)).files)
+          .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert"))
       case Some(s) =>
         try VersionedLake.changes(spark, path, s, Some(endV))
         catch {
@@ -171,7 +121,6 @@ class LakeSource(spark: SparkSession, path: String, ignoreChanges: Boolean,
               s"them — restart from a fresh checkpoint (${e.getMessage})")
         }
     }
-  }
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -205,11 +154,5 @@ class LakeSourceProvider extends StreamSourceProvider with DataSourceRegister {
   override def createSource(ctx: SQLContext, metadataPath: String,
       userSchema: Option[StructType], providerName: String,
       params: Map[String, String]): Source =
-    new LakeSource(ctx.sparkSession, pathOf(params),
-      ignoreChanges = flag(params, "ignoreChanges"),
-      cdc = flag(params, "cdc"),
-      maxVersionsPerBatch =
-        params.get("maxVersionsPerBatch").map(_.trim.toLong).getOrElse(0L),
-      startingVersion =
-        params.get("startingVersion").map(_.trim.toLong).getOrElse(0L))
+    new LakeSource(ctx.sparkSession, pathOf(params), cdc = flag(params, "cdc"))
 }

@@ -32,13 +32,14 @@ import org.apache.spark.sql.functions._
   */
 object Partitioned {
 
-  /** Write `df` under `path` partitioned by the day of `tsCol`. */
-  def writeByDay(df: DataFrame, path: String, tsCol: String = "ts"): Unit =
-    df.withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd"))
-      .repartition(col("dt"))
-      .write.mode("overwrite")
-      .partitionBy("dt")
-      .parquet(path)
+  /** The day a lake row belongs to: its `ts` as `yyyy-MM-dd` — the `dt`
+    * partition value of every day tree ([[VersionedLake]]'s included).
+    */
+  private[sources] val Day = date_format(col("ts"), "yyyy-MM-dd")
+
+  /** Write `df` under `path` partitioned by the day of `ts`. */
+  def writeByDay(df: DataFrame, path: String): Unit =
+    write(df, path, "overwrite")
 
   /** Read a day-partitioned table; `days` (inclusive bounds, "YYYY-MM-DD")
     * prunes at the DIRECTORY level before any file is opened. Partition
@@ -72,10 +73,13 @@ object Partitioned {
     * [[VersionedLake.append]] — files this method adds to an adopted
     * tree are uncommitted, and [[readDays]] does not return them.
     */
-  def appendByDay(df: DataFrame, path: String, tsCol: String = "ts"): Unit =
-    df.withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd"))
+  def appendByDay(df: DataFrame, path: String): Unit =
+    write(df, path, "append")
+
+  private def write(df: DataFrame, path: String, mode: String): Unit =
+    df.withColumn("dt", Day)
       .repartition(col("dt"))
-      .write.mode("append")
+      .write.mode(mode)
       .partitionBy("dt")
       .parquet(path)
 }

@@ -116,9 +116,9 @@ object VersionedLake {
     * [[graft.kv.Store]] gid is a lake partitioned by `bucket`
     * (`bucket=N/<name>`, `dt` = the bucket) — the partition column is the
     * name before the `=` of the path's first component. Only the shared
-    * paths take the column from the path (landing, [[scanEntries]], the
-    * merge-on-read writes, [[vacuum]]); [[read]]'s day range and
-    * [[compact]] are day-only.
+    * paths serve both (landing, [[scanEntries]], the merge-on-read
+    * writes, [[vacuum]]); [[read]]'s day range and [[compact]] are
+    * day-only.
     * `stats` carries optional per-column (min, max) string pairs — the
     * data-skipping index living IN the commit log (the Delta/Iceberg
     * arrangement): entries without stats for a column are simply never
@@ -712,17 +712,16 @@ object VersionedLake {
     entries
   }
 
-  /** Stage `df` partitioned by the day of `tsCol`, move the files into
+  /** Stage `df` partitioned by the day of its `ts`, move the files into
     * the day dirs, and publish them in one atomic commit. Returns the
     * committed version. Crash-safe: files without a manifest entry are
     * invisible orphans until [[vacuum]] sweeps them. `statsCols` records
-    * per-file min/max in the manifest for [[readBand]] skipping (append
+    * per-file min/max in the manifest for [[readBands]] skipping (append
     * files carry whatever ranges the shuffle produced — coarse until
     * [[compact]] clusters them tight).
     */
-  def append(df: DataFrame, path: String, tsCol: String = "ts",
-      statsCols: Seq[String] = Nil): Long =
-    appendInternal(df, path, tsCol, statsCols, batchId = None)
+  def append(df: DataFrame, path: String, statsCols: Seq[String] = Nil): Long =
+    appendInternal(df, path, statsCols, batchId = None)
 
   /** One micro-batch's EXACTLY-ONCE append (the streaming sink unit —
     * see [[sink]]): foreachBatch is at-least-once, and idempotence is
@@ -740,40 +739,22 @@ object VersionedLake {
     * per batch: one header read for the replay check, O(batch) manifest
     * text for the commit — never O(lake files).
     */
-  def appendBatch(df: DataFrame, path: String, batchId: Long,
-      tsCol: String = "ts", statsCols: Seq[String] = Nil): Long = {
+  def appendBatch(df: DataFrame, path: String, batchId: Long): Long = {
     val spark = df.sparkSession
     latestVersion(spark, path) match {
       case Some(v) if lastBatchId(spark, path) >= batchId =>
         v // replay of a fully-committed batch — nothing to do
-      case _ => appendInternal(df, path, tsCol, statsCols, Some(batchId))
+      case _ => appendInternal(df, path, Nil, Some(batchId))
     }
   }
 
   /** Run an append-mode streaming DataFrame into the versioned lake:
     * each micro-batch is one [[appendBatch]] commit, so the stream gets
-    * snapshot-isolated readers, exactly-once replays, and [[compact]] /
-    * [[vacuum]] maintenance with no extra machinery.
-    *
-    * AUTO-MAINTENANCE (the Delta auto-compaction convention): without
-    * it, a minute-cadence stream appends ≤1 file/day/partition per batch
-    * FOREVER — ~1,440 files/day and ~500k manifest versions/year unless
-    * an operator schedules maintenance externally. `compactEvery = N`
-    * runs [[compact]]'s default (unclustered) layout, recording
-    * `statsCols`, over the whole day range after every Nth batch (the
-    * layout witness skips at-bound days, so the sweep's rewrite work is
-    * O(days that actually accumulated files)); `vacuumEvery = M`
-    * reclaims expired versions/files after every Mth batch, retaining
-    * `vacuumRetain` versions with `vacuumHorizonHours` writer safety.
-    * Maintenance commits conflict-check like any other, so a racing
-    * external compact aborts cleanly and the stream's next batch
-    * proceeds; a replayed batch re-triggering a hook is harmless — the
-    * compact witness makes it a no-op and vacuum is idempotent.
+    * snapshot-isolated readers and exactly-once replays. Maintenance
+    * ([[compact]], [[vacuum]]) is the caller's, run between batches like
+    * any other commit.
     */
-  def sink(df: DataFrame, path: String, checkpointDir: String,
-      tsCol: String = "ts", statsCols: Seq[String] = Nil,
-      compactEvery: Long = 0L, vacuumEvery: Long = 0L,
-      vacuumRetain: Int = 10, vacuumHorizonHours: Double = 1.0)
+  def sink(df: DataFrame, path: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
@@ -790,14 +771,7 @@ object VersionedLake {
           // here was one full extra materialization job per micro-batch
           // for nothing (r13, guide §1.2; measured on the s20–s22 lake
           // streaming queries).
-          val spark = batch.sparkSession
-          appendBatch(batch.toDF(), path, batchId, tsCol, statsCols): Unit
-          if (compactEvery > 0L && (batchId + 1) % compactEvery == 0L)
-            compact(spark, path, "0000-01-01", "9999-12-31",
-              statsCols = statsCols): Unit
-          if (vacuumEvery > 0L && (batchId + 1) % vacuumEvery == 0L)
-            vacuum(spark, path, retainVersions = vacuumRetain,
-              olderThanHours = vacuumHorizonHours): Unit
+          appendBatch(batch.toDF(), path, batchId): Unit
       }
       .start()
 
@@ -811,33 +785,22 @@ object VersionedLake {
     *
     * With `cdc = true` the stream is the CHANGE FEED itself (rows carry
     * `_change_type` ∈ insert/delete; history rewrites are data, not
-    * failures); `maxVersionsPerBatch > 0` bounds how many commit-log
-    * versions one micro-batch may span (the Delta maxFilesPerTrigger
-    * analog — a cold start against a deep backlog drains in bounded
-    * batches).
+    * failures).
     */
-  def source(spark: SparkSession, path: String,
-      ignoreChanges: Boolean = false, cdc: Boolean = false,
-      maxVersionsPerBatch: Long = 0L, startingVersion: Long = 0L)
+  def source(spark: SparkSession, path: String, cdc: Boolean = false)
       : DataFrame =
     spark.readStream
       .format("graft.sources.LakeSourceProvider")
       .option("path", path)
-      .option("ignoreChanges", ignoreChanges.toString)
       .option("cdc", cdc.toString)
-      .option("maxVersionsPerBatch", maxVersionsPerBatch.toString)
-      .option("startingVersion", startingVersion.toString)
       .load()
 
-  private def appendInternal(df: DataFrame, path: String, tsCol: String,
+  private def appendInternal(df: DataFrame, path: String,
       statsCols: Seq[String], batchId: Option[Long]): Long =
     commitDelta(df.sparkSession, new Path(path), df.drop("dt").schema,
-      stageAndMove(dated(df, tsCol), path, "dt", statsCols), Nil,
+      stageAndMove(df.withColumn("dt", Partitioned.Day), path, "dt",
+        statsCols), Nil,
       batchId, if (batchId.isDefined) "append-batch" else "append")
-
-  /** `df` with its day partition column, from `tsCol`. */
-  private def dated(df: DataFrame, tsCol: String): DataFrame =
-    df.withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd"))
 
   /** Land `df` partitioned by its column `part` through [[landStaged]]
     * and return its manifest entries WITHOUT committing
@@ -878,15 +841,6 @@ object VersionedLake {
   // ---------------------------------------------------------------------
   // Read
   // ---------------------------------------------------------------------
-
-  /** Empty result carrying the snapshot's schema (+ the dt partition
-    * column) — what a read returns when pruning proves no file can
-    * contribute. No scan is planned.
-    */
-  private def emptyFrame(spark: SparkSession, snap: Snapshot): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      snap.schema.add("dt", "string"))
 
   /** Root-relative `dt=DAY/name` of a scan's absolute file path — the
     * join key between `_metadata.file_path` and manifest entry paths.
@@ -929,40 +883,56 @@ object VersionedLake {
     * positions must not resurrect as someone else's deletes). The schema
     * is given, so no job infers it.
     */
-  private def dvFrame(spark: SparkSession, base: String,
-      dvd: Seq[FileEntry]): DataFrame =
+  private def dvFrame(spark: SparkSession, path: String,
+      dvd: Seq[FileEntry]): DataFrame = {
+    val base = qualified(spark, path)
     dvd.groupBy(_.dv.get).toSeq.sortBy(_._1).map { case (dvp, es) =>
       spark.read.schema(DvSchema).parquet(s"$base/$dvp")
         .filter(col("path").isin(es.map(_.path): _*))
     }.reduce(_.union(_))
+  }
 
-  /** THE snapshot scan: read `entries` as (schema columns + their
-    * partition column, as a string), with every entry's deletion vector
-    * anti-applied. Entries without a dv plan exactly the pre-dv scan (no
-    * metadata columns, no join — the hot path is untouched when no
-    * tombstones exist); dv'd entries scan with `_metadata` (file path,
-    * row index) and anti-join their tombstone positions — the
-    * merge-on-read contract. The tombstone side is a scan of the
-    * sidecars ([[dvFrame]]); statistics/AQE size it, so a few positions
-    * broadcast and a large set shuffles — nothing is collected.
+  /** The lake root as a fully qualified URI — the prefix of every file
+    * path a scan hands Spark.
+    */
+  private def qualified(spark: SparkSession, path: String): String = {
+    val root = new Path(path)
+    fsOf(spark, root).makeQualified(root).toString
+  }
+
+  /** THE snapshot scan, and every reader's one way into the lake's
+    * files: read `entries` of the lake at `path` as (schema columns +
+    * their partition column `part`, as a string), with every entry's
+    * deletion vector anti-applied. Entries without a dv plan exactly the
+    * pre-dv scan (no metadata columns, no join — the hot path is
+    * untouched when no tombstones exist); dv'd entries scan with
+    * `_metadata` (file path, row index) and anti-join their tombstone
+    * positions — the merge-on-read contract. The tombstone side is a
+    * scan of the sidecars ([[dvFrame]]); statistics/AQE size it, so a few
+    * positions broadcast and a large set shuffles — nothing is collected.
+    * No entries read as an empty relation, planned without a scan: zero
+    * rows in the schema a non-empty scan of the same lake has.
     *
     * `withMeta` keeps `_graft_file` (root-relative path) and
     * `_graft_pos` (row index) in the output — the match scans' handle
     * for per-file accounting.
     */
-  private[graft] def scanEntries(spark: SparkSession, base: String,
-      schema: StructType, entries: Seq[FileEntry],
+  private[graft] def scanEntries(spark: SparkSession, path: String,
+      schema: StructType, entries: Seq[FileEntry], part: String = "dt",
       withMeta: Boolean = false): DataFrame = {
-    require(entries.nonEmpty, "scanEntries: no entries")
-    val part = entries.head.path.takeWhile(_ != '=')
+    val base = qualified(spark, path)
     val metaCols = if (withMeta) Seq("_graft_file", "_graft_pos") else Nil
     val outCols = (schema.fieldNames.toSeq ++ Seq(part) ++ metaCols).map(col)
     def raw(fs: Seq[FileEntry], meta: Boolean) = {
       // the partition column typed in the read schema: its values parse as
       // the strings the paths spell, never inferred as dates or ints
-      val b = spark.read.schema(schema.add(part, "string"))
-        .option("basePath", base)
-        .parquet(fs.map(f => s"$base/${f.path}"): _*)
+      val reader = spark.read.schema(schema.add(part, "string"))
+      val b =
+        // no files: the optimizer folds the zero limit into an empty
+        // relation, so no scan is planned
+        if (fs.isEmpty) reader.parquet().limit(0)
+        else reader.option("basePath", base)
+          .parquet(fs.map(f => s"$base/${f.path}"): _*)
       if (meta)
         b.withColumn("_graft_file", relPathCol(col("_metadata.file_path")))
           .withColumn("_graft_pos", col("_metadata.row_index"))
@@ -970,11 +940,11 @@ object VersionedLake {
     }
     val (plain, dvd) = entries.partition(_.dv.isEmpty)
     val parts = Seq(
-      if (plain.isEmpty) None
+      if (plain.isEmpty && dvd.nonEmpty) None
       else Some(raw(plain, withMeta).select(outCols: _*)),
       if (dvd.isEmpty) None
       else Some {
-        val tomb = dvFrame(spark, base, dvd)
+        val tomb = dvFrame(spark, path, dvd)
         raw(dvd, meta = true)
           .join(tomb, col("_graft_file") === tomb("path") &&
             col("_graft_pos") === tomb("pos"), "left_anti")
@@ -997,14 +967,8 @@ object VersionedLake {
       fromDay: String = "0000-01-01",
       toDay: String = "9999-12-31"): DataFrame = {
     val snap = snapshot(spark, path, version)
-    val picked = snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay)
-    if (picked.isEmpty) emptyFrame(spark, snap)
-    else {
-      val root = new Path(path)
-      val fs = fsOf(spark, root)
-      val base = fs.makeQualified(root).toString
-      scanEntries(spark, base, snap.schema, picked)
-    }
+    scanEntries(spark, path, snap.schema,
+      snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay))
   }
 
   /** What a band read decided, exposed for tests/observability: which
@@ -1014,36 +978,34 @@ object VersionedLake {
   final case class PruneReport(
       selected: Seq[String], total: Int, skipped: Int)
 
-  /** Which snapshot entries a `bandCol ∈ [lo, hi]` read must open
-    * (exposed for tests/observability). Soundness contract:
-    *  - an entry is skipped ONLY when its recorded [min, max] provably
-    *    cannot intersect the band (null rows fail a band predicate, and
-    *    min/max ignore nulls, so the check is conservative);
-    *  - entries without stats for the column always survive, so files
-    *    committed without stats are never lost;
-    *  - the residual predicate still runs on every row read, so
+  /** Which snapshot entries a read of the CONJUNCTIVE bands
+    * `col ∈ [lo, hi]` must open (exposed for tests/observability).
+    * Soundness contract:
+    *  - an entry is skipped ONLY when its recorded [min, max] on some
+    *    band column provably cannot intersect that band (null rows fail
+    *    a band predicate, and min/max ignore nulls, so the check is
+    *    conservative);
+    *  - entries without stats for a column are never pruned on it, so
+    *    files committed without stats are never lost;
+    *  - the residual predicates still run on every row read, so
     *    pruning is invisible to results by construction.
-    * The column's dtype comes from the snapshot schema.
+    * Each column's dtype comes from the snapshot schema. This is the
+    * read pattern Z-order exists for: on a (value, user_id)-Morton
+    * layout a two-sided band skips strictly more files than either
+    * single band, because each file owns a compact hyper-rectangle in
+    * BOTH dimensions.
     */
-  def bandReport(spark: SparkSession, path: String, bandCol: String,
-      lo: String, hi: String, version: Option[Long] = None,
+  def bandsReport(spark: SparkSession, path: String,
+      bands: Seq[(String, Double, Double)], version: Option[Long] = None,
       fromDay: String = "0000-01-01", toDay: String = "9999-12-31")
       : PruneReport =
-    bandsReportOf(snapshot(spark, path, version), Seq((bandCol, lo, hi)),
-      fromDay, toDay)
+    bandsReportOf(snapshot(spark, path, version), bands, fromDay, toDay)
 
-  /** CONJUNCTIVE multi-band pruning: a file survives only when EVERY
-    * band's recorded range overlaps its bound (a missing range never
-    * prunes — per-column soundness). This is the read pattern Z-order
-    * exists for: on a (value, user_id)-Morton layout a two-sided band
-    * skips strictly more files than either single band, because each
-    * file owns a compact hyper-rectangle in BOTH dimensions.
-    */
   private def bandsReportOf(snap: Snapshot,
-      bands: Seq[(String, String, String)],
+      bands: Seq[(String, Double, Double)],
       fromDay: String, toDay: String): PruneReport = {
     val typed = bands.map { case (c, lo, hi) =>
-      (c, snap.schema(c).dataType.simpleString, lo, hi)
+      (c, snap.schema(c).dataType.simpleString, lo.toString, hi.toString)
     }
     val inDays = snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay)
     val selected = inDays.filter { f =>
@@ -1058,40 +1020,17 @@ object VersionedLake {
       inDays.length - selected.length)
   }
 
-  /** [[bandReport]] for a conjunction of bands (exposed for tests /
-    * observability — which files a [[readBands]] must open).
-    */
-  def bandsReport(spark: SparkSession, path: String,
-      bands: Seq[(String, Double, Double)], version: Option[Long] = None,
-      fromDay: String = "0000-01-01", toDay: String = "9999-12-31")
-      : PruneReport =
-    bandsReportOf(snapshot(spark, path, version),
-      bands.map { case (c, lo, hi) => (c, lo.toString, hi.toString) },
-      fromDay, toDay)
-
-  /** Day-ranged band read, file-pruned by the snapshot stats. Result is
-    * IDENTICAL to `read(...).filter(bandCol between lo and hi)` — stats
-    * only decide which files open; the predicate still runs per row (and
-    * pushes into the surviving scans for row-group skipping on the same
-    * clustered layout). When pruning proves NO file overlaps, the
-    * result is an empty frame with the snapshot schema — not the
-    * unpruned full read this used to fall back to (r10 ADVICE).
-    */
-  def readBand(spark: SparkSession, path: String, bandCol: String,
-      lo: Double, hi: Double, version: Option[Long] = None,
-      fromDay: String = "0000-01-01", toDay: String = "9999-12-31")
-      : DataFrame =
-    readBands(spark, path, Seq((bandCol, lo, hi)), version, fromDay, toDay)
-
   /** Day-ranged CONJUNCTIVE multi-band read: every file pruned whose
-    * recorded range on ANY band column provably misses that band.
-    * Result is identical to `read(...)` with all the band filters
-    * applied — stats only decide which files open; the predicates still
-    * run per row and push into the surviving scans. On a Z-ordered
-    * layout ([[compact]] `zorder = true`) this is the read that realizes
-    * the layout's purpose: files are hyper-rectangles in the clustered
-    * key space, so a two-sided band skips strictly more files than
-    * either single-column band alone (VersionedLakeSpec pins that).
+    * recorded range on ANY band column provably misses that band
+    * ([[bandsReport]]). Result is identical to `read(...)` with all the
+    * band filters applied — stats only decide which files open; the
+    * predicates still run per row and push into the surviving scans for
+    * row-group skipping on the same clustered layout. When pruning
+    * proves NO file overlaps, the result is zero rows in the lake's
+    * schema. On a Z-ordered layout ([[compact]] `zorder = true`) files
+    * are hyper-rectangles in the clustered key space, so a two-sided
+    * band skips strictly more files than either single-column band alone
+    * (VersionedLakeSpec pins that).
     */
   def readBands(spark: SparkSession, path: String,
       bands: Seq[(String, Double, Double)], version: Option[Long] = None,
@@ -1099,20 +1038,9 @@ object VersionedLake {
       : DataFrame = {
     require(bands.nonEmpty, "readBands: no bands given")
     val snap = snapshot(spark, path, version)
-    val report = bandsReportOf(snap,
-      bands.map { case (c, lo, hi) => (c, lo.toString, hi.toString) },
-      fromDay, toDay)
-    val base =
-      if (report.selected.isEmpty) emptyFrame(spark, snap)
-      else {
-        val picked = report.selected.toSet
-        val root = new Path(path)
-        val fs = fsOf(spark, root)
-        val qualified = fs.makeQualified(root).toString
-        scanEntries(spark, qualified, snap.schema,
-          snap.files.filter(f => picked(f.path)))
-      }
-    bands.foldLeft(base) { case (df, (c, lo, hi)) =>
+    val picked = bandsReportOf(snap, bands, fromDay, toDay).selected.toSet
+    bands.foldLeft(scanEntries(spark, path, snap.schema,
+        snap.files.filter(f => picked(f.path)))) { case (df, (c, lo, hi)) =>
       df.filter(col(c) >= lo && col(c) <= hi)
     }
   }
@@ -1135,7 +1063,7 @@ object VersionedLake {
     *
     * `clusterBy` range-partitions + sorts each day on the key, so every
     * output file owns a disjoint key range and the manifest stats it
-    * records (for `clusterBy ++ statsCols`) make [[readBand]] skip every
+    * records (for `clusterBy`) make [[readBands]] skip every
     * non-overlapping file.
     *
     * With `zorder = true` and ≥2 numeric `clusterBy` columns, each day
@@ -1143,7 +1071,7 @@ object VersionedLake {
     * every column's value maps to a 16-bit linear bucket between the
     * day's min and max, the buckets' bits interleave into one long, and
     * files own contiguous Z-ranges — compact hyper-rectangles in the
-    * key space, so [[readBand]] skips files on ANY clustered column
+    * key space, so [[readBands]] skips files on ANY clustered column
     * (lexical tuple order gives the trailing columns near-useless
     * ranges). Linear bucketing trades the quantile pass a production
     * Z-order would run for one tiny min/max job per day; skew costs
@@ -1153,17 +1081,15 @@ object VersionedLake {
     */
   def compact(spark: SparkSession, path: String,
       fromDay: String, toDay: String, minFilesPerDay: Int = 1,
-      clusterBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
-      zorder: Boolean = false): Long = {
+      clusterBy: Seq[String] = Nil, zorder: Boolean = false): Long = {
     if (zorder) {
       require(clusterBy.nonEmpty, "zorder requires clusterBy columns")
       require(clusterBy.size <= 4, "zorder supports at most 4 columns")
     }
     val root = new Path(path)
     val snap = snapshot(spark, path, None)
-    val base = fsOf(spark, root).makeQualified(root).toString
     val targetBytes = TargetFileMB.toLong * 1024 * 1024
-    val manifestCols = (clusterBy ++ statsCols).distinct
+    val manifestCols = clusterBy.distinct
     // the idempotence witness encodes the LAYOUT, not just "a compaction
     // ran": re-compacting with zorder=true (or a reordered clusterBy)
     // over days laid out lexically on the same columns must re-run, or
@@ -1198,7 +1124,7 @@ object VersionedLake {
       val n = want(entries)
       // dv-applied scan: the rewrite absorbs any tombstones, so the
       // new files are plain and the sidecars become vacuum garbage
-      val dayDf = scanEntries(spark, base, snap.schema, entries).drop("dt")
+      val dayDf = scanEntries(spark, path, snap.schema, entries).drop("dt")
       val laid =
         if (clusterBy.isEmpty) dayDf.coalesce(n)
         else if (zorder && clusterBy.size >= 2) {
@@ -1271,11 +1197,9 @@ object VersionedLake {
     * the read-path skipping contract applied to writes.
     */
   def deleteWhere(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column,
-      fromDay: String = "0000-01-01", toDay: String = "9999-12-31"): Long = {
+      predicate: org.apache.spark.sql.Column): Long = {
     val snap = snapshot(spark, path, None)
-    deleteVectors(spark, path, snap,
-      snap.files.filter(f => f.dt >= fromDay && f.dt <= toDay), "delete",
+    deleteVectors(spark, path, snap, snap.files, "delete",
       _.filter(coalesce(predicate, lit(false)))) // NULL is not a match
   }
 
@@ -1290,8 +1214,8 @@ object VersionedLake {
       lo: Double, hi: Double,
       fromDay: String = "0000-01-01", toDay: String = "9999-12-31"): Long = {
     val snap = snapshot(spark, path, None)
-    val picked = bandsReportOf(snap, Seq((bandCol, lo.toString, hi.toString)),
-      fromDay, toDay).selected.toSet
+    val picked =
+      bandsReportOf(snap, Seq((bandCol, lo, hi)), fromDay, toDay).selected.toSet
     val band = col(bandCol) >= lo && col(bandCol) <= hi
     deleteVectors(spark, path, snap, snap.files.filter(f => picked(f.path)),
       "delete", _.filter(coalesce(band, lit(false))))
@@ -1365,15 +1289,16 @@ object VersionedLake {
       extra: Seq[FileEntry] = Nil,
       reads: Option[FileEntry => Boolean] = None): Long = {
     val root = new Path(path)
-    val base = fsOf(spark, root).makeQualified(root).toString
     val (touched, dvAdds) =
       if (candidates.isEmpty) (Nil, Nil)
       else {
         // (file, position) of every NEW tombstone — the scan is
         // dv-applied, so already-deleted rows never re-match. Pinned on
         // the executors: it feeds both the counts and the sidecar.
-        val pos = matched(scanEntries(spark, base, snap.schema, candidates,
-            withMeta = true))
+        // read under the candidates' own partition column (a store
+        // gid's is `bucket`)
+        val pos = matched(scanEntries(spark, path, snap.schema, candidates,
+            candidates.head.path.takeWhile(_ != '='), withMeta = true))
           .select(col("_graft_file").as("path"), col("_graft_pos").as("pos"))
           .localCheckpoint()
         try {
@@ -1397,7 +1322,7 @@ object VersionedLake {
             // way)
             val prior = kept.filter(_.dv.isDefined)
             val dv = writeDv(spark, root,
-              if (prior.isEmpty) pos else pos.union(dvFrame(spark, base, prior)))
+              if (prior.isEmpty) pos else pos.union(dvFrame(spark, path, prior)))
             (touched, kept.map(e =>
               e.copy(rows = e.rows - hits(e.path), dv = Some(dv), src = op)))
           }
@@ -1419,8 +1344,7 @@ object VersionedLake {
     * stats job over the tree (the one-time census an adoption cannot
     * avoid — row counts are what make later rewrites verifiable).
     */
-  def importTree(spark: SparkSession, path: String,
-      statsCols: Seq[String] = Nil): Long = {
+  def importTree(spark: SparkSession, path: String): Long = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     require(latestVersion(spark, path).isEmpty,
@@ -1437,7 +1361,7 @@ object VersionedLake {
     require(found.nonEmpty, s"VersionedLake: no dt= data under $path")
     val schema = spark.read.option("basePath", base).parquet(base)
       .drop("dt").schema
-    val entries = entriesOf(spark, base, found, schema, statsCols, "import")
+    val entries = entriesOf(spark, base, found, schema, Nil, "import")
     commitDelta(spark, root, schema, entries, Nil, op = "import",
       allowSchemaChange = true)
   }
@@ -1455,16 +1379,25 @@ object VersionedLake {
   def restore(spark: SparkSession, path: String, version: Long): Long = {
     val root = new Path(path)
     val target = snapshot(spark, path, Some(version))
-    val head = snapshot(spark, path, None)
-    // identity is (path, dv), like [[changes]]: rolling back past a
-    // merge-on-read delete must re-publish the path WITHOUT its
-    // tombstone reference, which is a remove+add of the same path
-    val targetKeys = target.files.map(f => (f.path, f.dv)).toSet
-    val headKeys = head.files.map(f => (f.path, f.dv)).toSet
-    val removes = head.files.filterNot(f => targetKeys((f.path, f.dv)))
-    val adds = target.files.filterNot(f => headKeys((f.path, f.dv)))
+    val (removes, adds) = diffEntries(snapshot(spark, path, None), target)
     commitDelta(spark, root, target.schema, adds, removes,
       op = s"restore-v$version", allowSchemaChange = true)
+  }
+
+  /** The entries only `a` holds and the entries only `b` holds, by
+    * (path, deletion vector) identity. Committed files are immutable per
+    * PATH, but a merge-on-read delete re-publishes the same path with a
+    * new tombstone reference, so such an entry lands on BOTH sides: the
+    * diff [[changes]] reads and the substitution [[restore]] commits
+    * (rolling back past a delete re-publishes the path WITHOUT its
+    * tombstone reference).
+    */
+  private def diffEntries(a: Snapshot, b: Snapshot)
+      : (Seq[FileEntry], Seq[FileEntry]) = {
+    val aKeys = a.files.map(f => (f.path, f.dv)).toSet
+    val bKeys = b.files.map(f => (f.path, f.dv)).toSet
+    (a.files.filterNot(f => bKeys((f.path, f.dv))),
+      b.files.filterNot(f => aKeys((f.path, f.dv))))
   }
 
   /** ADDITIVE SCHEMA EVOLUTION: one pure-manifest commit extends the
@@ -1506,10 +1439,6 @@ object VersionedLake {
     *    on a key-clustered lake ([[compact]] with `clusterBy = key`) a
     *    narrow CDC batch scans O(band) files, never the corpus. Stat-less
     *    entries stay candidates (soundness over speed);
-    *  - optional `fromDay`/`toDay` scope the match scan to the days the
-    *    caller KNOWS hold the updated keys (the day-local CDC shape).
-    *    Contract: a stale row of an updated key living OUTSIDE the range
-    *    is not tombstoned — scope only when key placement is day-stable;
     *  - the key-set join is UNHINTED: statistics/AQE size the build
     *    side, so a compact CDC batch broadcasts itself and a fat backfill
     *    frame degrades to a shuffle join instead of OOMing the driver;
@@ -1523,17 +1452,15 @@ object VersionedLake {
     * refused loudly (dedup upstream when feeds can double-emit).
     */
   def upsert(updates: DataFrame, path: String, key: String,
-      tsCol: String = "ts", statsCols: Seq[String] = Nil,
-      fromDay: String = "0000-01-01", toDay: String = "9999-12-31"): Long = {
+      statsCols: Seq[String] = Nil): Long = {
     val snap = snapshot(updates.sparkSession, path, None)
     val keyType = snap.schema(key).dataType.simpleString
-    mergeByKey(snap, dated(updates, tsCol), path, key, "dt", statsCols) {
-      (kMin, kMax, _) => f =>
-        f.dt >= fromDay && f.dt <= toDay && (f.stats.get(key) match {
-          case Some((mn, mx)) =>
-            StatsCompare.overlaps(keyType, mn, mx, kMin, kMax)
-          case None => true // no recorded key range — must scan
-        })
+    mergeByKey(snap, updates.withColumn("dt", Partitioned.Day), path, key,
+        "dt", statsCols) { (kMin, kMax, _) => f =>
+      f.stats.get(key) match {
+        case Some((mn, mx)) => StatsCompare.overlaps(keyType, mn, mx, kMin, kMax)
+        case None => true // no recorded key range — must scan
+      }
     }
   }
 
@@ -1623,43 +1550,30 @@ object VersionedLake {
     */
   def changes(spark: SparkSession, path: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val base = fs.makeQualified(root).toString
     val from = snapshot(spark, path, Some(fromVersion))
     val to = snapshot(spark, path, toVersion)
     require(from.version <= to.version,
       s"changes: fromVersion ${from.version} is newer than ${to.version}")
-    // entry identity is (path, dv): committed files are immutable per
-    // PATH, but a merge-on-read delete re-publishes the same path with a
-    // new tombstone reference — the dv-applied row sets differ, so such
-    // an entry must land on BOTH sides (its unchanged live rows cancel
-    // in the multiset diff; the newly-tombstoned rows surface as
-    // deletes). Plain shared paths still provably contribute nothing.
-    val fromKeys = from.files.map(f => (f.path, f.dv)).toSet
-    val toKeys = to.files.map(f => (f.path, f.dv)).toSet
-    val removedFiles = from.files.filterNot(f => toKeys((f.path, f.dv)))
-    val addedFiles = to.files.filterNot(f => fromKeys((f.path, f.dv)))
+    // an entry re-published under a new deletion vector lands on BOTH
+    // sides: its unchanged live rows cancel in the multiset diff and the
+    // newly-tombstoned rows surface as deletes. Plain shared paths
+    // provably contribute nothing.
+    val (removedFiles, addedFiles) = diffEntries(from, to)
     // read one side's exclusive files with ITS schema (tombstones
     // anti-applied per side), then align both sides on the TO schema
     // (evolution adds nullable columns only, so the from-side fills
     // NULL for anything it predates)
-    def side(files: Seq[FileEntry], schema: StructType): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.add("dt", "string"))
-      else scanEntries(spark, base, schema, files)
     val outCols = to.schema.fieldNames.toSeq :+ "dt"
     val older = {
-      val raw = side(removedFiles, from.schema)
+      val raw = scanEntries(spark, path, from.schema, removedFiles)
       val have = raw.columns.toSet
       val aligned = outCols.map(c =>
         if (have(c)) col(c)
         else lit(null).cast(to.schema(c).dataType).as(c))
       raw.select(aligned: _*)
     }
-    val newer = side(addedFiles, to.schema).select(outCols.map(col): _*)
+    val newer = scanEntries(spark, path, to.schema, addedFiles)
+      .select(outCols.map(col): _*)
     newer.exceptAll(older).withColumn("_change_type", lit("insert"))
       .unionByName(
         older.exceptAll(newer).withColumn("_change_type", lit("delete")))

@@ -16,7 +16,6 @@ object LakeSink {
     * check is the commit log's high-water mark, so any id at or below
     * the last committed one returns without writing.
     */
-  def appendBatch(batch: DataFrame, path: String, batchId: Long,
-      tsCol: String = "ts"): Unit =
-    VersionedLake.appendBatch(batch, path, batchId, tsCol): Unit
+  def appendBatch(batch: DataFrame, path: String, batchId: Long): Unit =
+    VersionedLake.appendBatch(batch, path, batchId): Unit
 }

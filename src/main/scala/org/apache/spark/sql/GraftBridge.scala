@@ -41,13 +41,4 @@ object GraftBridge {
     cs.internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
       isStreaming = true)
   }
-
-  /** Streaming-tagged empty batch with the given schema. */
-  def emptyStreamingFrame(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType): Dataset[Row] = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    cs.internalCreateDataFrame(
-      cs.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema, isStreaming = true)
-  }
 }

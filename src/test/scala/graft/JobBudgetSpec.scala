@@ -27,13 +27,15 @@ import graft.sources.VersionedLake
   * the shortlist broadcasts and the salted-tile checkpoint; a training
   * pass or a fetch that comes back as its own job breaks them.
   *
-  * The key writes, the lake delete and the point read run against a
-  * small store gid and a small two-day lake, each built fresh for the
-  * call. Their budgets are the counts of the merge-on-read protocol (the
-  * batch pin and its bounds, the landed files and their stats, the match
-  * pin, its per-file counts and the sidecar write); a probe that comes
-  * back as its own job (a bucket hashed by a query, a per-bucket
-  * emptiness check) breaks them.
+  * The key writes, the lake delete and the store and lake reads run
+  * against a small store gid and a small two-day lake, each built fresh
+  * for the call. The writes' budgets are the counts of the merge-on-read
+  * protocol (the batch pin and its bounds, the landed files and their
+  * stats, the match pin, its per-file counts and the sidecar write); a
+  * probe that comes back as its own job (a bucket hashed by a query, a
+  * per-bucket emptiness check) breaks them. A read is one scan job (the
+  * change feed's two diffs add their exchanges); a listing or schema
+  * inference job breaks it.
   */
 class JobBudgetSpec extends SparkSessionSpec {
   import spark.implicits._
@@ -155,6 +157,19 @@ class JobBudgetSpec extends SparkSessionSpec {
     ("VersionedLake.upsert", 10, () => {
       val p = lake()
       () => VersionedLake.upsert(events(8 until 14, 100.0), p, key = "event_id"): Unit
+    }),
+    ("Store.scan", 1, () => {
+      val s = store(); () => s.scan("g").collect(): Unit
+    }),
+    ("VersionedLake.read", 1, () => {
+      val p = lake(); () => VersionedLake.read(spark, p).collect(): Unit
+    }),
+    ("VersionedLake.readBands", 1, () => {
+      val p = lake()
+      () => VersionedLake.readBands(spark, p, Seq(("value", 2.0, 8.0))).collect(): Unit
+    }),
+    ("VersionedLake.changes", 3, () => {
+      val p = lake(); () => VersionedLake.changes(spark, p, 1L).collect(): Unit
     }))
 
   for ((name, budget, setup) <- writes)

@@ -146,10 +146,10 @@ class PartitionedSpec extends SparkSessionSpec {
     assert(VersionedLake.snapshot(spark, d).files
       .forall(_.stats.get("value").exists(_._2 == "NaN")),
       "gate needs NaN-polluted commit-log stats")
-    val report = VersionedLake.bandReport(spark, d, "value", "5.0", "15.0")
+    val report = VersionedLake.bandsReport(spark, d, Seq(("value", 5.0, 15.0)))
     assert(report.selected.length === report.total,
       "a NaN-polluted range must never prune (bounds are unprovable)")
-    val got = VersionedLake.readBand(spark, d, "value", 5.0, 15.0)
+    val got = VersionedLake.readBands(spark, d, Seq(("value", 5.0, 15.0)))
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(got === Set(1L))
   }
@@ -167,10 +167,10 @@ class PartitionedSpec extends SparkSessionSpec {
     // second clustered run rewrites nothing
     assert(clustered() === v)
     // a band beyond every recorded max: pruning proves zero overlap
-    val report = VersionedLake.bandReport(spark, d, "value", "1.0e15", "2.0e15")
+    val report = VersionedLake.bandsReport(spark, d, Seq(("value", 1.0e15, 2.0e15)))
     assert(report.total > 0 && report.selected.isEmpty,
       "gate needs a provably-empty band")
-    val df = VersionedLake.readBand(spark, d, "value", 1.0e15, 2.0e15)
+    val df = VersionedLake.readBands(spark, d, Seq(("value", 1.0e15, 2.0e15)))
     assert(df.collect().isEmpty)
     // a fallback that re-read the FULL day range exactly when pruning
     // proved no file could match would plan a file scan here

@@ -166,8 +166,9 @@ class SimilaritySpec extends SparkSessionSpec {
   }
 
   test("cell operators given no cells return zero rows in their own schema") {
-    // ivfCentroids of an empty corpus is empty; every cell operator then
-    // answers with no rows, typed like its answer over trained cells
+    // ivfCentroids and pqCodebooks of an empty corpus are empty; every
+    // cell operator then answers with no rows, typed like its answer over
+    // trained state
     val (corpus, queries) = corpusAndQueries()
     val groups = table(spark, sfDir, "documents")
       .select(col("doc_id").as("id"), col("lang").as("grp"))
@@ -190,7 +191,10 @@ class SimilaritySpec extends SparkSessionSpec {
         Similarity.crossGroupPairs(c, t, groups, threshold = 0.3)),
       ("assignCells", (c, t) => Similarity.assignCells(c, t)),
       ("clusterProfile", (c, t) => Similarity.clusterProfile(c, t)),
-      ("clusterSeparation", (c, t) => Similarity.clusterSeparation(c, t)))
+      ("clusterSeparation", (c, t) => Similarity.clusterSeparation(c, t)),
+      ("pqTopK", (c, _) => Similarity.pqTopK(c, books(c, 8), queries, k = 5)),
+      ("ivfPqTopK", (c, t) =>
+        Similarity.ivfPqTopK(c, t, books(c, 8), queries, k = 5)))
     def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
     for ((name, op) <- ops) {
       val full = op(corpus, some)

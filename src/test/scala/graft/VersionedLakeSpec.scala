@@ -145,49 +145,6 @@ class VersionedLakeSpec extends SparkSessionSpec {
       .count() === 2) // events 3 and 4
   }
 
-  test("sink auto-maintenance: compactEvery keeps per-day file counts at " +
-      "the compact bound and vacuumEvery prunes expired versions — with " +
-      "rows exactly the batches' union throughout") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    def t(day: Int, h: Int): java.sql.Timestamp =
-      java.sql.Timestamp.valueOf(f"2024-02-$day%02d $h%02d:00:00")
-    val root = Files.createTempDirectory("graft_vlake_automnt").toString
-    val lake = s"$root/events"
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Double)](spark)
-    // every 2nd batch compacts, every 3rd vacuums down to 2 versions
-    // (horizon 0: the sink is the only writer here)
-    val q = VersionedLake.sink(mem.toDF().toDF("event_id", "ts", "value"),
-      lake, checkpointDir = s"$root/__ckpt",
-      compactEvery = 2L, vacuumEvery = 3L,
-      vacuumRetain = 2, vacuumHorizonHours = 0.0)
-    val sent = scala.collection.mutable.Buffer[(Long, java.sql.Timestamp, Double)]()
-    try {
-      // 6 micro-batches, all into the SAME two days — the accumulation
-      // pattern auto-compaction exists for
-      (0 until 6).foreach { i =>
-        val b = Seq((i * 2L, t(1, i), i * 1.0), (i * 2L + 1, t(2, i), i * 2.0))
-        sent ++= b
-        mem.addData(b)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // per-day file count sits at the compact bound (1 compacted file +
-    // at most compactEvery-1 fresh appends awaiting the next sweep)
-    val snap = VersionedLake.snapshot(spark, lake)
-    val perDay = snap.files.groupBy(_.dt).map(_._2.size)
-    assert(perDay.max <= 2,
-      s"auto-compact let a day grow past the bound: ${snap.files.groupBy(_.dt)}")
-    // vacuum pruned the version trail to the retain window
-    val versions = VersionedLake.history(spark, lake).map(_.version)
-    assert(versions.size <= 5,
-      s"auto-vacuum left ${versions.size} versions: $versions")
-    // stream == batch: every row exactly once through compactions+vacuums
-    val rows = VersionedLake.read(spark, lake)
-      .select("event_id", "ts", "value").collect().map(_.toSeq).toSet
-    assert(rows === sent.map(r => Seq(r._1, r._2, r._3)).toSet)
-  }
-
   test("manifest stats: clustered compaction makes readBand skip files; " +
       "stat-less entries are never pruned") {
     val d = freshRoot()
@@ -203,15 +160,15 @@ class VersionedLakeSpec extends SparkSessionSpec {
     // BEFORE clustering: append stats are coarse (hash layout → every
     // file spans most of the value domain) but the band read must
     // already be correct whatever it manages to skip
-    assert(VersionedLake.readBand(spark, d, "value", 100.0, 150.0)
+    assert(VersionedLake.readBands(spark, d, Seq(("value", 100.0, 150.0)))
       .collect().map(_.toSeq).toSet === expected)
     // clustered compaction → disjoint per-file ranges → real skipping
     VersionedLake.compact(spark, d, "0000-01-01", "9999-12-31",
       minFilesPerDay = 4, clusterBy = Seq("value"))
-    val report = VersionedLake.bandReport(spark, d, "value", "100.0", "150.0")
+    val report = VersionedLake.bandsReport(spark, d, Seq(("value", 100.0, 150.0)))
     assert(report.skipped > 0,
       s"clustered manifest pruned nothing (total=${report.total})")
-    assert(VersionedLake.readBand(spark, d, "value", 100.0, 150.0)
+    assert(VersionedLake.readBands(spark, d, Seq(("value", 100.0, 150.0)))
       .collect().map(_.toSeq).toSet === expected)
     // a stat-less append joins the lake: its entries carry no ranges, so
     // selection must keep them (soundness) while still pruning the rest
@@ -221,9 +178,9 @@ class VersionedLakeSpec extends SparkSessionSpec {
     val expected2 = VersionedLake.read(spark, d)
       .filter(col("value") >= 100.0 && col("value") <= 150.0)
       .collect().map(_.toSeq).toSet
-    val report2 = VersionedLake.bandReport(spark, d, "value", "100.0", "150.0")
+    val report2 = VersionedLake.bandsReport(spark, d, Seq(("value", 100.0, 150.0)))
     assert(report2.skipped > 0, "stat-less entries killed all pruning")
-    assert(VersionedLake.readBand(spark, d, "value", 100.0, 150.0)
+    assert(VersionedLake.readBands(spark, d, Seq(("value", 100.0, 150.0)))
       .collect().map(_.toSeq).toSet === expected2,
       "a stat-less entry was pruned — UNSOUND")
   }
@@ -719,17 +676,17 @@ class VersionedLakeSpec extends SparkSessionSpec {
     // narrow bands on EACH column must prove files disjoint — the
     // lexical tuple layout gives the trailing column near-useless
     // ranges; the Morton interleave is what makes user_id skippable
-    val rv = VersionedLake.bandReport(spark, d, "value", "0.0", "40.0")
+    val rv = VersionedLake.bandsReport(spark, d, Seq(("value", 0.0, 40.0)))
     assert(rv.skipped > 0, s"z-order pruned nothing on value (${rv.total})")
-    val ru = VersionedLake.bandReport(spark, d, "user_id", "0", "3")
+    val ru = VersionedLake.bandsReport(spark, d, Seq(("user_id", 0.0, 3.0)))
     assert(ru.skipped > 0, s"z-order pruned nothing on user_id (${ru.total})")
     // and both pruned reads equal the unpruned filter (soundness)
     def expect(c: String, lo: Double, hi: Double) = VersionedLake
       .read(spark, d).filter(col(c) >= lo && col(c) <= hi)
       .collect().map(_.toSeq).toSet
-    assert(VersionedLake.readBand(spark, d, "value", 0.0, 40.0)
+    assert(VersionedLake.readBands(spark, d, Seq(("value", 0.0, 40.0)))
       .collect().map(_.toSeq).toSet === expect("value", 0.0, 40.0))
-    assert(VersionedLake.readBand(spark, d, "user_id", 0.0, 3.0)
+    assert(VersionedLake.readBands(spark, d, Seq(("user_id", 0.0, 3.0)))
       .collect().map(_.toSeq).toSet === expect("user_id", 0.0, 3.0))
     // a non-numeric z-order column is refused loudly
     intercept[IllegalArgumentException] {
@@ -761,7 +718,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
     VersionedLake.append(ev, d, statsCols = Seq("value"))
     VersionedLake.compact(spark, d, "0000-01-01", "9999-12-31",
       minFilesPerDay = 4, clusterBy = Seq("value"))
-    val df = VersionedLake.readBand(spark, d, "value", 100.0, 150.0)
+    val df = VersionedLake.readBands(spark, d, Seq(("value", 100.0, 150.0)))
     val scans = df.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
@@ -850,7 +807,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
     // the manifest's live-row accounting matches what reads serve
     assert(after.files.map(_.rows).sum === expect.count())
     // band reads still prune AND stay exact over tombstoned files
-    val band = VersionedLake.readBand(spark, d, "value", 100.0, 150.0)
+    val band = VersionedLake.readBands(spark, d, Seq(("value", 100.0, 150.0)))
     assert(band.count() ===
       ev.filter(col("value") >= 100.0 && col("value") <= 150.0).count())
     // time travel: the pre-delete snapshot still serves every row
@@ -1113,6 +1070,48 @@ class VersionedLakeSpec extends SparkSessionSpec {
     snapshotFilesExist(d)
   }
 
+  test("reads that end with no entries return zero rows in the schema " +
+      "of a non-empty read of the same lake") {
+    import spark.implicits._
+    val d = freshRoot()
+    val ev = (0 until 12).map { i =>
+      (i.toLong, java.sql.Timestamp.valueOf(f"2024-03-0${1 + i % 2} $i%02d:00:00"),
+        i * 1.5)
+    }.toDF("event_id", "ts", "value")
+    val v1 = VersionedLake.append(ev.filter(col("event_id") < 6), d,
+      statsCols = Seq("value"))
+    val v2 = VersionedLake.append(ev.filter(col("event_id") >= 6), d,
+      statsCols = Seq("value"))
+    val v3 = VersionedLake.deleteWhere(spark, d, col("value") > 12.0)
+    val store = new graft.kv.Store(spark,
+      Files.createTempDirectory("graft_vlake_kv").toString, defaultBuckets = 4)
+    val emptyScan = store.scan("g")
+    val emptyGet = store.get("g", "3")
+    store.put(ev, "g", Some("event_id"))
+    // (case, a read with no entry left, a non-empty read of the same lake)
+    val cases = Seq(
+      ("read outside the day range",
+        VersionedLake.read(spark, d, None, "2023-01-01", "2023-01-31"),
+        VersionedLake.read(spark, d)),
+      ("readBands pruned to nothing",
+        VersionedLake.readBands(spark, d, Seq(("value", 1.0e6, 2.0e6))),
+        VersionedLake.readBands(spark, d, Seq(("value", 0.0, 9.0)))),
+      ("changes, the removed side empty (an append)",
+        VersionedLake.changes(spark, d, v1, Some(v2))
+          .filter(col("_change_type") === "delete"),
+        VersionedLake.changes(spark, d, v2, Some(v3))),
+      ("changes, both sides empty",
+        VersionedLake.changes(spark, d, v2, Some(v2)),
+        VersionedLake.changes(spark, d, v2, Some(v3))),
+      ("Store.scan on an empty gid", emptyScan, store.scan("g")),
+      ("Store.get on an empty gid", emptyGet, store.get("g", "3")))
+    cases.foreach { case (name, empty, full) =>
+      assert(full.count() > 0, s"$name: the reference read is empty")
+      assert(empty.count() === 0, name)
+      assert(empty.schema === full.schema, name)
+    }
+  }
+
   test("timestamp time travel: versionAt maps publish times to versions, " +
       "readAt serves the snapshot visible then, pre-history timestamps " +
       "fail loudly") {
@@ -1178,8 +1177,7 @@ class VersionedLakeSpec extends SparkSessionSpec {
   }
 
   test("streaming source CDC mode: the stream IS the change feed " +
-      "(rewrites are data, not failures); maxVersionsPerBatch drains a " +
-      "version backlog in bounded batches") {
+      "(rewrites are data, not failures)") {
     val a = freshRoot()
     val ev = table(spark, sfDir, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -1211,47 +1209,9 @@ class VersionedLakeSpec extends SparkSessionSpec {
       assert(fed.filter(col("_change_type") === "delete").count() ===
         banded.count() + 15)
     } finally q.stop()
-    // rate limit: after the initial snapshot, a 3-version backlog with
-    // maxVersionsPerBatch=1 must drain across ≥3 bounded micro-batches,
-    // delivering every row exactly once
-    val b = freshRoot()
-    val slim = ev.limit(200).localCheckpoint()
-    VersionedLake.append(slim, b)
-    val ck2 = Files.createTempDirectory("graft_lakerate_ck").toString
-    val q2 = VersionedLake.source(spark, b, maxVersionsPerBatch = 1L)
-      .writeStream.format("memory").queryName("lakesrc_rate")
-      .option("checkpointLocation", ck2).start()
-    try {
-      q2.processAllAvailable() // initial snapshot (batch 0)
-      (1 to 3).foreach { i =>
-        VersionedLake.append(
-          slim.withColumn("event_id", col("event_id") + i * 1000000L), b)
-      }
-      q2.processAllAvailable() // drains the backlog, capped per batch
-      assert(spark.sql("select * from lakesrc_rate").count() === 200L * 4)
-      assert(spark.sql("select distinct event_id from lakesrc_rate").count()
-        === 200L * 4, "rate-limited drain must not double-deliver")
-      // the 3-version backlog took ≥3 bounded batches, not one giant one
-      assert(q2.recentProgress.map(_.batchId).max >= 3,
-        s"backlog drained in too few batches: ${q2.recentProgress.map(_.batchId).toSeq}")
-    } finally q2.stop()
-    // startingVersion: the first batch tails FROM that version — no
-    // initial snapshot replay (the resume-a-pipeline knob)
-    val ck3 = Files.createTempDirectory("graft_lakestart_ck").toString
-    val q3 = VersionedLake.source(spark, b, startingVersion = 4L)
-      .writeStream.format("memory").queryName("lakesrc_startv")
-      .option("checkpointLocation", ck3).start()
-    try {
-      q3.processAllAvailable()
-      // lake b holds 4 appends of 200; starting at v4 serves only v4's
-      assert(spark.sql("select * from lakesrc_startv").count() === 200L)
-      assert(spark.sql("select min(event_id) from lakesrc_startv").head()
-        .getLong(0) >= 3000000L, "startingVersion must skip v1-v3 rows")
-    } finally q3.stop()
   }
 
-  test("streaming source REFUSES history rewrites by default; " +
-      "ignoreChanges streams an upsert's new images and skips rewrites") {
+  test("streaming source REFUSES history rewrites") {
     val a = freshRoot()
     val ev = table(spark, sfDir, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -1270,27 +1230,5 @@ class VersionedLakeSpec extends SparkSessionSpec {
       assert(err.getMessage.contains("only tails appends"),
         s"unexpected failure: ${err.getMessage}")
     } finally q.stop()
-    // fresh checkpoint with ignoreChanges: an upsert's NEW images stream,
-    // its rewrites do not
-    val postDelete = VersionedLake.read(spark, a).count()
-    val ck2 = Files.createTempDirectory("graft_lakesrc_ck2").toString
-    val q2 = VersionedLake.source(spark, a, ignoreChanges = true)
-      .writeStream.format("memory").queryName("lakesrc_loose")
-      .option("checkpointLocation", ck2).start()
-    try {
-      q2.processAllAvailable()
-      assert(spark.sql("select * from lakesrc_loose").count() === postDelete)
-      val touched = VersionedLake.read(spark, a).drop("dt")
-        .filter(col("value") < 200.0).limit(20)
-        .withColumn("value", col("value") + 10000.0)
-        .localCheckpoint()
-      VersionedLake.upsert(touched, a, key = "event_id")
-      q2.processAllAvailable()
-      assert(spark.sql("select * from lakesrc_loose").count() ===
-        postDelete + 20)
-      assert(spark.sql("select * from lakesrc_loose")
-        .filter(col("value") >= 10000.0).count() === 20,
-        "the streamed rows must be the upsert's NEW images")
-    } finally q2.stop()
   }
 }

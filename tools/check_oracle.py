@@ -2,10 +2,12 @@
 """Local replica of the driver's correctness gate: for each query result
 parquet written by graft.Verify, run the declared DuckDB oracle SQL over the
 same sf tables and compare (column-name-sorted, row-sorted, exact values).
+The queries are compared in a pool of one process per core, each with its
+own DuckDB connection; the result lines print in sorted query order.
 
 Usage: check_oracle.py <sfDir> <verifyOutDir>
 """
-import sys, json, glob, os
+import sys, json, glob, os, multiprocessing
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -61,48 +63,56 @@ def typed(rel):
     types = {c: family(t) for c, t in zip(cols, rel.types)}
     return cols, rel.fetchall(), types
 
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
+_con = None
+_oracle = None
+
+def init_worker(sf_dir, out_dir):
+    """Open this worker's one DuckDB connection over the sf tables."""
+    global _con, _oracle
+    _con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = n_noracle = 0
+            _con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    _oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+
+def check(d):
+    """Compare one result dir with its oracle: (outcome, result line)."""
+    name = os.path.basename(d)
+    gcols, grows, gtypes = typed(_con.sql(f"SELECT * FROM '{d}/*.parquet'"))
+    if name not in _oracle:
+        return "no-oracle", f"  [no-oracle] {name}: {len(grows)} rows"
+    try:
+        ecols, erows, etypes = typed(_con.sql(_oracle[name]))
+    except Exception as e:
+        return "fail", f"  [FAIL-sql ] {name}: oracle SQL error: {e}"
+    gc, gv = canon(grows, gcols)
+    ec, ev = canon(erows, ecols)
+    tdiff = {c: (gtypes.get(c), etypes.get(c)) for c in set(gcols) | set(ecols)
+             if gtypes.get(c) != etypes.get(c)}
+    if gc != ec:
+        return "fail", f"  [FAIL-cols] {name}: spark={gc} duckdb={ec}"
+    if tdiff:
+        return "fail", f"  [FAIL-type] {name}: col->(spark,duckdb) = {tdiff}"
+    if gv != ev:
+        diff = [(a, b) for a, b in zip(gv, ev) if a != b][:3]
+        extra = f" rowcount spark={len(gv)} duckdb={len(ev)}"
+        return "fail", f"  [FAIL-vals] {name}:{extra} first diffs: {diff}"
+    return "pass", f"  [ok       ] {name}: {len(gv)} rows"
+
+def main(sf_dir, out_dir):
     result_dirs = sorted(d for d in glob.glob(f"{out_dir}/*") if os.path.isdir(d))
-    for d in result_dirs:
-        name = os.path.basename(d)
-        gcols, grows, gtypes = typed(con.sql(f"SELECT * FROM '{d}/*.parquet'"))
-        if name not in oracle:
-            n_noracle += 1
-            print(f"  [no-oracle] {name}: {len(grows)} rows")
-            continue
-        try:
-            ecols, erows, etypes = typed(con.sql(oracle[name]))
-        except Exception as e:
-            n_fail += 1
-            print(f"  [FAIL-sql ] {name}: oracle SQL error: {e}")
-            continue
-        gc, gv = canon(grows, gcols)
-        ec, ev = canon(erows, ecols)
-        tdiff = {c: (gtypes.get(c), etypes.get(c)) for c in set(gcols) | set(ecols)
-                 if gtypes.get(c) != etypes.get(c)}
-        if gc != ec:
-            n_fail += 1
-            print(f"  [FAIL-cols] {name}: spark={gc} duckdb={ec}")
-        elif tdiff:
-            n_fail += 1
-            print(f"  [FAIL-type] {name}: col->(spark,duckdb) = {tdiff}")
-        elif gv != ev:
-            n_fail += 1
-            diff = [(a, b) for a, b in zip(gv, ev) if a != b][:3]
-            extra = f" rowcount spark={len(gv)} duckdb={len(ev)}"
-            print(f"  [FAIL-vals] {name}:{extra} first diffs: {diff}")
-        else:
-            n_pass += 1
-            print(f"  [ok       ] {name}: {len(gv)} rows")
-    print(f"PASS={n_pass} FAIL={n_fail} NO_ORACLE={n_noracle}")
-    sys.exit(1 if n_fail else 0)
+    counts = {"pass": 0, "fail": 0, "no-oracle": 0}
+    # one process per core, each with its own connection; imap keeps the
+    # sorted order of the result lines
+    with multiprocessing.Pool(os.cpu_count(), init_worker,
+                              (sf_dir, out_dir)) as pool:
+        for outcome, line in pool.imap(check, result_dirs):
+            counts[outcome] += 1
+            print(line, flush=True)
+    print(f"PASS={counts['pass']} FAIL={counts['fail']} "
+          f"NO_ORACLE={counts['no-oracle']}")
+    sys.exit(1 if counts["fail"] else 0)
 
 def selftest():
     """Regression guard for the r6 p08 class of bug: an uncast DuckDB
