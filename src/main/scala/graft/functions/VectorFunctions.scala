@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** element-wise promote to double */
-  def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
-
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)

@@ -322,19 +322,14 @@ object Dedup {
 
   // -------------------------------------------------------------- MinHash
 
-  /** MinHash signature as `numHashes` columns folded into one array:
-    * sig[i] = min over hashed shingles of xxhash64(shingleHash, i).
-    * Re-hashing with the index as salt gives a deterministic independent
-    * hash family with no multiply-add (which would overflow under ANSI
-    * mode). Pure Column arithmetic over the hashed-shingle array →
-    * codegen'd, no shuffle.
-    */
-  def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
-    minhashFromShingles(hashedShingles(text, k), numHashes)
-
-  /** Same, over an already-computed hashed-shingle array (lets callers
-    * compute the shingle set once and reuse it for exact verification).
-    * Native one-pass kernel; bit-identical to [[minhashFromShinglesComposed]].
+  /** MinHash signature of a hashed-shingle array, `numHashes` values
+    * folded into one array: sig[i] = min over hashed shingles of
+    * xxhash64(shingleHash, i). Re-hashing with the index as salt gives a
+    * deterministic independent hash family with no multiply-add (which
+    * would overflow under ANSI mode). Taking the shingles, not the text,
+    * lets callers compute the shingle set once and reuse it for exact
+    * verification. Native one-pass kernel, no shuffle; bit-identical to
+    * [[minhashFromShinglesComposed]].
     */
   def minhashFromShingles(hs: Column, numHashes: Int): Column =
     graft.expr.nat(graft.expr.SignatureExpressions.MinHashSig(

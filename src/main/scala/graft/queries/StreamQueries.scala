@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions.{col, count, countDistinct, lit, pmod, sum
 import graft.Engine.table
 import graft.streaming.EventStream
 
-/** Streaming-analytics query surface (batch-equivalent forms, so the
-  * DuckDB oracle checks them; StreamingSpec proves the streaming forms
-  * produce identical results through readStream + memory sink).
+/** Streaming-analytics query surface. Each query runs its operator on
+  * the static tables, where the DuckDB oracle checks it; StreamingSpec
+  * runs the same operator (or, where streaming needs another algorithm,
+  * its stream form) on a MemoryStream and proves the results identical.
   */
 object StreamQueries {
 
@@ -26,8 +27,8 @@ object StreamQueries {
       EventStream.viewPurchaseCounts(table(s, dir, "events"), windowMinutes = 60)),
 
     // Stream-static enrichment: events joined to the customer dimension
-    // (broadcast — stateless in the streaming form), hourly per-segment
-    // rollup. StreamingSpec proves the readStream form matches.
+    // (broadcast — stateless on a stream), hourly per-segment rollup.
+    // StreamingSpec proves the same operator on a stream matches.
     "s05_segment_hourly" -> ((s, dir) =>
       EventStream.segmentHourly(
         table(s, dir, "events"), table(s, dir, "customer"))),
@@ -35,11 +36,15 @@ object StreamQueries {
     // LEFT OUTER attribution: views-in-window per purchase with the
     // zero-view orphans KEPT (count(v_id) over the left-outer interval
     // join) — s04's inner form silently drops them. StreamingSpec proves
-    // the watermarked stream-stream left-outer form matches.
-    "s08_attribution_outer" -> ((s, dir) =>
-      EventStream.viewPurchaseLeftOuter(table(s, dir, "events"))
+    // the same join on two streams matches.
+    "s08_attribution_outer" -> ((s, dir) => {
+      val ev = table(s, dir, "events")
+      EventStream.viewPurchaseLeftOuter(
+          ev.filter(col("event_type") === "purchase"),
+          ev.filter(col("event_type") === "view"))
         .groupBy(col("p_id"), col("user_id"), col("p_ts"))
-        .agg(org.apache.spark.sql.functions.count(col("v_id")).as("n_views"))),
+        .agg(count(col("v_id")).as("n_views"))
+    }),
 
     // Per-user funnel stage (batch form of the streaming funnel —
     // StreamingSpec proves the state-backed stream == this). Detail
@@ -52,8 +57,8 @@ object StreamQueries {
 
     // Sliding-window aggregate: 6-hour windows advancing hourly (every
     // event in 6 overlapping windows) — the window semantics tumbling
-    // s01 can't express. StreamingSpec proves the watermarked
-    // readStream form matches.
+    // s01 can't express. StreamingSpec proves the same operator on a
+    // stream matches.
     "s07_sliding_agg" -> ((s, dir) =>
       EventStream.slidingAgg(table(s, dir, "events"))),
 
@@ -74,14 +79,13 @@ object StreamQueries {
     // rows / nulls / min / max / KMV candidates — the q46 mergeable
     // ANALYZE maintained as BOUNDED streaming state (four scalars + at
     // most 64 hashes per group at any stream length). StreamingSpec
-    // proves the mapGroupsWithState form converges to this under
+    // proves the same aggregation in update mode converges to this under
     // shuffled multi-batch arrival, and that merging these shard rows
     // reproduces q46's global answer.
     "s10_shard_stats" -> ((s, dir) =>
-      graft.streaming.StatsStream.statsFromEvents(
-        graft.streaming.StatsStream.statEvents(
-          table(s, dir, "events"), bucketKeyCol = "event_id",
-          columns = Seq("event_id", "user_id"), nBuckets = 8))),
+      graft.streaming.StatsStream.shardStatsStream(
+        table(s, dir, "events"), bucketKeyCol = "event_id",
+        columns = Seq("event_id", "user_id"), nBuckets = 8)),
 
     // Event-transition (Markov) matrix: per-user lag pairing → from→to
     // counts + per-source probabilities. Registered as the batch lag
@@ -120,18 +124,18 @@ object StreamQueries {
     "s14_burst_flags" -> ((s, dir) =>
       graft.streaming.BurstStream.burstBatch(table(s, dir, "events"))),
 
-    // Hourly unique users (DAU/HAU KPI). Registered as the batch
-    // distinct-then-count form; StreamingSpec proves the two-chained-
-    // stateful streaming form (watermark-expired dropDuplicates feeding
-    // a windowed count — EventStream.hourlyUniquesStream) matches.
+    // Hourly unique users (DAU/HAU KPI): dedup on (hour, user), then a
+    // count per hour. StreamingSpec proves the same operator on a stream
+    // (two chained stateful operators: watermark-expired dropDuplicates
+    // feeding a windowed count) matches.
     "s15_hourly_uniques" -> ((s, dir) =>
       EventStream.hourlyUniques(table(s, dir, "events"))),
 
     // Native session_window sessions: the dynamic-gap window operator
     // itself (s02 builds the same sessions by lag+cumsum — the oracle
     // replays that construction, pinning the native node's merge
-    // semantics). StreamingSpec proves the watermarked state-merge
-    // streaming form matches.
+    // semantics). StreamingSpec proves the same operator on a stream
+    // (watermarked state merge) matches.
     "s16_session_windows" -> ((s, dir) =>
       EventStream.sessionWindows(table(s, dir, "events"), gapMinutes = 30)),
 
@@ -159,20 +163,13 @@ object StreamQueries {
     "s19_lake_sink_ingest" -> ((s, dir) => {
       val root = graft.TempDirs.scratch("graft_s19").toFile
       val out = root.getAbsolutePath + "/events"
-      val ev = table(s, dir, "events")
-        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
-          col("ts") < lit("2024-01-16").cast("timestamp"))
-      def slice(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
-      graft.streaming.LakeSink.appendBatch(slice(0), out, batchId = 0)
-      graft.streaming.LakeSink.appendBatch(slice(1), out, batchId = 1)
+      val batch = ingestBatches(s, dir)
+      graft.streaming.LakeSink.appendBatch(batch(0), out, batchId = 0)
+      graft.streaming.LakeSink.appendBatch(batch(1), out, batchId = 1)
       // replay of a committed batch: the high-water mark must skip it
-      graft.streaming.LakeSink.appendBatch(slice(1), out, batchId = 1)
-      graft.streaming.LakeSink.appendBatch(slice(2), out, batchId = 2)
-      graft.sources.Partitioned.readDays(s, out, "2024-01-08", "2024-01-14")
-        .groupBy(col("dt"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"))
+      graft.streaming.LakeSink.appendBatch(batch(1), out, batchId = 1)
+      graft.streaming.LakeSink.appendBatch(batch(2), out, batchId = 2)
+      weekAgg(graft.sources.Partitioned.readDays(s, out, "2024-01-08", "2024-01-14"))
     }),
 
     // s19's topology through the VERSIONED lake (the commit-log twin):
@@ -186,21 +183,13 @@ object StreamQueries {
     "s20_versioned_sink_ingest" -> ((s, dir) => {
       val root = graft.TempDirs.scratch("graft_s20").toFile
       val out = root.getAbsolutePath + "/events"
-      val ev = table(s, dir, "events")
-        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
-          col("ts") < lit("2024-01-16").cast("timestamp"))
-      def slice(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
-      graft.sources.VersionedLake.appendBatch(slice(0), out, batchId = 0)
-      graft.sources.VersionedLake.appendBatch(slice(1), out, batchId = 1)
+      val batch = ingestBatches(s, dir)
+      graft.sources.VersionedLake.appendBatch(batch(0), out, batchId = 0)
+      graft.sources.VersionedLake.appendBatch(batch(1), out, batchId = 1)
       // replay of a committed batch: the high-water mark must skip it
-      graft.sources.VersionedLake.appendBatch(slice(1), out, batchId = 1)
-      graft.sources.VersionedLake.appendBatch(slice(2), out, batchId = 2)
-      graft.sources.VersionedLake
-        .read(s, out, None, "2024-01-08", "2024-01-14")
-        .groupBy(col("dt"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"))
+      graft.sources.VersionedLake.appendBatch(batch(1), out, batchId = 1)
+      graft.sources.VersionedLake.appendBatch(batch(2), out, batchId = 2)
+      weekAgg(graft.sources.VersionedLake.read(s, out, None, "2024-01-08", "2024-01-14"))
     }),
 
     // LAKE→LAKE STREAMING RELAY (VersionedLake.source → sink — the
@@ -224,24 +213,16 @@ object StreamQueries {
       val root = graft.TempDirs.scratch("graft_s21").toFile.getAbsolutePath
       val b = root + "/lakeB"
       val ck = root + "/ckpt"
-      val ev = table(s, dir, "events")
-        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
-          col("ts") < lit("2024-01-16").cast("timestamp"))
       val q = graft.sources.VersionedLake.sink(
         graft.sources.VersionedLake.source(s, a)
           .filter(pmod(col("event_id"), lit(2)) === 0), b, ck)
       try {
         q.processAllAvailable()
         graft.sources.VersionedLake.appendBatch(
-          ev.filter(pmod(col("event_id"), lit(3)) === 2), a, batchId = 2)
+          ingestBatches(s, dir)(2), a, batchId = 2)
         q.processAllAvailable()
       } finally q.stop()
-      graft.sources.VersionedLake
-        .read(s, b, None, "2024-01-08", "2024-01-14")
-        .groupBy(col("dt"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"))
+      weekAgg(graft.sources.VersionedLake.read(s, b, None, "2024-01-08", "2024-01-14"))
     }),
 
     // CDC TAIL (VersionedLake.source cdc = true — Delta's readChangeFeed
@@ -271,12 +252,8 @@ object StreamQueries {
           fromDay = "2024-01-08", toDay = "2024-01-14")
         q.processAllAvailable()
       } finally q.stop()
-      graft.sources.VersionedLake
-        .read(s, b, None, "2024-01-08", "2024-01-14")
-        .groupBy(col("dt"), col("event_type"), col("_change_type"))
-        .agg(count(lit(1)).as("n_events"),
-          dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"))
+      weekAgg(graft.sources.VersionedLake.read(s, b, None, "2024-01-08", "2024-01-14"),
+        "_change_type")
     }),
 
     // File-ingest twin of s06 — the batch form of FileStreamSpec's
@@ -299,6 +276,25 @@ object StreamQueries {
       graft.streaming.DedupStream.stats(back, "text", "doc_id", "lang")
     })
   )
+
+  /** The 11-day events slice (2024-01-05 through 01-15) the lake ingest
+    * queries land, as three batches split by `event_id` mod 3.
+    */
+  private def ingestBatches(s: SparkSession, dir: String): Int => DataFrame = {
+    val ev = table(s, dir, "events")
+      .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
+        col("ts") < lit("2024-01-16").cast("timestamp"))
+    i => ev.filter(pmod(col("event_id"), lit(3)) === i)
+  }
+
+  /** The week aggregate the lake ingest queries answer: events, exact
+    * value sum and distinct users per (dt, event_type, `keys`).
+    */
+  private def weekAgg(lake: DataFrame, keys: String*): DataFrame =
+    lake.groupBy((Seq("dt", "event_type") ++ keys).map(col): _*)
+      .agg(count(lit(1)).as("n_events"),
+        dec38(sum(dec(col("value")))).cast("double").as("sum_value"),
+        countDistinct(col("user_id")).as("n_users"))
 
   val oracles: Map[String, String] = Map(
     // Mirrors s19 from the FLAT side (the q114/q127 oracle): DuckDB

@@ -33,10 +33,6 @@ object AttributionStream {
   case class UserAttribution(user_id: Long, touch_type: String,
       n: Long, value_micros: Long)
 
-  /** Shared projection both forms consume. */
-  def attrEvents(df: DataFrame): Dataset[AttrEvent] =
-    OrderedFold.events[AttrEvent](df, "event_type", "value")
-
   /** The exact integer-micros image of Spark's double→DECIMAL(18,6)
     * cast (java BigDecimal HALF_UP at scale 6 — what Catalyst's Cast
     * does), so fold sums equal batch decimal sums exactly. Catalyst

@@ -40,10 +40,6 @@ object BurstStream {
 
   case class UserBurst(user_id: Long, max_burst: Long)
 
-  /** Shared projection both forms consume. */
-  def burstEvents(df: DataFrame): Dataset[BurstEvent] =
-    OrderedFold.events[BurstEvent](df)
-
   /** Streaming fold: per-user running max trailing-window count,
     * re-emitted for touched users each micro-batch (Update mode). The
     * accumulator is the trailing per-second counters, their running

@@ -12,10 +12,18 @@ import java.sql.Timestamp
   *
   * The reference has no streaming at all (SURVEY §2.6 — closest construct
   * is `gossip.at` periodic tasks); this module is part of the engine's
-  * extension surface. Every streaming computation has a batch-equivalent
-  * form with identical semantics so the DuckDB oracle can check it:
-  * Structured Streaming's incremental execution of the same logical plan
-  * is exactly the point of building on Spark.
+  * extension surface. Each windowed and join operator here is ONE
+  * function for both execution modes: the registry calls it on a static
+  * frame, where the DuckDB oracle checks it, and StreamingSpec calls it on
+  * a stream and compares. Its watermark bounds the streaming state; the
+  * analyzer removes it from a batch plan (`EliminateEventTimeWatermark`),
+  * so a batch caller never pays for the streaming shape. Only where
+  * streaming needs a different algorithm ([[sessionize]] /
+  * [[sessionizeStream]], the funnel) are there two forms.
+  *
+  * The windows are `window(ts, …)`, which drops an event with a null `ts`
+  * (a `date_trunc` grouping would put it in a null hour); the event
+  * tables have no null `ts`.
   */
 object EventStream {
 
@@ -35,142 +43,86 @@ object EventStream {
     sum(col("value").cast(DecimalType(18, 6)))
       .cast(DecimalType(38, 6)).cast("double").as("sum_value")
 
-  /** Tumbling-window aggregate (batch form): events per hour × type.
-    * `date_trunc` keeps the output one flat timestamp column — same
-    * result as `window(ts, "1 hour").start`.
+  /** How late an event may arrive behind the max event time seen and
+    * still count; a stream drops state (and emits in append mode) once
+    * the watermark passes a window's end.
+    */
+  private def watermarked(df: DataFrame, ts: String = "ts"): DataFrame =
+    df.withWatermark(ts, "2 hours")
+
+  /** Events and value sum per (window `w`, `key`), the window's start
+    * named `start`.
+    */
+  private def windowAgg(
+      rows: DataFrame, w: Column, start: String, key: String): DataFrame =
+    rows.groupBy(w.as("w"), col(key))
+      .agg(count(lit(1)).as("n_events"), sumValue)
+      .select(col("w.start").as(start), col(key), col("n_events"),
+        col("sum_value"))
+
+  /** Tumbling-window aggregate: events per hour × type. Append mode
+    * emits a window only once the watermark closes it.
     */
   def hourlyAgg(events: DataFrame): DataFrame =
-    events
-      .groupBy(
-        date_trunc("hour", col("ts")).as("hour"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumValue)
+    windowAgg(watermarked(events), window(col("ts"), "1 hour"), "hour",
+      "event_type")
 
-  /** Streaming form of [[hourlyAgg]]: watermarked tumbling window.
-    * Append mode emits a window only once it is closed by the watermark.
-    */
-  def hourlyAggStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumValue)
-      .select(col("window.start").as("hour"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
-  /** Sliding-window aggregate (batch form): 6-hour windows advancing
-    * hourly, so every event lands in 6 overlapping windows — the
-    * trend-smoothing shape tumbling windows ([[hourlyAgg]]) can't
-    * express. `window(ts, len, slide)` is the same operator batch and
-    * streaming; the ×6 row expansion happens BEFORE partial aggregation,
-    * so the shuffle still carries one row per (window, type), not per
-    * event.
+  /** Sliding-window aggregate: 6-hour windows advancing hourly, so every
+    * event lands in 6 overlapping windows — the trend-smoothing shape
+    * tumbling windows ([[hourlyAgg]]) can't express. The ×6 row
+    * expansion happens BEFORE partial aggregation, so the shuffle still
+    * carries one row per (window, type), not per event.
     */
   def slidingAgg(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "6 hours", "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumValue)
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
+    windowAgg(watermarked(events), window(col("ts"), "6 hours", "1 hour"),
+      "w_start", "event_type")
 
-  /** Streaming form of [[slidingAgg]]: watermarked, append emits each
-    * 6-hour window once the watermark passes its end.
-    */
-  def slidingAggStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "6 hours", "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumValue)
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
-  /** Hourly UNIQUE users (batch form): distinct (hour, user), then one
-    * count per hour — the DAU/HAU KPI. The distinct is a partial-agg'd
-    * shuffle on (hour, user); the closing count rides the same keys.
+  /** Hourly UNIQUE users — the DAU/HAU KPI: `dropDuplicates` on
+    * (hour window, user) feeding a count per hour. On a stream these are
+    * TWO chained stateful operators (the Spark 4 multi-stateful append
+    * pipeline): dedup state holds one row per (open hour, active user),
+    * bounded by the watermark horizon × hourly actives, never by stream
+    * length; the count state is one row per open hour. Append mode emits
+    * each hour's exact unique count once, when the watermark closes it.
+    * On a static frame the dedup is a plain partial-agg'd distinct.
     */
   def hourlyUniques(events: DataFrame): DataFrame =
-    events
-      .select(date_trunc("hour", col("ts")).as("hour"), col("user_id"))
-      .distinct()
-      .groupBy(col("hour"))
-      .agg(count(lit(1)).as("n_users"))
-
-  /** Streaming form of [[hourlyUniques]]: TWO chained stateful operators
-    * — a watermarked `dropDuplicates` on (window, user) whose state the
-    * watermark expires once the hour closes, feeding a windowed count
-    * (the Spark 4 multi-stateful append pipeline). Dedup state holds one
-    * row per (open hour, active user) — bounded by the watermark horizon
-    * × hourly actives, never by stream length; the downstream count
-    * state is one row per open (hour). Append mode emits each hour's
-    * exact unique count once, when the watermark closes it.
-    */
-  def hourlyUniquesStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
+    watermarked(events)
       .select(window(col("ts"), "1 hour").as("w"), col("user_id"))
       .dropDuplicates("w", "user_id")
       .groupBy(col("w"))
       .agg(count(lit(1)).as("n_users"))
       .select(col("w.start").as("hour"), col("n_users"))
 
-  /** Per-user sessions via Spark's NATIVE `session_window` (batch form):
-    * events within `gapMinutes` of each other merge into one window
-    * whose end is last-event + gap. The same operator [[sessionize]]
-    * builds by hand (lag + cumsum) — registering both pins the native
-    * node's semantics against the explicit construction; the streaming
-    * form ([[sessionWindowsStream]]) is the dynamic-gap state-merge
-    * shape only session_window can express incrementally.
+  /** Per-user sessions via Spark's NATIVE `session_window`: events within
+    * `gapMinutes` of each other merge into one window whose end is
+    * last-event + gap. The same operator [[sessionize]] builds by hand
+    * (lag + cumsum) — registering both pins the native node's semantics
+    * against the explicit construction. On a stream, state is one open
+    * window per (user, active session), merged as events arrive and
+    * emitted once the watermark passes end+gap — the dynamic-gap
+    * state-merge shape only session_window can express incrementally.
     */
   def sessionWindows(events: DataFrame, gapMinutes: Int = 30): DataFrame =
-    events
+    watermarked(events)
       .groupBy(session_window(col("ts"), s"$gapMinutes minutes")
         .as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("sw.start").as("w_start"),
         col("sw.end").as("w_end"), col("n_events"))
 
-  /** Streaming form of [[sessionWindows]]: watermarked session windows —
-    * state is one open window per (user, active session), merged as
-    * events arrive and emitted once the watermark passes end+gap.
-    */
-  def sessionWindowsStream(
-      events: DataFrame, gapMinutes: Int = 30): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), s"$gapMinutes minutes")
-        .as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("sw.start").as("w_start"),
-        col("sw.end").as("w_end"), col("n_events"))
-
-  /** Stream-static enrichment (batch form): events joined to a STATIC
-    * dimension (customer → market segment) and aggregated per
-    * (hour, segment). The third join family next to stream-stream
-    * ([[viewPurchaseJoinStream]]) and self-windowed aggregation: in the
-    * streaming form the static side is broadcast into every micro-batch
-    * — no state store, no watermark needed on the dimension.
+  /** Stream-static enrichment: events joined to a STATIC dimension
+    * (customer → market segment) and aggregated per (hour, segment). The
+    * third join family next to stream-stream ([[viewPurchaseJoin]]) and
+    * self-windowed aggregation: on a stream the dimension is broadcast
+    * into every micro-batch — stateless by construction, no watermark
+    * needed on the dimension.
     */
   def segmentHourly(events: DataFrame, customers: DataFrame): DataFrame =
-    events
-      .join(broadcast(customers.select(
-        col("c_custkey").as("user_id"), col("c_mktsegment"))), Seq("user_id"))
-      .groupBy(
-        date_trunc("hour", col("ts")).as("hour"),
-        col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_events"), sumValue)
-
-  /** Streaming form of [[segmentHourly]]: watermarked tumbling window
-    * over the stream side; the dimension joins as a plain broadcast
-    * (stream-static joins are stateless by construction).
-    */
-  def segmentHourlyStream(events: DataFrame, customers: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .join(broadcast(customers.select(
-        col("c_custkey").as("user_id"), col("c_mktsegment"))), Seq("user_id"))
-      .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_events"), sumValue)
-      .select(col("window.start").as("hour"), col("c_mktsegment"),
-        col("n_events"), col("sum_value"))
+    windowAgg(
+      watermarked(events).join(broadcast(customers.select(
+        col("c_custkey").as("user_id"), col("c_mktsegment"))), Seq("user_id")),
+      window(col("ts"), "1 hour"), "hour", "c_mktsegment")
 
   /** Sessionization (batch form): a session breaks after `gapMinutes` of
     * user inactivity. Window-function formulation — no state, two
@@ -257,94 +209,55 @@ object EventStream {
       .toDF("user_id", "session_start", "session_end", "n_events")
   }
 
-  /** Purchase←view attribution (batch form): for each purchase, the views
-    * by the same user within the preceding `windowMinutes`. Equi-join on
-    * user_id + time-range filter — one shuffle; the range rides the join
-    * as a residual predicate, never a nested loop.
+  /** Purchase←view attribution: for each purchase, the views by the
+    * same user within the preceding `windowMinutes`. Equi-join on user
+    * + time-range condition — one shuffle on a static frame, the range
+    * riding the join as a residual predicate, never a nested loop. On
+    * two streams it is a watermarked stream-stream interval join: Spark
+    * buffers each side's state only for the watermark + interval
+    * horizon, so it runs unbounded.
     */
-  def viewPurchaseJoin(events: DataFrame, windowMinutes: Int = 60): DataFrame = {
-    val p = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id"),
-        col("ts").as("p_ts"))
-    val v = events.filter(col("event_type") === "view")
-      .select(col("event_id").as("v_id"), col("user_id"),
-        col("ts").as("v_ts"))
-    p.join(v, Seq("user_id"))
-      .filter(col("v_ts") <= col("p_ts") &&
-        col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES"))
-  }
+  def viewPurchaseJoin(purchases: DataFrame, views: DataFrame,
+      windowMinutes: Int = 60): DataFrame =
+    intervalJoin(purchases, views, windowMinutes, "inner")
 
   /** Aggregated attribution (oracle-friendly): views-in-window per
     * purchase.
     */
   def viewPurchaseCounts(events: DataFrame, windowMinutes: Int = 60): DataFrame =
-    viewPurchaseJoin(events, windowMinutes)
+    viewPurchaseJoin(events.filter(col("event_type") === "purchase"),
+        events.filter(col("event_type") === "view"), windowMinutes)
       .groupBy(col("p_id"), col("user_id"), col("p_ts"))
       .agg(count(lit(1)).as("n_views"))
 
-  /** Streaming form of [[viewPurchaseJoin]]: a watermarked stream-stream
-    * interval join — Spark buffers each side's state only for the
-    * watermark + interval horizon, so it runs unbounded.
+  /** LEFT OUTER attribution: every purchase with its in-window views,
+    * unmatched purchases KEPT with null view columns — the
+    * orphan-conversion detector the inner join ([[viewPurchaseJoin]])
+    * silently drops. On two streams a matched pair emits as soon as both
+    * rows meet; a NULL-matched purchase emits only once the watermark
+    * passes its join horizon — the unmatched verdict is then provably
+    * final, which is exactly why outer stream-stream joins REQUIRE both
+    * watermarks and a time-bound join condition.
     */
-  def viewPurchaseJoinStream(purchases: DataFrame, views: DataFrame,
-      windowMinutes: Int = 60): DataFrame = {
-    val p = purchases.select(col("event_id").as("p_id"),
-      col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    val v = views.select(col("event_id").as("v_id"),
-      col("user_id").as("v_user"), col("ts").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    p.join(v,
-      col("p_user") === col("v_user") &&
-        col("v_ts") <= col("p_ts") &&
-        col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES"))
-      .select(col("p_id"), col("p_user").as("user_id"), col("p_ts"),
-        col("v_id"), col("v_ts"))
-  }
+  def viewPurchaseLeftOuter(purchases: DataFrame, views: DataFrame,
+      windowMinutes: Int = 60): DataFrame =
+    intervalJoin(purchases, views, windowMinutes, "left_outer")
 
-  /** LEFT OUTER attribution (batch form): every purchase with its
-    * in-window views, unmatched purchases KEPT with null view columns —
-    * the orphan-conversion detector the inner join ([[viewPurchaseJoin]])
-    * silently drops.
+  /** Each purchase joined to the same user's views in the preceding
+    * `windowMinutes`, both sides watermarked: (p_id, user_id, p_ts, v_id,
+    * v_ts).
     */
-  def viewPurchaseLeftOuter(
-      events: DataFrame, windowMinutes: Int = 60): DataFrame = {
-    val p = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id"),
-        col("ts").as("p_ts"))
-    val v = events.filter(col("event_type") === "view")
-      .select(col("event_id").as("v_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ts"))
-    p.join(v,
-      col("user_id") === col("v_user") &&
-        col("v_ts") <= col("p_ts") &&
-        col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES"),
-      "left_outer")
-      .select(col("p_id"), col("user_id"), col("p_ts"),
-        col("v_id"), col("v_ts"))
-  }
-
-  /** Streaming form of [[viewPurchaseLeftOuter]]: watermarked
-    * stream-stream LEFT OUTER interval join. A matched pair emits as
-    * soon as both rows meet; a NULL-matched purchase emits only once the
-    * watermark passes its join horizon — the unmatched verdict is then
-    * provably final, which is exactly why outer stream-stream joins
-    * REQUIRE both watermarks and a time-bound join condition.
-    */
-  def viewPurchaseLeftOuterStream(
-      purchases: DataFrame, views: DataFrame,
-      windowMinutes: Int = 60): DataFrame = {
-    val p = purchases.select(col("event_id").as("p_id"),
-      col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    val v = views.select(col("event_id").as("v_id"),
-      col("user_id").as("v_user"), col("ts").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
+  private def intervalJoin(purchases: DataFrame, views: DataFrame,
+      windowMinutes: Int, joinType: String): DataFrame = {
+    val p = watermarked(purchases.select(col("event_id").as("p_id"),
+      col("user_id").as("p_user"), col("ts").as("p_ts")), "p_ts")
+    val v = watermarked(views.select(col("event_id").as("v_id"),
+      col("user_id").as("v_user"), col("ts").as("v_ts")), "v_ts")
     p.join(v,
       col("p_user") === col("v_user") &&
         col("v_ts") <= col("p_ts") &&
         col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES"),
-      "left_outer")
+      joinType)
       .select(col("p_id"), col("p_user").as("user_id"), col("p_ts"),
         col("v_id"), col("v_ts"))
   }
@@ -398,9 +311,7 @@ object EventStream {
     * bounded state.)
     */
   def dedupStream(events: DataFrame, keyCols: Seq[String]): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark(keyCols)
+    watermarked(events).dropDuplicatesWithinWatermark(keyCols)
 
   /** Top event values per type in each hour — streaming-friendly rank
     * (batch form; demonstrates windowed top-k).

@@ -35,10 +35,6 @@ object GapStream {
 
   case class UserGaps(user_id: Long, gap_bucket: Int, n: Long)
 
-  /** Shared projection both forms consume. */
-  def gapEvents(df: DataFrame): Dataset[GapEvent] =
-    OrderedFold.events[GapEvent](df)
-
   private def bucketOf(gapSeconds: Long): Int =
     // gap 0 → bin '0' has length 1 → bucket 0 (same as gap 1); else
     // bucket = bit length − 1 = floor(log2)

@@ -31,10 +31,6 @@ object TransitionStream {
   case class UserTransitions(user_id: Long, from_type: String,
       to_type: String, n: Long)
 
-  /** Shared projection both forms consume. */
-  def transEvents(df: DataFrame): Dataset[TransEvent] =
-    OrderedFold.events[TransEvent](df, "event_type")
-
   /** Streaming fold: per-user transition counts, re-emitted for touched
     * users each micro-batch (Update mode). The accumulator is the last
     * folded event's type and the (from, to) counters.

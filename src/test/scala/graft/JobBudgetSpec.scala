@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
 import graft.kv.Store
 import graft.ops.{Dedup, Hits, KCore, LabelProp, PageRank, ShortestPaths, Similarity}
 import graft.sources.VersionedLake
+import graft.streaming.{EventStream, StatsStream}
 
 /** Spark jobs an operator runs, call and final collect together, on one
   * fixed small input.
@@ -26,6 +27,11 @@ import graft.sources.VersionedLake
   * caller trains them. Their budgets are the counts of the probe join,
   * the shortlist broadcasts and the salted-tile checkpoint; a training
   * pass or a fetch that comes back as its own job breaks them.
+  *
+  * The streaming operators run on one small static events frame, as the
+  * registry runs them. Their budgets are the counts of their aggregate
+  * and join plans on a static frame; a watermark or stream-only operator
+  * that stays in the batch plan and costs a job breaks them.
   *
   * The key writes, the lake delete and the store and lake reads run
   * against a small store gid and a small two-day lake, each built fresh
@@ -67,6 +73,13 @@ class JobBudgetSpec extends SparkSessionSpec {
   private lazy val cells = Similarity.ivfCentroids(emb, nCentroids = 8)
   private lazy val books = Similarity.pqCodebooks(emb, m = 4, k = 8)
 
+  private def evs = (0 until 60).map { i =>
+    (i.toLong, new java.sql.Timestamp(1709251200000L + i * 300000L), (i % 10).toLong,
+      Seq("view", "click", "purchase")(i % 3), i * 1.5, "")
+  }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+  private def custs = (0L until 10L).map(i => (i, s"seg${i % 3}"))
+    .toDF("c_custkey", "c_mktsegment")
+
   private val ops: Seq[(String, Int, () => DataFrame)] = Seq(
     ("fixedPointPageRank", 16, () => PageRank.fixedPointPageRank(e, 3)),
     ("personalizedPageRank", 24, () =>
@@ -105,7 +118,17 @@ class JobBudgetSpec extends SparkSessionSpec {
     ("Similarity.hammingTopK", 6, () =>
       Similarity.hammingTopK(emb, embQ, k = 5, dim = 16, shortlist = 20)),
     ("Similarity.matryoshkaTopK", 6, () =>
-      Similarity.matryoshkaTopK(emb, embQ, k = 5, coarseDim = 8, shortlist = 20)))
+      Similarity.matryoshkaTopK(emb, embQ, k = 5, coarseDim = 8, shortlist = 20)),
+    ("EventStream.hourlyAgg", 2, () => EventStream.hourlyAgg(evs)),
+    ("EventStream.viewPurchaseCounts", 2, () => EventStream.viewPurchaseCounts(evs)),
+    ("EventStream.segmentHourly", 3, () => EventStream.segmentHourly(evs, custs)),
+    ("EventStream.slidingAgg", 2, () => EventStream.slidingAgg(evs)),
+    ("EventStream.viewPurchaseLeftOuter", 2, () => EventStream.viewPurchaseLeftOuter(
+      evs.filter($"event_type" === "purchase"), evs.filter($"event_type" === "view"))),
+    ("StatsStream.shardStatsStream", 2, () =>
+      StatsStream.shardStatsStream(evs, "event_id", Seq("event_id", "user_id"))),
+    ("EventStream.hourlyUniques", 3, () => EventStream.hourlyUniques(evs)),
+    ("EventStream.sessionWindows", 2, () => EventStream.sessionWindows(evs)))
 
   for ((name, budget, run) <- ops)
     test(s"$name stays within its job budget") {

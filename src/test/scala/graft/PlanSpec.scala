@@ -547,6 +547,33 @@ class PlanSpec extends SparkSessionSpec {
       s"forced broadcast() on a corpus-growing side:\n${offenders.mkString("\n")}")
   }
 
+  test("streaming operators on a static frame: no watermark survives " +
+      "optimization, so a batch caller never pays for the streaming shape") {
+    import graft.streaming.{EventStream, StatsStream}
+    import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, LogicalPlan}
+    import org.apache.spark.sql.functions.col
+    val ev = Engine.table(spark, sfDir, "events")
+    def of(t: String) = ev.filter(col("event_type") === t)
+    def marks(p: LogicalPlan) = p.collect { case w: EventTimeWatermark => w }.size
+    Seq(
+      "hourlyAgg" -> EventStream.hourlyAgg(ev),
+      "segmentHourly" -> EventStream.segmentHourly(ev,
+        Engine.table(spark, sfDir, "customer")),
+      "slidingAgg" -> EventStream.slidingAgg(ev),
+      "hourlyUniques" -> EventStream.hourlyUniques(ev),
+      "sessionWindows" -> EventStream.sessionWindows(ev),
+      "viewPurchaseJoin" -> EventStream.viewPurchaseJoin(of("purchase"), of("view")),
+      "viewPurchaseCounts" -> EventStream.viewPurchaseCounts(ev),
+      "viewPurchaseLeftOuter" ->
+        EventStream.viewPurchaseLeftOuter(of("purchase"), of("view")),
+      "shardStatsStream" ->
+        StatsStream.shardStatsStream(ev, "event_id", Seq("event_id", "user_id"))
+    ).foreach { case (name, df) =>
+      assert(marks(df.queryExecution.optimizedPlan) === 0,
+        s"$name keeps a watermark in its optimized batch plan")
+    }
+  }
+
   test("no query plans a CartesianProduct; NLJ only where designed") {
     SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
       val p = plan(q)

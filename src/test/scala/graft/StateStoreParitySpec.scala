@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.Engine.table
 import graft.kv.Store
-import graft.streaming.{AttributionStream, DedupStream, EventStream, KVSink}
+import graft.streaming.{AttributionStream, DedupStream, EventStream, KVSink, OrderedFold}
 
 /** State-store provider parity: the engine defaults streaming state to
   * RocksDB (Engine.session — the off-heap 100×-ingest story), and this
@@ -165,7 +165,7 @@ class StateStoreParitySpec extends SparkSessionSpec {
       val mem = MemoryStream[(Timestamp, Long)](spark)
       def start(): StreamingQuery = {
         val sdf = mem.toDF().toDF("ts", "user_id")
-        val out = EventStream.hourlyUniquesStream(sdf)
+        val out = EventStream.hourlyUniques(sdf)
           .withColumn("k", col("hour").cast("string"))
         KVSink.toStore(out, store, "uniq", keyCol = "k",
           checkpointDir = s"$root/ckpt", mode = OutputMode.Append)
@@ -297,8 +297,9 @@ class StateStoreParitySpec extends SparkSessionSpec {
     try {
       val root = Files.createTempDirectory("graft-ssparity-fold").toString
       val store = new Store(spark, s"$root/store", defaultBuckets = 2)
-      val evs = AttributionStream.attrEvents(
-          table(spark, sfDir, "events").filter(col("user_id") < 50))
+      val evs = OrderedFold.events[AttributionStream.AttrEvent](
+          table(spark, sfDir, "events").filter(col("user_id") < 50),
+          "event_type", "value")
         .collect().toSeq.sortBy(e => (e.ts_us, e.event_id))
       val third = evs.length / 3
       // the first event's user is already folded: re-sent as a purchase

@@ -25,7 +25,7 @@ class StreamingSpec extends SparkSessionSpec {
       .as[(Long, Timestamp, Long, String, Double)].collect()
     mem.addData(rows.toSeq)
 
-    // complete-mode aggregation (no watermark) over the same plan shape
+    // complete mode re-emits every window: the watermark evicts nothing
     val agg = EventStream.hourlyAgg(streamDf)
     val q = agg.writeStream.outputMode("complete")
       .format("memory").queryName("hourly_out").start()
@@ -83,7 +83,7 @@ class StreamingSpec extends SparkSessionSpec {
     val mem = MemoryStream[(Timestamp, String, Double)](spark)
     def t(min: Int) = new Timestamp(3600L * 1000 * 24 + min * 60000L)
     val df = mem.toDF().toDF("ts", "event_type", "value")
-    val agg = EventStream.slidingAggStream(
+    val agg = EventStream.slidingAgg(
       df.withColumn("event_id", lit(0L)).withColumn("user_id", lit(0L))
         .withColumn("props", lit("")))
     val q = agg.writeStream.outputMode("append")
@@ -108,7 +108,7 @@ class StreamingSpec extends SparkSessionSpec {
     val mem = MemoryStream[(Timestamp, String, Double)](spark)
     def t(min: Int) = new Timestamp(3600L * 1000 * 24 + min * 60000L)
     val df = mem.toDF().toDF("ts", "event_type", "value")
-    val agg = EventStream.hourlyAggStream(
+    val agg = EventStream.hourlyAgg(
       df.withColumn("event_id", lit(0L)).withColumn("user_id", lit(0L))
         .withColumn("props", lit("")))
     val q = agg.writeStream.outputMode("append")
@@ -129,7 +129,9 @@ class StreamingSpec extends SparkSessionSpec {
   test("stream-stream interval join matches batch interval join") {
     val events = table(spark, sfDir, "events")
       .filter(col("user_id") < 50) // bounded slice keeps the test fast
-    val batch = EventStream.viewPurchaseJoin(events, windowMinutes = 60)
+    val batch = EventStream.viewPurchaseJoin(
+        events.filter(col("event_type") === "purchase"),
+        events.filter(col("event_type") === "view"), windowMinutes = 60)
       .select("p_id", "v_id").as[(Long, Long)].collect().toSet
 
     def side(tpe: String) = {
@@ -142,7 +144,7 @@ class StreamingSpec extends SparkSessionSpec {
     }
     val (_, p) = side("purchase")
     val (_, v) = side("view")
-    val q = EventStream.viewPurchaseJoinStream(p, v, windowMinutes = 60)
+    val q = EventStream.viewPurchaseJoin(p, v, windowMinutes = 60)
       .writeStream.outputMode("append")
       .format("memory").queryName("ssj_out").start()
     q.processAllAvailable()
@@ -156,7 +158,9 @@ class StreamingSpec extends SparkSessionSpec {
   test("stream-stream LEFT OUTER join matches batch: matches AND watermark-final orphans") {
     val events = table(spark, sfDir, "events")
       .filter(col("user_id") < 50) // bounded slice keeps the test fast
-    val batch = EventStream.viewPurchaseLeftOuter(events, windowMinutes = 60)
+    val batch = EventStream.viewPurchaseLeftOuter(
+        events.filter(col("event_type") === "purchase"),
+        events.filter(col("event_type") === "view"), windowMinutes = 60)
       .select(col("p_id"), coalesce(col("v_id"), lit(-1L)))
       .as[(Long, Long)].collect().toSet
 
@@ -177,7 +181,7 @@ class StreamingSpec extends SparkSessionSpec {
     }
     val (_, p) = side("purchase")
     val (_, v) = side("view")
-    val q = EventStream.viewPurchaseLeftOuterStream(p, v, windowMinutes = 60)
+    val q = EventStream.viewPurchaseLeftOuter(p, v, windowMinutes = 60)
       .writeStream.outputMode("append")
       .format("memory").queryName("ssloj_out").start()
     q.processAllAvailable()
@@ -685,7 +689,7 @@ class StreamingSpec extends SparkSessionSpec {
       .as[(Long, Timestamp, Long, String, Double)].collect()
     // two batches: dedup state must bridge the micro-batch boundary
     val (b1, b2) = rows.splitAt(rows.length / 2)
-    val agg = EventStream.hourlyUniquesStream(streamDf)
+    val agg = EventStream.hourlyUniques(streamDf)
     val q = agg.writeStream.outputMode("append")
       .format("memory").queryName("s15_out").start()
     mem.addData(b1.toSeq)
@@ -721,7 +725,7 @@ class StreamingSpec extends SparkSessionSpec {
     // two batches split mid-stream: open sessions must merge across the
     // micro-batch boundary in the state store
     val (b1, b2) = rows.sortBy(_._2.getTime).splitAt(rows.length / 2)
-    val agg = EventStream.sessionWindowsStream(streamDf, gapMinutes = 30)
+    val agg = EventStream.sessionWindows(streamDf, gapMinutes = 30)
     val q = agg.writeStream.outputMode("append")
       .format("memory").queryName("s16_out").start()
     mem.addData(b1.toSeq)
@@ -747,7 +751,7 @@ class StreamingSpec extends SparkSessionSpec {
     def t(min: Int) = new Timestamp(3600L * 1000 * 24 + min * 60000L)
     val streamDf = mem.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val agg = EventStream.hourlyUniquesStream(streamDf)
+    val agg = EventStream.hourlyUniques(streamDf)
     val q = agg.writeStream.outputMode("append")
       .format("memory").queryName("s15_state_out").start()
     mem.addData(Seq((1L, t(5), 7L, "view", 1.0),
