@@ -75,7 +75,7 @@ object StreamQueries {
       graft.streaming.DedupStream.stats(planted, "text", "doc_id", "lang")
     }),
 
-    // Streaming catalog stats (batch form): per-(column, ingest shard)
+    // Streaming catalog stats on the static table: per-(column, shard)
     // rows / nulls / min / max / KMV candidates — the q46 mergeable
     // ANALYZE maintained as BOUNDED streaming state (four scalars + at
     // most 64 hashes per group at any stream length). StreamingSpec
